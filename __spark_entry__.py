@@ -20,197 +20,27 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from macrobase_spark import queries as _Q  # noqa: E402
+from macrobase_spark.artifacts import ARTIFACTS  # noqa: E402
 
-# extension modules register themselves into _Q.QUERIES/_Q.ORACLES on import
-import macrobase_spark.operators.audio  # noqa: E402,F401
-import macrobase_spark.operators.audio_fp  # noqa: E402,F401
-import macrobase_spark.operators.dedup  # noqa: E402,F401
-import macrobase_spark.operators.similarity  # noqa: E402,F401
-import macrobase_spark.operators.pq  # noqa: E402,F401
-import macrobase_spark.operators.text  # noqa: E402,F401
-import macrobase_spark.operators.clips_suite  # noqa: E402,F401
-import macrobase_spark.operators.detectors  # noqa: E402,F401
-import macrobase_spark.operators.contrib_stats  # noqa: E402,F401
-import macrobase_spark.operators.kalman  # noqa: E402,F401
-import macrobase_spark.operators.arima  # noqa: E402,F401
-import macrobase_spark.operators.vargmm  # noqa: E402,F401
-import macrobase_spark.operators.contextual  # noqa: E402,F401
-import macrobase_spark.operators.ew  # noqa: E402,F401
-import macrobase_spark.operators.legacy_transforms  # noqa: E402,F401
-import macrobase_spark.operators.loudness  # noqa: E402,F401
-import macrobase_spark.operators.bandwidth  # noqa: E402,F401
-import macrobase_spark.operators.pitch  # noqa: E402,F401
-import macrobase_spark.operators.ecod  # noqa: E402,F401
-import macrobase_spark.operators.copod  # noqa: E402,F401
-import macrobase_spark.operators.mp3  # noqa: E402,F401
-import macrobase_spark.operators.aac  # noqa: E402,F401
-import macrobase_spark.operators.ogg  # noqa: E402,F401
-import macrobase_spark.operators.gate  # noqa: E402,F401
-import macrobase_spark.operators.srt  # noqa: E402,F401
-import macrobase_spark.operators.alignment  # noqa: E402,F401
-import macrobase_spark.operators.pca  # noqa: E402,F401
-import macrobase_spark.operators.hbos  # noqa: E402,F401
-import macrobase_spark.operators.components  # noqa: E402,F401
-import macrobase_spark.operators.pii  # noqa: E402,F401
-import macrobase_spark.operators.scorecard  # noqa: E402,F401
-import macrobase_spark.operators.hics  # noqa: E402,F401
-import macrobase_spark.operators.hst  # noqa: E402,F401
-import macrobase_spark.operators.image  # noqa: E402,F401
-import macrobase_spark.operators.mcod  # noqa: E402,F401
-import macrobase_spark.operators.profile  # noqa: E402,F401
-import macrobase_spark.operators.silence  # noqa: E402,F401
-import macrobase_spark.operators.sniff  # noqa: E402,F401
-import macrobase_spark.operators.rrcf  # noqa: E402,F401
-import macrobase_spark.operators.subspace_explainers  # noqa: E402,F401
-import macrobase_spark.operators.transcript  # noqa: E402,F401
-import macrobase_spark.operators.temporal  # noqa: E402,F401
-import macrobase_spark.operators.resample  # noqa: E402,F401
-import macrobase_spark.operators.mfcc  # noqa: E402,F401
-import macrobase_spark.operators.drift  # noqa: E402,F401
-import macrobase_spark.operators.constraints  # noqa: E402,F401
-import macrobase_spark.plans.metrics_repo  # noqa: E402,F401
-import macrobase_spark.sources.icetable  # noqa: E402,F401
-import macrobase_spark.functions.skew  # noqa: E402,F401
-import macrobase_spark.functions.sampling  # noqa: E402,F401
+_Q.load_all()
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: classify-then-explain (SPLIT + APriori risk-ratio
     explanation) over the events table at sf0.001.
 
-    Side effect: pre-materializes the sf0.01 clips artifacts (clips table,
-    scored relation, manifest — all deterministic) so the clips oracle SQL,
-    which reads the scored parquet, works regardless of the order in which
-    the driver evaluates Spark queries vs oracles."""
+    Side effect: pre-materializes every registered artifact at the oracle
+    scale (clips table, scored relation, fitted models — all
+    deterministic) so every oracle, which reads those files, works
+    whether it runs before or after its Spark query. A failed build is
+    reported on stderr, never fatal: the smoke check must not fail on
+    artifact pre-materialization."""
     sf01 = "/root/testdata/sf0.01"
-    from macrobase_spark.operators.clips_suite import (
-        audio_features_parquet,
-        manifest_parquet,
-        scored_parquet,
-    )
-    from macrobase_spark.operators.detectors import (
-        iforest_model_parquet,
-        lof_model_parquet,
-        mcd_model_parquet,
-    )
-    from macrobase_spark.operators.hics import hics_model_parquet
-    from macrobase_spark.operators.hst import hst_model_parquet
-    from macrobase_spark.operators.audio import (
-        codec_snr_parquet,
-        resample_check_parquet,
-    )
-    from macrobase_spark.operators.audio_fp import audio_fp_parquet
-    from macrobase_spark.operators.image import (
-        image_features_parquet,
-        png_features_parquet,
-        video_frame_features_parquet,
-    )
-    from macrobase_spark.operators.rrcf import rrcf_model_parquet
-    from macrobase_spark.operators.similarity import (
-        ivf_artifacts_parquet,
-        lsh_sketch_parquet,
-    )
-    from macrobase_spark.operators.subspace_explainers import (
-        lookout_artifacts_parquet,
-        refout_artifacts_parquet,
-    )
-    from macrobase_spark.operators.transcript import transcript_pairs_parquet
-    from macrobase_spark.operators.mfcc import mfcc_parquet
-    from macrobase_spark.operators.vargmm import (
-        dpgmm_model_parquet,
-        stochdpgmm_model_parquet,
-        stochvargmm_model_parquet,
-        vargmm_model_parquet,
-    )
-    from macrobase_spark.operators.arima import arima_predictions_parquet
-    from macrobase_spark.operators.loudness import loudness_blocks_parquet
-    from macrobase_spark.operators.bandwidth import bandwidth_features_parquet
-    from macrobase_spark.operators.pitch import pitch_features_parquet
-    from macrobase_spark.operators.pca import pca_model_parquet
-    from macrobase_spark.operators.pii import pii_docs_parquet
-    from macrobase_spark.operators.scorecard import scorecard_parquet
-    from macrobase_spark.operators.clips_suite import (
-        clips_iforest_model_parquet,
-        clips_lof_model_parquet,
-    )
-    from macrobase_spark.operators.contrib_stats import (
-        bayes_model_parquet,
-        binned_kde_grid_parquet,
-        gmm_model_parquet,
-        kde_model_parquet,
-    )
-    from macrobase_spark.operators.kalman import kalman_weights_parquet
-    from macrobase_spark.operators.legacy_transforms import gaussian_model_parquet
-    from macrobase_spark.operators.pq import pq_artifacts_parquet
-    from macrobase_spark.operators.silence import silence_features_parquet
-    from macrobase_spark.operators.sniff import codec_clips_parquet
-    from macrobase_spark.operators.mp3 import mp3_profiles_parquet
-    from macrobase_spark.operators.aac import adts_profiles_parquet
-    from macrobase_spark.operators.ogg import ogg_profiles_parquet
-    from macrobase_spark.operators.gate import codec_gate_parquet, gate_parquet
-    from macrobase_spark.operators.srt import srt_cues_parquet, vtt_cues_parquet
-    from macrobase_spark.operators.alignment import aligned_cues_parquet, silence_spans_parquet
-    from macrobase_spark.sources.icetable import ice_table_fixture
-
-    for mat in (
-        scored_parquet,
-        manifest_parquet,
-        audio_features_parquet,
-        codec_snr_parquet,
-        resample_check_parquet,
-        audio_fp_parquet,
-        image_features_parquet,
-        png_features_parquet,
-        video_frame_features_parquet,
-        ivf_artifacts_parquet,
-        lsh_sketch_parquet,
-        iforest_model_parquet,
-        lof_model_parquet,
-        mcd_model_parquet,
-        hst_model_parquet,
-        hics_model_parquet,
-        rrcf_model_parquet,
-        lookout_artifacts_parquet,
-        refout_artifacts_parquet,
-        transcript_pairs_parquet,
-        mfcc_parquet,
-        vargmm_model_parquet,
-        dpgmm_model_parquet,
-        stochvargmm_model_parquet,
-        stochdpgmm_model_parquet,
-        arima_predictions_parquet,
-        loudness_blocks_parquet,
-        bandwidth_features_parquet,
-        pitch_features_parquet,
-        pca_model_parquet,
-        pii_docs_parquet,
-        scorecard_parquet,
-        clips_iforest_model_parquet,
-        clips_lof_model_parquet,
-        kde_model_parquet,
-        gmm_model_parquet,
-        binned_kde_grid_parquet,
-        bayes_model_parquet,
-        kalman_weights_parquet,
-        gaussian_model_parquet,
-        pq_artifacts_parquet,
-        silence_features_parquet,
-        codec_clips_parquet,
-        mp3_profiles_parquet,
-        adts_profiles_parquet,
-        ogg_profiles_parquet,
-        gate_parquet,
-        codec_gate_parquet,
-        srt_cues_parquet,
-        vtt_cues_parquet,
-        aligned_cues_parquet,
-        silence_spans_parquet,
-        ice_table_fixture,
-    ):
+    for art in ARTIFACTS.values():
         try:
-            mat(spark, sf01)
-        except Exception:
-            pass  # the smoke check must not fail on artifact pre-materialization
+            art(spark, sf01)
+        except Exception as e:
+            print(f"pre-materialize {art.name} failed: {e!r}", file=sys.stderr)
     return _Q.QUERIES["explain_risk_ratio_events"](spark, "/root/testdata/sf0.001")
 
 
@@ -294,6 +124,10 @@ _R5_WINDOW = [
 def _windowed(mapping: dict) -> dict:
     """Window entries first (in _R5_WINDOW order), then the rest in
     registration order — dict insertion order is the driver's order."""
+    # a window name missing from the registry is an error, not a skip
+    missing = [n for n in _R5_WINDOW if n not in _Q.QUERIES]
+    if missing:
+        raise KeyError(f"_R5_WINDOW names not in the registry: {missing}")
     out = {n: mapping[n] for n in _R5_WINDOW if n in mapping}
     out.update({n: v for n, v in mapping.items() if n not in out})
     return out

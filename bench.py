@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 from pathlib import Path
@@ -176,9 +175,13 @@ def _bench_only_queries() -> dict:
         build amortized across runs via /tmp cache)."""
         from pyspark.sql import functions as F
 
-        from macrobase_spark.operators.similarity import ivf_index_dir, ivf_topk
+        from macrobase_spark.operators.similarity import (
+            ivf_centroids,
+            ivf_index_dir,
+            ivf_topk,
+        )
 
-        path, C = ivf_index_dir(spark, sf_dir)
+        path, C = ivf_index_dir(spark, sf_dir), ivf_centroids(spark, sf_dir)
         e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         return ivf_topk(
             e, e.filter(F.col("vec_id") < 3), "vec_id", "embedding",
@@ -192,9 +195,11 @@ def _bench_only_queries() -> dict:
         via /tmp cache)."""
         from pyspark.sql import functions as F
 
-        from macrobase_spark.operators.pq import ivf_pq_index_dir, ivf_pq_topk
+        from macrobase_spark.operators.pq import ivf_pq_index_dir, ivf_pq_topk, pq_codebooks
+        from macrobase_spark.operators.similarity import ivf_centroids
 
-        path, C, B = ivf_pq_index_dir(spark, sf_dir)
+        path = ivf_pq_index_dir(spark, sf_dir)
+        C, B = ivf_centroids(spark, sf_dir), pq_codebooks(spark, sf_dir)
         e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         return ivf_pq_topk(
             e, e.filter(F.col("vec_id") < 3), "vec_id", "embedding",
@@ -308,61 +313,13 @@ def _bench_only_queries() -> dict:
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.1
 
     from macrobase_spark import queries as Q
-    import macrobase_spark.operators.audio  # noqa: F401
-    import macrobase_spark.operators.clips_suite  # noqa: F401
-    import macrobase_spark.operators.dedup  # noqa: F401
-    import macrobase_spark.operators.detectors  # noqa: F401
-    import macrobase_spark.operators.hics  # noqa: F401
-    import macrobase_spark.operators.hst  # noqa: F401
-    import macrobase_spark.operators.image  # noqa: F401
-    import macrobase_spark.operators.mcod  # noqa: F401
-    import macrobase_spark.operators.rrcf  # noqa: F401
-    import macrobase_spark.operators.subspace_explainers  # noqa: F401
-    import macrobase_spark.operators.similarity  # noqa: F401
-    import macrobase_spark.operators.pq  # noqa: F401
-    import macrobase_spark.operators.text  # noqa: F401
-    import macrobase_spark.operators.transcript  # noqa: F401
-    import macrobase_spark.operators.drift  # noqa: F401
-    import macrobase_spark.operators.profile  # noqa: F401
-    import macrobase_spark.operators.silence  # noqa: F401
-    import macrobase_spark.operators.sniff  # noqa: F401
-    import macrobase_spark.functions.skew  # noqa: F401
-    import macrobase_spark.functions.sampling  # noqa: F401
-    import macrobase_spark.operators.mfcc  # noqa: F401
-    import macrobase_spark.sources.icetable  # noqa: F401
-    import macrobase_spark.operators.constraints  # noqa: F401
-    import macrobase_spark.plans.metrics_repo  # noqa: F401
-    import macrobase_spark.operators.contrib_stats  # noqa: F401
-    import macrobase_spark.operators.kalman  # noqa: F401
-    import macrobase_spark.operators.arima  # noqa: F401
-    import macrobase_spark.operators.vargmm  # noqa: F401
-    import macrobase_spark.operators.contextual  # noqa: F401
-    import macrobase_spark.operators.ew  # noqa: F401
-    import macrobase_spark.operators.legacy_transforms  # noqa: F401
-    import macrobase_spark.operators.temporal  # noqa: F401
-    import macrobase_spark.operators.resample  # noqa: F401
-    import macrobase_spark.operators.loudness  # noqa: F401
-    import macrobase_spark.operators.bandwidth  # noqa: F401
-    import macrobase_spark.operators.pitch  # noqa: F401
-    import macrobase_spark.operators.ecod  # noqa: F401
-    import macrobase_spark.operators.copod  # noqa: F401
-    import macrobase_spark.operators.mp3  # noqa: F401
-    import macrobase_spark.operators.aac  # noqa: F401
-    import macrobase_spark.operators.ogg  # noqa: F401
-    import macrobase_spark.operators.gate  # noqa: F401
-    import macrobase_spark.operators.srt  # noqa: F401
-    import macrobase_spark.operators.alignment  # noqa: F401
-    import macrobase_spark.operators.pca  # noqa: F401
-    import macrobase_spark.operators.hbos  # noqa: F401
-    import macrobase_spark.operators.components  # noqa: F401
-    import macrobase_spark.operators.pii  # noqa: F401
-    import macrobase_spark.operators.scorecard  # noqa: F401
+    from macrobase_spark.artifacts import sf_of
     from macrobase_spark.session import get_spark
 
+    sf = sf_of(sf_dir, default=0.1)
+    Q.load_all()
     spark = get_spark("mb-bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
     # JVM/codegen warmup so per-query times measure the plan, not startup
     spark.range(1_000_000).selectExpr("sum(id)").collect()

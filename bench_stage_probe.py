@@ -171,7 +171,6 @@ def child_main(cores: int, table: str, narrow: str, probes: list[str], passes: i
     spark = _spark(cores)
     # warmup: JIT + python worker pool + page-cache touch of the small files
     spark.range(5_000_000).selectExpr("sum(id)").collect()
-    probe_flops_warm = PROBES["flops"]
     results = {}
     sent0 = host_sentinel()
     for name in probes:

@@ -22,7 +22,6 @@ validation contract.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -30,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from macrobase_spark.artifacts import artifact
 from macrobase_spark.queries import register
 
 # ISO/IEC 14496-3 sampling_frequency_index table (13 valid entries).
@@ -211,19 +211,17 @@ def adts_verdict_col():
     return F.expr(_VERDICT_SQL)
 
 
-def adts_profiles_parquet(spark: SparkSession, sf_dir: str) -> str:
+@artifact("adtsprof", 1)
+def adts_profiles_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Materialize the profile relation once (kernel runs here, untimed)
     so the DuckDB oracle reads the identical rows."""
     from macrobase_spark.operators.audio import _codec_clips_n
 
     n = _codec_clips_n(sf_dir)
-    path = f"/tmp/mb_adtsprof_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        adts_profiles(generate_adts_clips(spark, n)).write.mode("overwrite").parquet(path)
-    return path
+    adts_profiles(generate_adts_clips(spark, n)).write.mode("overwrite").parquet(out)
 
 
-_AP = "read_parquet('/tmp/mb_adtsprof_v1_400.parquet/*.parquet')"
+_AP = adts_profiles_parquet.scan()
 
 
 @register(

@@ -31,14 +31,19 @@ the build brief's audio+transcript pair contract.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from macrobase_spark.artifacts import artifact
 from macrobase_spark.queries import register
+from macrobase_spark.operators.silence import (
+    _silence_n,
+    generate_silence_clips,
+    silence_features_parquet,
+)
 from macrobase_spark.operators.srt import _WORDS, _fmt_ts, srt_cues
 
 
@@ -107,23 +112,18 @@ def alignment_flags(feats: DataFrame, cues: DataFrame) -> DataFrame:
     return j.select("clip_id", "silence_ratio", "coverage", flag.alias("flag"))
 
 
-def aligned_cues_parquet(spark: SparkSession, sf_dir: str) -> str:
+@artifact("aligncues", 1)
+def aligned_cues_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Materialize the alignment fixture's cue relation once (SRT built
     from the silence features' real durations, then tokenized) so the
     DuckDB oracle replays the whole alignment layer over the same two
     parquets."""
-    from macrobase_spark.operators.silence import _silence_n, silence_features_parquet
-
-    n = _silence_n(sf_dir)
-    path = f"/tmp/mb_aligncues_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        feats = spark.read.parquet(silence_features_parquet(spark, sf_dir))
-        srt_cues(srt_for_silence_clips(feats)).write.mode("overwrite").parquet(path)
-    return path
+    feats = spark.read.parquet(silence_features_parquet(spark, sf_dir))
+    srt_cues(srt_for_silence_clips(feats)).write.mode("overwrite").parquet(out)
 
 
-_AC = "read_parquet('/tmp/mb_aligncues_v1_1000.parquet/*.parquet')"
-_SF = "read_parquet('/tmp/mb_silence_v1_1000.parquet/*.parquet')"
+_AC = aligned_cues_parquet.scan()
+_SF = silence_features_parquet.scan()
 
 
 @register(
@@ -158,8 +158,6 @@ def transcript_alignment_stats_q(spark, sf_dir: str) -> DataFrame:
     coverage / silence-ratio per class (dead-audio-with-transcript and
     speech-without-transcript populations separate cleanly from ok).
     One join + two aggregates, replayed verbatim by the oracle."""
-    from macrobase_spark.operators.silence import silence_features_parquet
-
     feats = spark.read.parquet(silence_features_parquet(spark, sf_dir))
     cues = spark.read.parquet(aligned_cues_parquet(spark, sf_dir))
     v = alignment_flags(feats, cues)
@@ -266,20 +264,16 @@ def cue_silence_fractions(cues: DataFrame, spans: DataFrame) -> DataFrame:
     )
 
 
-def silence_spans_parquet(spark: SparkSession, sf_dir: str) -> str:
+@artifact("silspans", 1)
+def silence_spans_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Materialize the silence-span relation for the alignment fixture
     (same generator as the feature parquet) so the oracle replays the
     cue-grain intersection over identical rows."""
-    from macrobase_spark.operators.silence import _silence_n, generate_silence_clips
-
     n = _silence_n(sf_dir)
-    path = f"/tmp/mb_silspans_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        silence_spans(generate_silence_clips(spark, n)).write.mode("overwrite").parquet(path)
-    return path
+    silence_spans(generate_silence_clips(spark, n)).write.mode("overwrite").parquet(out)
 
 
-_SS = "read_parquet('/tmp/mb_silspans_v1_1000.parquet/*.parquet')"
+_SS = silence_spans_parquet.scan()
 
 
 @register(

@@ -444,6 +444,7 @@ def stream_arima(
 # registered queries
 # ---------------------------------------------------------------------------
 
+from macrobase_spark.artifacts import artifact  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 _W = 60  # tuple window of the registered contract query
@@ -452,34 +453,30 @@ _AR2_TRAIN = 50
 _AR2_H = 20
 
 
-def arima_predictions_parquet(spark, sf_dir: str) -> str:
+@artifact("arima_pred", 1)
+def arima_predictions_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the (event_type, ordinal, prediction) relation the full
     auto-contract consumed — the RRCF-style model-relation oracle input.
     Deterministic: same kernel, same data, driver-side."""
-    import os
-
-    path = "/tmp/mb_arima_pred_v1.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        ev = (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-            .select("event_type", "event_id", "value")
-            .toPandas()
+    ev = (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .select("event_type", "event_id", "value")
+        .toPandas()
+    )
+    rows = []
+    for et, g in ev.groupby("event_type"):
+        vals = (
+            g.sort_values("event_id")["value"].to_numpy(dtype=np.float64)[:_HEAD]
         )
-        rows = []
-        for et, g in ev.groupby("event_type"):
-            vals = (
-                g.sort_values("event_id")["value"].to_numpy(dtype=np.float64)[:_HEAD]
-            )
-            _, records = arima_trace(vals, _W)
-            for i, _r, p in records:
-                rows.append((et, i + 1, float(p)))
-        spark.createDataFrame(
-            rows, "event_type string, ordinal long, prediction double"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+        _, records = arima_trace(vals, _W)
+        for i, _r, p in records:
+            rows.append((et, i + 1, float(p)))
+    spark.createDataFrame(
+        rows, "event_type string, ordinal long, prediction double"
+    ).coalesce(1).write.parquet(out)
 
 
-_PRED = "read_parquet('/tmp/mb_arima_pred_v1.parquet/*.parquet')"
+_PRED = arima_predictions_parquet.scan()
 
 _ARIMA_ORACLE = f"""
     WITH obs AS (

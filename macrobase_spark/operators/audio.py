@@ -892,34 +892,27 @@ def snr_check(
 # registered query: compressed-codec SNR stats (real mu-law/A-law/ADPCM decode)
 # ---------------------------------------------------------------------------
 
-import re as _re  # noqa: E402
-
+from macrobase_spark.artifacts import artifact, sf_size  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 
 def _codec_clips_n(sf_dir: str) -> int:
-    m = _re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    return max(int(sf * 40_000), 400)
+    return sf_size(sf_dir, 40_000, 400)
 
 
-def flac_clips_parquet(spark, sf_dir: str) -> str:
+@artifact("flacclips", 1)
+def flac_clips_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize (once, untimed) an all-FLAC clips table — every payload a
     native FLAC stream from the pure-numpy encoder — so the bench can time
     the north-rule kernel (one-scan decode + SNR constraint check) with the
     bytes arriving COMPRESSED, the way a 10^12-clip corpus actually ships."""
-    import os
-
     from macrobase_spark.operators.clips_suite import clips_n
     from macrobase_spark.sources.clips import generate_codec_clips
 
     n = max(400, clips_n(sf_dir) // 8)
-    path = f"/tmp/mb_flacclips_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        generate_codec_clips(spark, n, codecs=["flac"]).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
+    generate_codec_clips(spark, n, codecs=["flac"]).write.mode(
+        "overwrite"
+    ).parquet(out)
 
 
 def flac_snr_suite(spark, sf_dir: str):
@@ -935,24 +928,20 @@ def flac_snr_suite(spark, sf_dir: str):
     )
 
 
-def codec_snr_parquet(spark, sf_dir: str) -> str:
+@artifact("codecsnr", 2)
+def codec_snr_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the per-clip SNR relation of the compressed-codec fixture
     (ONE decode pass through the real G.711/ADPCM codecs) to parquet for
     the DuckDB oracle — the image_features_parquet recipe."""
-    import os
-
     from macrobase_spark.sources.clips import generate_codec_clips
 
     n = _codec_clips_n(sf_dir)
-    path = f"/tmp/mb_codecsnr_v2_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        clips = generate_codec_clips(spark, n)
-        (
-            snr_check(clips, min_snr_db=25.0, carry_cols=["codec"])
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    clips = generate_codec_clips(spark, n)
+    (
+        snr_check(clips, min_snr_db=25.0, carry_cols=["codec"])
+        .write.mode("overwrite")
+        .parquet(out)
+    )
 
 
 def codec_snr_stats_pipeline(spark, sf_dir: str):
@@ -970,7 +959,7 @@ def codec_snr_stats_pipeline(spark, sf_dir: str):
     )
 
 
-_CODECF = "read_parquet('/tmp/mb_codecsnr_v2_400.parquet/*.parquet')"
+_CODECF = codec_snr_parquet.scan()
 
 
 @register(
@@ -1129,21 +1118,16 @@ def resample_check(df: DataFrame, target_sr: int = 16000, min_snr_db: float = 20
     return df.select("clip_id", "sr_hz", "bytes").mapInPandas(run, RESAMPLE_CHECK_SCHEMA)
 
 
-def resample_check_parquet(spark, sf_dir: str) -> str:
+@artifact("resample", 1)
+def resample_check_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the resample-integrity relation (ONE decode+interp scan
     of the clips table) for the DuckDB oracle."""
-    import os
+    from macrobase_spark.operators.clips_suite import clips_table
 
-    from macrobase_spark.operators.clips_suite import clips_n, clips_table
-
-    n = clips_n(sf_dir)
-    path = f"/tmp/mb_resample_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        resample_check(clips_table(spark, sf_dir)).write.mode("overwrite").parquet(path)
-    return path
+    resample_check(clips_table(spark, sf_dir)).write.mode("overwrite").parquet(out)
 
 
-_RESF = "read_parquet('/tmp/mb_resample_v1_10000.parquet/*.parquet')"
+_RESF = resample_check_parquet.scan()
 
 
 @register(

@@ -53,6 +53,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from macrobase_spark.artifacts import artifact, sf_size
 from macrobase_spark.operators.audio import decode_audio, sin_samples, splitmix64, u01
 from macrobase_spark.queries import register
 
@@ -313,27 +314,19 @@ def generate_fp_clips(spark, n: int) -> DataFrame:
 
 
 def _fp_clips_n(sf_dir: str) -> int:
-    import re
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    return max(int(sf * 40_000), 400)
+    return sf_size(sf_dir, 40_000, 400)
 
 
-def audio_fp_parquet(spark, sf_dir: str) -> str:
+@artifact("audiofp", 2)
+def audio_fp_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the fingerprint relation (ONE decode scan of the fp
     fixture) so the DuckDB oracle replays the join/Hamming stage over the
     very same signatures."""
-    import os
-
     n = _fp_clips_n(sf_dir)
-    path = f"/tmp/mb_audiofp_v2_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        audio_fingerprints(generate_fp_clips(spark, n)).write.mode("overwrite").parquet(path)
-    return path
+    audio_fingerprints(generate_fp_clips(spark, n)).write.mode("overwrite").parquet(out)
 
 
-_FPF = "read_parquet('/tmp/mb_audiofp_v2_400.parquet/*.parquet')"
+_FPF = audio_fp_parquet.scan()
 
 
 def _near_dup_oracle_sql() -> str:

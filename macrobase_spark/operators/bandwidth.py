@@ -33,8 +33,6 @@ kernel is pinned by synthetic-comb tests in tests/test_bandwidth.py.
 
 from __future__ import annotations
 
-import os
-import re as _re
 from typing import Iterator
 
 import numpy as np
@@ -49,6 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from macrobase_spark.artifacts import artifact, sf_size
 from macrobase_spark.queries import register
 
 FRAME = 2048
@@ -204,22 +203,18 @@ def generate_bandwidth_clips(spark, n: int):
 
 
 def _bandwidth_n(sf_dir: str) -> int:
-    m = _re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    return max(int(sf * 100_000), 1000)
+    return sf_size(sf_dir, 100_000, 1000)
 
 
-def bandwidth_features_parquet(spark, sf_dir: str) -> str:
+@artifact("bandwidth", 1)
+def bandwidth_features_parquet(spark, sf_dir: str, out: str) -> None:
     n = _bandwidth_n(sf_dir)
-    path = f"/tmp/mb_bandwidth_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        bandwidth_features(generate_bandwidth_clips(spark, n)).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
+    bandwidth_features(generate_bandwidth_clips(spark, n)).write.mode(
+        "overwrite"
+    ).parquet(out)
 
 
-_BW = "read_parquet('/tmp/mb_bandwidth_v1_1000.parquet/*.parquet')"
+_BW = bandwidth_features_parquet.scan()
 
 
 @register(

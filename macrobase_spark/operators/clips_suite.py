@@ -15,11 +15,9 @@ SQL strings are fixed at the correctness scale (sf0.01 → n=10000).
 
 from __future__ import annotations
 
-import os
-import re
-
 from pyspark.sql import functions as F
 
+from macrobase_spark.artifacts import artifact, sf_size
 from macrobase_spark.functions.metrics import ratio_metric_sql
 from macrobase_spark.operators.checks import (
     SuiteConfig,
@@ -35,44 +33,33 @@ from macrobase_spark.sources.clips import generate_manifest, write_clips_table
 
 
 def clips_n(sf_dir: str) -> int:
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    return max(int(sf * 1_000_000), 1000)
+    return sf_size(sf_dir, 1_000_000, 1000)
 
 
-def clips_table_path(spark, sf_dir: str) -> str:
-    """The clips table materialized once per size under /tmp and reused, so
-    every measured suite run has the production stage shape instead of
-    chaining two Python stages (synth + score) per task."""
-    n = clips_n(sf_dir)
-    path = f"/tmp/mb_bench_clips_v2_{n}.parquet"  # bump on fixture changes
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        write_clips_table(spark, n, path, max_payload_ms=100)
-    return path
+@artifact("bench_clips", 2)
+def clips_table_path(spark, sf_dir: str, out: str) -> None:
+    """The clips table materialized once per size and reused, so every
+    measured suite run has the production stage shape instead of chaining
+    two Python stages (synth + score) per task."""
+    write_clips_table(spark, clips_n(sf_dir), out, max_payload_ms=100)
 
 
 def clips_table(spark, sf_dir: str):
     return spark.read.parquet(clips_table_path(spark, sf_dir))
 
 
-def scored_parquet(spark, sf_dir: str) -> str:
+@artifact("scored", 4)
+def scored_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the narrow scored relation (ONE decode pass over the
     clips table) to parquet; DuckDB oracles read the very same files."""
     from macrobase_spark.operators.audio import score_clips
 
-    n = clips_n(sf_dir)
-    path = f"/tmp/mb_scored_v4_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        score_clips(clips_table(spark, sf_dir), 30.0).write.mode("overwrite").parquet(path)
-    return path
+    score_clips(clips_table(spark, sf_dir), 30.0).write.parquet(out)
 
 
-def manifest_parquet(spark, sf_dir: str) -> str:
-    n = clips_n(sf_dir)
-    path = f"/tmp/mb_manifest_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        generate_manifest(spark, n).write.mode("overwrite").parquet(path)
-    return path
+@artifact("manifest", 1)
+def manifest_parquet(spark, sf_dir: str, out: str) -> None:
+    generate_manifest(spark, clips_n(sf_dir)).write.parquet(out)
 
 
 def _scored_df(spark, sf_dir: str):
@@ -83,9 +70,8 @@ def _manifest_df(spark, sf_dir: str):
     return spark.read.parquet(manifest_parquet(spark, sf_dir))
 
 
-# correctness gate runs at sf0.01 → n=10000; the oracle SQL is fixed there
-_S = "read_parquet('/tmp/mb_scored_v4_10000.parquet/*.parquet')"
-_M = "read_parquet('/tmp/mb_manifest_v1_10000.parquet/*.parquet')"
+_S = scored_parquet.scan()
+_M = manifest_parquet.scan()
 
 # ---- vectorized anomaly scorer over the scored relation (north star:
 # "plus vectorized isolation-forest and LOF scorers in pandas/Arrow UDFs") --
@@ -106,7 +92,8 @@ def _anomaly_base(spark, sf_dir: str):
     return base.select("clip_id", *cols)
 
 
-def clips_iforest_model_parquet(spark, sf_dir: str) -> str:
+@artifact("clips_iforest_model", 1)
+def clips_iforest_model_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the forest fitted on the scored relation's numeric
     features as a flat node relation (same recipe as the embeddings
     detectors) so the DuckDB descent oracle can replay the scoring."""
@@ -116,24 +103,20 @@ def clips_iforest_model_parquet(spark, sf_dir: str) -> str:
         fit_isolation_forest,
     )
 
-    n = clips_n(sf_dir)
-    path = f"/tmp/mb_clips_iforest_model_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        df = _anomaly_base(spark, sf_dir)
-        feats = [f"_f{i}" for i in range(len(_ANOM_FEATURES))]
-        sample = _collect_sample(df, feats, 4096, 42)
-        m = fit_isolation_forest(sample, n_trees=100, subsample=256, seed=42)
-        roots = set(int(r) for r in m.roots)
+    df = _anomaly_base(spark, sf_dir)
+    feats = [f"_f{i}" for i in range(len(_ANOM_FEATURES))]
+    sample = _collect_sample(df, feats, 4096, 42)
+    m = fit_isolation_forest(sample, n_trees=100, subsample=256, seed=42)
+    roots = set(int(r) for r in m.roots)
 
-        rows = [
-            (i, int(m.feat[i]), float(m.thr[i]), int(m.left[i]), int(m.right[i]),
-             int(m.size[i]), int(m.depth[i]), i in roots, int(m.psi))
-            for i in range(len(m.feat))
-        ]
-        spark.createDataFrame(rows, IFOREST_MODEL_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
+    rows = [
+        (i, int(m.feat[i]), float(m.thr[i]), int(m.left[i]), int(m.right[i]),
+         int(m.size[i]), int(m.depth[i]), i in roots, int(m.psi))
+        for i in range(len(m.feat))
+    ]
+    spark.createDataFrame(rows, IFOREST_MODEL_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(out)
 
 # row-level violation set as SQL (mirrors checks.row_violations exactly):
 # uniqueness / null / empty transcript / referential orphan / snr-decode
@@ -388,27 +371,24 @@ def clips_explain_violations_q(spark, sf_dir):
     )
 
 
-def audio_features_parquet(spark, sf_dir: str) -> str:
+@artifact("audiofeat", 1)
+def audio_features_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the per-clip DSP feature relation (ONE decode pass) +
     codec to parquet so the per-codec profile is oracle-stateable over the
     same files (the scored_parquet recipe); the DSP kernel itself stays
     gated by tests/test_audio_features.py known-tone recovery."""
     from macrobase_spark.operators.audio import extract_audio_features
 
-    n = clips_n(sf_dir)
-    path = f"/tmp/mb_audiofeat_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        clips = clips_table(spark, sf_dir)
-        (
-            extract_audio_features(clips)
-            .join(clips.select("clip_id", "codec"), "clip_id")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    clips = clips_table(spark, sf_dir)
+    (
+        extract_audio_features(clips)
+        .join(clips.select("clip_id", "codec"), "clip_id")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
 
 
-_AF = "read_parquet('/tmp/mb_audiofeat_v1_10000.parquet/*.parquet')"
+_AF = audio_features_parquet.scan()
 
 
 @register(
@@ -442,7 +422,7 @@ def clips_audio_features_q(spark, sf_dir):
 
 # ---- registered anomaly query (uses the shared descent oracle) -------------
 
-_CIFM = "read_parquet('/tmp/mb_clips_iforest_model_v1_10000.parquet/*.parquet')"
+_CIFM = clips_iforest_model_parquet.scan()
 _ANOM_BASE_SQL = f"""SELECT clip_id,
            [CAST(dur_ms AS DOUBLE), CAST(payload_bytes AS DOUBLE),
             snr_db, silence_ratio] AS emb
@@ -519,10 +499,8 @@ def clips_windowed_rates(spark, sf_dir):
 
 # ---- LOF twin of the anomaly pass (north star names both scorers) ----------
 
-_CLOFM = "read_parquet('/tmp/mb_clips_lof_model_v1_10000.parquet/*.parquet')"
-
-
-def clips_lof_model_parquet(spark, sf_dir: str) -> str:
+@artifact("clips_lof_model", 1)
+def clips_lof_model_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the fitted LOF sample over STANDARDIZED features —
     (sid, feat[4], kdist, lrd) plus the (mu, sd) used, denormalized onto
     every row — so the oracle can standardize the clips identically and
@@ -533,31 +511,29 @@ def clips_lof_model_parquet(spark, sf_dir: str) -> str:
 
     import numpy as np
 
-    n = clips_n(sf_dir)
-    path = f"/tmp/mb_clips_lof_model_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        df = _anomaly_base(spark, sf_dir)
-        feats = [f"_f{i}" for i in range(len(_ANOM_FEATURES))]
-        stats = df.agg(
-            *[F.avg(c).alias(f"mu{i}") for i, c in enumerate(feats)],
-            *[F.stddev_pop(c).alias(f"sd{i}") for i, c in enumerate(feats)],
-        ).collect()[0]
-        mu = [float(stats[f"mu{i}"]) for i in range(len(feats))]
-        sd = [max(float(stats[f"sd{i}"]), 1e-9) for i in range(len(feats))]
-        sample = _collect_sample(df, feats, 4096, 42)
-        xs = (sample - np.array(mu)) / np.array(sd)
-        m = fit_lof(xs, k=20, seed=42, max_sample=4096)
-        rows = [
-            (i, [float(v) for v in m.S[i]], float(m.kdist[i]), float(m.lrd[i]), mu, sd)
-            for i in range(m.S.shape[0])
-        ]
-        spark.createDataFrame(
-            rows,
-            "sid long, feat array<double>, kdist double, lrd double, "
-            "mu array<double>, sd array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+    df = _anomaly_base(spark, sf_dir)
+    feats = [f"_f{i}" for i in range(len(_ANOM_FEATURES))]
+    stats = df.agg(
+        *[F.avg(c).alias(f"mu{i}") for i, c in enumerate(feats)],
+        *[F.stddev_pop(c).alias(f"sd{i}") for i, c in enumerate(feats)],
+    ).collect()[0]
+    mu = [float(stats[f"mu{i}"]) for i in range(len(feats))]
+    sd = [max(float(stats[f"sd{i}"]), 1e-9) for i in range(len(feats))]
+    sample = _collect_sample(df, feats, 4096, 42)
+    xs = (sample - np.array(mu)) / np.array(sd)
+    m = fit_lof(xs, k=20, seed=42, max_sample=4096)
+    rows = [
+        (i, [float(v) for v in m.S[i]], float(m.kdist[i]), float(m.lrd[i]), mu, sd)
+        for i in range(m.S.shape[0])
+    ]
+    spark.createDataFrame(
+        rows,
+        "sid long, feat array<double>, kdist double, lrd double, "
+        "mu array<double>, sd array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(out)
 
+
+_CLOFM = clips_lof_model_parquet.scan()
 
 _CLIPS_LOF_ORACLE = f"""
     WITH s AS (SELECT * FROM {_CLOFM}),

@@ -48,6 +48,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from macrobase_spark.operators.clips_suite import clips_table, clips_table_path, scored_parquet
+
 RESULT_SCHEMA = StructType(
     [
         StructField("check", StringType()),
@@ -306,7 +308,7 @@ def clips_checks() -> list[Check]:
 # SAME scored parquet (engine-wide oracle recipe, clips_suite.py) — one
 # UNION ALL row per constraint, value rounded to 6, the same 1e-12 bound
 # epsilon the evaluator applies.
-_S = "read_parquet('/tmp/mb_scored_v4_10000.parquet/*.parquet')"
+_S = scored_parquet.scan()
 
 _CONSTRAINT_ORACLE = f"""
 WITH s AS (SELECT * FROM {_S}),
@@ -374,8 +376,6 @@ def _register_clips_query() -> None:
         """Declarative check suite over the scored clips relation: every
         constraint compiled into ONE aggregation pass (plus Catalyst's
         Expand for the exact-uniqueness distinct)."""
-        from macrobase_spark.operators.clips_suite import scored_parquet
-
         scored = spark.read.parquet(scored_parquet(spark, sf_dir))
         return verify(scored, clips_checks())
 
@@ -562,7 +562,7 @@ _SCHEMA_EXPECTED = [
     ("transcript", "string"),
 ]
 
-_SCHEMA_ORACLE = """
+_SCHEMA_ORACLE = f"""
 WITH actual AS (
   SELECT column_name AS col,
          CASE column_type
@@ -571,7 +571,7 @@ WITH actual AS (
            WHEN 'DOUBLE' THEN 'double' WHEN 'FLOAT' THEN 'float'
            WHEN 'BOOLEAN' THEN 'boolean' WHEN 'TIMESTAMP' THEN 'timestamp'
            ELSE lower(column_type) END AS dtype
-  FROM (DESCRIBE SELECT * FROM read_parquet('/tmp/mb_bench_clips_v2_10000.parquet/*.parquet'))
+  FROM (DESCRIBE SELECT * FROM {clips_table_path.scan()})
 ),
 expected(col, dtype) AS (VALUES
   ('clip_id', 'string'), ('bytes', 'binary'), ('sr_hz', 'int'),
@@ -598,8 +598,6 @@ def _register_schema_query() -> None:
         the same violations from the parquet footers via DuckDB DESCRIBE
         (independent of Spark's schema reading). The spec deliberately
         plants a wrong type, a missing column, and an undeclared extra."""
-        from macrobase_spark.operators.clips_suite import clips_table
-
         return schema_check(
             clips_table(spark, sf_dir), _SCHEMA_EXPECTED, allow_extra=False
         )

@@ -229,51 +229,47 @@ def gmm_score(
 # registered queries: scoring replayed in SQL over materialized models
 # ---------------------------------------------------------------------------
 
+from macrobase_spark.artifacts import artifact  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 _DIMS = 8  # detectors.py convention for the embeddings feature head
 
 
-def kde_model_parquet(spark, sf_dir: str) -> tuple[str, str]:
-    """Materialize the density population (row, dim, value) and the
-    bandwidth relation (dim, h) so the product kernel is SQL-stateable."""
-    import os
-
+@artifact("kde", 1)
+def kde_model_parquet(spark, sf_dir: str, out: str) -> None:
+    """Materialize the density population (`pop`: row, dim, value) and the
+    bandwidth relation (`h`: dim, h) so the product kernel is
+    SQL-stateable."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    ppath = f"/tmp/mb_kde_pop_v1_{n}.parquet"
-    hpath = f"/tmp/mb_kde_h_v1_{n}.parquet"
-    if not (os.path.isfile(f"{ppath}/_SUCCESS") and os.path.isfile(f"{hpath}/_SUCCESS")):
-        feats = [f"_f{i}" for i in range(_DIMS)]
-        df = array_col_to_features(e, "embedding", _DIMS)
-        sample = _collect_sample(df, feats, 4096, 42)
-        m = fit_kde(sample[np.lexsort(sample.T[::-1])])
-        spark.createDataFrame(
-            [
-                (i, j, float(m.population[i, j]))
-                for i in range(len(m.population))
-                for j in range(_DIMS)
-            ],
-            "row long, dim long, v double",
-        ).coalesce(1).write.mode("overwrite").parquet(ppath)
-        spark.createDataFrame(
-            [(j, float(m.h[j])) for j in range(_DIMS)], "dim long, h double"
-        ).coalesce(1).write.mode("overwrite").parquet(hpath)
-    return ppath, hpath
+    feats = [f"_f{i}" for i in range(_DIMS)]
+    df = array_col_to_features(e, "embedding", _DIMS)
+    sample = _collect_sample(df, feats, 4096, 42)
+    m = fit_kde(sample[np.lexsort(sample.T[::-1])])
+    spark.createDataFrame(
+        [
+            (i, j, float(m.population[i, j]))
+            for i in range(len(m.population))
+            for j in range(_DIMS)
+        ],
+        "row long, dim long, v double",
+    ).coalesce(1).write.parquet(f"{out}/pop")
+    spark.createDataFrame(
+        [(j, float(m.h[j])) for j in range(_DIMS)], "dim long, h double"
+    ).coalesce(1).write.parquet(f"{out}/h")
 
 
-def load_kde_model(spark, ppath: str, hpath: str) -> KDEModel:
-    pop = spark.read.parquet(ppath).toPandas().sort_values(["row", "dim"])
+def load_kde_model(spark, path: str) -> KDEModel:
+    pop = spark.read.parquet(f"{path}/pop").toPandas().sort_values(["row", "dim"])
     m = int(pop["row"].max()) + 1
-    hh = spark.read.parquet(hpath).toPandas().sort_values("dim")
+    hh = spark.read.parquet(f"{path}/h").toPandas().sort_values("dim")
     return KDEModel(
         population=pop["v"].to_numpy(dtype=np.float64).reshape(m, _DIMS),
         h=hh["h"].to_numpy(dtype=np.float64),
     )
 
 
-_KDEP = "read_parquet('/tmp/mb_kde_pop_v1_500.parquet/*.parquet')"
-_KDEH = "read_parquet('/tmp/mb_kde_h_v1_500.parquet/*.parquet')"
+_KDEP = kde_model_parquet.scan("pop")
+_KDEH = kde_model_parquet.scan("h")
 
 _KDE_ORACLE = f"""
     WITH pop AS (SELECT * FROM {_KDEP}),
@@ -309,8 +305,7 @@ def kde_outliers_embeddings(spark, sf_dir: str) -> DataFrame:
     reference's negative density, so the largest scores are the
     outliers); the oracle restates the Epanechnikov product kernel, the
     determinant scale, and the population sum in SQL."""
-    ppath, hpath = kde_model_parquet(spark, sf_dir)
-    model = load_kde_model(spark, ppath, hpath)
+    model = load_kde_model(spark, kde_model_parquet(spark, sf_dir))
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     feats = [f"_f{i}" for i in range(_DIMS)]
     df = array_col_to_features(e, "embedding", _DIMS)
@@ -320,39 +315,34 @@ def kde_outliers_embeddings(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def gmm_model_parquet(spark, sf_dir: str) -> str:
+@artifact("gmm_model", 1)
+def gmm_model_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the fitted mixture as one relation: per component k,
     log-weight, log-normalizer, mean vector and precision matrix entries
     (k, i, j, p, mu_i, logw, logz) — the MCD quadratic-form recipe per
     component."""
-    import os
-
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    path = f"/tmp/mb_gmm_model_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        feats = [f"_f{i}" for i in range(_DIMS)]
-        df = array_col_to_features(e, "embedding", _DIMS)
-        sample = _collect_sample(df, feats, 4096, 42)
-        m = fit_gmm(sample[np.lexsort(sample.T[::-1])], k=3, seed=42)
-        rows = []
-        for c in range(len(m.weights)):
-            prec = np.linalg.inv(m.covs[c])
-            sign, logdet = np.linalg.slogdet(m.covs[c])
-            logz = -0.5 * (_DIMS * np.log(2 * np.pi) + logdet)
-            for i in range(_DIMS):
-                for j in range(_DIMS):
-                    rows.append(
-                        (
-                            c, i, j, float(prec[i, j]), float(m.means[c, i]),
-                            float(m.means[c, j]), float(np.log(m.weights[c])),
-                            float(logz),
-                        )
+    feats = [f"_f{i}" for i in range(_DIMS)]
+    df = array_col_to_features(e, "embedding", _DIMS)
+    sample = _collect_sample(df, feats, 4096, 42)
+    m = fit_gmm(sample[np.lexsort(sample.T[::-1])], k=3, seed=42)
+    rows = []
+    for c in range(len(m.weights)):
+        prec = np.linalg.inv(m.covs[c])
+        sign, logdet = np.linalg.slogdet(m.covs[c])
+        logz = -0.5 * (_DIMS * np.log(2 * np.pi) + logdet)
+        for i in range(_DIMS):
+            for j in range(_DIMS):
+                rows.append(
+                    (
+                        c, i, j, float(prec[i, j]), float(m.means[c, i]),
+                        float(m.means[c, j]), float(np.log(m.weights[c])),
+                        float(logz),
                     )
-        spark.createDataFrame(
-            rows, "k long, i long, j long, p double, mu_i double, mu_j double, logw double, logz double"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+                )
+    spark.createDataFrame(
+        rows, "k long, i long, j long, p double, mu_i double, mu_j double, logw double, logz double"
+    ).coalesce(1).write.mode("overwrite").parquet(out)
 
 
 def load_gmm_model(spark, path: str) -> GMMModel:
@@ -370,7 +360,7 @@ def load_gmm_model(spark, path: str) -> GMMModel:
     return GMMModel(weights=w, means=means, covs=np.linalg.inv(prec))
 
 
-_GMMM = "read_parquet('/tmp/mb_gmm_model_v1_500.parquet/*.parquet')"
+_GMMM = gmm_model_parquet.scan()
 
 _GMM_ORACLE = f"""
     WITH m AS (SELECT * FROM {_GMMM}),
@@ -527,23 +517,19 @@ def binned_kde_score(
     return in_df.mapInPandas(run, out_schema)
 
 
-def binned_kde_grid_parquet(spark, sf_dir: str) -> str:
+@artifact("binnedkde", 1)
+def binned_kde_grid_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the fitted density grid (bin, d) plus the affine params
     so the oracle interpolates over the same numbers the engine broadcasts."""
-    import os
-
-    path = f"/tmp/mb_binnedkde_v1_{_BKDE_BINS}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        m = binned_kde_fit(ev.select("value"), "value", _BKDE_BINS)
-        rows = [
-            (int(i), float(d), float(m.minv), float(m.delta))
-            for i, d in enumerate(m.density)
-        ]
-        spark.createDataFrame(
-            rows, "bin long, d double, minv double, delta double"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    m = binned_kde_fit(ev.select("value"), "value", _BKDE_BINS)
+    rows = [
+        (int(i), float(d), float(m.minv), float(m.delta))
+        for i, d in enumerate(m.density)
+    ]
+    spark.createDataFrame(
+        rows, "bin long, d double, minv double, delta double"
+    ).coalesce(1).write.mode("overwrite").parquet(out)
 
 
 def load_binned_kde(spark, path: str) -> BinnedKDEModel:
@@ -556,7 +542,7 @@ def load_binned_kde(spark, path: str) -> BinnedKDEModel:
 
 
 _BKDE_BINS = 1024
-_BKDEG = f"read_parquet('/tmp/mb_binnedkde_v1_{_BKDE_BINS}.parquet/*.parquet')"
+_BKDEG = binned_kde_grid_parquet.scan()
 
 _BKDE_ORACLE = f"""
     WITH g AS (SELECT * FROM {_BKDEG}),
@@ -684,29 +670,24 @@ def bayes_score(
     return _score_with(df, feature_cols, id_cols, model, "bayes", score_col)
 
 
-def bayes_model_parquet(spark, sf_dir: str) -> str:
+@artifact("bayes_model", 1)
+def bayes_model_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize (i, j, p, mu_i, mu_j, dof, log_mult) — the MCD recipe
     with the Student-t constants carried per row."""
-    import os
-
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    path = f"/tmp/mb_bayes_model_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        feats = [f"_f{i}" for i in range(_DIMS)]
-        df = array_col_to_features(e, "embedding", _DIMS)
-        sample = _collect_sample(df, feats, 4096, 42)
-        m = fit_bayesian_normal(sample[np.lexsort(sample.T[::-1])])
-        rows = [
-            (i, j, float(m.prec[i, j]), float(m.mean[i]), float(m.mean[j]),
-             float(m.dof), float(m.log_mult))
-            for i in range(_DIMS)
-            for j in range(_DIMS)
-        ]
-        spark.createDataFrame(
-            rows, "i long, j long, p double, mu_i double, mu_j double, dof double, log_mult double"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+    feats = [f"_f{i}" for i in range(_DIMS)]
+    df = array_col_to_features(e, "embedding", _DIMS)
+    sample = _collect_sample(df, feats, 4096, 42)
+    m = fit_bayesian_normal(sample[np.lexsort(sample.T[::-1])])
+    rows = [
+        (i, j, float(m.prec[i, j]), float(m.mean[i]), float(m.mean[j]),
+         float(m.dof), float(m.log_mult))
+        for i in range(_DIMS)
+        for j in range(_DIMS)
+    ]
+    spark.createDataFrame(
+        rows, "i long, j long, p double, mu_i double, mu_j double, dof double, log_mult double"
+    ).coalesce(1).write.mode("overwrite").parquet(out)
 
 
 def load_bayes_model(spark, path: str) -> BayesNormalModel:
@@ -720,7 +701,7 @@ def load_bayes_model(spark, path: str) -> BayesNormalModel:
     )
 
 
-_BAYM = "read_parquet('/tmp/mb_bayes_model_v1_500.parquet/*.parquet')"
+_BAYM = bayes_model_parquet.scan()
 
 _BAYES_ORACLE = f"""
     WITH m AS (SELECT * FROM {_BAYM}),

@@ -518,6 +518,7 @@ def array_col_to_features(df: DataFrame, array_col: str, dims: int, prefix: str 
 # correctness gates live in tests/test_detectors.py with planted anomalies)
 # ---------------------------------------------------------------------------
 
+from macrobase_spark.artifacts import artifact  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 _DIMS = 8
@@ -529,33 +530,28 @@ IFOREST_MODEL_SCHEMA = (
 )
 
 
-def iforest_model_parquet(spark, sf_dir: str) -> str:
+@artifact("iforest_model", 1)
+def iforest_model_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the fitted isolation forest as a flat node relation so
     the scoring walk — variable-depth descent to an external node, path
     length depth + c(size), score 2^(-avg/c(psi)) — is SQL-expressible:
     the DuckDB oracle unrolls max_depth (=log2(psi)=8) leaf-stay-put steps
     over the SAME files (the HST recipe, VERDICT r2 item 9). The FIT stays
     gated by tests/test_detectors.py planted-AUC + shuttle parity."""
-    import os
-
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    path = f"/tmp/mb_iforest_model_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        feats = [f"_f{i}" for i in range(_DIMS)]
-        df = array_col_to_features(e, "embedding", _DIMS)
-        sample = _collect_sample(df, feats, 4096, 42)
-        m = fit_isolation_forest(sample, n_trees=100, subsample=256, seed=42)
-        roots = set(int(r) for r in m.roots)
-        rows = [
-            (i, int(m.feat[i]), float(m.thr[i]), int(m.left[i]), int(m.right[i]),
-             int(m.size[i]), int(m.depth[i]), i in roots, int(m.psi))
-            for i in range(len(m.feat))
-        ]
-        spark.createDataFrame(rows, IFOREST_MODEL_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
+    feats = [f"_f{i}" for i in range(_DIMS)]
+    df = array_col_to_features(e, "embedding", _DIMS)
+    sample = _collect_sample(df, feats, 4096, 42)
+    m = fit_isolation_forest(sample, n_trees=100, subsample=256, seed=42)
+    roots = set(int(r) for r in m.roots)
+    rows = [
+        (i, int(m.feat[i]), float(m.thr[i]), int(m.left[i]), int(m.right[i]),
+         int(m.size[i]), int(m.depth[i]), i in roots, int(m.psi))
+        for i in range(len(m.feat))
+    ]
+    spark.createDataFrame(rows, IFOREST_MODEL_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(out)
 
 
 def load_iforest_model(spark, path: str) -> IForest:
@@ -611,8 +607,7 @@ def iforest_descent_oracle(
 """
 
 
-# correctness gate runs at sf0.01 -> 500 embedding rows; oracle fixed there
-_IFM = "read_parquet('/tmp/mb_iforest_model_v1_500.parquet/*.parquet')"
+_IFM = iforest_model_parquet.scan()
 
 _IFOREST_ORACLE = iforest_descent_oracle(
     _IFM, "SELECT vec_id, embedding AS emb FROM embeddings", "vec_id"
@@ -633,30 +628,25 @@ def iforest_outliers_embeddings(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def lof_model_parquet(spark, sf_dir: str) -> str:
+@artifact("lof_model", 1)
+def lof_model_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the fitted LOF sample — (sid, feat[8], kdist, lrd) —
     so the novelty-LOF scoring (k-NN against the sample, reach-distance
     sum, lrd ratio) is one window-ranked SQL query over the same files.
     The FIT (pairwise k-distance/lrd over the sample) stays gated by
     tests/test_detectors.py planted-AUC."""
-    import os
-
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    path = f"/tmp/mb_lof_model_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        feats = [f"_f{i}" for i in range(_DIMS)]
-        df = array_col_to_features(e, "embedding", _DIMS)
-        sample = _collect_sample(df, feats, 4096, 42)
-        m = fit_lof(sample, k=20, seed=42, max_sample=4096)
-        rows = [
-            (i, [float(v) for v in m.S[i]], float(m.kdist[i]), float(m.lrd[i]))
-            for i in range(m.S.shape[0])
-        ]
-        spark.createDataFrame(
-            rows, "sid long, feat array<double>, kdist double, lrd double"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+    feats = [f"_f{i}" for i in range(_DIMS)]
+    df = array_col_to_features(e, "embedding", _DIMS)
+    sample = _collect_sample(df, feats, 4096, 42)
+    m = fit_lof(sample, k=20, seed=42, max_sample=4096)
+    rows = [
+        (i, [float(v) for v in m.S[i]], float(m.kdist[i]), float(m.lrd[i]))
+        for i in range(m.S.shape[0])
+    ]
+    spark.createDataFrame(
+        rows, "sid long, feat array<double>, kdist double, lrd double"
+    ).coalesce(1).write.mode("overwrite").parquet(out)
 
 
 def load_lof_model(spark, path: str, k: int = 20) -> LOFModel:
@@ -669,7 +659,7 @@ def load_lof_model(spark, path: str, k: int = 20) -> LOFModel:
     )
 
 
-_LOFM = "read_parquet('/tmp/mb_lof_model_v1_500.parquet/*.parquet')"
+_LOFM = lof_model_parquet.scan()
 
 _LOF_ORACLE = f"""
     WITH s AS (SELECT * FROM {_LOFM}),
@@ -705,30 +695,25 @@ def lof_outliers_embeddings(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def mcd_model_parquet(spark, sf_dir: str) -> str:
+@artifact("mcd_model", 1)
+def mcd_model_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the FastMCD robust center: a 64-row (i, j, p, mu_i,
     mu_j) relation (precision matrix with the mean denormalized in) so the
     Mahalanobis form x'->sqrt((x-mu)' P (x-mu)) is one SQL cross join +
     grouped sum. The C-step FIT stays gated by tests (shuttle parity)."""
-    import os
-
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    path = f"/tmp/mb_mcd_model_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        feats = [f"_f{i}" for i in range(_DIMS)]
-        df = array_col_to_features(e, "embedding", _DIMS)
-        sample = _collect_sample(df, feats, 10000, 42)
-        m = fit_mcd(sample, seed=42)
-        rows = [
-            (i, j, float(m.inv_cov[i, j]), float(m.mean[i]), float(m.mean[j]))
-            for i in range(_DIMS)
-            for j in range(_DIMS)
-        ]
-        spark.createDataFrame(
-            rows, "i long, j long, p double, mu_i double, mu_j double"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+    feats = [f"_f{i}" for i in range(_DIMS)]
+    df = array_col_to_features(e, "embedding", _DIMS)
+    sample = _collect_sample(df, feats, 10000, 42)
+    m = fit_mcd(sample, seed=42)
+    rows = [
+        (i, j, float(m.inv_cov[i, j]), float(m.mean[i]), float(m.mean[j]))
+        for i in range(_DIMS)
+        for j in range(_DIMS)
+    ]
+    spark.createDataFrame(
+        rows, "i long, j long, p double, mu_i double, mu_j double"
+    ).coalesce(1).write.mode("overwrite").parquet(out)
 
 
 def load_mcd_model(spark, path: str) -> MCDModel:
@@ -740,7 +725,7 @@ def load_mcd_model(spark, path: str) -> MCDModel:
     )
 
 
-_MCDM = "read_parquet('/tmp/mb_mcd_model_v1_500.parquet/*.parquet')"
+_MCDM = mcd_model_parquet.scan()
 
 _MCD_ORACLE = f"""
     WITH m AS (SELECT * FROM {_MCDM}),

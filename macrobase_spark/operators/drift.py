@@ -29,6 +29,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from macrobase_spark.operators.clips_suite import scored_parquet
 from macrobase_spark.queries import register
 
 EPS = 1e-6
@@ -95,7 +96,7 @@ def psi_drift(
     )
 
 
-_S = "read_parquet('/tmp/mb_scored_v4_10000.parquet/*.parquet')"
+_S = scored_parquet.scan()
 
 
 @register(
@@ -135,8 +136,6 @@ _S = "read_parquet('/tmp/mb_scored_v4_10000.parquet/*.parquet')"
 def psi_drift_clips_q(spark, sf_dir):
     """PSI of dur_ms by codec over the scored clips relation — recovers the
     planted aac duration drift (×3) as the only flagged group."""
-    from macrobase_spark.operators.clips_suite import scored_parquet
-
     scored = spark.read.parquet(scored_parquet(spark, sf_dir))
     return psi_drift(scored, "dur_ms", ["codec"], n_bins=10, min_psi=0.2)
 
@@ -237,8 +236,6 @@ def ks_drift(
 def ks_drift_clips_q(spark, sf_dir):
     """Quantile-grid KS of dur_ms by codec over the scored clips relation —
     flags the planted aac duration drift (×3) like PSI, via CDF distance."""
-    from macrobase_spark.operators.clips_suite import scored_parquet
-
     scored = spark.read.parquet(scored_parquet(spark, sf_dir))
     return ks_drift(scored, "dur_ms", ["codec"], n_bins=20, min_d=0.1)
 
@@ -357,8 +354,6 @@ def w1_drift_clips_q(spark, sf_dir):
     """Quantile-grid Wasserstein-1 of dur_ms by codec over the scored clips
     relation — reports the planted aac duration drift (×3) in
     MILLISECONDS of shifted duration mass."""
-    from macrobase_spark.operators.clips_suite import scored_parquet
-
     scored = spark.read.parquet(scored_parquet(spark, sf_dir))
     return w1_drift(scored, "dur_ms", ["codec"], n_bins=20, min_w1=50.0)
 
@@ -495,8 +490,6 @@ def snapshot_drift_clips_q(spark, sf_dir):
     """Two-snapshot drift demo: reference = the majority codec's (opus)
     duration distribution; current = every codec. The planted aac ×3
     duration drift flags on both PSI and KS; clean codecs stay quiet."""
-    from macrobase_spark.operators.clips_suite import scored_parquet
-
     scored = spark.read.parquet(scored_parquet(spark, sf_dir))
     return snapshot_drift(
         scored.filter(F.col("codec") == "opus"), scored, "dur_ms", ["codec"]
@@ -615,8 +608,6 @@ def categorical_drift_clips_q(spark, sf_dir):
     (sources/clips.py `_is_corrupt`: codec='flac' AND id%13==3) makes the
     failing population flac-heavy, so the failed group's codec histogram
     drifts hard while the passing group's stays at the reference."""
-    from macrobase_spark.operators.clips_suite import scored_parquet
-
     scored = spark.read.parquet(scored_parquet(spark, sf_dir))
     cur = scored.withColumn("failed", ~F.col("decode_ok"))
     return categorical_drift(scored, cur, "codec", ["failed"], top_k=50).orderBy(

@@ -22,7 +22,6 @@ a mislabeled clip still lands in the RIGHT structural check.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -30,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from macrobase_spark.artifacts import artifact
 from macrobase_spark.queries import register
 from macrobase_spark.operators.aac import adts_stream, walk_adts
 from macrobase_spark.operators.mp3 import mp3_stream, walk_mp3
@@ -276,19 +276,17 @@ def generate_mixed_clips(spark: SparkSession, n: int) -> DataFrame:
     return spark.range(n).mapInPandas(gen, "clip_id string, bytes binary, codec string")
 
 
-def gate_parquet(spark: SparkSession, sf_dir: str) -> str:
+@artifact("gate", 2)
+def gate_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Materialize the gate relation once (kernel runs here, untimed) so
     the DuckDB oracle reads the identical rows."""
     from macrobase_spark.operators.audio import _codec_clips_n
 
     n = _codec_clips_n(sf_dir)
-    path = f"/tmp/mb_gate_v2_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        transport_gate(generate_mixed_clips(spark, n)).write.mode("overwrite").parquet(path)
-    return path
+    transport_gate(generate_mixed_clips(spark, n)).write.mode("overwrite").parquet(out)
 
 
-_GP = "read_parquet('/tmp/mb_gate_v2_400.parquet/*.parquet')"
+_GP = gate_parquet.scan()
 
 
 @register(
@@ -329,7 +327,8 @@ def transport_gate_pipeline(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def codec_gate_parquet(spark: SparkSession, sf_dir: str) -> str:
+@artifact("codecgate", 1)
+def codec_gate_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Gate relation over the mixed-CODEC fixture (mulaw/alaw/adpcm/
     pcm16 WAV + native FLAC with corrupt + truncated plants — the
     operators/sniff.py fixture): the deep chunk/metadata walks catch the
@@ -340,13 +339,10 @@ def codec_gate_parquet(spark: SparkSession, sf_dir: str) -> str:
     from macrobase_spark.sources.clips import generate_codec_clips
 
     n = _codec_clips_n(sf_dir)
-    path = f"/tmp/mb_codecgate_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        transport_gate(generate_codec_clips(spark, n)).write.mode("overwrite").parquet(path)
-    return path
+    transport_gate(generate_codec_clips(spark, n)).write.mode("overwrite").parquet(out)
 
 
-_CG = "read_parquet('/tmp/mb_codecgate_v1_400.parquet/*.parquet')"
+_CG = codec_gate_parquet.scan()
 
 
 @register(

@@ -351,10 +351,12 @@ def hics_subspace_explain(
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from macrobase_spark.artifacts import artifact  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 
-def hics_model_parquet(spark, sf_dir: str) -> str:
+@artifact("hics_model", 1)
+def hics_model_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the HiCS top-k subspace forests as ONE flat node
     relation — (sub, label, node, feat_local, feat_abs, thr, lc, rc, size,
     depth, root, psi) — so the whole scoring pass (per-subspace iforest
@@ -362,38 +364,32 @@ def hics_model_parquet(spark, sf_dir: str) -> str:
     labels) is SQL-stateable over the same files. The Monte-Carlo SEARCH
     that chose the subspaces stays gated by tests/test_hics.py planted
     recovery + reference-dataset parity."""
-    import os
-
     from macrobase_spark.operators.detectors import array_col_to_features
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    path = f"/tmp/mb_hics_model_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        feats = [f"_f{i}" for i in range(6)]
-        df = array_col_to_features(e, "embedding", 6)
-        sample = _collect_sample(df, feats, 2048, 42)
-        models = fit_hics_models(
-            sample, feats, m=20, cutoff=30, dmax=2, topk=5, n_trees=50, seed=42
-        )
-        rows = []
-        for s, (sub_cols, m_) in enumerate(models):
-            label = "[" + ",".join(sub_cols) + "]"
-            abs_idx = [int(c[2:]) for c in sub_cols]  # _f3 -> embedding[3]
-            roots = set(int(r) for r in m_.roots)
-            for i in range(len(m_.feat)):
-                fl = int(m_.feat[i])
-                rows.append(
-                    (s, label, i, fl, abs_idx[fl] if fl >= 0 else -1,
-                     float(m_.thr[i]), int(m_.left[i]), int(m_.right[i]),
-                     int(m_.size[i]), int(m_.depth[i]), i in roots, int(m_.psi))
-                )
-        spark.createDataFrame(
-            rows,
-            "sub long, label string, node long, feat_local long, feat_abs long, "
-            "thr double, lc long, rc long, size long, depth long, root boolean, psi long",
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+    feats = [f"_f{i}" for i in range(6)]
+    df = array_col_to_features(e, "embedding", 6)
+    sample = _collect_sample(df, feats, 2048, 42)
+    models = fit_hics_models(
+        sample, feats, m=20, cutoff=30, dmax=2, topk=5, n_trees=50, seed=42
+    )
+    rows = []
+    for s, (sub_cols, m_) in enumerate(models):
+        label = "[" + ",".join(sub_cols) + "]"
+        abs_idx = [int(c[2:]) for c in sub_cols]  # _f3 -> embedding[3]
+        roots = set(int(r) for r in m_.roots)
+        for i in range(len(m_.feat)):
+            fl = int(m_.feat[i])
+            rows.append(
+                (s, label, i, fl, abs_idx[fl] if fl >= 0 else -1,
+                 float(m_.thr[i]), int(m_.left[i]), int(m_.right[i]),
+                 int(m_.size[i]), int(m_.depth[i]), i in roots, int(m_.psi))
+            )
+    spark.createDataFrame(
+        rows,
+        "sub long, label string, node long, feat_local long, feat_abs long, "
+        "thr double, lc long, rc long, size long, depth long, root boolean, psi long",
+    ).coalesce(1).write.mode("overwrite").parquet(out)
 
 
 def load_hics_models(spark, path: str) -> list:
@@ -422,7 +418,7 @@ def load_hics_models(spark, path: str) -> list:
     return models
 
 
-_HICSM = "read_parquet('/tmp/mb_hics_model_v1_500.parquet/*.parquet')"
+_HICSM = hics_model_parquet.scan()
 
 _HICS_ORACLE = f"""
     WITH nodes AS (SELECT * FROM {_HICSM}),

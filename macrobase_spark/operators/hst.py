@@ -369,10 +369,12 @@ def stream_hst(
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from macrobase_spark.artifacts import artifact  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 
-def hst_model_parquet(spark, sf_dir: str) -> str:
+@artifact("hst_model", 1)
+def hst_model_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the fitted HST forest as a (tree, node, feat, thr, mass)
     relation — a few hundred KB — so the depth+ln(mass) scoring walk is
     SQL-expressible: the DuckDB oracle below unrolls the fixed-depth
@@ -380,28 +382,22 @@ def hst_model_parquet(spark, sf_dir: str) -> str:
     (VERDICT r2 item 9). The registered query loads the model back from
     this parquet, so Spark and oracle provably score with one model; the
     FIT stays gated by tests/test_hst.py + shuttle parity."""
-    import os
-
     from macrobase_spark.operators.detectors import _collect_sample, array_col_to_features
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    path = f"/tmp/mb_hst_model_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        feats = [f"_f{i}" for i in range(8)]
-        df = array_col_to_features(e, "embedding", 8)
-        sample = _collect_sample(df, feats, 4096, 42)
-        model = fit_hst(sample, n_trees=50, depth_limit=8, seed=42)
-        rows = [
-            (int(t), int(node), int(model.feat[t, node]), float(model.thr[t, node]),
-             float(model.mass[t, node]))
-            for t in range(model.n_trees)
-            for node in range(model.feat.shape[1])
-        ]
-        spark.createDataFrame(
-            rows, "tree long, node long, feat long, thr double, mass double"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+    feats = [f"_f{i}" for i in range(8)]
+    df = array_col_to_features(e, "embedding", 8)
+    sample = _collect_sample(df, feats, 4096, 42)
+    model = fit_hst(sample, n_trees=50, depth_limit=8, seed=42)
+    rows = [
+        (int(t), int(node), int(model.feat[t, node]), float(model.thr[t, node]),
+         float(model.mass[t, node]))
+        for t in range(model.n_trees)
+        for node in range(model.feat.shape[1])
+    ]
+    spark.createDataFrame(
+        rows, "tree long, node long, feat long, thr double, mass double"
+    ).coalesce(1).write.mode("overwrite").parquet(out)
 
 
 def load_hst_model(spark, path: str, depth_limit: int = 8) -> HSTModel:
@@ -416,8 +412,7 @@ def load_hst_model(spark, path: str, depth_limit: int = 8) -> HSTModel:
     )
 
 
-# correctness gate runs at sf0.01 -> 500 embedding rows; oracle fixed there
-_HSTM = "read_parquet('/tmp/mb_hst_model_v1_500.parquet/*.parquet')"
+_HSTM = hst_model_parquet.scan()
 
 _HST_ORACLE = f"""
     WITH nodes AS (SELECT tree, node, feat, thr, mass FROM {_HSTM}),

@@ -411,59 +411,48 @@ def sample_frames(
 # recovery + feature-value equality)
 # ---------------------------------------------------------------------------
 
-import re as _re  # noqa: E402
-
 from pyspark.sql import functions as F  # noqa: E402
 
+from macrobase_spark.artifacts import artifact, sf_size  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 
 def _images_n(sf_dir: str) -> int:
-    m = _re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    return max(int(sf * 40_000), 400)
+    return sf_size(sf_dir, 40_000, 400)
 
 
-def image_features_parquet(spark, sf_dir: str) -> str:
+@artifact("imgfeat", 1)
+def image_features_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the per-image feature relation (ONE decode pass) to
     parquet; the DuckDB oracle reads the same files — the clips_suite
     recipe (clips_suite.scored_parquet), which turns the relational stats
     oracle-green while the decode kernel stays gated by tests/test_image.py
     planted recovery."""
-    import os
-
     from macrobase_spark.sources.images import generate_images
 
     n = _images_n(sf_dir)
-    path = f"/tmp/mb_imgfeat_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        imgs = generate_images(spark, n)
-        (
-            image_features(imgs)
-            .join(imgs.select("image_id", "label"), "image_id")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    imgs = generate_images(spark, n)
+    (
+        image_features(imgs)
+        .join(imgs.select("image_id", "label"), "image_id")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
 
 
-def video_frame_features_parquet(spark, sf_dir: str) -> str:
+@artifact("vidfeat", 1)
+def video_frame_features_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize per-frame features of every-2nd-frame samples (ONE
     fan-out + decode pass) to parquet for the DuckDB oracle."""
-    import os
-
     from macrobase_spark.sources.images import generate_videos
 
     n = max(_images_n(sf_dir) // 10, 40)
-    path = f"/tmp/mb_vidfeat_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        frames = sample_frames(generate_videos(spark, n), every_k=2)
-        (
-            image_features(frames, id_col="video_id", bytes_col="frame")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    frames = sample_frames(generate_videos(spark, n), every_k=2)
+    (
+        image_features(frames, id_col="video_id", bytes_col="frame")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
 
 
 def image_feature_stats_pipeline(spark, sf_dir: str) -> DataFrame:
@@ -501,9 +490,8 @@ def video_frame_stats_pipeline(spark, sf_dir: str) -> DataFrame:
     )
 
 
-# correctness gate runs at sf0.01 → 400 images / 40 videos; oracle fixed there
-_IMGF = "read_parquet('/tmp/mb_imgfeat_v1_400.parquet/*.parquet')"
-_VIDF = "read_parquet('/tmp/mb_vidfeat_v1_40.parquet/*.parquet')"
+_IMGF = image_features_parquet.scan()
+_VIDF = video_frame_features_parquet.scan()
 
 
 @register(
@@ -554,25 +542,21 @@ def video_frame_stats(spark, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("image_id", "video_id")
 
 
-def png_features_parquet(spark, sf_dir: str) -> str:
+@artifact("pngfeat", 1)
+def png_features_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize per-image features of the PNG fixture (ONE decode pass
     through the real stdlib PNG codec) to parquet for the DuckDB oracle —
     same recipe as image_features_parquet."""
-    import os
-
     from macrobase_spark.sources.images import generate_png_images
 
     n = _images_n(sf_dir)
-    path = f"/tmp/mb_pngfeat_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        imgs = generate_png_images(spark, n)
-        (
-            image_features(imgs)
-            .join(imgs.select("image_id", "label"), "image_id")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    imgs = generate_png_images(spark, n)
+    (
+        image_features(imgs)
+        .join(imgs.select("image_id", "label"), "image_id")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
 
 
 def png_feature_stats_pipeline(spark, sf_dir: str) -> DataFrame:
@@ -590,7 +574,7 @@ def png_feature_stats_pipeline(spark, sf_dir: str) -> DataFrame:
     )
 
 
-_PNGF = "read_parquet('/tmp/mb_pngfeat_v1_400.parquet/*.parquet')"
+_PNGF = png_features_parquet.scan()
 
 
 @register(
@@ -620,25 +604,21 @@ def png_feature_stats(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def jpeg_features_parquet(spark, sf_dir: str) -> str:
+@artifact("jpegfeat", 1)
+def jpeg_features_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize per-image features of the JPEG fixture (ONE decode pass
     through the pure-numpy baseline JPEG codec) for the DuckDB oracle —
     same recipe as png_features_parquet."""
-    import os
-
     from macrobase_spark.sources.images import generate_jpeg_images
 
     n = _images_n(sf_dir)
-    path = f"/tmp/mb_jpegfeat_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        imgs = generate_jpeg_images(spark, n)
-        (
-            image_features(imgs)
-            .join(imgs.select("image_id", "label"), "image_id")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    imgs = generate_jpeg_images(spark, n)
+    (
+        image_features(imgs)
+        .join(imgs.select("image_id", "label"), "image_id")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
 
 
 def jpeg_feature_stats_pipeline(spark, sf_dir: str) -> DataFrame:
@@ -656,7 +636,7 @@ def jpeg_feature_stats_pipeline(spark, sf_dir: str) -> DataFrame:
     )
 
 
-_JPGF = "read_parquet('/tmp/mb_jpegfeat_v1_400.parquet/*.parquet')"
+_JPGF = jpeg_features_parquet.scan()
 
 
 @register(
@@ -687,25 +667,21 @@ def jpeg_feature_stats(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def webp_features_parquet(spark, sf_dir: str) -> str:
+@artifact("webpfeat", 1)
+def webp_features_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize per-image features of the lossless-WebP fixture (ONE
     decode pass through the pure-numpy VP8L codec) for the DuckDB oracle —
     same recipe as png/jpeg_features_parquet."""
-    import os
-
     from macrobase_spark.sources.images import generate_webp_images
 
     n = _images_n(sf_dir)
-    path = f"/tmp/mb_webpfeat_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        imgs = generate_webp_images(spark, n)
-        (
-            image_features(imgs)
-            .join(imgs.select("image_id", "label"), "image_id")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    imgs = generate_webp_images(spark, n)
+    (
+        image_features(imgs)
+        .join(imgs.select("image_id", "label"), "image_id")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
 
 
 def webp_feature_stats_pipeline(spark, sf_dir: str) -> DataFrame:
@@ -724,7 +700,7 @@ def webp_feature_stats_pipeline(spark, sf_dir: str) -> DataFrame:
     )
 
 
-_WEBPF = "read_parquet('/tmp/mb_webpfeat_v1_400.parquet/*.parquet')"
+_WEBPF = webp_features_parquet.scan()
 
 
 @register(

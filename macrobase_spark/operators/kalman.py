@@ -218,32 +218,29 @@ def stream_kalman(
 # registered query: per-event-type smoothing, oracle = weight-matrix replay
 # ---------------------------------------------------------------------------
 
+from macrobase_spark.artifacts import artifact  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 _KAL_STEPS = 200
 _KAL_Q, _KAL_R = 0.01, 1.0
 
 
-def kalman_weights_parquet(spark, sf_dir: str) -> str:
+@artifact("kalman_w", 1)
+def kalman_weights_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the lower-triangular (step, lag, w) weight relation for
     the registered config — one relation shared by every key."""
-    import os
-
-    path = f"/tmp/mb_kalman_w_v1_{_KAL_STEPS}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        w = kalman_weights(_KAL_STEPS, _KAL_Q, _KAL_R)
-        rows = [
-            (t + 1, j + 1, float(w[t, j]))
-            for t in range(_KAL_STEPS)
-            for j in range(t + 1)
-        ]
-        spark.createDataFrame(rows, "step long, lag long, w double").coalesce(
-            1
-        ).write.mode("overwrite").parquet(path)
-    return path
+    w = kalman_weights(_KAL_STEPS, _KAL_Q, _KAL_R)
+    rows = [
+        (t + 1, j + 1, float(w[t, j]))
+        for t in range(_KAL_STEPS)
+        for j in range(t + 1)
+    ]
+    spark.createDataFrame(rows, "step long, lag long, w double").coalesce(
+        1
+    ).write.mode("overwrite").parquet(out)
 
 
-_KALW = f"read_parquet('/tmp/mb_kalman_w_v1_{_KAL_STEPS}.parquet/*.parquet')"
+_KALW = kalman_weights_parquet.scan()
 
 _KAL_ORACLE = f"""
     WITH obs AS (

@@ -44,6 +44,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from macrobase_spark.artifacts import artifact
 from macrobase_spark.queries import register
 
 
@@ -457,41 +458,41 @@ def autocorr_events(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def gaussian_model_parquet(spark, sf_dir: str, dims: int = 8) -> tuple:
-    """Materialize (i, j, inv_ij, mu_i, mu_j) for the SQL quadratic form;
-    returns (path, mean, inv) so callers never fit twice. Guarded on
-    _SUCCESS like the other materialized-model writers (a partial write
-    must not be read back)."""
-    import os
+_GAUSS_DIMS = 8
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n_rows = emb.count()
-    path = f"/tmp/mb_gaussian_model_v1_{n_rows}.parquet"
-    if os.path.isfile(f"{path}/_SUCCESS"):
-        pdf = spark.read.parquet(path).toPandas()
-        mean = np.zeros(dims)
-        inv = np.zeros((dims, dims))
-        for r in pdf.itertuples(index=False):
-            inv[r.i, r.j] = r.p
-            mean[r.i] = r.mu_i
-        return path, mean, inv
+
+@artifact("gaussian_model", 1)
+def gaussian_model_parquet(spark, sf_dir: str, out: str) -> None:
+    """Materialize (i, j, p, mu_i, mu_j) — p the inverse covariance — for
+    the SQL quadratic form."""
     from macrobase_spark.operators.detectors import array_col_to_features
 
-    feats = [f"_f{i}" for i in range(dims)]
-    df = array_col_to_features(emb, "embedding", dims)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    feats = [f"_f{i}" for i in range(_GAUSS_DIMS)]
+    df = array_col_to_features(emb, "embedding", _GAUSS_DIMS)
     mean, _, inv, _ = gaussian_fit(df, feats)
     rows = [
         (i, j, float(inv[i, j]), float(mean[i]), float(mean[j]))
-        for i in range(dims)
-        for j in range(dims)
+        for i in range(_GAUSS_DIMS)
+        for j in range(_GAUSS_DIMS)
     ]
     spark.createDataFrame(
         rows, "i int, j int, p double, mu_i double, mu_j double"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-    return path, mean, inv
+    ).coalesce(1).write.parquet(out)
 
 
-_GM = "read_parquet('/tmp/mb_gaussian_model_v1_500.parquet/*.parquet')"
+def load_gaussian_model(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
+    """(mean, inverse covariance) back from the materialized relation, so
+    callers never fit twice."""
+    mean = np.zeros(_GAUSS_DIMS)
+    inv = np.zeros((_GAUSS_DIMS, _GAUSS_DIMS))
+    for r in spark.read.parquet(path).toPandas().itertuples(index=False):
+        inv[r.i, r.j] = r.p
+        mean[r.i] = r.mu_i
+    return mean, inv
+
+
+_GM = gaussian_model_parquet.scan()
 
 _GAUSS_ORACLE = f"""
 WITH m AS (SELECT * FROM {_GM}),
@@ -513,11 +514,10 @@ def gaussian_mahalanobis_embeddings(spark, sf_dir: str) -> DataFrame:
     the materialized (mean, inverse-covariance) relation."""
     from macrobase_spark.operators.detectors import array_col_to_features
 
-    dims = 8
-    _, mean, inv = gaussian_model_parquet(spark, sf_dir, dims)
+    mean, inv = load_gaussian_model(spark, gaussian_model_parquet(spark, sf_dir))
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    feats = [f"_f{i}" for i in range(dims)]
-    df = array_col_to_features(emb, "embedding", dims)
+    feats = [f"_f{i}" for i in range(_GAUSS_DIMS)]
+    df = array_col_to_features(emb, "embedding", _GAUSS_DIMS)
     scored = gaussian_mahalanobis(df, feats, mean, inv)
     return scored.orderBy(F.desc("_SCORE"), "vec_id").limit(20).select(
         "vec_id", F.round("_SCORE", 5).alias("score")

@@ -36,8 +36,6 @@ Spark shape (the part that must survive 10^12 clips):
 
 from __future__ import annotations
 
-import os
-import re as _re
 from typing import Iterator
 
 import numpy as np
@@ -52,6 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from macrobase_spark.artifacts import artifact, sf_size
 from macrobase_spark.queries import register
 
 # -- K-weighting filter design (BS.1770-4) -----------------------------------
@@ -354,22 +353,18 @@ def generate_loudness_clips(spark, n: int):
 
 
 def _loudness_n(sf_dir: str) -> int:
-    m = _re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    return max(int(sf * 100_000), 1000)
+    return sf_size(sf_dir, 100_000, 1000)
 
 
-def loudness_blocks_parquet(spark, sf_dir: str) -> str:
+@artifact("loudness", 1)
+def loudness_blocks_parquet(spark, sf_dir: str, out: str) -> None:
     n = _loudness_n(sf_dir)
-    path = f"/tmp/mb_loudness_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        loudness_blocks(generate_loudness_clips(spark, n)).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
+    loudness_blocks(generate_loudness_clips(spark, n)).write.mode(
+        "overwrite"
+    ).parquet(out)
 
 
-_LB = "read_parquet('/tmp/mb_loudness_v1_1000.parquet/*.parquet')"
+_LB = loudness_blocks_parquet.scan()
 
 
 @register(

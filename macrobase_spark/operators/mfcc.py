@@ -179,31 +179,26 @@ def extract_mfcc(
 
 # ---- materialized fixture + registered query --------------------------------
 
+from macrobase_spark.artifacts import artifact  # noqa: E402
+from macrobase_spark.queries import register  # noqa: E402
 
-def mfcc_parquet(spark, sf_dir: str) -> str:
+@artifact("mfcc", 1)
+def mfcc_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the per-clip MFCC relation + codec to parquet (ONE decode
     pass) so the per-codec profile is oracle-stateable over the same files —
     the audio_features_parquet recipe (clips_suite.py:391)."""
-    import os
+    from macrobase_spark.operators.clips_suite import clips_table
 
-    from macrobase_spark.operators.clips_suite import clips_n, clips_table
-
-    n = clips_n(sf_dir)
-    path = f"/tmp/mb_mfcc_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        clips = clips_table(spark, sf_dir)
-        (
-            extract_mfcc(clips)
-            .join(clips.select("clip_id", "codec"), "clip_id")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    clips = clips_table(spark, sf_dir)
+    (
+        extract_mfcc(clips)
+        .join(clips.select("clip_id", "codec"), "clip_id")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
 
 
-_MF = "read_parquet('/tmp/mb_mfcc_v1_10000.parquet/*.parquet')"
-
-from macrobase_spark.queries import register  # noqa: E402
+_MF = mfcc_parquet.scan()
 
 
 @register(

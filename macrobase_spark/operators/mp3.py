@@ -30,7 +30,6 @@ over the materialized profile parquet.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -38,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from macrobase_spark.artifacts import artifact
 from macrobase_spark.queries import register
 
 # MPEG-1 Layer III tables (ISO/IEC 11172-3). Index 0 = "free format"
@@ -241,19 +241,17 @@ def mp3_verdict_col():
 # ---------------------------------------------------------------------------
 
 
-def mp3_profiles_parquet(spark: SparkSession, sf_dir: str) -> str:
+@artifact("mp3prof", 1)
+def mp3_profiles_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Materialize the profile relation once (kernel runs here, untimed)
     so the DuckDB oracle reads the identical rows."""
     from macrobase_spark.operators.audio import _codec_clips_n
 
     n = _codec_clips_n(sf_dir)
-    path = f"/tmp/mb_mp3prof_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        mp3_profiles(generate_mp3_clips(spark, n)).write.mode("overwrite").parquet(path)
-    return path
+    mp3_profiles(generate_mp3_clips(spark, n)).write.mode("overwrite").parquet(out)
 
 
-_MP = "read_parquet('/tmp/mb_mp3prof_v1_400.parquet/*.parquet')"
+_MP = mp3_profiles_parquet.scan()
 
 
 @register(

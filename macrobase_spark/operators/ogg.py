@@ -25,7 +25,6 @@ the DuckDB oracle over the materialized profiles.
 
 from __future__ import annotations
 
-import os
 import struct
 from typing import Iterator
 
@@ -34,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from macrobase_spark.artifacts import artifact
 from macrobase_spark.queries import register
 
 SAMPLES_PER_PACKET = 960  # one 20 ms Opus frame at the 48 kHz granule clock
@@ -313,19 +313,17 @@ def ogg_verdict_col():
     return F.expr(_VERDICT_SQL)
 
 
-def ogg_profiles_parquet(spark: SparkSession, sf_dir: str) -> str:
+@artifact("oggprof", 1)
+def ogg_profiles_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Materialize the profile relation once (kernel runs here, untimed)
     so the DuckDB oracle reads the identical rows."""
     from macrobase_spark.operators.audio import _codec_clips_n
 
     n = _codec_clips_n(sf_dir)
-    path = f"/tmp/mb_oggprof_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        ogg_profiles(generate_ogg_clips(spark, n)).write.mode("overwrite").parquet(path)
-    return path
+    ogg_profiles(generate_ogg_clips(spark, n)).write.mode("overwrite").parquet(out)
 
 
-_OP = "read_parquet('/tmp/mb_oggprof_v1_400.parquet/*.parquet')"
+_OP = ogg_profiles_parquet.scan()
 
 
 @register(

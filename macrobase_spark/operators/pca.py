@@ -33,12 +33,11 @@ shape; top_k prunes the model side, not the data side.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from macrobase_spark.artifacts import artifact
 from macrobase_spark.queries import register
 
 _DIM = 64
@@ -105,38 +104,32 @@ def pca_project(df: DataFrame, model: DataFrame, id_col: str = "vec_id", array_c
     )
 
 
-def pca_model_parquet(spark, sf_dir: str, top_k: int = _TOP_K) -> str:
+@artifact("pca_model", 1)
+def pca_model_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the fitted model as (comp, dim, w, mu, eigval,
-    var_ratio) rows for the top_k components."""
+    var_ratio) rows for the top _TOP_K components."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = emb.count()
-    # cache key carries the sf directory name, not just the row count — two
-    # datasets of equal size must not share a fitted model
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = f"/tmp/mb_pca_model_v1_{tag}_{n}_{top_k}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        mu, vals, W = fit_pca(emb)
-        total = float(vals.sum()) or 1.0
-        rows = [
-            (
-                c,
-                d,
-                float(W[c, d]),
-                float(mu[d]),
-                float(vals[c]),
-                float(vals[c] / total),
-            )
-            for c in range(top_k)
-            for d in range(_DIM)
-        ]
-        spark.createDataFrame(
-            rows, "comp int, dim int, w double, mu double, eigval double, var_ratio double"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+    mu, vals, W = fit_pca(emb)
+    total = float(vals.sum()) or 1.0
+    rows = [
+        (
+            c,
+            d,
+            float(W[c, d]),
+            float(mu[d]),
+            float(vals[c]),
+            float(vals[c] / total),
+        )
+        for c in range(_TOP_K)
+        for d in range(_DIM)
+    ]
+    spark.createDataFrame(
+        rows, "comp int, dim int, w double, mu double, eigval double, var_ratio double"
+    ).coalesce(1).write.mode("overwrite").parquet(out)
 
 
 _EMB = "read_parquet('/root/testdata/sf0.01/embeddings.parquet')"
-_MODEL = "read_parquet('/tmp/mb_pca_model_v1_sf0.01_500_8.parquet/*.parquet')"
+_MODEL = pca_model_parquet.scan()
 
 _PCA_ORACLE = f"""
 WITH x AS (

@@ -27,13 +27,12 @@ original (never mutating source data).
 
 from __future__ import annotations
 
-import os
-import re as _re
 from typing import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from macrobase_spark.artifacts import artifact, sf_size
 from macrobase_spark.queries import register
 
 # Java-regex ∩ RE2 portable patterns (no lookaround, no backrefs)
@@ -130,20 +129,16 @@ def generate_pii_docs(spark, n: int) -> DataFrame:
 
 
 def _pii_n(sf_dir: str) -> int:
-    m = _re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    return max(int(sf * 100_000), 1000)
+    return sf_size(sf_dir, 100_000, 1000)
 
 
-def pii_docs_parquet(spark, sf_dir: str) -> str:
+@artifact("pii_docs", 1)
+def pii_docs_parquet(spark, sf_dir: str, out: str) -> None:
     n = _pii_n(sf_dir)
-    path = f"/tmp/mb_pii_docs_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        generate_pii_docs(spark, n).write.mode("overwrite").parquet(path)
-    return path
+    generate_pii_docs(spark, n).write.mode("overwrite").parquet(out)
 
 
-_PD = "read_parquet('/tmp/mb_pii_docs_v1_1000.parquet/*.parquet')"
+_PD = pii_docs_parquet.scan()
 
 
 @register(

@@ -34,8 +34,6 @@ pinned by planted-frequency recovery in tests/test_pitch.py.
 
 from __future__ import annotations
 
-import os
-import re as _re
 from typing import Iterator
 
 import numpy as np
@@ -50,6 +48,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from macrobase_spark.artifacts import artifact, sf_size
 from macrobase_spark.queries import register
 
 FRAME = 2048
@@ -287,22 +286,18 @@ def generate_pitch_clips(spark, n: int):
 
 
 def _pitch_n(sf_dir: str) -> int:
-    m = _re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    return max(int(sf * 100_000), 1000)
+    return sf_size(sf_dir, 100_000, 1000)
 
 
-def pitch_features_parquet(spark, sf_dir: str) -> str:
+@artifact("pitch", 1)
+def pitch_features_parquet(spark, sf_dir: str, out: str) -> None:
     n = _pitch_n(sf_dir)
-    path = f"/tmp/mb_pitch_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        pitch_features(generate_pitch_clips(spark, n)).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
+    pitch_features(generate_pitch_clips(spark, n)).write.mode(
+        "overwrite"
+    ).parquet(out)
 
 
-_PF = "read_parquet('/tmp/mb_pitch_v1_1000.parquet/*.parquet')"
+_PF = pitch_features_parquet.scan()
 
 
 @register(

@@ -61,9 +61,12 @@ from pyspark.sql.types import (
 )
 
 from macrobase_spark.operators.similarity import (
+    IVF_ASSIGN,
+    IVF_PROBE,
     _as_matrix,
     _normalize,
     fit_ivf_centroids,
+    ivf_centroids,
 )
 
 
@@ -429,70 +432,54 @@ def ivf_pq_topk(
 # registered query: IVF-PQ over the embeddings table, ADC replayed by DuckDB
 # ---------------------------------------------------------------------------
 
+from macrobase_spark.artifacts import artifact  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 _PQ_M, _PQ_KS, _PQ_SCALE, _PQ_REFINE = 8, 16, 1 << 20, 50
 
 
-def pq_artifacts_parquet(spark, sf_dir: str):
+@artifact("pq", 1)
+def pq_artifacts_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the PQ relations the oracle replays: exploded codes
-    (vec_id, sub, code) and the quantized per-query LUTs
-    (query_id, sub, code, dot_q BIGINT), plus the cached codebooks — so
-    DuckDB can restate the EXACT integer ADC sum, shortlist cut, and
-    re-rank over the same files (the ivf_artifacts_parquet recipe).
-    Reuses the IVF coarse-quantizer artifacts (assignments + probe pairs),
-    so the PQ query provably prunes the same inverted lists the certified
-    IVF query does."""
-    import os
-
-    from macrobase_spark.operators.similarity import ivf_artifacts_parquet
-
-    apath, ppath, C = ivf_artifacts_parquet(spark, sf_dir)
+    (`codes`: vec_id, sub, code) and the quantized per-query LUTs (`lut`:
+    query_id, sub, code, dot_q BIGINT), plus the fitted codebooks
+    (`codebooks.npy`) — so DuckDB can restate the EXACT integer ADC sum,
+    shortlist cut, and re-rank over the same files (the
+    ivf_artifacts_parquet recipe). The registered query prunes with the
+    IVF artifact's quantizer, so it probes the same inverted lists the
+    certified IVF query does."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    kpath = f"/tmp/mb_pq_codes_v1_{n}.parquet"
-    lpath = f"/tmp/mb_pq_lut_v1_{n}.parquet"
-    bpath = f"/tmp/mb_pq_codebooks_v1_{n}.npy"
-    if (
-        os.path.isfile(bpath)
-        and os.path.isfile(f"{kpath}/_SUCCESS")
-        and os.path.isfile(f"{lpath}/_SUCCESS")
-    ):
-        return apath, ppath, kpath, lpath, C, np.load(bpath)
     B = fit_pq_codebooks(e, "vec_id", "embedding", m=_PQ_M, ks=_PQ_KS)
-    np.save(bpath, B)
-    if not os.path.isfile(f"{kpath}/_SUCCESS"):
-        (
-            pq_encode(e, "vec_id", "embedding", B)
-            .select("vec_id", F.posexplode("codes").alias("sub", "code"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(kpath)
-        )
-    if not os.path.isfile(f"{lpath}/_SUCCESS"):
-        qrows = e.filter(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
-        q_ids = [int(r["vec_id"]) for r in qrows]
-        q_mat = _normalize(
-            np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in qrows])
-        )
-        luts = _query_luts(q_mat, B, _PQ_SCALE)  # (nq, m, ks) int64
-        rows = [
-            (q_ids[qi], j, c, int(luts[qi, j, c]))
-            for qi in range(len(q_ids))
-            for j in range(_PQ_M)
-            for c in range(_PQ_KS)
-        ]
-        spark.createDataFrame(
-            rows, "query_id long, sub long, code long, dot_q long"
-        ).coalesce(1).write.mode("overwrite").parquet(lpath)
-    return apath, ppath, kpath, lpath, C, B
+    (
+        pq_encode(e, "vec_id", "embedding", B)
+        .select("vec_id", F.posexplode("codes").alias("sub", "code"))
+        .coalesce(1)
+        .write.parquet(f"{out}/codes")
+    )
+    qrows = e.filter(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
+    q_ids = [int(r["vec_id"]) for r in qrows]
+    q_mat = _normalize(
+        np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in qrows])
+    )
+    luts = _query_luts(q_mat, B, _PQ_SCALE)  # (nq, m, ks) int64
+    rows = [
+        (q_ids[qi], j, c, int(luts[qi, j, c]))
+        for qi in range(len(q_ids))
+        for j in range(_PQ_M)
+        for c in range(_PQ_KS)
+    ]
+    spark.createDataFrame(
+        rows, "query_id long, sub long, code long, dot_q long"
+    ).coalesce(1).write.parquet(f"{out}/lut")
+    np.save(f"{out}/codebooks.npy", B)
 
 
-# correctness gate runs at sf0.01 -> 500 embedding rows; oracle fixed there
-_PQ_K = "read_parquet('/tmp/mb_pq_codes_v1_500.parquet/*.parquet')"
-_PQ_L = "read_parquet('/tmp/mb_pq_lut_v1_500.parquet/*.parquet')"
-_IVF_A = "read_parquet('/tmp/mb_ivf_assign_v1_500.parquet/*.parquet')"
-_IVF_P = "read_parquet('/tmp/mb_ivf_probe_v1_500.parquet/*.parquet')"
+def pq_codebooks(spark, sf_dir: str) -> np.ndarray:
+    return np.load(f"{pq_artifacts_parquet(spark, sf_dir)}/codebooks.npy")
+
+
+_PQ_K = pq_artifacts_parquet.scan("codes")
+_PQ_L = pq_artifacts_parquet.scan("lut")
 
 _DOT = (
     "list_dot_product(list_transform(a.embedding, x -> CAST(x AS DOUBLE)),"
@@ -507,7 +494,7 @@ _NORM_B = "sqrt(list_dot_product(list_transform(b.embedding, x -> CAST(x AS DOUB
     f"""
     WITH cand AS (
       SELECT p.query_id, asg.vec_id AS nbr_id
-      FROM {_IVF_P} p JOIN {_IVF_A} asg ON asg.centroid = p.centroid
+      FROM {IVF_PROBE} p JOIN {IVF_ASSIGN} asg ON asg.centroid = p.centroid
       WHERE asg.vec_id != p.query_id),
     adc AS (
       SELECT c.query_id, c.nbr_id, SUM(l.dot_q) AS adc_q
@@ -543,7 +530,7 @@ def ann_ivf_pq_topk_q(spark, sf_dir):
     the same top-`refine` shortlist, and re-ranks by exact cosine — so the
     registered result certifies the probe set, the quantized scoring, the
     shortlist boundary, AND the final ranking."""
-    _, _, _, _, C, B = pq_artifacts_parquet(spark, sf_dir)
+    C, B = ivf_centroids(spark, sf_dir), pq_codebooks(spark, sf_dir)
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return ivf_pq_topk(
         e, e.filter(F.col("vec_id") < 3), "vec_id", "embedding",
@@ -552,20 +539,12 @@ def ann_ivf_pq_topk_q(spark, sf_dir):
     )
 
 
-def ivf_pq_index_dir(spark, sf_dir: str) -> tuple[str, np.ndarray, np.ndarray]:
+@artifact("ivfpq_index", 1)
+def ivf_pq_index_dir(spark, sf_dir: str, out: str) -> None:
     """Build (once) the centroid-PARTITIONED on-disk IVF-PQ code index for
     the embeddings table — the amortized 100 TB shape: probes prune at the
     scan (PartitionFilters) and the scanned rows are ~8-byte code rows,
     never the float vectors. Reuses the certified quantizer/codebooks."""
-    import os
-
-    from macrobase_spark.operators.similarity import ivf_artifacts_parquet
-
-    _, _, C = ivf_artifacts_parquet(spark, sf_dir)
-    _, _, _, _, _, B = pq_artifacts_parquet(spark, sf_dir)
+    C, B = ivf_centroids(spark, sf_dir), pq_codebooks(spark, sf_dir)
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    path = f"/tmp/mb_ivfpq_index_v1_{n}"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        ivf_pq_build_index(e, "vec_id", "embedding", C, B, path)
-    return path, C, B
+    ivf_pq_build_index(e, "vec_id", "embedding", C, B, out)

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from macrobase_spark.operators.clips_suite import scored_parquet
 from macrobase_spark.queries import register
 
 
@@ -109,8 +110,8 @@ def sketch_column_stats(
 
 @register(
     "hot_keys_clips",
-    """
-    WITH s AS (SELECT * FROM read_parquet('/tmp/mb_scored_v4_10000.parquet/*.parquet')),
+    f"""
+    WITH s AS (SELECT * FROM {scored_parquet.scan()}),
     t AS (SELECT CAST(count(*) AS DOUBLE) AS total FROM s),
     u AS (
       SELECT 'codec' AS "column", CAST(codec AS VARCHAR) AS value FROM s
@@ -127,8 +128,6 @@ def hot_keys_clips_q(spark, sf_dir):
     """Skew report over the scored clips relation — recovers the planted
     hot keys (codec=opus ~60%, sr_hz=16000 ~70%) that the suite's salting
     and AQE-skew handling exist for."""
-    from macrobase_spark.operators.clips_suite import scored_parquet
-
     scored = spark.read.parquet(scored_parquet(spark, sf_dir))
     return hot_keys(scored, ["codec", "sr_hz"], min_share=0.2)
 
@@ -137,7 +136,5 @@ def hot_keys_clips_q(spark, sf_dir):
 # engine-specific (DataSketches HLL/KLL), no cross-engine oracle exists;
 # accuracy is gated vs exact in tests/test_profile.py instead.
 def sketch_column_stats_clips_q(spark, sf_dir):
-    from macrobase_spark.operators.clips_suite import scored_parquet
-
     scored = spark.read.parquet(scored_parquet(spark, sf_dir))
     return sketch_column_stats(scored, ["dur_ms", "payload_bytes", "snr_db"])

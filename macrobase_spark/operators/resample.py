@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from macrobase_spark.artifacts import artifact
 from macrobase_spark.queries import register
 
 
@@ -145,19 +146,14 @@ def resample_check_sinc(
     return df.select("clip_id", "sr_hz", "bytes").mapInPandas(run, RESAMPLE_CHECK_SCHEMA)
 
 
-def resample_sinc_parquet(spark, sf_dir: str) -> str:
-    import os
+@artifact("resample_sinc", 1)
+def resample_sinc_parquet(spark, sf_dir: str, out: str) -> None:
+    from macrobase_spark.operators.clips_suite import clips_table
 
-    from macrobase_spark.operators.clips_suite import clips_n, clips_table
-
-    n = clips_n(sf_dir)
-    path = f"/tmp/mb_resample_sinc_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        resample_check_sinc(clips_table(spark, sf_dir)).write.mode("overwrite").parquet(path)
-    return path
+    resample_check_sinc(clips_table(spark, sf_dir)).write.mode("overwrite").parquet(out)
 
 
-_SINCF = "read_parquet('/tmp/mb_resample_sinc_v1_10000.parquet/*.parquet')"
+_SINCF = resample_sinc_parquet.scan()
 
 
 @register(

@@ -390,65 +390,61 @@ def stream_rrcf(
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from macrobase_spark.artifacts import artifact  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 
-def rrcf_model_parquet(spark, sf_dir: str) -> str:
+@artifact("rrcf_model", 1)
+def rrcf_model_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the fitted RRCF forest as a flat node relation — (tree,
     node, is_leaf, q, p, lc, rc, ln, rn) — so the stationary CoDisp walk
     (descend by cut, carry max sibling-size ratio) is SQL-stateable as a
     fixed-depth leaf-stay-put unroll (max tree depth is checked against the
     unroll). The randomized BUILD stays gated by tests/test_rrcf.py."""
-    import os
-
     from macrobase_spark.operators.detectors import _collect_sample, array_col_to_features
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    path = f"/tmp/mb_rrcf_model_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        feats = [f"_f{i}" for i in range(8)]
-        df = array_col_to_features(e, "embedding", 8)
-        sample = _collect_sample(df, feats, 4096, 42)
-        forest = fit_rrcf(sample, n_trees=40, subsample=256, seed=42)
-        rows = []
-        max_depth = 0
-        for t, tree in enumerate(forest.trees):
-            ids: dict[int, int] = {}
+    feats = [f"_f{i}" for i in range(8)]
+    df = array_col_to_features(e, "embedding", 8)
+    sample = _collect_sample(df, feats, 4096, 42)
+    forest = fit_rrcf(sample, n_trees=40, subsample=256, seed=42)
+    rows = []
+    max_depth = 0
+    for t, tree in enumerate(forest.trees):
+        ids: dict[int, int] = {}
 
-            def nid(node):
-                if id(node) not in ids:
-                    ids[id(node)] = len(ids)
-                return ids[id(node)]
+        def nid(node):
+            if id(node) not in ids:
+                ids[id(node)] = len(ids)
+            return ids[id(node)]
 
-            stack = [(tree.root, 0)]
-            while stack:
-                node, d = stack.pop()
-                max_depth = max(max_depth, d)
-                if isinstance(node, Branch):
-                    rows.append(
-                        (t, nid(node), False, int(node.q), float(node.p),
-                         nid(node.l), nid(node.r), int(node.l.n), int(node.r.n),
-                         int(node.n))
-                    )
-                    stack.append((node.l, d + 1))
-                    stack.append((node.r, d + 1))
-                else:
-                    # nn carries the leaf's duplicate-collapse count — the
-                    # parent's ln/rn ratio depends on it at reload time
-                    rows.append((t, nid(node), True, -1, 0.0, -1, -1, 0, 0,
-                                 int(node.n)))
-        if max_depth > 30:
-            raise ValueError(
-                f"rrcf oracle unrolls 30 descent steps but the forest is "
-                f"{max_depth} deep — bump the unroll"
-            )
-        spark.createDataFrame(
-            rows,
-            "tree long, node long, is_leaf boolean, q long, p double, "
-            "lc long, rc long, ln long, rn long, nn long",
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+        stack = [(tree.root, 0)]
+        while stack:
+            node, d = stack.pop()
+            max_depth = max(max_depth, d)
+            if isinstance(node, Branch):
+                rows.append(
+                    (t, nid(node), False, int(node.q), float(node.p),
+                     nid(node.l), nid(node.r), int(node.l.n), int(node.r.n),
+                     int(node.n))
+                )
+                stack.append((node.l, d + 1))
+                stack.append((node.r, d + 1))
+            else:
+                # nn carries the leaf's duplicate-collapse count — the
+                # parent's ln/rn ratio depends on it at reload time
+                rows.append((t, nid(node), True, -1, 0.0, -1, -1, 0, 0,
+                             int(node.n)))
+    if max_depth > 30:
+        raise ValueError(
+            f"rrcf oracle unrolls 30 descent steps but the forest is "
+            f"{max_depth} deep — bump the unroll"
+        )
+    spark.createDataFrame(
+        rows,
+        "tree long, node long, is_leaf boolean, q long, p double, "
+        "lc long, rc long, ln long, rn long, nn long",
+    ).coalesce(1).write.mode("overwrite").parquet(out)
 
 
 def load_rrcf_forest(spark, path: str, forget_threshold: int = 256) -> RRCFForest:
@@ -480,7 +476,7 @@ def load_rrcf_forest(spark, path: str, forget_threshold: int = 256) -> RRCFFores
     return RRCFForest(trees, forget_threshold)
 
 
-_RRCFM = "read_parquet('/tmp/mb_rrcf_model_v1_500.parquet/*.parquet')"
+_RRCFM = rrcf_model_parquet.scan()
 
 _RRCF_ORACLE = f"""
     WITH nodes AS (SELECT * FROM {_RRCFM}),

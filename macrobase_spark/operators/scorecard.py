@@ -24,8 +24,6 @@ clips_validation_suite scan discipline.
 
 from __future__ import annotations
 
-import os
-import re as _re
 from typing import Iterator
 
 import numpy as np
@@ -40,6 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from macrobase_spark.artifacts import artifact, sf_size
 from macrobase_spark.queries import register
 
 SCORECARD_SCHEMA = StructType(
@@ -303,22 +302,18 @@ def generate_qa_clips(spark, n: int) -> DataFrame:
 
 
 def _qa_n(sf_dir: str) -> int:
-    m = _re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    return max(int(sf * 100_000), 1000)
+    return sf_size(sf_dir, 100_000, 1000)
 
 
-def scorecard_parquet(spark, sf_dir: str) -> str:
+@artifact("scorecard", 2)
+def scorecard_parquet(spark, sf_dir: str, out: str) -> None:
     n = _qa_n(sf_dir)
-    path = f"/tmp/mb_scorecard_v2_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        scorecard_features(generate_qa_clips(spark, n)).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
+    scorecard_features(generate_qa_clips(spark, n)).write.mode(
+        "overwrite"
+    ).parquet(out)
 
 
-_SC = "read_parquet('/tmp/mb_scorecard_v2_1000.parquet/*.parquet')"
+_SC = scorecard_parquet.scan()
 _FLAG_SQL = ",\n           ".join(
     f"CAST(sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS BIGINT) AS {name}"
     for name, cond in _FLAGS.items()

@@ -29,8 +29,6 @@ payload bytes never enter the JVM when scanned via the files path).
 
 from __future__ import annotations
 
-import os
-import re as _re
 from typing import Iterator
 
 import numpy as np
@@ -46,6 +44,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from macrobase_spark.artifacts import artifact, sf_size
 from macrobase_spark.queries import register
 
 SILENCE_SCHEMA = StructType(
@@ -64,6 +63,7 @@ SILENCE_SCHEMA = StructType(
 
 
 from macrobase_spark.operators.audio import _run_lengths  # shared kernel helper
+from macrobase_spark.operators.clips_suite import scored_parquet
 
 
 def silence_features(
@@ -195,22 +195,18 @@ def generate_silence_clips(spark, n: int):
 
 
 def _silence_n(sf_dir: str) -> int:
-    m = _re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    return max(int(sf * 100_000), 1000)
+    return sf_size(sf_dir, 100_000, 1000)
 
 
-def silence_features_parquet(spark, sf_dir: str) -> str:
+@artifact("silence", 1)
+def silence_features_parquet(spark, sf_dir: str, out: str) -> None:
     n = _silence_n(sf_dir)
-    path = f"/tmp/mb_silence_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        silence_features(generate_silence_clips(spark, n)).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
+    silence_features(generate_silence_clips(spark, n)).write.mode(
+        "overwrite"
+    ).parquet(out)
 
 
-_SF = "read_parquet('/tmp/mb_silence_v1_1000.parquet/*.parquet')"
+_SF = silence_features_parquet.scan()
 
 
 # Fused-path query: the SAME silence profile columns now come out of the
@@ -219,7 +215,7 @@ _SF = "read_parquet('/tmp/mb_silence_v1_1000.parquet/*.parquet')"
 # This query oracle-certifies the fused columns over the materialized scored
 # relation; kernel equality vs the standalone float-path operator is gated by
 # tests/test_silence.py::test_fused_equals_standalone.
-_S3 = "read_parquet('/tmp/mb_scored_v4_10000.parquet/*.parquet')"
+_S3 = scored_parquet.scan()
 
 
 @register(
@@ -237,8 +233,6 @@ _S3 = "read_parquet('/tmp/mb_scored_v4_10000.parquet/*.parquet')"
 def clips_silence_stats_q(spark, sf_dir):
     """Per-codec silence profile straight off the fused scored relation —
     no second scan of the payload bytes."""
-    from macrobase_spark.operators.clips_suite import scored_parquet
-
     scored = spark.read.parquet(scored_parquet(spark, sf_dir))
     return scored.groupBy("codec").agg(
         F.count(F.lit(1)).cast("long").alias("n"),

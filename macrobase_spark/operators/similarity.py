@@ -31,6 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from macrobase_spark.artifacts import artifact
 from macrobase_spark.queries import register
 
 
@@ -537,51 +538,40 @@ def embedding_cosine_dup_q(spark, sf_dir):
     return cosine_dup_pairs(e, "vec_id", "embedding", threshold=0.35)
 
 
-def ivf_artifacts_parquet(spark, sf_dir: str) -> tuple[str, str, np.ndarray]:
-    """Materialize the IVF coarse-quantizer relations — (vec_id, centroid)
-    corpus assignments and (query_id, centroid) probe pairs — to parquet so
-    DuckDB can state the probe-masked EXACT top-k as SQL over the same
-    files (the clips_suite.scored_parquet recipe). Returns the two paths
-    and the fitted centroid matrix so the registered query scores with the
-    identical quantizer."""
-    import os
-
+@artifact("ivf", 1)
+def ivf_artifacts_parquet(spark, sf_dir: str, out: str) -> None:
+    """Materialize the IVF coarse quantizer — (vec_id, centroid) corpus
+    assignments (`assign`), (query_id, centroid) probe pairs (`probe`) and
+    the fitted centroid matrix (`centroids.npy`) — so DuckDB can state the
+    probe-masked EXACT top-k as SQL over the same files (the
+    clips_suite.scored_parquet recipe), and the registered query scores
+    with the identical quantizer."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    apath = f"/tmp/mb_ivf_assign_v1_{n}.parquet"
-    ppath = f"/tmp/mb_ivf_probe_v1_{n}.parquet"
-    cpath = f"/tmp/mb_ivf_centroids_v1_{n}.npy"
-    if (
-        os.path.isfile(cpath)
-        and os.path.isfile(f"{apath}/_SUCCESS")
-        and os.path.isfile(f"{ppath}/_SUCCESS")
-    ):
-        # full cache hit: the quantizer is part of the artifact set — refit
-        # would re-run the distributed trainer-sample job on every call
-        return apath, ppath, np.load(cpath)
     C = fit_ivf_centroids(e, "vec_id", "embedding", n_centroids=32)
-    np.save(cpath, C)
-    if not os.path.isfile(f"{apath}/_SUCCESS"):
-        ivf_assignments(e, "vec_id", "embedding", C).write.mode("overwrite").parquet(apath)
-    if not os.path.isfile(f"{ppath}/_SUCCESS"):
-        qrows = e.filter(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
-        q_ids = [r["vec_id"] for r in qrows]
-        q_mat = _normalize(
-            np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in qrows])
-        )
-        order = np.argsort(-(q_mat @ C.T), axis=1)[:, : min(8, len(C))]
-        pairs = [
-            (int(qid), int(c)) for qid, row in zip(q_ids, order) for c in row
-        ]
-        spark.createDataFrame(pairs, "query_id long, centroid long").write.mode(
-            "overwrite"
-        ).parquet(ppath)
-    return apath, ppath, C
+    ivf_assignments(e, "vec_id", "embedding", C).write.parquet(f"{out}/assign")
+    qrows = e.filter(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
+    q_ids = [r["vec_id"] for r in qrows]
+    q_mat = _normalize(
+        np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in qrows])
+    )
+    order = np.argsort(-(q_mat @ C.T), axis=1)[:, : min(8, len(C))]
+    pairs = [
+        (int(qid), int(c)) for qid, row in zip(q_ids, order) for c in row
+    ]
+    spark.createDataFrame(pairs, "query_id long, centroid long").write.parquet(
+        f"{out}/probe"
+    )
+    np.save(f"{out}/centroids.npy", C)
 
 
-# correctness gate runs at sf0.01 → 500 embedding rows; oracle fixed there
-_IVF_A = "read_parquet('/tmp/mb_ivf_assign_v1_500.parquet/*.parquet')"
-_IVF_P = "read_parquet('/tmp/mb_ivf_probe_v1_500.parquet/*.parquet')"
+def ivf_centroids(spark, sf_dir: str) -> np.ndarray:
+    """The materialized quantizer — refitting would re-run the distributed
+    trainer-sample job on every call."""
+    return np.load(f"{ivf_artifacts_parquet(spark, sf_dir)}/centroids.npy")
+
+
+IVF_ASSIGN = ivf_artifacts_parquet.scan("assign")
+IVF_PROBE = ivf_artifacts_parquet.scan("probe")
 
 
 @register(
@@ -589,7 +579,7 @@ _IVF_P = "read_parquet('/tmp/mb_ivf_probe_v1_500.parquet/*.parquet')"
     f"""
     WITH cand AS (
       SELECT p.query_id, asg.vec_id AS nbr_id
-      FROM {_IVF_P} p JOIN {_IVF_A} asg ON asg.centroid = p.centroid
+      FROM {IVF_PROBE} p JOIN {IVF_ASSIGN} asg ON asg.centroid = p.centroid
       WHERE asg.vec_id != p.query_id),
     scored AS (
       SELECT c.query_id, c.nbr_id,
@@ -611,7 +601,7 @@ def ann_ivf_topk_q(spark, sf_dir):
     the probe-masked exact top-k in SQL over the very same (assignment,
     probe) parquet — certifying that IVF scores exactly the inverted lists
     it claims to probe."""
-    _, _, C = ivf_artifacts_parquet(spark, sf_dir)
+    C = ivf_centroids(spark, sf_dir)
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return ivf_topk(
         e, e.filter(F.col("vec_id") < 3), "vec_id", "embedding",
@@ -619,40 +609,35 @@ def ann_ivf_topk_q(spark, sf_dir):
     )
 
 
-def lsh_sketch_parquet(spark, sf_dir: str) -> str:
+@artifact("lsh_sketch", 1)
+def lsh_sketch_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the (vec_id, bucket) sign-bit sketch relation for the
     registered LSH config (10 planes x 2 tables, seed 7) so the bucket
     self-join + exact-cosine verify is SQL-stateable over the same files.
     The hyperplanes are seeded, so the registered query provably buckets
     identically."""
-    import os
-
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    path = f"/tmp/mb_lsh_sketch_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        dim = len(e.select("embedding").first()[0])
-        n_planes, n_tables, seed = 10, 2, 7
-        planes = np.vstack(
-            [_hyperplanes(dim, n_planes, seed + 101 * t) for t in range(n_tables)]
+    dim = len(e.select("embedding").first()[0])
+    n_planes, n_tables, seed = 10, 2, 7
+    planes = np.vstack(
+        [_hyperplanes(dim, n_planes, seed + 101 * t) for t in range(n_tables)]
+    )
+    pdf = e.select("vec_id", "embedding").toPandas()
+    m = _as_matrix(pdf["embedding"])
+    bits = (m @ planes.T) > 0
+    weights = (1 << np.arange(n_planes)).astype(np.int64)
+    frames = []
+    for t in range(n_tables):
+        key = (bits[:, t * n_planes : (t + 1) * n_planes] @ weights) | (
+            np.int64(t) << np.int64(n_planes)
         )
-        pdf = e.select("vec_id", "embedding").toPandas()
-        m = _as_matrix(pdf["embedding"])
-        bits = (m @ planes.T) > 0
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        frames = []
-        for t in range(n_tables):
-            key = (bits[:, t * n_planes : (t + 1) * n_planes] @ weights) | (
-                np.int64(t) << np.int64(n_planes)
-            )
-            frames.append(pd.DataFrame({"vec_id": pdf["vec_id"], "bucket": key}))
-        spark.createDataFrame(pd.concat(frames)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
+        frames.append(pd.DataFrame({"vec_id": pdf["vec_id"], "bucket": key}))
+    spark.createDataFrame(pd.concat(frames)).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(out)
 
 
-_LSHB = "read_parquet('/tmp/mb_lsh_sketch_v1_500.parquet/*.parquet')"
+_LSHB = lsh_sketch_parquet.scan()
 
 _LSH_ORACLE = f"""
     WITH b AS (SELECT * FROM {_LSHB}),
@@ -685,21 +670,15 @@ def ann_lsh_candidates_q(spark, sf_dir):
     )
 
 
-def ivf_index_dir(spark, sf_dir: str) -> tuple[str, np.ndarray]:
+@artifact("ivf_index", 1)
+def ivf_index_dir(spark, sf_dir: str, out: str) -> None:
     """Build (once) the centroid-PARTITIONED on-disk IVF index for the
     embeddings table — the amortized 100 TB shape: probe-time
     `centroid IN (...)` becomes partition pruning, so unprobed inverted
     lists are never read. Reuses ivf_artifacts_parquet's fitted quantizer
     so the indexed path scores the exact same lists the oracle certifies."""
-    import os
-
-    _, _, C = ivf_artifacts_parquet(spark, sf_dir)
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    path = f"/tmp/mb_ivf_index_v1_{n}"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        ivf_build_index(e, "vec_id", "embedding", C, path)
-    return path, C
+    ivf_build_index(e, "vec_id", "embedding", ivf_centroids(spark, sf_dir), out)
 
 
 # ---------------------------------------------------------------------------

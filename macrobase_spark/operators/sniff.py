@@ -21,11 +21,11 @@ is exactly "the decode dispatch would accept this payload's container".
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from macrobase_spark.artifacts import artifact
 from macrobase_spark.queries import register
 
 # hex (uppercase — identical in Spark and DuckDB) of the 4-byte container
@@ -106,7 +106,8 @@ def container_violations(
 # ---- materialized fixture + registered queries ------------------------------
 
 
-def codec_clips_parquet(spark, sf_dir: str) -> str:
+@artifact("codecclips", 1)
+def codec_clips_parquet(spark, sf_dir: str, out: str) -> None:
     """Mixed-codec clips table WITH payload bytes (mulaw/alaw/adpcm/
     pcm_s16le/flac cycling, plus planted corrupt + truncated payloads) —
     materialized once so the DuckDB oracle reads the identical bytes."""
@@ -114,13 +115,10 @@ def codec_clips_parquet(spark, sf_dir: str) -> str:
     from macrobase_spark.sources.clips import generate_codec_clips
 
     n = _codec_clips_n(sf_dir)
-    path = f"/tmp/mb_codecclips_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        generate_codec_clips(spark, n).write.mode("overwrite").parquet(path)
-    return path
+    generate_codec_clips(spark, n).write.mode("overwrite").parquet(out)
 
 
-_CC = "read_parquet('/tmp/mb_codecclips_v1_400.parquet/*.parquet')"
+_CC = codec_clips_parquet.scan()
 
 _CONTAINER_SQL = """
 CASE WHEN bytes IS NULL THEN 'null'

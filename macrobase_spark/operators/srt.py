@@ -31,7 +31,6 @@ the build brief's audio+transcript input contract.
 
 from __future__ import annotations
 
-import os
 import re
 from typing import Iterator
 
@@ -40,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from macrobase_spark.artifacts import artifact
 from macrobase_spark.queries import register
 
 _TS = re.compile(r"^(\d{2}):([0-5]\d):([0-5]\d),(\d{3})$")
@@ -313,34 +313,30 @@ def srt_clip_verdicts(cues: DataFrame) -> DataFrame:
     )
 
 
-def srt_cues_parquet(spark: SparkSession, sf_dir: str) -> str:
+@artifact("srtcues", 1)
+def srt_cues_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Materialize the cue relation once (tokenizer runs here, untimed)
     so the DuckDB oracle reads identical rows and replays the WHOLE
     validation layer, not just the rollup."""
     from macrobase_spark.operators.audio import _codec_clips_n
 
     n = _codec_clips_n(sf_dir)
-    path = f"/tmp/mb_srtcues_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        srt_cues(generate_srt_clips(spark, n)).write.mode("overwrite").parquet(path)
-    return path
+    srt_cues(generate_srt_clips(spark, n)).write.mode("overwrite").parquet(out)
 
 
-def vtt_cues_parquet(spark: SparkSession, sf_dir: str) -> str:
+@artifact("vttcues", 1)
+def vtt_cues_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     """WebVTT twin of `srt_cues_parquet` (same relation schema)."""
     from macrobase_spark.operators.audio import _codec_clips_n
 
     n = _codec_clips_n(sf_dir)
-    path = f"/tmp/mb_vttcues_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        srt_cues(generate_vtt_clips(spark, n), dialect="vtt").write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
+    srt_cues(generate_vtt_clips(spark, n), dialect="vtt").write.mode(
+        "overwrite"
+    ).parquet(out)
 
 
-_SC = "read_parquet('/tmp/mb_srtcues_v1_400.parquet/*.parquet')"
-_VC = "read_parquet('/tmp/mb_vttcues_v1_400.parquet/*.parquet')"
+_SC = srt_cues_parquet.scan()
+_VC = vtt_cues_parquet.scan()
 
 
 def _timing_oracle(rel: str) -> str:

@@ -395,6 +395,7 @@ def _ncomb(n: int, k: int) -> int:
 # are not SQL-expressible; gates = tests/test_subspace_explainers.py)
 # ---------------------------------------------------------------------------
 
+from macrobase_spark.artifacts import Artifact, artifact  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 
@@ -445,61 +446,44 @@ _Q_LOOKOUT = dict(budget=3, dimensionality=2, **_Q_COMMON)
 _Q_REFOUT = dict(d1=0.7, d2=2, psize=20, beam_size=100, **_Q_COMMON)
 
 
-def lookout_artifacts_parquet(spark, sf_dir: str) -> tuple[str, str]:
-    """Materialize LookOut's outputs-defining state: the POI id set (the
-    percentile cut is engine-side) and the GREEDILY-CHOSEN budget of
-    subspace forests, in chosen order — so the per-POI scoring, plot
-    labels, and averages are SQL-stateable. The greedy max-coverage SEARCH
-    itself is `_lookout_search` — the same code path the registered query
-    runs — and stays gated by tests/test_subspace_explainers.py."""
-    import os
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    npath = f"/tmp/mb_lookout_model_v1_{n}.parquet"
-    ppath = f"/tmp/mb_lookout_pois_v1_{n}.parquet"
-    if os.path.isfile(f"{npath}/_SUCCESS") and os.path.isfile(f"{ppath}/_SUCCESS"):
-        return npath, ppath
+@artifact("lookout", 1)
+def lookout_artifacts_parquet(spark, sf_dir: str, out: str) -> None:
+    """Materialize LookOut's outputs-defining state: the POI id set (`pois`;
+    the percentile cut is engine-side) and the GREEDILY-CHOSEN budget of
+    subspace forests, in chosen order (`model`) — so the per-POI scoring,
+    plot labels, and averages are SQL-stateable. The greedy max-coverage
+    SEARCH itself is `_lookout_search` — the same code path the registered
+    query runs — and stays gated by tests/test_subspace_explainers.py."""
     df, feats = _emb_with_poi(spark, sf_dir)
     models, ids, _, chosen = _lookout_search(
         df, feats, ["vec_id"], "poi", **_Q_LOOKOUT
     )
-    spark.createDataFrame(
-        _forest_rows([models[j] for j in chosen]), _FOREST_SCHEMA
-    ).coalesce(1).write.mode("overwrite").parquet(npath)
-    spark.createDataFrame(
-        [(int(i[0]),) for i in ids], "vec_id long"
-    ).coalesce(1).write.mode("overwrite").parquet(ppath)
-    return npath, ppath
+    _write_subspace_artifact(spark, out, _forest_rows([models[j] for j in chosen]), ids)
 
 
-def refout_artifacts_parquet(spark, sf_dir: str) -> tuple[str, str]:
+@artifact("refout", 1)
+def refout_artifacts_parquet(spark, sf_dir: str, out: str) -> None:
     """Same recipe for RefOut: POI ids + the REFINED subspace forests with
     their z-normalization moments (computed over the full relation), via
     the same `_refout_search` the registered query runs. The pool sampling
     + per-POI Welch-refinement SEARCH stays test-gated."""
-    import os
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
-    npath = f"/tmp/mb_refout_model_v1_{n}.parquet"
-    ppath = f"/tmp/mb_refout_pois_v1_{n}.parquet"
-    if os.path.isfile(f"{npath}/_SUCCESS") and os.path.isfile(f"{ppath}/_SUCCESS"):
-        return npath, ppath
     df, feats = _emb_with_poi(spark, sf_dir)
     ids, _, _, ref_models, zr = _refout_search(
         df, feats, ["vec_id"], "poi", **_Q_REFOUT
     )
-    spark.createDataFrame(
-        _forest_rows(ref_models, zr), _FOREST_SCHEMA
-    ).coalesce(1).write.mode("overwrite").parquet(npath)
+    _write_subspace_artifact(spark, out, _forest_rows(ref_models, zr), ids)
+
+
+def _write_subspace_artifact(spark, out: str, forest_rows: list, ids) -> None:
+    spark.createDataFrame(forest_rows, _FOREST_SCHEMA).coalesce(1).write.parquet(
+        f"{out}/model"
+    )
     spark.createDataFrame(
         [(int(i[0]),) for i in ids], "vec_id long"
-    ).coalesce(1).write.mode("overwrite").parquet(ppath)
-    return npath, ppath
+    ).coalesce(1).write.parquet(f"{out}/pois")
 
 
-def _subspace_oracle(nodes_path: str, pois_path: str, znorm: bool, per_poi_topk: int | None) -> str:
+def _subspace_oracle(model: Artifact, znorm: bool, per_poi_topk: int | None) -> str:
     """Shared oracle text: POI rows descend every materialized subspace
     forest (leaf-stay-put, 8 steps = log2(psi)); per-(poi, sub) score
     2^(-avg path/c(psi)), optionally z-normalized; labels aggregate in
@@ -514,8 +498,8 @@ def _subspace_oracle(nodes_path: str, pois_path: str, znorm: bool, per_poi_topk:
         agg_src, rel_src = "topk", "topk"
         where = f"WHERE rn <= {per_poi_topk}"
     return f"""
-    WITH nodes AS (SELECT * FROM read_parquet('{nodes_path}/*.parquet')),
-    pois AS (SELECT vec_id FROM read_parquet('{pois_path}/*.parquet')),
+    WITH nodes AS (SELECT * FROM {model.scan("model")}),
+    pois AS (SELECT vec_id FROM {model.scan("pois")}),
     e AS (SELECT p.vec_id, emb.embedding AS emb
           FROM pois p JOIN embeddings emb USING (vec_id)),
     s0 AS (SELECT e.vec_id, e.emb, n.sub, n.node
@@ -585,13 +569,9 @@ def _subspace_oracle(nodes_path: str, pois_path: str, znorm: bool, per_poi_topk:
 
 
 _LOOKOUT_ORACLE = _subspace_oracle(
-    "/tmp/mb_lookout_model_v1_500.parquet", "/tmp/mb_lookout_pois_v1_500.parquet",
-    znorm=False, per_poi_topk=None,
+    lookout_artifacts_parquet, znorm=False, per_poi_topk=None
 )
-_REFOUT_ORACLE = _subspace_oracle(
-    "/tmp/mb_refout_model_v1_500.parquet", "/tmp/mb_refout_pois_v1_500.parquet",
-    znorm=True, per_poi_topk=3,
-)
+_REFOUT_ORACLE = _subspace_oracle(refout_artifacts_parquet, znorm=True, per_poi_topk=3)
 
 
 @register("lookout_explain_embeddings", _LOOKOUT_ORACLE)

@@ -22,7 +22,6 @@ follow the fixture conventions of sources/clips.py (pure functions of id).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -31,7 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from macrobase_spark.operators.clips_suite import clips_n
+from macrobase_spark.artifacts import artifact
+from macrobase_spark.operators.clips_suite import clips_n, clips_table_path
 from macrobase_spark.queries import register
 from macrobase_spark.sources.clips import WORDS, row_params, splitmix64
 
@@ -138,15 +138,13 @@ def transcript_violations(df: DataFrame, **kw) -> DataFrame:
 # ---- materialized fixture + registered queries ------------------------------
 
 
-def transcript_pairs_parquet(spark: SparkSession, sf_dir: str) -> str:
+@artifact("transcripts", 1)
+def transcript_pairs_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     n = clips_n(sf_dir)
-    path = f"/tmp/mb_transcripts_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
-        generate_transcript_pairs(spark, n).write.mode("overwrite").parquet(path)
-    return path
+    generate_transcript_pairs(spark, n).write.mode("overwrite").parquet(out)
 
 
-_TP = "read_parquet('/tmp/mb_transcripts_v1_10000.parquet/*.parquet')"
+_TP = transcript_pairs_parquet.scan()
 
 _STATUS_SQL = """
 CASE WHEN transcript IS NULL THEN 'null_transcript'
@@ -242,7 +240,7 @@ def speaking_rate_violations(df: DataFrame, **kw) -> DataFrame:
     return speaking_rate(df, **kw).filter(F.col("rate_status") != "ok")
 
 
-_CT = "read_parquet('/tmp/mb_bench_clips_v2_10000.parquet/*.parquet')"
+_CT = clips_table_path.scan()
 
 
 @register(

@@ -461,6 +461,7 @@ def vargmm_score(
 # registered queries: finite-VB and DP mixtures over the embeddings head
 # ---------------------------------------------------------------------------
 
+from macrobase_spark.artifacts import Artifact, artifact  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 _DIMS = 8  # detectors.py convention for the embeddings feature head
@@ -468,16 +469,15 @@ _K_FINITE = 3
 _T_DP = 8
 
 
-def _model_parquet(spark, sf_dir: str, kind: str, k: int, stoch: bool = False) -> str:
-    """(k, w, dof, log_mult, i, j, p, mu_i) per component — the bayes/gmm
+def _mixture_artifact(kind: str, k: int, stoch: bool = False):
+    """Register the fitted `kind` mixture with k components as an artifact:
+    (k, w, dof, log_mult, i, j, p, mu_i) per component — the bayes/gmm
     materialized-model recipe, one row per precision entry."""
-    import os
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = e.count()
     tag = f"stoch_{kind}" if stoch else kind
-    path = f"/tmp/mb_vargmm_{tag}{k}_v1_{n}.parquet"
-    if not os.path.isfile(f"{path}/_SUCCESS"):
+
+    @artifact(f"vargmm_{tag}{k}", 1)
+    def build(spark, sf_dir: str, out: str) -> None:
+        e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         feats = [f"_f{i}" for i in range(_DIMS)]
         df = array_col_to_features(e, "embedding", _DIMS)
         sample = _collect_sample(df, feats, 4096, 42)
@@ -496,8 +496,15 @@ def _model_parquet(spark, sf_dir: str, kind: str, k: int, stoch: bool = False) -
             rows,
             "k long, w double, dof double, log_mult double, "
             "i long, j long, p double, mu_i double, mu_j double",
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-    return path
+        ).coalesce(1).write.parquet(out)
+
+    return build
+
+
+vargmm_model_parquet = _mixture_artifact("finite", _K_FINITE)
+dpgmm_model_parquet = _mixture_artifact("dp", _T_DP)
+stochvargmm_model_parquet = _mixture_artifact("finite", _K_FINITE, stoch=True)
+stochdpgmm_model_parquet = _mixture_artifact("dp", _T_DP, stoch=True)
 
 
 def _load_model(spark, path: str, kind: str) -> VarGMMModel:
@@ -546,71 +553,47 @@ def _mixture_oracle(model_glob: str) -> str:
 """
 
 
-def _mixture_query(spark, sf_dir: str, kind: str, k: int, stoch: bool = False) -> DataFrame:
-    model = _load_model(spark, _model_parquet(spark, sf_dir, kind, k, stoch), kind)
+def _mixture_query(spark, sf_dir: str, model: Artifact, kind: str) -> DataFrame:
+    fitted = _load_model(spark, model(spark, sf_dir), kind)
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     feats = [f"_f{i}" for i in range(_DIMS)]
     df = array_col_to_features(e, "embedding", _DIMS)
-    scored = vargmm_score(df, feats, ["vec_id"], model=model, score_col="log_score")
+    scored = vargmm_score(df, feats, ["vec_id"], model=fitted, score_col="log_score")
     return scored.orderBy(F.asc("log_score"), "vec_id").limit(20).select(
         "vec_id", F.round("log_score", 6).alias("log_score")
     )
 
 
-def vargmm_model_parquet(spark, sf_dir: str) -> str:
-    return _model_parquet(spark, sf_dir, "finite", _K_FINITE)
-
-
-def dpgmm_model_parquet(spark, sf_dir: str) -> str:
-    return _model_parquet(spark, sf_dir, "dp", _T_DP)
-
-
-def stochvargmm_model_parquet(spark, sf_dir: str) -> str:
-    return _model_parquet(spark, sf_dir, "finite", _K_FINITE, stoch=True)
-
-
-def stochdpgmm_model_parquet(spark, sf_dir: str) -> str:
-    return _model_parquet(spark, sf_dir, "dp", _T_DP, stoch=True)
-
-
-# the driver's oracle gate runs at sf0.01 (500 embeddings) — same hardcoded
-# model-path convention as the bayes/gmm/detector oracles
-_FIN_GLOB = f"read_parquet('/tmp/mb_vargmm_finite{_K_FINITE}_v1_500.parquet/*.parquet')"
-_DP_GLOB = f"read_parquet('/tmp/mb_vargmm_dp{_T_DP}_v1_500.parquet/*.parquet')"
-
-
-@register("vargmm_loglik_embeddings", _mixture_oracle(_FIN_GLOB))
+@register("vargmm_loglik_embeddings", _mixture_oracle(vargmm_model_parquet.scan()))
 def vargmm_loglik_embeddings(spark, sf_dir: str) -> DataFrame:
     """20 lowest predictive log-likelihoods under the mean-field
     variational Bayes finite mixture (FiniteGMM semantics, K=3) — the
     oracle replays the full Student-t mixture density over the
     materialized per-component relation."""
-    return _mixture_query(spark, sf_dir, "finite", _K_FINITE)
+    return _mixture_query(spark, sf_dir, vargmm_model_parquet, "finite")
 
 
-@register("dpgmm_loglik_embeddings", _mixture_oracle(_DP_GLOB))
+@register("dpgmm_loglik_embeddings", _mixture_oracle(dpgmm_model_parquet.scan()))
 def dpgmm_loglik_embeddings(spark, sf_dir: str) -> DataFrame:
     """20 lowest predictive log-likelihoods under the truncated
     Dirichlet-process mixture (DPGMM semantics, T=8, concentration 1)."""
-    return _mixture_query(spark, sf_dir, "dp", _T_DP)
+    return _mixture_query(spark, sf_dir, dpgmm_model_parquet, "dp")
 
 
-_SFIN_GLOB = (
-    f"read_parquet('/tmp/mb_vargmm_stoch_finite{_K_FINITE}_v1_500.parquet/*.parquet')"
+@register(
+    "stochvargmm_loglik_embeddings", _mixture_oracle(stochvargmm_model_parquet.scan())
 )
-_SDP_GLOB = f"read_parquet('/tmp/mb_vargmm_stoch_dp{_T_DP}_v1_500.parquet/*.parquet')"
-
-
-@register("stochvargmm_loglik_embeddings", _mixture_oracle(_SFIN_GLOB))
 def stochvargmm_loglik_embeddings(spark, sf_dir: str) -> DataFrame:
     """20 lowest predictive log-likelihoods under the stochastic-VI finite
     mixture (StochVarFiniteGMM semantics, K=3, minibatch 512, delay 1,
     forgetting rate 0.9) — strided minibatches + paced moveNatural steps."""
-    return _mixture_query(spark, sf_dir, "finite", _K_FINITE, stoch=True)
+    return _mixture_query(spark, sf_dir, stochvargmm_model_parquet, "finite")
 
 
-@register("stochdpgmm_loglik_embeddings", _mixture_oracle(_SDP_GLOB))
+@register(
+    "stochdpgmm_loglik_embeddings", _mixture_oracle(stochdpgmm_model_parquet.scan())
+)
 def stochdpgmm_loglik_embeddings(spark, sf_dir: str) -> DataFrame:
     """20 lowest predictive log-likelihoods under the stochastic-VI
     Dirichlet-process mixture (StochVarDPGMM semantics, T=8)."""
-    return _mixture_query(spark, sf_dir, "dp", _T_DP, stoch=True)
+    return _mixture_query(spark, sf_dir, stochdpgmm_model_parquet, "dp")

@@ -42,6 +42,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from macrobase_spark.artifacts import artifact_path
+from macrobase_spark.operators.clips_suite import scored_parquet
+
 
 def partition_states(
     df: DataFrame, partition_col: str, numeric_cols: list[str]
@@ -158,7 +161,7 @@ def merge_profile(
 
 _COLS = ["dur_ms", "sr_hz", "payload_bytes"]
 
-_S = "read_parquet('/tmp/mb_scored_v4_10000.parquet/*.parquet')"
+_S = scored_parquet.scan()
 
 _INC_ORACLE = f"""
 WITH s AS (SELECT * FROM {_S})
@@ -191,10 +194,9 @@ def _register_clips_query() -> None:
         """Per-partition (codec) metric states merged into the table
         profile; the DuckDB oracle is a FULL RESCAN of the same files, so a
         green row certifies that the incremental merge path loses nothing."""
-        from macrobase_spark.operators.clips_suite import clips_n, scored_parquet
-
         scored = spark.read.parquet(scored_parquet(spark, sf_dir))
-        path = f"/tmp/mb_metric_states_v1_{clips_n(sf_dir)}.parquet"
+        # a repository, not a cache: update_states appends to it in place
+        path = artifact_path("metric_states", 1, sf_dir)
         states = update_states(spark, scored, "codec", _COLS, path)
         prof = merge_states(states, _COLS)
         return prof.select(

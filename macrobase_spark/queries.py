@@ -765,3 +765,33 @@ def register(name: str, oracle: str | None = None):
     """Decorator hook for extension modules (dedup/text/similarity) to add
     their queries to the same registry."""
     return _q(name, oracle)
+
+
+# every extension module that registers queries (or artifacts) on import,
+# in the order their queries are registered
+_EXTENSIONS = """
+    operators.audio operators.audio_fp operators.dedup operators.similarity
+    operators.pq operators.text operators.clips_suite operators.detectors
+    operators.contrib_stats operators.kalman operators.arima operators.vargmm
+    operators.contextual operators.ew operators.legacy_transforms
+    operators.loudness operators.bandwidth operators.pitch operators.ecod
+    operators.copod operators.mp3 operators.aac operators.ogg operators.gate
+    operators.srt operators.alignment operators.pca operators.hbos
+    operators.components operators.pii operators.scorecard operators.hics
+    operators.hst operators.image operators.mcod operators.profile
+    operators.silence operators.sniff operators.rrcf
+    operators.subspace_explainers operators.transcript operators.temporal
+    operators.resample operators.mfcc operators.drift operators.constraints
+    plans.metrics_repo sources.icetable functions.skew functions.sampling
+""".split()
+
+
+def load_all() -> None:
+    """Import every extension module, filling QUERIES, ORACLES and the
+    artifact registry. A plain `import macrobase_spark.queries` loads only
+    the relational spine, so callers that need a few operators stay
+    cheap."""
+    import importlib
+
+    for mod in _EXTENSIONS:
+        importlib.import_module(f"macrobase_spark.{mod}")

@@ -320,60 +320,48 @@ def read_incremental(
 # registered queries: snapshot/time-travel semantics certified by mirrors
 # ---------------------------------------------------------------------------
 
+from macrobase_spark.artifacts import artifact, sf_size  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 
-def _ice_n(sf_dir: str) -> int:
-    import re
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    return max(int(sf * 40_000), 400)
-
-
-def ice_table_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
+@artifact("ice", 1)
+def ice_table_fixture(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Build (once) the icetable fixture: the deterministic clips table
-    committed as TWO snapshots (first 5/8, then the rest), partitioned by
-    codec with dur_ms/sr_hz file stats — plus two independent parquet
-    MIRRORS written from the SAME input DataFrames (snapshot-1 rows; all
-    rows). The mirrors never pass through the manifest machinery, so the
-    oracle certifies that time travel / scan planning return exactly the
-    rows that were committed, not merely self-consistency."""
+    committed as TWO snapshots (first 5/8, then the rest) under `table`,
+    partitioned by codec with dur_ms/sr_hz file stats — plus two
+    independent parquet MIRRORS written from the SAME input DataFrames
+    (`snap1`: snapshot-1 rows; `full`: all rows). The mirrors never pass
+    through the manifest machinery, so the oracle certifies that time
+    travel / scan planning return exactly the rows that were committed,
+    not merely self-consistency."""
     from macrobase_spark.sources.clips import generate_clips
 
-    n = _ice_n(sf_dir)
-    root = f"/tmp/mb_ice_v1_{n}"
-    snap1_mirror = f"/tmp/mb_ice_snap1_v1_{n}.parquet"
-    full_mirror = f"/tmp/mb_ice_full_v1_{n}.parquet"
-    done = os.path.join(root, "_FIXTURE_DONE")
-    # the guard must cover EVERY output this fixture owns, not just the
-    # manifest root: a partial /tmp cleanup that removes a mirror but not
-    # the root would otherwise leave the oracles reading a missing file
-    # forever (the done-marker said "complete")
-    complete = (
-        os.path.isfile(done)
-        and os.path.isfile(os.path.join(snap1_mirror, "_SUCCESS"))
-        and os.path.isfile(os.path.join(full_mirror, "_SUCCESS"))
-    )
-    if not complete:
-        cut = f"clip_{(n * 5 // 8):012d}"
-        clips = generate_clips(spark, n, max_payload_ms=50)
-        first = clips.filter(F.col("clip_id") < cut)
-        rest = clips.filter(F.col("clip_id") >= cut)
-        import shutil
-
-        shutil.rmtree(root, ignore_errors=True)
-        create_table(first, root, partition_by=["codec"], stat_cols=["dur_ms", "sr_hz"])
-        append(rest, root)
-        first.write.mode("overwrite").parquet(snap1_mirror)
-        clips.write.mode("overwrite").parquet(full_mirror)
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return root, n
+    n = sf_size(sf_dir, 40_000, 400)
+    cut = f"clip_{(n * 5 // 8):012d}"
+    clips = generate_clips(spark, n, max_payload_ms=50)
+    first = clips.filter(F.col("clip_id") < cut)
+    table = os.path.join(out, "table")
+    create_table(first, table, partition_by=["codec"], stat_cols=["dur_ms", "sr_hz"])
+    append(clips.filter(F.col("clip_id") >= cut), table)
+    first.write.parquet(os.path.join(out, "snap1"))
+    clips.write.parquet(os.path.join(out, "full"))
+    # the manifests record absolute file paths: point them at the final
+    # location before the directory is renamed into place
+    final = ice_table_fixture.path(sf_dir)
+    for name in os.listdir(_meta_dir(table)):
+        meta = os.path.join(_meta_dir(table), name)
+        with open(meta) as fh:
+            text = fh.read()
+        with open(meta, "w") as fh:
+            fh.write(text.replace(out, final))
 
 
-_ICE_S1 = "read_parquet('/tmp/mb_ice_snap1_v1_400.parquet/*.parquet')"
-_ICE_FULL = "read_parquet('/tmp/mb_ice_full_v1_400.parquet/*.parquet')"
+def ice_table_root(spark: SparkSession, sf_dir: str) -> str:
+    return os.path.join(ice_table_fixture(spark, sf_dir), "table")
+
+
+_ICE_S1 = ice_table_fixture.scan("snap1")
+_ICE_FULL = ice_table_fixture.scan("full")
 
 _STATS = (
     "count(*) AS n, min(dur_ms) AS min_dur, max(dur_ms) AS max_dur,"
@@ -395,7 +383,7 @@ def iceberg_time_travel_stats(spark, sf_dir: str) -> DataFrame:
     over mirrors of the committed inputs, certifying that the snapshot-1
     read is unaffected by the later append and the current read sees the
     union — exact integer stats, no float tolerance."""
-    root, _ = ice_table_fixture(spark, sf_dir)
+    root = ice_table_root(spark, sf_dir)
 
     def stats(df, snap):
         return df.groupBy("codec").agg(
@@ -425,7 +413,7 @@ def iceberg_pruned_scan(spark, sf_dir: str) -> DataFrame:
     Spark is handed only the surviving file list (tests assert fewer files
     than the snapshot holds); the oracle runs the same predicate over the
     full mirror, certifying file skipping lost no rows."""
-    root, _ = ice_table_fixture(spark, sf_dir)
+    root = ice_table_root(spark, sf_dir)
     df = read_table(
         spark, root, where=[("codec", "=", "opus"), ("dur_ms", "<=", 1500)]
     )

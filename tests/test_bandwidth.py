@@ -98,9 +98,7 @@ def test_registered_query_matches_oracle(spark, tmp_path):
         }
     finally:
         B.bandwidth_features_parquet = orig
-    sql = ORACLES["clips_bandwidth_stats"].replace(
-        "/tmp/mb_bandwidth_v1_1000.parquet", path
-    )
+    sql = ORACLES["clips_bandwidth_stats"].replace(orig.path(), path)
     want = duckdb.sql(sql).fetchall()
     assert len(want) == len(rows)
     for cls, cnt, avg_ratio, min_roll, avg_flat in want:

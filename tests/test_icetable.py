@@ -144,9 +144,10 @@ def test_incremental_feeds_metrics_repo(spark, table, tmp_path):
 def test_registered_fixture_prunes_files(spark):
     """The sf0.01 registered query's predicate must actually skip files at
     the manifest (partition + stats), not just filter Spark-side."""
-    from macrobase_spark.sources.icetable import ice_table_fixture
+    from macrobase_spark.artifacts import ORACLE_SF
+    from macrobase_spark.sources.icetable import ice_table_root
 
-    root, _ = ice_table_fixture(spark, "/root/testdata/sf0.01")
+    root = ice_table_root(spark, ORACLE_SF)
     sid = current_snapshot_id(root)
     total = len(read_manifest(root, sid))
     planned = plan_files(root, where=[("codec", "=", "opus"), ("dur_ms", "<=", 1500)])

@@ -160,9 +160,7 @@ def test_registered_query_matches_oracle(spark, tmp_path):
         rows = {r["loudness_class"]: r for r in got.collect()}
     finally:
         L.loudness_blocks_parquet = orig
-    sql = ORACLES["clips_loudness_stats"].replace(
-        "/tmp/mb_loudness_v1_1000.parquet", path
-    )
+    sql = ORACLES["clips_loudness_stats"].replace(orig.path(), path)
     want = duckdb.sql(sql).fetchall()
     assert len(want) == len(rows)
     for cls, cnt, avg_lufs, max_tp in want:

@@ -6,59 +6,24 @@ import os
 import pytest
 
 from macrobase_spark import queries as Q
-import macrobase_spark.operators.audio_fp  # noqa: F401  (registers queries)
-import macrobase_spark.operators.clips_suite  # noqa: F401  (registers queries)
-import macrobase_spark.operators.dedup  # noqa: F401
-import macrobase_spark.operators.detectors  # noqa: F401
-import macrobase_spark.operators.hics  # noqa: F401
-import macrobase_spark.operators.hst  # noqa: F401
-import macrobase_spark.operators.image  # noqa: F401
-import macrobase_spark.operators.mcod  # noqa: F401
-import macrobase_spark.operators.mfcc  # noqa: F401
-import macrobase_spark.operators.profile  # noqa: F401
-import macrobase_spark.operators.silence  # noqa: F401
-import macrobase_spark.operators.sniff  # noqa: F401
-import macrobase_spark.operators.rrcf  # noqa: F401
-import macrobase_spark.operators.subspace_explainers  # noqa: F401
-import macrobase_spark.operators.similarity  # noqa: F401
-import macrobase_spark.operators.pq  # noqa: F401
-import macrobase_spark.operators.text  # noqa: F401
-import macrobase_spark.operators.transcript  # noqa: F401
-import macrobase_spark.operators.drift  # noqa: F401
-import macrobase_spark.functions.skew  # noqa: F401
-import macrobase_spark.sources.icetable  # noqa: F401
-import macrobase_spark.operators.constraints  # noqa: F401
-import macrobase_spark.plans.metrics_repo  # noqa: F401
-import macrobase_spark.operators.contrib_stats  # noqa: F401
-import macrobase_spark.operators.kalman  # noqa: F401
-import macrobase_spark.operators.arima  # noqa: F401
-import macrobase_spark.operators.vargmm  # noqa: F401
-import macrobase_spark.operators.contextual  # noqa: F401
-import macrobase_spark.operators.ew  # noqa: F401
-import macrobase_spark.operators.legacy_transforms  # noqa: F401
-import macrobase_spark.operators.temporal  # noqa: F401
-import macrobase_spark.operators.resample  # noqa: F401
-import macrobase_spark.operators.loudness  # noqa: F401
-import macrobase_spark.operators.bandwidth  # noqa: F401
-import macrobase_spark.operators.pitch  # noqa: F401
-import macrobase_spark.operators.ecod  # noqa: F401
-import macrobase_spark.operators.copod  # noqa: F401
-import macrobase_spark.operators.mp3  # noqa: F401
-import macrobase_spark.operators.aac  # noqa: F401
-import macrobase_spark.operators.ogg  # noqa: F401
-import macrobase_spark.operators.gate  # noqa: F401
-import macrobase_spark.operators.srt  # noqa: F401
-import macrobase_spark.operators.alignment  # noqa: F401
-import macrobase_spark.operators.pca  # noqa: F401
-import macrobase_spark.functions.sampling  # noqa: F401
-import macrobase_spark.operators.hbos  # noqa: F401
-import macrobase_spark.operators.components  # noqa: F401
-import macrobase_spark.operators.pii  # noqa: F401
-import macrobase_spark.operators.scorecard  # noqa: F401
-import macrobase_spark.streaming.temporal  # noqa: F401
 from tests.oracle_util import compare, duck_con
 
 SF = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+
+Q.load_all()
+
+
+def test_load_all_fills_the_registry():
+    assert (len(Q.QUERIES), len(Q.ORACLES)) == (134, 132)
+
+
+def test_entry_window_names_must_be_registered(monkeypatch):
+    import __spark_entry__ as e
+
+    assert list(e.queries())[: len(e._R5_WINDOW)] == e._R5_WINDOW
+    monkeypatch.setattr(e, "_R5_WINDOW", [*e._R5_WINDOW, "no_such_query"])
+    with pytest.raises(KeyError, match="no_such_query"):
+        e.queries()
 
 
 @pytest.fixture(scope="module")

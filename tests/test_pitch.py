@@ -111,7 +111,7 @@ def test_registered_query_matches_oracle(spark, tmp_path):
         }
     finally:
         P.pitch_features_parquet = orig
-    sql = ORACLES["clips_pitch_stats"].replace("/tmp/mb_pitch_v1_1000.parquet", path)
+    sql = ORACLES["clips_pitch_stats"].replace(orig.path(), path)
     want = duckdb.sql(sql).fetchall()
     assert len(want) == len(rows)
     for cls, cnt, avg_f0, avg_vr, max_hum in want:
