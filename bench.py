@@ -153,21 +153,57 @@ EXTRA = [
 ]
 
 
+def full_kernels() -> dict:
+    """Bench entries that time a registered query's whole kernel in one
+    plan: name -> (registered query, entry). Each registered query
+    aggregates a materialized artifact so its oracle can read the same
+    files; the entry applies the same aggregate to the artifact's recipe
+    (synthesize -> decode/walk) unmaterialized, so it returns the same
+    rows with the kernel inside the timed plan."""
+    from macrobase_spark.operators import aac, audio, gate, image, mp3, ogg, srt
+
+    def kernel(recipe, aggregate):
+        return lambda spark, sf_dir: aggregate(recipe(spark, sf_dir))
+
+    # name -> (registered query, recipe, aggregate)
+    table = {
+        **{
+            q: (q, image.still_image_features(gen), image.label_profile)
+            for q, (_, gen) in image.STILL_IMAGES.items()
+        },
+        "video_frame_stats": ("video_frame_stats", image.video_frame_features, image.video_profile),
+        "codec_snr_stats": ("codec_snr_stats", audio.codec_fixture_snr, audio.codec_snr_profile),
+        # decode -> 16 kHz linear-interp resample -> SNR at the new rate
+        "clips_resample_stats": (
+            "clips_resample_stats", audio.clips_resampled, audio.resample_profile
+        ),
+        # frame-walk (header parse, no decode)
+        "mp3_integrity_pipeline": (
+            "mp3_integrity_stats", mp3.mp3_fixture_profiles, mp3.mp3_scorecard
+        ),
+        "aac_integrity_pipeline": (
+            "aac_integrity_stats", aac.adts_fixture_profiles, aac.adts_scorecard
+        ),
+        # page-walk + CRC
+        "opus_integrity_pipeline": (
+            "opus_integrity_stats", ogg.ogg_fixture_profiles, ogg.ogg_scorecard
+        ),
+        # sniff + route + walk a mixed-transport corpus
+        "transport_gate_pipeline": (
+            "transport_gate_stats", gate.mixed_fixture_gate, gate.gate_rollup
+        ),
+        # tokenize -> declarative timing verdicts
+        "srt_timing_pipeline": ("srt_timing_stats", srt.srt_fixture_cues, srt.timing_scorecard),
+    }
+    return {name: (q, kernel(recipe, agg)) for name, (q, recipe, agg) in table.items()}
+
+
 def _bench_only_queries() -> dict:
     """Entries timed by the bench but NOT in the driver correctness gate:
-    production configs whose hashes aren't engine-portable, and full-kernel
-    pipelines whose registered twins read materialized relations so their
-    oracle can certify them."""
+    production configs whose hashes aren't engine-portable, and the
+    full-kernel entries of `full_kernels`."""
+    from macrobase_spark.operators.audio import flac_snr_suite
     from macrobase_spark.operators.dedup import simhash_candidates
-    from macrobase_spark.operators.image import (
-        image_feature_stats_pipeline,
-        jpeg_feature_stats_pipeline,
-        png_feature_stats_pipeline,
-        webp_feature_stats_pipeline,
-        video_frame_stats_pipeline,
-    )
-
-    from macrobase_spark.operators.audio import codec_snr_stats_pipeline as _codec_snr
 
     def ann_ivf_indexed(spark, sf_dir):
         """ann_ivf_topk through the centroid-PARTITIONED on-disk index:
@@ -216,8 +252,8 @@ def _bench_only_queries() -> dict:
         """Full kernel: synthesize fp fixture → decode+fingerprint →
         multi-probe LSH join → Hamming pairs, in one timed plan (the
         registered twin reads the materialized fingerprints)."""
+        from macrobase_spark.artifacts import decode_fixture_n
         from macrobase_spark.operators.audio_fp import (
-            _fp_clips_n,
             audio_fingerprints,
             audio_near_dup_pairs,
             generate_fp_clips,
@@ -228,85 +264,19 @@ def _bench_only_queries() -> dict:
         # which would re-run the decode+FFT kernel 3x. At production scale
         # this is the materialize-the-fingerprints step (the registered twin
         # reads them from parquet).
-        fp = audio_fingerprints(generate_fp_clips(spark, _fp_clips_n(sf_dir))).persist()
+        fp = audio_fingerprints(generate_fp_clips(spark, decode_fixture_n(sf_dir))).persist()
         fp.count()
         return audio_near_dup_pairs(fp, hamming_max=10)
-
-    def flac_snr_suite(spark, sf_dir):
-        """North-rule kernel with COMPRESSED payloads: scan an all-FLAC
-        clips table (materialized once, untimed) → pure-numpy FLAC decode
-        (CRC+MD5 verified) → SNR-vs-reference check → per-rate rollup."""
-        from macrobase_spark.operators.audio import flac_snr_suite as _f
-
-        return _f(spark, sf_dir)
-
-    def mp3_integrity_pipeline(spark, sf_dir):
-        """Full kernel: synthesize mp3 fixture → frame-walk (header parse,
-        no decode) → verdict aggregate, in one timed plan."""
-        from macrobase_spark.operators.mp3 import mp3_integrity_pipeline as _m
-
-        return _m(spark, sf_dir)
-
-    def aac_integrity_pipeline(spark, sf_dir):
-        """Full kernel: synthesize ADTS fixture -> frame-walk -> verdict
-        aggregate, in one timed plan."""
-        from macrobase_spark.operators.aac import aac_integrity_pipeline as _a
-
-        return _a(spark, sf_dir)
-
-    def opus_integrity_pipeline(spark, sf_dir):
-        """Full kernel: synthesize Ogg/Opus fixture -> page-walk + CRC ->
-        verdict aggregate, in one timed plan."""
-        from macrobase_spark.operators.ogg import opus_integrity_pipeline as _o
-
-        return _o(spark, sf_dir)
-
-    def transport_gate_pipeline(spark, sf_dir):
-        """Full kernel: synthesize mixed-format corpus -> sniff + route +
-        walk -> rollup, in one timed plan."""
-        from macrobase_spark.operators.gate import transport_gate_pipeline as _g
-
-        return _g(spark, sf_dir)
-
-    def srt_timing_pipeline(spark, sf_dir):
-        """Full kernel: synthesize SRT docs -> tokenize -> declarative
-        timing verdicts, in one timed plan."""
-        from macrobase_spark.operators.srt import srt_timing_pipeline as _s
-
-        return _s(spark, sf_dir)
-
-    def clips_resample_stats(spark, sf_dir):
-        """Full kernel: decode → 16 kHz linear-interp resample → SNR vs the
-        reference render at the new rate → per-rate stats."""
-        from pyspark.sql import functions as F
-
-        from macrobase_spark.operators.audio import resample_check
-        from macrobase_spark.operators.clips_suite import clips_table
-
-        scored = resample_check(clips_table(spark, sf_dir))
-        return scored.groupBy("sr_hz").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("snr_pass").cast("long")).alias("n_snr_pass"),
-        )
 
     return {
         "ann_ivf_indexed": ann_ivf_indexed,
         "ann_ivf_pq_indexed": ann_ivf_pq_indexed,
         "dedup_simhash_prod": dedup_simhash_prod,
         "dedup_audio_content": dedup_audio_content,
-        "clips_resample_stats": clips_resample_stats,
+        # north-rule kernel with COMPRESSED payloads: all-FLAC clips table
+        # (materialized once, untimed) -> FLAC decode -> SNR -> rollup
         "flac_snr_suite": flac_snr_suite,
-        "image_feature_stats": image_feature_stats_pipeline,
-        "video_frame_stats": video_frame_stats_pipeline,
-        "png_feature_stats": png_feature_stats_pipeline,
-        "jpeg_feature_stats": jpeg_feature_stats_pipeline,
-        "webp_feature_stats": webp_feature_stats_pipeline,
-        "codec_snr_stats": _codec_snr,
-        "mp3_integrity_pipeline": mp3_integrity_pipeline,
-        "aac_integrity_pipeline": aac_integrity_pipeline,
-        "opus_integrity_pipeline": opus_integrity_pipeline,
-        "transport_gate_pipeline": transport_gate_pipeline,
-        "srt_timing_pipeline": srt_timing_pipeline,
+        **{name: entry for name, (_, entry) in full_kernels().items()},
     }
 
 

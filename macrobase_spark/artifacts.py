@@ -47,6 +47,12 @@ def sf_size(sf_dir: str, per_sf: int, floor: int) -> int:
     return max(int(sf_of(sf_dir) * per_sf), floor)
 
 
+def decode_fixture_n(sf_dir: str) -> int:
+    """Row count of the synthetic decode fixtures (images, codec and
+    transport clips, fingerprints, transcripts, the icetable)."""
+    return sf_size(sf_dir, 40_000, 400)
+
+
 def artifact_path(name: str, version: int, sf_dir: str) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir))
     return f"{ROOT}/mb_{name}_v{version}_{tag}"

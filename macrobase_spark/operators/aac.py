@@ -29,7 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from macrobase_spark.artifacts import artifact
+from macrobase_spark.artifacts import artifact, decode_fixture_n
+from macrobase_spark.operators.mp3 import stream_scorecard
 from macrobase_spark.queries import register
 
 # ISO/IEC 14496-3 sampling_frequency_index table (13 valid entries).
@@ -211,14 +212,26 @@ def adts_verdict_col():
     return F.expr(_VERDICT_SQL)
 
 
+def adts_fixture_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recipe of the profile relation: synthesize the ADTS fixture, walk
+    every stream once."""
+    return adts_profiles(generate_adts_clips(spark, decode_fixture_n(sf_dir)))
+
+
+def adts_scorecard(p: DataFrame) -> DataFrame:
+    """ADTS scorecard: CRC-protected clip count and total walked frames
+    per verdict."""
+    return stream_scorecard(
+        p,
+        adts_verdict_col(),
+        F.sum((F.col("n_crc_frames") > 0).cast("int")).cast("long").alias("n_crc_clips"),
+        F.sum("n_frames").cast("long").alias("frames"),
+    )
+
+
 @artifact("adtsprof", 1)
 def adts_profiles_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
-    """Materialize the profile relation once (kernel runs here, untimed)
-    so the DuckDB oracle reads the identical rows."""
-    from macrobase_spark.operators.audio import _codec_clips_n
-
-    n = _codec_clips_n(sf_dir)
-    adts_profiles(generate_adts_clips(spark, n)).write.mode("overwrite").parquet(out)
+    adts_fixture_profiles(spark, sf_dir).write.mode("overwrite").parquet(out)
 
 
 _AP = adts_profiles_parquet.scan()
@@ -239,39 +252,6 @@ _AP = adts_profiles_parquet.scan()
     """,
 )
 def aac_integrity_stats_q(spark, sf_dir: str) -> DataFrame:
-    """ADTS scorecard: clip counts per verdict, CRC-protected clip count,
-    total walked frames, worst clean-clip duration disagreement vs the
-    dur_ms metadata. ONE partial+final hash aggregate over the profile
-    relation."""
-    p = spark.read.parquet(adts_profiles_parquet(spark, sf_dir))
-    v = adts_verdict_col()
-    return (
-        p.groupBy(v.alias("verdict"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum((F.col("n_crc_frames") > 0).cast("int")).cast("long").alias("n_crc_clips"),
-            F.sum("n_frames").cast("long").alias("frames"),
-            F.round(
-                F.max(
-                    F.when(
-                        v == "ok", F.abs(F.col("est_dur_ms") - F.col("dur_ms"))
-                    ).otherwise(F.lit(0.0))
-                ),
-                4,
-            ).alias("max_ok_dur_err_ms"),
-        )
-        .orderBy("verdict")
-    )
-
-
-def aac_integrity_pipeline(spark, sf_dir: str) -> DataFrame:
-    """Bench-only full kernel: synthesize -> walk -> aggregate in one
-    timed plan (the registered twin reads the materialized profiles)."""
-    from macrobase_spark.operators.audio import _codec_clips_n
-
-    p = adts_profiles(generate_adts_clips(spark, _codec_clips_n(sf_dir)))
-    return (
-        p.groupBy(adts_verdict_col().alias("verdict"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_frames").alias("frames"))
-        .orderBy("verdict")
-    )
+    """`adts_scorecard` over the materialized profile relation (the files
+    the oracle reads)."""
+    return adts_scorecard(spark.read.parquet(adts_profiles_parquet(spark, sf_dir)))

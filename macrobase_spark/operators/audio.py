@@ -892,12 +892,8 @@ def snr_check(
 # registered query: compressed-codec SNR stats (real mu-law/A-law/ADPCM decode)
 # ---------------------------------------------------------------------------
 
-from macrobase_spark.artifacts import artifact, sf_size  # noqa: E402
+from macrobase_spark.artifacts import artifact, decode_fixture_n  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
-
-
-def _codec_clips_n(sf_dir: str) -> int:
-    return sf_size(sf_dir, 40_000, 400)
 
 
 @artifact("flacclips", 1)
@@ -928,29 +924,17 @@ def flac_snr_suite(spark, sf_dir: str):
     )
 
 
-@artifact("codecsnr", 2)
-def codec_snr_parquet(spark, sf_dir: str, out: str) -> None:
-    """Materialize the per-clip SNR relation of the compressed-codec fixture
-    (ONE decode pass through the real G.711/ADPCM codecs) to parquet for
-    the DuckDB oracle — the image_features_parquet recipe."""
+def codec_fixture_snr(spark, sf_dir: str) -> DataFrame:
+    """Recipe of the per-clip SNR relation of the compressed-codec fixture:
+    ONE decode pass through the real G.711/ADPCM codecs."""
     from macrobase_spark.sources.clips import generate_codec_clips
 
-    n = _codec_clips_n(sf_dir)
-    clips = generate_codec_clips(spark, n)
-    (
-        snr_check(clips, min_snr_db=25.0, carry_cols=["codec"])
-        .write.mode("overwrite")
-        .parquet(out)
-    )
+    clips = generate_codec_clips(spark, decode_fixture_n(sf_dir))
+    return snr_check(clips, min_snr_db=25.0, carry_cols=["codec"])
 
 
-def codec_snr_stats_pipeline(spark, sf_dir: str):
-    """Full synthesize → compressed-encode → decode → SNR → agg in one
-    plan — the BENCH entry, so the timed number includes the codec work."""
-    from macrobase_spark.sources.clips import generate_codec_clips
-
-    clips = generate_codec_clips(spark, _codec_clips_n(sf_dir))
-    scored = snr_check(clips, min_snr_db=25.0, carry_cols=["codec"])
+def codec_snr_profile(scored: DataFrame) -> DataFrame:
+    """Per-codec decode rate and SNR of the passing clips."""
     return scored.groupBy("codec").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
@@ -959,7 +943,9 @@ def codec_snr_stats_pipeline(spark, sf_dir: str):
     )
 
 
-_CODECF = codec_snr_parquet.scan()
+@artifact("codecsnr", 2)
+def codec_snr_parquet(spark, sf_dir: str, out: str) -> None:
+    codec_fixture_snr(spark, sf_dir).write.mode("overwrite").parquet(out)
 
 
 @register(
@@ -970,7 +956,7 @@ _CODECF = codec_snr_parquet.scan()
            CAST(sum(CASE WHEN decode_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_decoded,
            CAST(sum(CASE WHEN snr_pass THEN 1 ELSE 0 END) AS BIGINT)  AS n_snr_pass,
            round(avg(CASE WHEN snr_pass THEN snr_db END), 2) AS avg_snr_db
-    FROM {_CODECF}
+    FROM {codec_snr_parquet.scan()}
     GROUP BY codec
     """,
 )
@@ -983,13 +969,7 @@ def codec_snr_stats(spark, sf_dir: str):
     worst (f0, 8 kHz) tones while G.711 sits 35-40 dB — an honest lossy
     threshold, not a relaxed check. Aggregates the materialized relation
     the oracle also reads."""
-    scored = spark.read.parquet(codec_snr_parquet(spark, sf_dir))
-    return scored.groupBy("codec").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
-        F.sum(F.col("snr_pass").cast("long")).alias("n_snr_pass"),
-        F.round(F.avg(F.when(F.col("snr_pass"), F.col("snr_db"))), 2).alias("avg_snr_db"),
-    )
+    return codec_snr_profile(spark.read.parquet(codec_snr_parquet(spark, sf_dir)))
 
 
 RESAMPLED_SCHEMA = StructType(
@@ -1118,16 +1098,29 @@ def resample_check(df: DataFrame, target_sr: int = 16000, min_snr_db: float = 20
     return df.select("clip_id", "sr_hz", "bytes").mapInPandas(run, RESAMPLE_CHECK_SCHEMA)
 
 
-@artifact("resample", 1)
-def resample_check_parquet(spark, sf_dir: str, out: str) -> None:
-    """Materialize the resample-integrity relation (ONE decode+interp scan
-    of the clips table) for the DuckDB oracle."""
+def clips_resampled(spark, sf_dir: str) -> DataFrame:
+    """Recipe of the resample-integrity relation: ONE decode+interp scan of
+    the clips table."""
     from macrobase_spark.operators.clips_suite import clips_table
 
-    resample_check(clips_table(spark, sf_dir)).write.mode("overwrite").parquet(out)
+    return resample_check(clips_table(spark, sf_dir))
 
 
-_RESF = resample_check_parquet.scan()
+def resample_profile(scored: DataFrame) -> DataFrame:
+    """Per-original-rate decode rate, post-resample SNR and total 16 kHz
+    sample count."""
+    return scored.groupBy("sr_hz").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
+        F.sum(F.col("snr_pass").cast("long")).alias("n_snr_pass"),
+        F.round(F.avg(F.when(F.col("snr_pass"), F.col("snr_db"))), 2).alias("avg_snr_db"),
+        F.sum(F.col("n_out").cast("long")).alias("total_samples_16k"),
+    )
+
+
+@artifact("resample", 1)
+def resample_check_parquet(spark, sf_dir: str, out: str) -> None:
+    clips_resampled(spark, sf_dir).write.mode("overwrite").parquet(out)
 
 
 @register(
@@ -1139,7 +1132,7 @@ _RESF = resample_check_parquet.scan()
            CAST(sum(CASE WHEN snr_pass THEN 1 ELSE 0 END) AS BIGINT)  AS n_snr_pass,
            round(avg(CASE WHEN snr_pass THEN snr_db END), 2) AS avg_snr_db,
            CAST(sum(n_out) AS BIGINT) AS total_samples_16k
-    FROM {_RESF}
+    FROM {resample_check_parquet.scan()}
     GROUP BY sr_hz
     """,
 )
@@ -1149,11 +1142,4 @@ def clips_resample_stats(spark, sf_dir: str):
     reference render at 16 kHz, and total normalized sample count — the
     validation a training pipeline runs after sample-rate normalization.
     Aggregates the materialized relation the oracle also reads."""
-    scored = spark.read.parquet(resample_check_parquet(spark, sf_dir))
-    return scored.groupBy("sr_hz").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
-        F.sum(F.col("snr_pass").cast("long")).alias("n_snr_pass"),
-        F.round(F.avg(F.when(F.col("snr_pass"), F.col("snr_db"))), 2).alias("avg_snr_db"),
-        F.sum(F.col("n_out").cast("long")).alias("total_samples_16k"),
-    )
+    return resample_profile(spark.read.parquet(resample_check_parquet(spark, sf_dir)))

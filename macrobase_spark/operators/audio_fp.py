@@ -53,7 +53,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from macrobase_spark.artifacts import artifact, sf_size
+from macrobase_spark.artifacts import artifact, decode_fixture_n
 from macrobase_spark.operators.audio import decode_audio, sin_samples, splitmix64, u01
 from macrobase_spark.queries import register
 
@@ -313,16 +313,12 @@ def generate_fp_clips(spark, n: int) -> DataFrame:
 # ---- registry query + oracle (materialized-fingerprint recipe) -------------
 
 
-def _fp_clips_n(sf_dir: str) -> int:
-    return sf_size(sf_dir, 40_000, 400)
-
-
 @artifact("audiofp", 2)
 def audio_fp_parquet(spark, sf_dir: str, out: str) -> None:
     """Materialize the fingerprint relation (ONE decode scan of the fp
     fixture) so the DuckDB oracle replays the join/Hamming stage over the
     very same signatures."""
-    n = _fp_clips_n(sf_dir)
+    n = decode_fixture_n(sf_dir)
     audio_fingerprints(generate_fp_clips(spark, n)).write.mode("overwrite").parquet(out)
 
 

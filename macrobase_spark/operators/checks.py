@@ -170,6 +170,19 @@ def snr_violations(scored: DataFrame) -> DataFrame:
     )
 
 
+def mad_scores(meds: list[float]):
+    """Robust z-scores of group medians: |med - median| over 1.4826 x MAD;
+    when the MAD is 0, over 1.253314 x the mean absolute deviation (1 if
+    that is 0 too)."""
+    import numpy as np
+
+    meds = np.array(meds)
+    resid = np.abs(meds - float(np.percentile(meds, 50)))
+    mad = float(np.percentile(resid, 50))
+    scale = 1.4826 * mad if mad > 0 else (1.253314 * resid.mean() if resid.mean() else 1.0)
+    return resid / scale
+
+
 def drift_group_rows(
     scored: DataFrame, metric: str, partition_cols: list[str], approx: bool = True
 ) -> list:
@@ -184,8 +197,6 @@ def drift_group_rows(
 
     Returns [(group_values..., med, score)] driver-side tuples.
     """
-    import numpy as np
-
     med_agg = (
         F.percentile_approx(metric, 0.5, 10000) if approx else F.percentile(metric, 0.5)
     )
@@ -196,37 +207,11 @@ def drift_group_rows(
     )
     if not rows:
         return []
-    meds = np.array([float(r["med"]) for r in rows])
-    median = float(np.percentile(meds, 50))
-    resid = np.abs(meds - median)
-    mad = float(np.percentile(resid, 50))
-    scale = 1.4826 * mad if mad > 0 else (1.253314 * resid.mean() if resid.mean() else 1.0)
-    scores = resid / scale
+    scores = mad_scores([float(r["med"]) for r in rows])
     return [
         (*[r[c] for c in partition_cols], float(r["med"]), float(s))
         for r, s in zip(rows, scores)
     ]
-
-
-def drift_check(
-    scored: DataFrame, metric: str, partition_cols: list[str], mad_threshold: float
-) -> DataFrame:
-    """Drift scores rendered as violation rows (clip_id = NULL, one per
-    drifted group)."""
-    spark = scored.sparkSession
-    schema = "clip_id string, check string, detail string"
-    out = [
-        (
-            None,
-            "drift",
-            f"drifted {metric} in ("
-            + ",".join(str(v) for v in row[:-2])
-            + f"): med={round(row[-2], 1)} score={round(row[-1], 2)}",
-        )
-        for row in drift_group_rows(scored, metric, partition_cols)
-        if row[-1] > mad_threshold
-    ]
-    return spark.createDataFrame(out, schema)
 
 
 def column_stats(scored: DataFrame, partition_col: str, approx: bool = True) -> DataFrame:
@@ -374,8 +359,6 @@ def _suite_from_scored(
     (row_violations / verdicts_from_violations / column_stats / explain) the
     oracle queries certify — asserted by tests/test_clips.py.
     """
-    import numpy as np
-
     part = cfg.partition_col
     row_viol = _materialize(row_violations(scored, manifest), cfg.cache)
 
@@ -422,13 +405,8 @@ def _suite_from_scored(
     # --- drift: MAD robust z over the (part, sr_hz) group medians ---------
     drift_out = []
     if fine:
-        meds = np.array([float(r["dur_q"][0]) for r in fine])
-        median = float(np.percentile(meds, 50))
-        resid = np.abs(meds - median)
-        mad = float(np.percentile(resid, 50))
-        scale = 1.4826 * mad if mad > 0 else (1.253314 * resid.mean() if resid.mean() else 1.0)
-        for r, res in zip(fine, resid):
-            s = res / scale
+        scores = mad_scores([float(r["dur_q"][0]) for r in fine])
+        for r, s in zip(fine, scores):
             if s > cfg.drift_mad_threshold:
                 drift_out.append(
                     (

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from macrobase_spark.artifacts import artifact
+from macrobase_spark.artifacts import artifact, decode_fixture_n
 from macrobase_spark.queries import register
 from macrobase_spark.operators.aac import adts_stream, walk_adts
 from macrobase_spark.operators.mp3 import mp3_stream, walk_mp3
@@ -276,55 +276,42 @@ def generate_mixed_clips(spark: SparkSession, n: int) -> DataFrame:
     return spark.range(n).mapInPandas(gen, "clip_id string, bytes binary, codec string")
 
 
-@artifact("gate", 2)
-def gate_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
-    """Materialize the gate relation once (kernel runs here, untimed) so
-    the DuckDB oracle reads the identical rows."""
-    from macrobase_spark.operators.audio import _codec_clips_n
-
-    n = _codec_clips_n(sf_dir)
-    transport_gate(generate_mixed_clips(spark, n)).write.mode("overwrite").parquet(out)
+def mixed_fixture_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recipe of the gate relation: synthesize the mixed-transport corpus,
+    sniff + route + walk every clip once."""
+    return transport_gate(generate_mixed_clips(spark, decode_fixture_n(sf_dir)))
 
 
-_GP = gate_parquet.scan()
+def gate_rollup(g: DataFrame) -> DataFrame:
+    """Clip counts per (declared codec, detected transport, structural
+    verdict, label agreement). label_ok is a pure function of (codec,
+    format_detected), so it rides as a group key rather than a derived
+    aggregate. ONE partial+final hash aggregate."""
+    keys = ["codec", "format_detected", "verdict", "label_ok"]
+    return g.groupBy(*keys).agg(F.count(F.lit(1)).cast("long").alias("n")).orderBy(*keys)
 
 
-@register(
-    "transport_gate_stats",
-    f"""
+_ROLLUP_SQL = """
     SELECT codec, format_detected, verdict, label_ok,
            CAST(count(*) AS BIGINT) AS n
-    FROM {_GP}
+    FROM {rel}
     GROUP BY codec, format_detected, verdict, label_ok
     ORDER BY codec, format_detected, verdict, label_ok
-    """,
-)
+    """
+
+
+@artifact("gate", 2)
+def gate_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
+    mixed_fixture_gate(spark, sf_dir).write.mode("overwrite").parquet(out)
+
+
+@register("transport_gate_stats", _ROLLUP_SQL.format(rel=gate_parquet.scan()))
 def transport_gate_stats_q(spark, sf_dir: str) -> DataFrame:
-    """Gate rollup over the mixed corpus: (declared codec, detected
-    transport, structural verdict, label agreement) — mislabeled clips
-    appear under their DETECTED format's checks with label_ok=false,
-    which is the point of magic-based routing. label_ok is a pure
-    function of (codec, format_detected), so it rides as a group key
-    rather than a derived aggregate. ONE partial+final hash aggregate."""
-    g = spark.read.parquet(gate_parquet(spark, sf_dir))
-    return (
-        g.groupBy("codec", "format_detected", "verdict", "label_ok")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy("codec", "format_detected", "verdict", "label_ok")
-    )
-
-
-def transport_gate_pipeline(spark, sf_dir: str) -> DataFrame:
-    """Bench-only full kernel: synthesize mixed corpus -> sniff + route +
-    walk -> rollup, in one timed plan."""
-    from macrobase_spark.operators.audio import _codec_clips_n
-
-    g = transport_gate(generate_mixed_clips(spark, _codec_clips_n(sf_dir)))
-    return (
-        g.groupBy("format_detected", "verdict")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("format_detected", "verdict")
-    )
+    """Gate rollup over the mixed corpus — mislabeled clips appear under
+    their DETECTED format's checks with label_ok=false, which is the
+    point of magic-based routing. Aggregates the materialized gate
+    relation the oracle also reads."""
+    return gate_rollup(spark.read.parquet(gate_parquet(spark, sf_dir)))
 
 
 @artifact("codecgate", 1)
@@ -335,26 +322,13 @@ def codec_gate_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     truncated payloads that magic-only sniffing admits ('truncated RIFF
     keeps its magic'). Materialized once so the oracle replays the
     rollup over identical rows."""
-    from macrobase_spark.operators.audio import _codec_clips_n
     from macrobase_spark.sources.clips import generate_codec_clips
 
-    n = _codec_clips_n(sf_dir)
-    transport_gate(generate_codec_clips(spark, n)).write.mode("overwrite").parquet(out)
+    clips = generate_codec_clips(spark, decode_fixture_n(sf_dir))
+    transport_gate(clips).write.mode("overwrite").parquet(out)
 
 
-_CG = codec_gate_parquet.scan()
-
-
-@register(
-    "codec_structure_stats",
-    f"""
-    SELECT codec, format_detected, verdict, label_ok,
-           CAST(count(*) AS BIGINT) AS n
-    FROM {_CG}
-    GROUP BY codec, format_detected, verdict, label_ok
-    ORDER BY codec, format_detected, verdict, label_ok
-    """,
-)
+@register("codec_structure_stats", _ROLLUP_SQL.format(rel=codec_gate_parquet.scan()))
 def codec_structure_stats_q(spark, sf_dir: str) -> DataFrame:
     """Structural verdicts for the decodable-codec corpus: unlike the
     magic-only sniff (`codec_magic_check`), the deep RIFF walk surfaces
@@ -364,9 +338,4 @@ def codec_structure_stats_q(spark, sf_dir: str) -> DataFrame:
     damage is the decode+CRC check's job (flac_snr_suite), exactly the
     triage split this gate exists to make cheap. ONE
     partial+final hash aggregate over the materialized gate relation."""
-    g = spark.read.parquet(codec_gate_parquet(spark, sf_dir))
-    return (
-        g.groupBy("codec", "format_detected", "verdict", "label_ok")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy("codec", "format_detected", "verdict", "label_ok")
-    )
+    return gate_rollup(spark.read.parquet(codec_gate_parquet(spark, sf_dir)))

@@ -406,64 +406,34 @@ def sample_frames(
 
 
 # ---------------------------------------------------------------------------
-# registered queries (rows-only: the images/videos fixture is synthesized so
-# DuckDB has no view of it; gates = tests/test_image.py exact planted
-# recovery + feature-value equality)
+# registered queries: each decodes a synthesized fixture once into a feature
+# relation (the recipe), materialized as an artifact; the query aggregates
+# the artifact and its DuckDB oracle reads the same files. The decode
+# kernels themselves are gated by tests/test_image.py planted recovery.
 # ---------------------------------------------------------------------------
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from macrobase_spark.artifacts import artifact, sf_size  # noqa: E402
+from macrobase_spark.artifacts import artifact, decode_fixture_n  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 
-def _images_n(sf_dir: str) -> int:
-    return sf_size(sf_dir, 40_000, 400)
+def still_image_features(generator: str):
+    """Recipe `(spark, sf_dir) -> DataFrame` of a still-image feature
+    relation: synthesize the fixture with `sources.images.<generator>`,
+    decode every image once and carry its label."""
+
+    def recipe(spark, sf_dir: str) -> DataFrame:
+        from macrobase_spark.sources import images
+
+        imgs = getattr(images, generator)(spark, decode_fixture_n(sf_dir))
+        return image_features(imgs).join(imgs.select("image_id", "label"), "image_id")
+
+    return recipe
 
 
-@artifact("imgfeat", 1)
-def image_features_parquet(spark, sf_dir: str, out: str) -> None:
-    """Materialize the per-image feature relation (ONE decode pass) to
-    parquet; the DuckDB oracle reads the same files — the clips_suite
-    recipe (clips_suite.scored_parquet), which turns the relational stats
-    oracle-green while the decode kernel stays gated by tests/test_image.py
-    planted recovery."""
-    from macrobase_spark.sources.images import generate_images
-
-    n = _images_n(sf_dir)
-    imgs = generate_images(spark, n)
-    (
-        image_features(imgs)
-        .join(imgs.select("image_id", "label"), "image_id")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-
-
-@artifact("vidfeat", 1)
-def video_frame_features_parquet(spark, sf_dir: str, out: str) -> None:
-    """Materialize per-frame features of every-2nd-frame samples (ONE
-    fan-out + decode pass) to parquet for the DuckDB oracle."""
-    from macrobase_spark.sources.images import generate_videos
-
-    n = max(_images_n(sf_dir) // 10, 40)
-    frames = sample_frames(generate_videos(spark, n), every_k=2)
-    (
-        image_features(frames, id_col="video_id", bytes_col="frame")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-
-
-def image_feature_stats_pipeline(spark, sf_dir: str) -> DataFrame:
-    """Full decode path (synthesize → decode → join → agg) in one plan —
-    the BENCH entry, so the timed number includes the kernel; the
-    registered correctness query reads the materialized feature parquet
-    instead so its oracle can see the same relation."""
-    from macrobase_spark.sources.images import generate_images
-
-    imgs = generate_images(spark, _images_n(sf_dir))
-    feats = image_features(imgs).join(imgs.select("image_id", "label"), "image_id")
+def label_profile(feats: DataFrame) -> DataFrame:
+    """Per-label decode rate + channel/luma means of the decoded images."""
     return feats.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
@@ -472,51 +442,71 @@ def image_feature_stats_pipeline(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def video_frame_stats_pipeline(spark, sf_dir: str) -> DataFrame:
-    """Full fan-out + decode path in one plan — the BENCH entry."""
-    from macrobase_spark.sources.images import generate_videos
-
-    n = max(_images_n(sf_dir) // 10, 40)
-    frames = sample_frames(generate_videos(spark, n), every_k=2)
-    feats = image_features(frames, id_col="video_id", bytes_col="frame")
-    return (
-        feats.groupBy("image_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_frames"),
-            F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
-            F.round(F.avg("luma_mean"), 4).alias("avg_luma"),
-        )
-        .withColumnRenamed("image_id", "video_id")
-    )
-
-
-_IMGF = image_features_parquet.scan()
-_VIDF = video_frame_features_parquet.scan()
-
-
-@register(
-    "image_feature_stats",
-    f"""
+_LABEL_PROFILE_SQL = """
     SELECT label,
            count(*) AS n,
            CAST(sum(CASE WHEN decode_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_decoded,
            round(avg(CASE WHEN decode_ok THEN luma_mean END), 4) AS avg_luma,
            round(avg(CASE WHEN decode_ok THEN mean_r END), 4) AS avg_r
-    FROM {_IMGF}
+    FROM {rel}
     GROUP BY label
-    """,
-)
-def image_feature_stats(spark, sf_dir: str) -> DataFrame:
-    """Per-label image profile over the deterministic fixture: decode rate +
-    channel/luma means — the image analogue of clips_snr_stats. Aggregates
-    the materialized feature relation (same files the oracle reads)."""
-    feats = spark.read.parquet(image_features_parquet(spark, sf_dir))
-    return feats.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
+    """
+
+# query -> (artifact, generator). Each format runs a real decoder, whose
+# planted corruption and truncation land as decode_ok=false:
+# - PPM (the image analogue of clips_snr_stats);
+# - PNG: pure-stdlib zlib inflate + CRC verify + scanline unfilter;
+# - JPEG: pure-numpy baseline huffman decode + dequant + IDCT + YCbCr->RGB;
+# - WebP: pure-numpy lossless VP8L (prefix codes + LZ77 + predictor /
+#   subtract-green / color-indexing inverses).
+STILL_IMAGES = {
+    "image_feature_stats": ("imgfeat", "generate_images"),
+    "png_feature_stats": ("pngfeat", "generate_png_images"),
+    "jpeg_feature_stats": ("jpegfeat", "generate_jpeg_images"),
+    "webp_feature_stats": ("webpfeat", "generate_webp_images"),
+}
+
+
+def _register_still_image(query: str, name: str, generator: str) -> None:
+    recipe = still_image_features(generator)
+
+    @artifact(name, 1)
+    def features_parquet(spark, sf_dir: str, out: str) -> None:
+        recipe(spark, sf_dir).write.mode("overwrite").parquet(out)
+
+    @register(query, _LABEL_PROFILE_SQL.format(rel=features_parquet.scan()))
+    def feature_stats(spark, sf_dir: str) -> DataFrame:
+        """Per-label profile of one still-image fixture over its
+        materialized feature relation (the files the oracle reads)."""
+        return label_profile(spark.read.parquet(features_parquet(spark, sf_dir)))
+
+
+for _query, (_name, _generator) in STILL_IMAGES.items():
+    _register_still_image(_query, _name, _generator)
+
+
+def video_frame_features(spark, sf_dir: str) -> DataFrame:
+    """Recipe of the per-frame feature relation: every 2nd frame of each
+    synthesized video, fanned out and decoded once."""
+    from macrobase_spark.sources.images import generate_videos
+
+    n = max(decode_fixture_n(sf_dir) // 10, 40)
+    frames = sample_frames(generate_videos(spark, n), every_k=2)
+    return image_features(frames, id_col="video_id", bytes_col="frame")
+
+
+def video_profile(feats: DataFrame) -> DataFrame:
+    """Per-video sampled-frame count, decode count and mean luma."""
+    return feats.groupBy("image_id").agg(
+        F.count(F.lit(1)).alias("n_frames"),
         F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("luma_mean"))), 4).alias("avg_luma"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("mean_r"))), 4).alias("avg_r"),
-    )
+        F.round(F.avg("luma_mean"), 4).alias("avg_luma"),
+    ).withColumnRenamed("image_id", "video_id")
+
+
+@artifact("vidfeat", 1)
+def video_frame_features_parquet(spark, sf_dir: str, out: str) -> None:
+    video_frame_features(spark, sf_dir).write.mode("overwrite").parquet(out)
 
 
 @register(
@@ -526,7 +516,7 @@ def image_feature_stats(spark, sf_dir: str) -> DataFrame:
            count(*) AS n_frames,
            CAST(sum(CASE WHEN decode_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_decoded,
            round(avg(luma_mean), 4) AS avg_luma
-    FROM {_VIDF}
+    FROM {video_frame_features_parquet.scan()}
     GROUP BY video_id
     """,
 )
@@ -534,198 +524,4 @@ def video_frame_stats(spark, sf_dir: str) -> DataFrame:
     """Frame-sampling fan-out + per-frame feature extraction composed: every
     2nd frame of each video, decoded and profiled per video — aggregated
     over the materialized per-frame feature relation."""
-    feats = spark.read.parquet(video_frame_features_parquet(spark, sf_dir))
-    return feats.groupBy("image_id").agg(
-        F.count(F.lit(1)).alias("n_frames"),
-        F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
-        F.round(F.avg("luma_mean"), 4).alias("avg_luma"),
-    ).withColumnRenamed("image_id", "video_id")
-
-
-@artifact("pngfeat", 1)
-def png_features_parquet(spark, sf_dir: str, out: str) -> None:
-    """Materialize per-image features of the PNG fixture (ONE decode pass
-    through the real stdlib PNG codec) to parquet for the DuckDB oracle —
-    same recipe as image_features_parquet."""
-    from macrobase_spark.sources.images import generate_png_images
-
-    n = _images_n(sf_dir)
-    imgs = generate_png_images(spark, n)
-    (
-        image_features(imgs)
-        .join(imgs.select("image_id", "label"), "image_id")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-
-
-def png_feature_stats_pipeline(spark, sf_dir: str) -> DataFrame:
-    """Full synthesize → PNG-encode → PNG-decode → agg in one plan — the
-    BENCH entry, so the timed number includes inflate + unfilter."""
-    from macrobase_spark.sources.images import generate_png_images
-
-    imgs = generate_png_images(spark, _images_n(sf_dir))
-    feats = image_features(imgs).join(imgs.select("image_id", "label"), "image_id")
-    return feats.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("luma_mean"))), 4).alias("avg_luma"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("mean_r"))), 4).alias("avg_r"),
-    )
-
-
-_PNGF = png_features_parquet.scan()
-
-
-@register(
-    "png_feature_stats",
-    f"""
-    SELECT label,
-           count(*) AS n,
-           CAST(sum(CASE WHEN decode_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_decoded,
-           round(avg(CASE WHEN decode_ok THEN luma_mean END), 4) AS avg_luma,
-           round(avg(CASE WHEN decode_ok THEN mean_r END), 4) AS avg_r
-    FROM {_PNGF}
-    GROUP BY label
-    """,
-)
-def png_feature_stats(spark, sf_dir: str) -> DataFrame:
-    """Per-label profile of the PNG fixture through the REAL pure-stdlib
-    PNG decode (zlib inflate + CRC verify + scanline unfilter): decode rate
-    (planted bit-flip corruption and truncation both land as
-    decode_ok=false via CRC/short-data checks) + channel/luma means.
-    Aggregates the materialized feature relation the oracle also reads."""
-    feats = spark.read.parquet(png_features_parquet(spark, sf_dir))
-    return feats.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("luma_mean"))), 4).alias("avg_luma"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("mean_r"))), 4).alias("avg_r"),
-    )
-
-
-@artifact("jpegfeat", 1)
-def jpeg_features_parquet(spark, sf_dir: str, out: str) -> None:
-    """Materialize per-image features of the JPEG fixture (ONE decode pass
-    through the pure-numpy baseline JPEG codec) for the DuckDB oracle —
-    same recipe as png_features_parquet."""
-    from macrobase_spark.sources.images import generate_jpeg_images
-
-    n = _images_n(sf_dir)
-    imgs = generate_jpeg_images(spark, n)
-    (
-        image_features(imgs)
-        .join(imgs.select("image_id", "label"), "image_id")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-
-
-def jpeg_feature_stats_pipeline(spark, sf_dir: str) -> DataFrame:
-    """Full synthesize → JPEG-encode → JPEG-decode → agg in one plan — the
-    BENCH entry, so the timed number includes huffman + IDCT."""
-    from macrobase_spark.sources.images import generate_jpeg_images
-
-    imgs = generate_jpeg_images(spark, _images_n(sf_dir))
-    feats = image_features(imgs).join(imgs.select("image_id", "label"), "image_id")
-    return feats.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("luma_mean"))), 4).alias("avg_luma"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("mean_r"))), 4).alias("avg_r"),
-    )
-
-
-_JPGF = jpeg_features_parquet.scan()
-
-
-@register(
-    "jpeg_feature_stats",
-    f"""
-    SELECT label,
-           count(*) AS n,
-           CAST(sum(CASE WHEN decode_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_decoded,
-           round(avg(CASE WHEN decode_ok THEN luma_mean END), 4) AS avg_luma,
-           round(avg(CASE WHEN decode_ok THEN mean_r END), 4) AS avg_r
-    FROM {_JPGF}
-    GROUP BY label
-    """,
-)
-def jpeg_feature_stats(spark, sf_dir: str) -> DataFrame:
-    """Per-label profile of the JPEG fixture through the REAL pure-numpy
-    baseline JPEG decode (huffman entropy decode + dequant + vectorized
-    IDCT + YCbCr→RGB): decode rate (planted marker corruption and
-    mid-scan truncation both land as decode_ok=false) + channel/luma
-    means. Aggregates the materialized feature relation the oracle also
-    reads."""
-    feats = spark.read.parquet(jpeg_features_parquet(spark, sf_dir))
-    return feats.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("luma_mean"))), 4).alias("avg_luma"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("mean_r"))), 4).alias("avg_r"),
-    )
-
-
-@artifact("webpfeat", 1)
-def webp_features_parquet(spark, sf_dir: str, out: str) -> None:
-    """Materialize per-image features of the lossless-WebP fixture (ONE
-    decode pass through the pure-numpy VP8L codec) for the DuckDB oracle —
-    same recipe as png/jpeg_features_parquet."""
-    from macrobase_spark.sources.images import generate_webp_images
-
-    n = _images_n(sf_dir)
-    imgs = generate_webp_images(spark, n)
-    (
-        image_features(imgs)
-        .join(imgs.select("image_id", "label"), "image_id")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-
-
-def webp_feature_stats_pipeline(spark, sf_dir: str) -> DataFrame:
-    """Full synthesize → VP8L-encode → VP8L-decode → agg in one plan — the
-    BENCH entry, so the timed number includes prefix-coding both ways plus
-    the transform forward/inverse passes."""
-    from macrobase_spark.sources.images import generate_webp_images
-
-    imgs = generate_webp_images(spark, _images_n(sf_dir))
-    feats = image_features(imgs).join(imgs.select("image_id", "label"), "image_id")
-    return feats.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("luma_mean"))), 4).alias("avg_luma"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("mean_r"))), 4).alias("avg_r"),
-    )
-
-
-_WEBPF = webp_features_parquet.scan()
-
-
-@register(
-    "webp_feature_stats",
-    f"""
-    SELECT label,
-           count(*) AS n,
-           CAST(sum(CASE WHEN decode_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_decoded,
-           round(avg(CASE WHEN decode_ok THEN luma_mean END), 4) AS avg_luma,
-           round(avg(CASE WHEN decode_ok THEN mean_r END), 4) AS avg_r
-    FROM {_WEBPF}
-    GROUP BY label
-    """,
-)
-def webp_feature_stats(spark, sf_dir: str) -> DataFrame:
-    """Per-label profile of the lossless-WebP fixture through the REAL
-    pure-numpy VP8L decode (canonical prefix codes + LZ77 + predictor /
-    subtract-green / color-indexing inverses): decode rate (planted
-    signature corruption and mid-bitstream truncation both land as
-    decode_ok=false) + channel/luma means. Aggregates the materialized
-    feature relation the oracle also reads."""
-    feats = spark.read.parquet(webp_features_parquet(spark, sf_dir))
-    return feats.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("luma_mean"))), 4).alias("avg_luma"),
-        F.round(F.avg(F.when(F.col("decode_ok"), F.col("mean_r"))), 4).alias("avg_r"),
-    )
+    return video_profile(spark.read.parquet(video_frame_features_parquet(spark, sf_dir)))

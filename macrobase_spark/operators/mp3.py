@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from macrobase_spark.artifacts import artifact
+from macrobase_spark.artifacts import artifact, decode_fixture_n
 from macrobase_spark.queries import register
 
 # MPEG-1 Layer III tables (ISO/IEC 11172-3). Index 0 = "free format"
@@ -241,14 +241,52 @@ def mp3_verdict_col():
 # ---------------------------------------------------------------------------
 
 
+def mp3_fixture_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recipe of the profile relation: synthesize the mp3 fixture, walk
+    every stream once."""
+    return mp3_profiles(generate_mp3_clips(spark, decode_fixture_n(sf_dir)))
+
+
+def stream_scorecard(p: DataFrame, verdict, *counts) -> DataFrame:
+    """Per-verdict rollup of a stream-profile relation (mp3, ADTS, Ogg):
+    clip count, the format's `counts`, and the worst duration
+    disagreement between the walked stream and the dur_ms metadata among
+    clean clips (0.5 ms rounding bound certifies the walk is
+    sample-accurate). ONE partial+final hash aggregate."""
+    return (
+        p.groupBy(verdict.alias("verdict"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            *counts,
+            F.round(
+                F.max(
+                    F.when(
+                        verdict == "ok", F.abs(F.col("est_dur_ms") - F.col("dur_ms"))
+                    ).otherwise(F.lit(0.0))
+                ),
+                4,
+            ).alias("max_ok_dur_err_ms"),
+        )
+        .orderBy("verdict")
+    )
+
+
+def mp3_scorecard(p: DataFrame) -> DataFrame:
+    """mp3 stream-integrity scorecard: VBR clip count and total walked
+    frames per verdict."""
+    return stream_scorecard(
+        p,
+        mp3_verdict_col(),
+        F.sum((F.col("br_kbps_max") > F.col("br_kbps_min")).cast("int"))
+        .cast("long")
+        .alias("n_vbr"),
+        F.sum("n_frames").cast("long").alias("frames"),
+    )
+
+
 @artifact("mp3prof", 1)
 def mp3_profiles_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
-    """Materialize the profile relation once (kernel runs here, untimed)
-    so the DuckDB oracle reads the identical rows."""
-    from macrobase_spark.operators.audio import _codec_clips_n
-
-    n = _codec_clips_n(sf_dir)
-    mp3_profiles(generate_mp3_clips(spark, n)).write.mode("overwrite").parquet(out)
+    mp3_fixture_profiles(spark, sf_dir).write.mode("overwrite").parquet(out)
 
 
 _MP = mp3_profiles_parquet.scan()
@@ -269,43 +307,6 @@ _MP = mp3_profiles_parquet.scan()
     """,
 )
 def mp3_integrity_stats_q(spark, sf_dir: str) -> DataFrame:
-    """Stream-integrity scorecard for mp3 payloads: clip counts per
-    verdict, VBR counts, total walked frames, and the worst duration
-    disagreement between walked frames and the dur_ms metadata among
-    clean clips (0.5 ms rounding bound certifies the walk is
-    sample-accurate). ONE partial+final hash aggregate over the profile
-    relation."""
-    p = spark.read.parquet(mp3_profiles_parquet(spark, sf_dir))
-    v = mp3_verdict_col()
-    return (
-        p.groupBy(v.alias("verdict"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum((F.col("br_kbps_max") > F.col("br_kbps_min")).cast("int"))
-            .cast("long")
-            .alias("n_vbr"),
-            F.sum("n_frames").cast("long").alias("frames"),
-            F.round(
-                F.max(
-                    F.when(
-                        v == "ok", F.abs(F.col("est_dur_ms") - F.col("dur_ms"))
-                    ).otherwise(F.lit(0.0))
-                ),
-                4,
-            ).alias("max_ok_dur_err_ms"),
-        )
-        .orderBy("verdict")
-    )
-
-
-def mp3_integrity_pipeline(spark, sf_dir: str) -> DataFrame:
-    """Bench-only full kernel: synthesize -> walk -> aggregate in one
-    timed plan (the registered twin reads the materialized profiles)."""
-    from macrobase_spark.operators.audio import _codec_clips_n
-
-    p = mp3_profiles(generate_mp3_clips(spark, _codec_clips_n(sf_dir)))
-    return (
-        p.groupBy(mp3_verdict_col().alias("verdict"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_frames").alias("frames"))
-        .orderBy("verdict")
-    )
+    """`mp3_scorecard` over the materialized profile relation (the files
+    the oracle reads)."""
+    return mp3_scorecard(spark.read.parquet(mp3_profiles_parquet(spark, sf_dir)))

@@ -33,7 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from macrobase_spark.artifacts import artifact
+from macrobase_spark.artifacts import artifact, decode_fixture_n
+from macrobase_spark.operators.mp3 import stream_scorecard
 from macrobase_spark.queries import register
 
 SAMPLES_PER_PACKET = 960  # one 20 ms Opus frame at the 48 kHz granule clock
@@ -313,14 +314,27 @@ def ogg_verdict_col():
     return F.expr(_VERDICT_SQL)
 
 
+def ogg_fixture_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recipe of the profile relation: synthesize the Ogg/Opus fixture,
+    page-walk + CRC every stream once."""
+    return ogg_profiles(generate_ogg_clips(spark, decode_fixture_n(sf_dir)))
+
+
+def ogg_scorecard(p: DataFrame) -> DataFrame:
+    """Ogg/Opus scorecard: total pages walked and EOS-bracketed clip count
+    per verdict (the granule clock is exact, so clean clips sit within the
+    0.5 ms rounding bound)."""
+    return stream_scorecard(
+        p,
+        ogg_verdict_col(),
+        F.sum("n_pages").cast("long").alias("pages"),
+        F.sum(F.col("has_eos").cast("int")).cast("long").alias("n_eos"),
+    )
+
+
 @artifact("oggprof", 1)
 def ogg_profiles_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
-    """Materialize the profile relation once (kernel runs here, untimed)
-    so the DuckDB oracle reads the identical rows."""
-    from macrobase_spark.operators.audio import _codec_clips_n
-
-    n = _codec_clips_n(sf_dir)
-    ogg_profiles(generate_ogg_clips(spark, n)).write.mode("overwrite").parquet(out)
+    ogg_fixture_profiles(spark, sf_dir).write.mode("overwrite").parquet(out)
 
 
 _OP = ogg_profiles_parquet.scan()
@@ -341,41 +355,6 @@ _OP = ogg_profiles_parquet.scan()
     """,
 )
 def opus_integrity_stats_q(spark, sf_dir: str) -> DataFrame:
-    """Ogg/Opus scorecard: clip counts per verdict, total pages walked,
-    EOS-bracketed clip count, worst clean-clip duration disagreement vs
-    the dur_ms metadata (granule clock is exact -> 0.5 ms rounding
-    bound). ONE partial+final hash aggregate over the profile
-    relation."""
-    p = spark.read.parquet(ogg_profiles_parquet(spark, sf_dir))
-    v = ogg_verdict_col()
-    return (
-        p.groupBy(v.alias("verdict"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("n_pages").cast("long").alias("pages"),
-            F.sum(F.col("has_eos").cast("int")).cast("long").alias("n_eos"),
-            F.round(
-                F.max(
-                    F.when(
-                        v == "ok", F.abs(F.col("est_dur_ms") - F.col("dur_ms"))
-                    ).otherwise(F.lit(0.0))
-                ),
-                4,
-            ).alias("max_ok_dur_err_ms"),
-        )
-        .orderBy("verdict")
-    )
-
-
-def opus_integrity_pipeline(spark, sf_dir: str) -> DataFrame:
-    """Bench-only full kernel: synthesize -> page-walk+CRC -> aggregate
-    in one timed plan (the registered twin reads the materialized
-    profiles)."""
-    from macrobase_spark.operators.audio import _codec_clips_n
-
-    p = ogg_profiles(generate_ogg_clips(spark, _codec_clips_n(sf_dir)))
-    return (
-        p.groupBy(ogg_verdict_col().alias("verdict"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_pages").alias("pages"))
-        .orderBy("verdict")
-    )
+    """`ogg_scorecard` over the materialized profile relation (the files
+    the oracle reads)."""
+    return ogg_scorecard(spark.read.parquet(ogg_profiles_parquet(spark, sf_dir)))

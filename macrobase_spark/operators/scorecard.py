@@ -68,7 +68,12 @@ def _is_compressed_transport(raw: np.ndarray) -> bool:
     """Magic-based check for the lossy transports this engine's scope
     deliberately does not PCM-decode: mp3 (raw sync or ID3-fronted), ADTS
     AAC, and Ogg. Same byte tests as gate.detect_format, inlined over the
-    uint8 view so the fused scan stays copy-free."""
+    uint8 view so the fused scan stays copy-free.
+
+    True only means the leading bytes carry one of these magics: the stream
+    itself is not walked, so decode_status='skipped_compressed' says "the
+    magic says compressed", not "structurally valid" (the structural walks
+    are the mp3/aac/opus integrity and transport gate queries)."""
     if len(raw) < 4:
         return False
     b0, b1 = int(raw[0]), int(raw[1])

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from macrobase_spark.artifacts import artifact
+from macrobase_spark.artifacts import artifact, decode_fixture_n
 from macrobase_spark.queries import register
 
 # hex (uppercase — identical in Spark and DuckDB) of the 4-byte container
@@ -111,11 +111,9 @@ def codec_clips_parquet(spark, sf_dir: str, out: str) -> None:
     """Mixed-codec clips table WITH payload bytes (mulaw/alaw/adpcm/
     pcm_s16le/flac cycling, plus planted corrupt + truncated payloads) —
     materialized once so the DuckDB oracle reads the identical bytes."""
-    from macrobase_spark.operators.audio import _codec_clips_n
     from macrobase_spark.sources.clips import generate_codec_clips
 
-    n = _codec_clips_n(sf_dir)
-    generate_codec_clips(spark, n).write.mode("overwrite").parquet(out)
+    generate_codec_clips(spark, decode_fixture_n(sf_dir)).write.mode("overwrite").parquet(out)
 
 
 _CC = codec_clips_parquet.scan()

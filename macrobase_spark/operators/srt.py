@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from macrobase_spark.artifacts import artifact
+from macrobase_spark.artifacts import artifact, decode_fixture_n
 from macrobase_spark.queries import register
 
 _TS = re.compile(r"^(\d{2}):([0-5]\d):([0-5]\d),(\d{3})$")
@@ -313,26 +313,25 @@ def srt_clip_verdicts(cues: DataFrame) -> DataFrame:
     )
 
 
+def srt_fixture_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recipe of the cue relation: synthesize the SRT fixture, tokenize
+    every document once."""
+    return srt_cues(generate_srt_clips(spark, decode_fixture_n(sf_dir)))
+
+
 @artifact("srtcues", 1)
 def srt_cues_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Materialize the cue relation once (tokenizer runs here, untimed)
     so the DuckDB oracle reads identical rows and replays the WHOLE
     validation layer, not just the rollup."""
-    from macrobase_spark.operators.audio import _codec_clips_n
-
-    n = _codec_clips_n(sf_dir)
-    srt_cues(generate_srt_clips(spark, n)).write.mode("overwrite").parquet(out)
+    srt_fixture_cues(spark, sf_dir).write.mode("overwrite").parquet(out)
 
 
 @artifact("vttcues", 1)
 def vtt_cues_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     """WebVTT twin of `srt_cues_parquet` (same relation schema)."""
-    from macrobase_spark.operators.audio import _codec_clips_n
-
-    n = _codec_clips_n(sf_dir)
-    srt_cues(generate_vtt_clips(spark, n), dialect="vtt").write.mode(
-        "overwrite"
-    ).parquet(out)
+    vtt = generate_vtt_clips(spark, decode_fixture_n(sf_dir))
+    srt_cues(vtt, dialect="vtt").write.mode("overwrite").parquet(out)
 
 
 _SC = srt_cues_parquet.scan()
@@ -378,9 +377,11 @@ def _timing_oracle(rel: str) -> str:
     """
 
 
-def _timing_stats(v: DataFrame) -> DataFrame:
-    """Per-verdict rollup + clean-clip coverage envelope (shared by the
-    SRT and VTT registered queries)."""
+def timing_scorecard(cues: DataFrame) -> DataFrame:
+    """The whole timing-validation layer over a cue relation: per-clip
+    verdicts, then the per-verdict rollup + clean-clip coverage envelope
+    (shared by the SRT and VTT registered queries)."""
+    v = srt_clip_verdicts(cues)
     return (
         v.groupBy("verdict")
         .agg(
@@ -405,9 +406,7 @@ def srt_timing_stats_q(spark, sf_dir: str) -> DataFrame:
     certifies the span arithmetic end-to-end). The tokenizer ran once at
     materialization; this query and its oracle replay the ENTIRE timing
     validation declaratively."""
-    return _timing_stats(
-        srt_clip_verdicts(spark.read.parquet(srt_cues_parquet(spark, sf_dir)))
-    )
+    return timing_scorecard(spark.read.parquet(srt_cues_parquet(spark, sf_dir)))
 
 
 @register("vtt_timing_stats", _timing_oracle(_VC))
@@ -417,15 +416,4 @@ def vtt_timing_stats_q(spark, sf_dir: str) -> DataFrame:
     produced by the VTT tokenizer — headers/NOTE blocks, optional cue
     ids, '.'-millisecond optional-hour timestamps, cue settings, and a
     missing-WEBVTT-header plant on top of the shared timing plants."""
-    return _timing_stats(
-        srt_clip_verdicts(spark.read.parquet(vtt_cues_parquet(spark, sf_dir)))
-    )
-
-
-def srt_timing_pipeline(spark, sf_dir: str) -> DataFrame:
-    """Bench-only full kernel: synthesize -> tokenize -> window/aggregate
-    verdicts, in one timed plan."""
-    from macrobase_spark.operators.audio import _codec_clips_n
-
-    v = srt_clip_verdicts(srt_cues(generate_srt_clips(spark, _codec_clips_n(sf_dir))))
-    return v.groupBy("verdict").agg(F.count(F.lit(1)).alias("n")).orderBy("verdict")
+    return timing_scorecard(spark.read.parquet(vtt_cues_parquet(spark, sf_dir)))

@@ -288,13 +288,6 @@ def _refine_batch(
     return out
 
 
-def _refine(pool_feats: list[list[str]], z: np.ndarray, feature_cols, d2, beam_size):
-    """Single-POI RefOut refinement: the d2-dim feature set whose
-    containment best splits this POI's pool scores (Welch deviation).
-    Thin wrapper over the batched machinery."""
-    return _refine_batch(pool_feats, np.asarray(z)[None, :], feature_cols, d2, beam_size)[0]
-
-
 def _refout_search(
     df, feature_cols, id_cols, poi_col, d1, d2, psize, beam_size, n_trees,
     train_rows, max_pois, seed,

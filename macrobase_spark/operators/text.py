@@ -20,58 +20,6 @@ _LANG_MARKERS = {
 }
 
 
-def token_count_expr(text: Column) -> Column:
-    """Whitespace tokenization count (empty string → 0)."""
-    return F.when(F.length(text) == 0, F.lit(0)).otherwise(F.size(F.split(text, r"\s+")))
-
-
-def bpe_ish_token_count_expr(text: Column) -> Column:
-    """BPE-flavored proxy: word pieces + residual chars/4, via regex splits
-    — deterministic and cheap; a real tokenizer slots in as a pandas UDF."""
-    words = F.size(F.split(text, r"\s+"))
-    chars = F.length(text)
-    return (words + (chars / F.lit(16)).cast("long")).cast("long")
-
-
-def lang_id_expr(words: Column) -> Column:
-    """Stopword-vote language ID over a token array column."""
-    expr = F.lit("other")
-    best = F.lit(0)
-    for lang, marks in reversed(list(_LANG_MARKERS.items())):
-        score = F.size(F.array_intersect(words, F.array(*[F.lit(m) for m in marks])))
-        expr = F.when(score > best, F.lit(lang)).otherwise(expr)
-        best = F.greatest(score, best)
-    return expr
-
-
-def quality_features(df: DataFrame, text_col: str) -> DataFrame:
-    """Per-document quality features: token count, unique-token ratio,
-    mean word length, non-alpha ratio, and a composite [0,1] score."""
-    t = F.col(text_col)
-    words = F.split(t, " ")
-    n_tok = F.size(words)
-    uniq = F.size(F.array_distinct(words))
-    alpha = F.length(F.regexp_replace(t, r"[^A-Za-z ]", ""))
-    return (
-        df.withColumn("n_tokens", n_tok)
-        .withColumn("uniq_ratio", F.round(uniq / n_tok, 6))
-        .withColumn(
-            "mean_word_len",
-            F.round((F.length(t) - (n_tok - 1)) / n_tok, 6),
-        )
-        .withColumn("alpha_ratio", F.round(alpha / F.greatest(F.length(t), F.lit(1)), 6))
-        .withColumn(
-            "quality",
-            F.round(
-                F.least(n_tok / F.lit(32.0), F.lit(1.0)) * 0.4
-                + F.col("uniq_ratio") * 0.3
-                + F.col("alpha_ratio") * 0.3,
-                6,
-            ),
-        )
-    )
-
-
 def fingerprint_expr(words_expr: str, n: int = 3) -> Column:
     """Document fingerprint: min md5 over word n-grams (winnowing-style,
     engine-portable)."""

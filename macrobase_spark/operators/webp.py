@@ -234,14 +234,6 @@ def _read_prefix_code(br: _Reader, alphabet_size: int):
 # ---------------------------------------------------------------------------
 
 
-def _lz77_decode(br: _Reader, code: int) -> int:
-    if code < 4:
-        return code + 1
-    extra_bits = (code - 2) >> 1
-    offset = (2 + (code & 1)) << extra_bits
-    return offset + br.read(extra_bits) + 1
-
-
 def _lz77_encode(v: int) -> tuple[int, int, int]:
     """value (>=1) -> (prefix code, n extra bits, extra value)."""
     if v <= 4:

@@ -320,7 +320,7 @@ def read_incremental(
 # registered queries: snapshot/time-travel semantics certified by mirrors
 # ---------------------------------------------------------------------------
 
-from macrobase_spark.artifacts import artifact, sf_size  # noqa: E402
+from macrobase_spark.artifacts import artifact, decode_fixture_n  # noqa: E402
 from macrobase_spark.queries import register  # noqa: E402
 
 
@@ -336,7 +336,7 @@ def ice_table_fixture(spark: SparkSession, sf_dir: str, out: str) -> None:
     not merely self-consistency."""
     from macrobase_spark.sources.clips import generate_clips
 
-    n = sf_size(sf_dir, 40_000, 400)
+    n = decode_fixture_n(sf_dir)
     cut = f"clip_{(n * 5 // 8):012d}"
     clips = generate_clips(spark, n, max_payload_ms=50)
     first = clips.filter(F.col("clip_id") < cut)

@@ -6,7 +6,7 @@ import urllib.request
 
 import pytest
 
-from macrobase_spark.rest import serve_background
+from macrobase_spark.server import serve
 
 REF = "/root/reference"
 
@@ -16,7 +16,8 @@ pytestmark = pytest.mark.skipif(
 
 
 def test_rest_query(spark):
-    srv, port = serve_background(spark, base_dir=REF)
+    srv = serve(spark, port=0, base_dir=REF, background=True)
+    port = srv.server_address[1]
     try:
         conf = {
             "pipeline": "BasicBatchPipeline",

@@ -95,10 +95,10 @@ def test_fixture_violations_match_plants(spark, sf_dir):
     """On the mixed-codec fixture, container violations are exactly the
     corrupt plants (i % 127 == 21: hash garbage, no RIFF): truncated plants
     keep their magic and clean payloads all match their declared codec."""
-    from macrobase_spark.operators.audio import _codec_clips_n
+    from macrobase_spark.artifacts import decode_fixture_n
     from macrobase_spark.operators.sniff import codec_clips_parquet
 
-    n = _codec_clips_n(sf_dir)
+    n = decode_fixture_n(sf_dir)
     df = spark.read.parquet(codec_clips_parquet(spark, sf_dir))
     got = sorted(
         r["clip_id"] for r in container_violations(df).select("clip_id").collect()
