@@ -53,6 +53,12 @@ def decode_fixture_n(sf_dir: str) -> int:
     return sf_size(sf_dir, 40_000, 400)
 
 
+def clip_fixture_n(sf_dir: str) -> int:
+    """Row count of the synthetic per-clip scoring fixtures (PII,
+    bandwidth, pitch, loudness, the QA scorecard, silence and alignment)."""
+    return sf_size(sf_dir, 100_000, 1000)
+
+
 def artifact_path(name: str, version: int, sf_dir: str) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir))
     return f"{ROOT}/mb_{name}_v{version}_{tag}"

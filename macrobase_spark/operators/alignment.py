@@ -37,10 +37,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from macrobase_spark.artifacts import artifact
+from macrobase_spark.artifacts import artifact, clip_fixture_n
 from macrobase_spark.queries import register
 from macrobase_spark.operators.silence import (
-    _silence_n,
     generate_silence_clips,
     silence_features_parquet,
 )
@@ -269,7 +268,7 @@ def silence_spans_parquet(spark: SparkSession, sf_dir: str, out: str) -> None:
     """Materialize the silence-span relation for the alignment fixture
     (same generator as the feature parquet) so the oracle replays the
     cue-grain intersection over identical rows."""
-    n = _silence_n(sf_dir)
+    n = clip_fixture_n(sf_dir)
     silence_spans(generate_silence_clips(spark, n)).write.mode("overwrite").parquet(out)
 
 

@@ -22,11 +22,10 @@ scoring contract bit-faithful:
   stepwise objective.
 
 Spark shape (same rationale as kalman.py): the recursion is sequential
-PER KEY and keys are independent — batch is one applyInPandas over
-groupBy(keys) (10^12-row layout: millions of keys x bounded series, the
-refit cost is O(W * grid) every W rows), the streaming twin carries the
-(window, forecast queue, counter) state per key in
-applyInPandasWithState; stream == batch is pinned in tests.
+PER KEY and keys are independent — `arima_score` is one `keyed_fold`
+over the keys (10^12-row layout: millions of keys x bounded series, the
+refit cost is O(W * grid) every W rows), resuming `arima_trace` from the
+key's `ArimaWindow`.
 
 Oracle recipe (two strengths):
 - `arima_ar2_forecast_events` is FULLY SQL-replayable: a fixed AR(2) fit
@@ -45,12 +44,14 @@ from __future__ import annotations
 
 import math
 from collections import deque
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+from macrobase_spark.streaming.stateful import keyed_fold
 
 # ---------------------------------------------------------------------------
 # numpy estimator: KPSS differencing + Hannan-Rissanen ARMA + AIC grid
@@ -226,47 +227,66 @@ def forecast(model: dict, x: np.ndarray, h: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
+class ArimaWindow:
+    """Resumable state of the reference's windowing loop: the trailing
+    window, the standing forecast queue, the warmup counter, the latest
+    score, the ordinal of the last refit and the points consumed so far."""
+
+    def __init__(self) -> None:
+        self.win: deque = deque()
+        self.preds: deque | None = None
+        self.counter = 0
+        self.latest: float | None = None
+        self.retrain_ord = -1
+        self.seen = 0
+
+
+def _auto_fitter(max_p: int = 3, max_q: int = 2, max_d: int = 2):
+    def fitter(w, h):
+        return forecast(fit_auto(np.asarray(w), max_p, max_q, max_d), np.asarray(w), h)
+
+    return fitter
+
+
 def arima_trace(
-    values: np.ndarray, window: int, fitter=None
+    values: np.ndarray, window: int, fitter=None, state: ArimaWindow | None = None
 ) -> tuple[np.ndarray, list[tuple[int, int, float]]]:
     """Bit-faithful trace of ARIMA.addToWindow/scoreWindow over an ordered
     series: returns (scores, records) where records[(ordinal, retrain_ord,
     prediction)] logs the forecast each ordinal consumed. `fitter(window_
-    values, h)` returns the h-step forecast (default: the auto fit)."""
-    if fitter is None:
-        def fitter(w, h):
-            return forecast(fit_auto(np.asarray(w)), np.asarray(w), h)
+    values, h)` returns the h-step forecast (default: the auto fit).
 
-    win: deque = deque()
-    preds: deque | None = None
-    counter = 0
-    latest: float | None = None
+    Resumable: a `state` from an earlier call (updated in place) continues
+    the same series, ordinals counting from the series start."""
+    fitter = fitter or _auto_fitter()
+    st = state if state is not None else ArimaWindow()
     scores = np.zeros(len(values))
     records: list[tuple[int, int, float]] = []
-    retrain_ord = -1
-    for i, v in enumerate(np.asarray(values, dtype=np.float64)):
-        if len(win) == window:
-            win.popleft()
-        win.append(v)
-        if preds is not None:
-            pred = preds.popleft()
-            latest = abs((v - pred) / pred)
-            records.append((i, retrain_ord, float(pred)))
-        if counter < window - 1:
-            counter += 1
-        elif preds is None or not preds:
-            preds = deque(fitter(list(win), window))
-            retrain_ord = i
-        scores[i] = 0.0 if latest is None else latest
+    for j, v in enumerate(np.asarray(values, dtype=np.float64)):
+        i = st.seen + j
+        if len(st.win) == window:
+            st.win.popleft()
+        st.win.append(v)
+        if st.preds is not None:
+            pred = st.preds.popleft()
+            st.latest = abs((v - pred) / pred)
+            records.append((i, st.retrain_ord, float(pred)))
+        if st.counter < window - 1:
+            st.counter += 1
+        elif st.preds is None or not st.preds:
+            st.preds = deque(fitter(list(st.win), window))
+            st.retrain_ord = i
+        scores[j] = 0.0 if st.latest is None else st.latest
+    st.seen += len(scores)
     return scores, records
 
 
 # ---------------------------------------------------------------------------
-# Spark operators: keyed batch + streaming twin
+# Spark operators: one keyed fold per series, batch or stream
 # ---------------------------------------------------------------------------
 
 
-def arima_score_batch(
+def arima_score(
     df: DataFrame,
     key_cols: list[str],
     order_col: str,
@@ -275,55 +295,52 @@ def arima_score_batch(
     max_p: int = 3,
     max_q: int = 2,
     max_d: int = 2,
+    timeout_s: int | None = None,
 ) -> DataFrame:
-    """Per-key ARIMA scoring: one applyInPandas group per key, rows
-    ordered by `order_col`, the reference's retrain-every-W contract.
-    Returns (keys..., order_col, value, score, prediction, retrain_ord) —
-    prediction/retrain_ord are null for the first W ordinals (no forecast
-    consumed yet)."""
-    schema = ", ".join(
-        [f"{c} {df.schema[c].dataType.simpleString()}" for c in key_cols]
+    """Per-key ARIMA scoring, rows ordered by `order_col`, the reference's
+    retrain-every-W contract. Returns (keys..., order_col, value, score,
+    prediction, retrain_ord) — prediction/retrain_ord are null for the
+    first W ordinals (no forecast consumed yet).
+
+    A batch frame scores each key's whole series; a stream resumes each
+    key's window every micro-batch (cross-batch order is the source's
+    append order) and emits the same rows. `timeout_s` forgets a key idle
+    that long."""
+    schema = StructType(
+        [df.schema[c] for c in [*key_cols, order_col]]
         + [
-            f"{order_col} {df.schema[order_col].dataType.simpleString()}",
-            f"{value_col} double",
-            "score double",
-            "prediction double",
-            "retrain_ord long",
+            StructField(value_col, DoubleType()),
+            StructField("score", DoubleType()),
+            StructField("prediction", DoubleType()),
+            StructField("retrain_ord", LongType()),
         ]
     )
+    fitter = _auto_fitter(max_p, max_q, max_d)
 
-    def fitter(w, h):
-        return forecast(fit_auto(np.asarray(w), max_p, max_q, max_d), np.asarray(w), h)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
+    def step(st, key, pdf):
         vals = pdf[value_col].to_numpy(dtype=np.float64)
-        scores, records = arima_trace(vals, window, fitter)
-        pred = np.full(len(vals), np.nan)
-        ro = np.full(len(vals), -1, dtype=np.int64)
+        first = st.seen
+        scores, records = arima_trace(vals, window, fitter, st)
+        pred: list = [None] * len(vals)
+        ro: list = [None] * len(vals)
         for i, r, p in records:
-            pred[i] = p
-            ro[i] = r
-        return pd.DataFrame(
-            {
-                **{c: pdf[c] for c in key_cols},
-                order_col: pdf[order_col],
-                value_col: vals,
-                "score": scores,
-                # NaN / -1 sentinels -> real nulls (Arrow Float64/Int64 masks)
-                "prediction": pd.array(
-                    np.where(np.isnan(pred), None, pred), dtype="Float64"
-                ),
-                "retrain_ord": pd.array(
-                    np.where(ro < 0, None, ro), dtype="Int64"
-                ),
-            }
+            pred[i - first], ro[i - first] = p, r
+        out = pdf[[*key_cols, order_col, value_col]].assign(
+            score=scores,
+            prediction=pd.array(pred, dtype="Float64"),
+            retrain_ord=pd.array(ro, dtype="Int64"),
         )
+        return st, out
 
-    return (
-        df.select(*key_cols, order_col, F.col(value_col).cast("double").alias(value_col))
-        .groupBy(*key_cols)
-        .applyInPandas(run, schema)
+    sel = df.select(*key_cols, order_col, F.col(value_col).cast("double").alias(value_col))
+    return keyed_fold(
+        sel,
+        key_cols,
+        [order_col],
+        ArimaWindow,
+        step,
+        schema,
+        None if timeout_s is None else timeout_s * 1000,
     )
 
 
@@ -343,101 +360,15 @@ def arima_chain_score(
     config-pipeline classifier chain expects. Unkeyed input runs as ONE
     group (faithful to the reference's single-stream scorer; keyed input
     is the scale path, like MCOD)."""
-    keys = list(key_cols or [])
-    gdf = df if keys else df.withColumn("_arima_g", F.lit(0))
-    gkeys = keys or ["_arima_g"]
-    schema_parts = [f"{f.name} {f.dataType.simpleString()}" for f in gdf.schema.fields]
-    schema = ", ".join(schema_parts + [f"{score_col} double"])
+    schema = StructType(df.schema.fields + [StructField(score_col, DoubleType())])
+    fitter = _auto_fitter(max_p, max_q, max_d)
 
-    def fitter(w, h):
-        return forecast(fit_auto(np.asarray(w), max_p, max_q, max_d), np.asarray(w), h)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
+    def step(st, key, pdf):
         vals = pdf[metric_col].to_numpy(dtype=np.float64)
-        scores, _ = arima_trace(vals, window, fitter)
-        pdf[score_col] = scores
-        return pdf
+        scores, _ = arima_trace(vals, window, fitter, st)
+        return st, pdf.assign(**{score_col: scores})
 
-    out = gdf.groupBy(*gkeys).applyInPandas(run, schema)
-    return out.drop("_arima_g") if not keys else out
-
-
-def stream_arima(
-    stream: DataFrame,
-    key_cols: list[str],
-    order_col: str,
-    value_col: str,
-    window: int,
-    max_p: int = 3,
-    max_q: int = 2,
-    max_d: int = 2,
-    timeout_s: int | None = None,
-):
-    """Streaming twin: (window deque, forecast queue, counter, latest) per
-    key in applyInPandasWithState; within a micro-batch rows sort by
-    `order_col` (cross-batch order = append order, the engine-wide
-    streaming contract). Emits the same (key, ordinal, score) rows as the
-    batch operator."""
-    import pickle
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols]
-        + [f"{order_col} long", f"{value_col} double", "score double"]
-    )
-    state_schema = "blob binary"
-
-    def fitter(w, h):
-        return forecast(fit_auto(np.asarray(w), max_p, max_q, max_d), np.asarray(w), h)
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if timeout_s is not None and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            win, preds, counter, latest = pickle.loads(bytes(state.get[0]))
-        else:
-            win, preds, counter, latest = deque(), None, 0, None
-        rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_col)
-            for t, v in zip(pdf[order_col], pdf[value_col]):
-                v = float(v)
-                if len(win) == window:
-                    win.popleft()
-                win.append(v)
-                if preds is not None:
-                    pred = preds.popleft()
-                    latest = abs((v - pred) / pred)
-                if counter < window - 1:
-                    counter += 1
-                elif preds is None or not preds:
-                    preds = deque(fitter(list(win), window))
-                rows.append((*key, int(t), v, 0.0 if latest is None else latest))
-        state.update((pickle.dumps((win, preds, counter, latest)),))
-        if timeout_s is not None:
-            state.setTimeoutDuration(timeout_s * 1000)
-        yield pd.DataFrame(rows, columns=[*key_cols, order_col, value_col, "score"])
-
-    return (
-        stream.select(
-            *key_cols,
-            F.col(order_col).cast("long").alias(order_col),
-            F.col(value_col).cast("double").alias(value_col),
-        )
-        .groupBy(*key_cols)
-        .applyInPandasWithState(
-            fn,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.ProcessingTimeTimeout
-            if timeout_s is not None
-            else GroupStateTimeout.NoTimeout,
-        )
-    )
+    return keyed_fold(df, list(key_cols or []), [order_col], ArimaWindow, step, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -511,7 +442,7 @@ def arima_score_events(spark, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("ordinal") <= _HEAD)
     )
-    scored = arima_score_batch(head, ["event_type"], "ordinal", "value", _W)
+    scored = arima_score(head, ["event_type"], "ordinal", "value", _W)
     # forecasts are consumed from ordinal W+1 on (1-based) — a deterministic
     # bound, so the warmup drop never leans on NaN-vs-null semantics
     return scored.filter(F.col("ordinal") > _W).select(

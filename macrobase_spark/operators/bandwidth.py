@@ -47,7 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from macrobase_spark.artifacts import artifact, sf_size
+from macrobase_spark.artifacts import artifact, clip_fixture_n
 from macrobase_spark.queries import register
 
 FRAME = 2048
@@ -202,13 +202,9 @@ def generate_bandwidth_clips(spark, n: int):
     )
 
 
-def _bandwidth_n(sf_dir: str) -> int:
-    return sf_size(sf_dir, 100_000, 1000)
-
-
 @artifact("bandwidth", 1)
 def bandwidth_features_parquet(spark, sf_dir: str, out: str) -> None:
-    n = _bandwidth_n(sf_dir)
+    n = clip_fixture_n(sf_dir)
     bandwidth_features(generate_bandwidth_clips(spark, n)).write.mode(
         "overwrite"
     ).parquet(out)

@@ -49,9 +49,9 @@
 
 Spark shape: the runtime is a sequential per-stream state machine (the
 reference is single-threaded by design), so the engine runs ONE state
-machine per key with `applyInPandas` (batch) /
-`applyInPandasWithState` (streams) — the 100 TB story is millions of
-independent keyed streams, each with O(reservoir + summary) state,
+machine per key with `keyed_fold`, on batch frames and streams alike —
+the 100 TB story is millions of independent keyed streams, each with
+O(reservoir + summary) state,
 hash-partitioned by key; inside a key the segment between two period
 boundaries is scored vectorized (the model and threshold are constant
 there). The no-decay regime (periods and reservoirs >= stream length)
@@ -66,11 +66,12 @@ import math
 from dataclasses import dataclass, field
 
 import numpy as np
-
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from macrobase_spark.queries import register
+from macrobase_spark.streaming.stateful import keyed_fold
 
 
 # ---------------------------------------------------------------------------
@@ -747,6 +748,50 @@ class EWStreamingRuntime:
 # ---------------------------------------------------------------------------
 
 
+def _ew_fold(df, metric_col, attributes, order_col, params, key_cols, emit, schema):
+    """One EWStreamingRuntime per key over rows in `order_col` order,
+    resumed every micro-batch on a stream — the reference's
+    consume(batch)-at-a-time loop (BasicOneShotEWStreamingPipeline.java:
+    62-64). `emit(rt, ords, flags, scores)` turns a step into output rows:
+    `flags`/`scores` are the classifications the step made and `ords`
+    their ordinals. Classified output lags the input while the warmups
+    buffer (a key shorter than warmup_count classifies nothing, like the
+    reference's one-shot run), so flags pair with the OLDEST unclassified
+    ordinals."""
+    params = params or EWParams()
+    keys = list(key_cols or [])
+    sel = df.select(
+        *keys,
+        F.col(order_col).cast("long").alias("__ord"),
+        F.col(metric_col).cast("double").alias("__m"),
+        *[F.col(a).cast("string").alias(a) for a in attributes if a not in keys],
+    )
+
+    def step(st, key, pdf):
+        rt, ords = st
+        attr_rows = [
+            [f"{a}={v}" for a, v in zip(attributes, row)]
+            for row in pdf[attributes].itertuples(index=False, name=None)
+        ]
+        ords.extend(pdf["__ord"].tolist())
+        rt.consume(pdf["__m"].to_numpy(dtype=float), attr_rows)
+        flags, scores = rt.flags, rt.scores
+        rt.flags, rt.scores = [], []  # taken off the runtime: state stays bounded
+        out = emit(rt, ords[: len(flags)], flags, scores)
+        for i, k in reversed(list(enumerate(keys))):
+            out.insert(0, k, str(key[i]))
+        return (rt, ords[len(flags) :]), out
+
+    return keyed_fold(
+        sel,
+        keys,
+        ["__ord"],
+        lambda: (EWStreamingRuntime(params, len(attributes)), []),
+        step,
+        "".join(f"`{k}` string, " for k in keys) + schema,
+    )
+
+
 def ew_streaming_summarize(
     df: DataFrame,
     metric_col: str,
@@ -759,66 +804,28 @@ def ew_streaming_summarize(
     per key, hash-partitioned — the keyed scale path; omit key_cols for
     the reference's single global stream). Output: one row per summary
     itemset (key cols..., items string 'attr=value,...', support, count,
-    ratio, num_outliers, num_inliers)."""
-    params = params or EWParams()
-    keys = list(key_cols or [])
-    if not keys:
-        import warnings
+    ratio, num_outliers, num_inliers) — at the end of each key's series
+    on a batch frame, after every micro-batch on a stream."""
 
-        warnings.warn(
-            "ew_streaming_summarize without key_cols replays ONE global "
-            "sequential stream in a single task (the reference's "
-            "single-threaded semantics) — pass key_cols (stream/device "
-            "key) for any real data volume.",
-            stacklevel=2,
-        )
-    spark = df.sparkSession
-    sel = df.select(
-        *keys,
-        F.col(order_col).alias("__ord"),
-        F.col(metric_col).cast("double").alias("__m"),
-        *[F.col(a).cast("string").alias(a) for a in attributes if a not in keys],
-    )
-    out_schema = (
-        ", ".join(f"`{k}` string" for k in keys)
-        + (", " if keys else "")
-        + "items string, support double, count double, ratio double, "
-        "num_outliers double, num_inliers double"
-    )
-
-    def run_group(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("__ord")
-        rt = EWStreamingRuntime(params, len(attributes))
-        attr_rows = [
-            [f"{a}={v}" for a, v in zip(attributes, row)]
-            for row in pdf[attributes].itertuples(index=False, name=None)
-        ]
-        res = rt.run(pdf["__m"].to_numpy(), attr_rows)
-        rows = []
-        kv = [str(pdf[k].iloc[0]) for k in keys]
-        for support, cnt, ratio, items in res["itemsets"]:
-            rows.append(
-                kv
-                + [
-                    ",".join(sorted(items)),
-                    float(support),
-                    float(cnt),
-                    float(ratio),
-                    res["num_outliers"],
-                    res["num_inliers"],
-                ]
+    def emit(rt, ords, flags, scores):
+        rows = [
+            (
+                ",".join(sorted(items)),
+                float(support),
+                float(cnt),
+                float(ratio),
+                rt.summary.num_outliers,
+                rt.summary.num_inliers,
             )
-        cols = keys + [
-            "items", "support", "count", "ratio", "num_outliers", "num_inliers",
+            for support, cnt, ratio, items in rt.summary.get_itemsets()
         ]
+        cols = ["items", "support", "count", "ratio", "num_outliers", "num_inliers"]
         return pd.DataFrame(rows, columns=cols)
 
-    if keys:
-        return sel.groupBy(*keys).applyInPandas(run_group, out_schema)
-    return sel.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        run_group, out_schema
+    return _ew_fold(
+        df, metric_col, attributes, order_col, params, key_cols, emit,
+        "items string, support double, count double, ratio double, "
+        "num_outliers double, num_inliers double",
     )
 
 
@@ -831,57 +838,23 @@ def ew_classify_flags(
     key_cols: list | None = None,
 ) -> DataFrame:
     """Per-tuple EW outlier flags + scores (the transform+classifier
-    stages), one state machine per key."""
-    params = params or EWParams()
-    keys = list(key_cols or [])
-    if not keys:
-        import warnings
+    stages), one state machine per key; batch frame or stream (stream ==
+    batch for in-order arrival within a key). Emits (keys..., __ord,
+    score, outlier)."""
 
-        warnings.warn(
-            "ew_classify_flags without key_cols replays ONE global "
-            "sequential stream in a single task — pass key_cols at scale.",
-            stacklevel=2,
-        )
-    sel = df.select(
-        *keys,
-        F.col(order_col).alias("__ord"),
-        F.col(metric_col).cast("double").alias("__m"),
-        *[F.col(a).cast("string").alias(a) for a in attributes if a not in keys],
-    )
-    out_schema = (
-        ", ".join(f"`{k}` string" for k in keys)
-        + (", " if keys else "")
-        + "__ord long, score double, outlier int"
-    )
-
-    def run_group(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("__ord")
-        rt = EWStreamingRuntime(params, len(attributes))
-        attr_rows = [
-            [f"{a}={v}" for a, v in zip(attributes, row)]
-            for row in pdf[attributes].itertuples(index=False, name=None)
-        ]
-        res = rt.run(pdf["__m"].to_numpy(), attr_rows)
-        # classified output lags the input while the warmups buffer (a key
-        # shorter than warmup_count emits nothing, like the reference's
-        # one-shot run); pair flags with the OLDEST ordinals
-        k_out = len(res["flags"])
-        out = pd.DataFrame(
+    def emit(rt, ords, flags, scores):
+        return pd.DataFrame(
             {
-                "__ord": pdf["__ord"].to_numpy()[:k_out],
-                "score": np.array(res["scores"], dtype=float),
-                "outlier": np.array(res["flags"], dtype="int32"),
+                "__ord": np.array(ords, dtype=np.int64),
+                "score": np.array(scores, dtype=float),
+                "outlier": np.array(flags, dtype="int32"),
             }
         )
-        for k in reversed(keys):
-            out.insert(0, k, str(pdf[k].iloc[0]))
-        return out
 
-    if keys:
-        return sel.groupBy(*keys).applyInPandas(run_group, out_schema)
-    return sel.groupBy(F.lit(1).alias("__g")).applyInPandas(run_group, out_schema)
+    return _ew_fold(
+        df, metric_col, attributes, order_col, params, key_cols, emit,
+        "__ord long, score double, outlier int",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1031,90 +1004,4 @@ def ew_flags_keyed_events(spark, sf_dir: str) -> DataFrame:
         F.sum("outlier").cast("long").alias("n_outliers"),
         F.count(F.lit(1)).alias("n_rows"),
         F.round(F.avg("score"), 6).alias("avg_score"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# streaming twin
-# ---------------------------------------------------------------------------
-
-
-def stream_ew_flags(
-    stream_df: DataFrame,
-    key_col: str,
-    metric_col: str,
-    attributes: list,
-    order_col: str,
-    params: EWParams | None = None,
-):
-    """Structured-Streaming twin of `ew_classify_flags`: one
-    EWStreamingRuntime per key, pickled into applyInPandasWithState state
-    and resumed every micro-batch — exactly the reference's
-    consume(batch)-at-a-time loop (BasicOneShotEWStreamingPipeline.java:
-    62-64), so stream == batch for in-order arrival within a key.
-    Emits (key, ord, score, outlier). outputMode('append')."""
-    import pickle
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        BinaryType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    params = params or EWParams()
-    dim = len(attributes)
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("ord", LongType()),
-            StructField("score", DoubleType()),
-            StructField("outlier", IntegerType()),
-        ]
-    )
-    state_schema = StructType([StructField("blob", BinaryType())])
-
-    def fn(key, pdfs, state: GroupState):
-        rt = (
-            pickle.loads(bytes(state.get[0]))
-            if state.exists
-            else EWStreamingRuntime(params, dim)
-        )
-        chunks = [c for c in pdfs if len(c)]
-        rows = []
-        if chunks:
-            pdf = pd.concat(chunks).sort_values("__ord")
-            attr_rows = [
-                [f"{a}={v}" for a, v in zip(attributes, row)]
-                for row in pdf[attributes].itertuples(index=False, name=None)
-            ]
-            n0 = len(rt.flags)
-            rt.consume(pdf["__m"].to_numpy(dtype=float), attr_rows)
-            new_flags = rt.flags[n0:]
-            new_scores = rt.scores[n0:]
-            # flags emit in arrival order but lag the input while the
-            # transform/classifier warmups buffer; pair them with the
-            # OLDEST unemitted ordinals
-            ords = rt.__dict__.setdefault("_pending_ords", [])
-            ords.extend(int(x) for x in pdf["__ord"].to_numpy())
-            for f, s in zip(new_flags, new_scores):
-                rows.append((key[0], ords.pop(0), float(s), int(f)))
-        state.update((pickle.dumps(rt),))
-        yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    sel = stream_df.selectExpr(
-        f"cast({key_col} as string) as key",
-        f"cast({order_col} as long) as __ord",
-        f"cast({metric_col} as double) as __m",
-        *[f"cast({a} as string) as {a}" for a in attributes if a != key_col],
-    )
-    if key_col in attributes:
-        sel = sel.withColumn(key_col, F.col("key"))
-    return sel.groupBy("key").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )

@@ -25,7 +25,7 @@ PERFECT binary heap per tree (children of i are 2i+1/2i+2), so scoring is a
 level-synchronous vectorized traversal (one gather per level), the mass
 update is one np.add.at per level, and the model broadcasts to every
 executor. Batch scoring is mapInPandas; the streaming update keeps the
-per-key leaf-mass vector in applyInPandasWithState state (the tree
+per-key leaf-mass vector in `keyed_fold` state (the tree
 STRUCTURE never changes after train — only masses do — so the state is just
 the flattened mass arrays). Randomness is seeded (the reference uses
 unseeded Random; SURVEY §7.4 determinism policy).
@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from macrobase_spark.streaming.stateful import keyed_fold
 
 
 @dataclass
@@ -259,18 +261,15 @@ def stream_hst(
     forget_threshold: int = 0,
     idle_timeout_ms: int | None = None,
 ) -> DataFrame:
-    """Per-key evolving HST: the broadcast forest structure is static; the
-    per-key leaf-mass vector lives in stream state. Each completed count
-    window is scored with the masses as of its start, then the masses
-    update (score-then-update, the reference's process/update call order).
-    Emits (key, window_id, t, score). outputMode('append')."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import ArrayType
-
+    """Per-key evolving HST: the forest structure is static; the per-key
+    leaf-mass vector lives in the fold state. Each completed count window
+    is scored with the masses as of its start, then the masses update
+    (score-then-update, the reference's process/update call order).
+    Emits (key, window_id, t, score); on a stream use
+    outputMode('append')."""
     W = window_size
     d = len(feature_cols)
-    struct = (model.feat, model.thr, model.depth_limit)
-
+    feat, thr, depth_limit = model.feat, model.thr, model.depth_limit
     out_schema = StructType(
         [
             StructField("key", StringType()),
@@ -279,86 +278,41 @@ def stream_hst(
             StructField("score", DoubleType()),
         ]
     )
-    state_schema = StructType(
-        [
-            StructField("next_window", LongType()),
-            StructField("buf_t", ArrayType(LongType())),
-            StructField("buf_x", ArrayType(DoubleType())),
-            StructField("masses", ArrayType(DoubleType())),
-        ]
-    )
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        feat, thr, depth_limit = struct
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            state.remove()  # idle-key GC: evolving masses restart from the
-            yield pd.DataFrame(columns=[f.name for f in out_schema.fields])
-            return          # trained forest on the key's next arrival
-        if state.exists:
-            wid, buf_t, buf_x, masses = state.get
-            buf_t = list(buf_t)
-            X = (
-                np.asarray(buf_x, dtype=np.float64).reshape(len(buf_t), d)
-                if buf_t
-                else np.empty((0, d))
-            )
-            m = HSTModel(
-                feat, thr, np.asarray(masses, dtype=np.float64).reshape(feat.shape), depth_limit
-            )
-        else:
-            wid = 0
-            buf_t, X = [], np.empty((0, d))
-            m = HSTModel(feat, thr, model.mass.copy(), depth_limit)
+    def step(st, key, pdf):
+        wid, buf_t, X, mass = st
+        m = HSTModel(feat, thr, mass, depth_limit)
+        buf_t = buf_t + pdf[time_col].tolist()
+        X = np.vstack([X, pdf[feature_cols].to_numpy(dtype=np.float64)])
+        # deterministic forget RNG per (key, window) — no hash():
+        # PYTHONHASHSEED varies across interpreters
+        kseed = int.from_bytes(key[0].encode()[:8].ljust(8, b"\0"), "little")
         rows = []
-        chunks = [c for c in pdfs if len(c)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(time_col)
-            buf_t.extend(int(t) for t in pdf[time_col].to_numpy())
-            X = np.vstack([X, pdf[feature_cols].to_numpy(dtype=np.float64)])
-            while len(buf_t) >= W:
-                win_t, win_X = buf_t[:W], X[:W]
-                leaves = _leaf_indices(m, win_X)
-                scores = hst_scores(m, win_X, leaves)
-                # deterministic forget RNG per (key, window) — no hash():
-                # PYTHONHASHSEED varies across interpreters
-                kseed = int.from_bytes(key[0].encode()[:8].ljust(8, b"\0"), "little")
-                rng = np.random.default_rng((kseed ^ (wid * 0x9E3779B9)) % (2**32))
-                hst_mass_update(m, win_X, forget_threshold, rng, leaves)
-                rows.extend(
-                    (key[0], wid, win_t[j], float(scores[j])) for j in range(W)
-                )
-                wid += 1
-                buf_t, X = buf_t[W:], X[W:]
-        state.update(
-            (
-                wid,
-                list(buf_t),
-                [float(v) for v in X.ravel()],
-                [float(v) for v in m.mass.ravel()],
-            )
-        )
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+        while len(buf_t) >= W:
+            win_t, win_X = buf_t[:W], X[:W]
+            leaves = _leaf_indices(m, win_X)
+            scores = hst_scores(m, win_X, leaves)
+            rng = np.random.default_rng((kseed ^ (wid * 0x9E3779B9)) % (2**32))
+            hst_mass_update(m, win_X, forget_threshold, rng, leaves)
+            rows.extend((key[0], wid, win_t[j], float(scores[j])) for j in range(W))
+            wid += 1
+            buf_t, X = buf_t[W:], X[W:]
+        out = pd.DataFrame(rows, columns=out_schema.fieldNames())
+        return (wid, buf_t, X, m.mass), out
 
-    return (
+    # an idle key (idle_timeout_ms) restarts from the trained masses
+    return keyed_fold(
         stream_df.selectExpr(
             f"cast({key_col} as string) as key",
             f"cast({time_col} as long) as {time_col}",
             *feature_cols,
-        )
-        .groupBy("key")
-        .applyInPandasWithState(
-            fn,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout_ms is not None
-            else GroupStateTimeout.NoTimeout,
-        )
+        ),
+        ["key"],
+        [time_col],
+        lambda: (0, [], np.empty((0, d)), model.mass.copy()),
+        step,
+        out_schema,
+        idle_timeout_ms,
     )
 
 

@@ -12,11 +12,9 @@ scalar and flattened-matrix filters are the D=1 and D=n*m wrappings of the
 same recursion.
 
 Spark shape: the recursion is sequential PER KEY and the keys are
-independent, so the batch operator is one applyInPandas over
-groupBy(keys) (each group sorted by the time column, the 10^12-row
-layout: millions of keys x bounded series), and the streaming twin keeps
-(state, cov, last_time) per key in applyInPandasWithState — stream ==
-batch is pinned in tests.
+independent, so `kalman_filter` is one `keyed_fold` over the keys (each
+group sorted by the time column, the 10^12-row layout: millions of keys x
+bounded series).
 
 Oracle recipe: with a fixed step interval the Kalman gain sequence is
 DATA-INDEPENDENT (the covariance recursion never sees an observation), so
@@ -31,12 +29,12 @@ reference's own 2-gaussians data (tests/test_kalman.py)."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+from macrobase_spark.streaming.stateful import keyed_fold
 
 
 class KalmanVectorFilter:
@@ -102,115 +100,51 @@ def kalman_weights(n_steps: int, q_scale: float, r_scale: float = 1.0) -> np.nda
     return w
 
 
-def kalman_filter_batch(
+def kalman_filter(
     df: DataFrame,
     key_cols: list[str],
     order_col: str,
     value_col: str,
     q_scale: float,
     r_scale: float = 1.0,
+    timeout_s: int | None = None,
 ) -> DataFrame:
-    """Per-key scalar Kalman smoothing: one applyInPandas group per key,
-    rows ordered by `order_col`, unit step interval per observation (the
-    reference's test protocol), zero start. Returns (keys..., order_col,
-    value, filtered, step)."""
-    spark = df.sparkSession
-    schema = ", ".join(
-        [f"{c} {df.schema[c].dataType.simpleString()}" for c in key_cols]
+    """Per-key scalar Kalman smoothing, rows ordered by `order_col`, unit
+    step interval per observation (the reference's test protocol), zero
+    start. Returns (keys..., order_col, value, filtered, step).
+
+    A batch frame filters each key's whole series; a stream resumes each
+    key's filter every micro-batch (cross-batch order is the source's
+    append order) and emits the same rows. `timeout_s` forgets a key idle
+    that long."""
+    schema = StructType(
+        [df.schema[c] for c in [*key_cols, order_col]]
         + [
-            f"{order_col} {df.schema[order_col].dataType.simpleString()}",
-            f"{value_col} double",
-            "filtered double",
-            "step long",
+            StructField(value_col, DoubleType()),
+            StructField("filtered", DoubleType()),
+            StructField("step", LongType()),
         ]
     )
     q, r = float(q_scale), float(r_scale)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        flt = KalmanScalarFilter(0.0, q, r)
+    def step(st, key, pdf):
+        flt, n = st
         vals = pdf[value_col].to_numpy(dtype=np.float64)
-        out = np.empty(len(vals))
-        for i, v in enumerate(vals):
-            out[i] = flt.step(v, 1)
-        return pd.DataFrame(
-            {
-                **{c: pdf[c] for c in key_cols},
-                order_col: pdf[order_col],
-                value_col: vals,
-                "filtered": out,
-                "step": np.arange(1, len(vals) + 1),
-            }
+        out = pdf[[*key_cols, order_col, value_col]].assign(
+            filtered=np.array([flt.step(v, 1) for v in vals], dtype=np.float64),
+            step=np.arange(n + 1, n + len(vals) + 1),
         )
+        return (flt, n + len(vals)), out
 
-    return (
-        df.select(*key_cols, order_col, F.col(value_col).cast("double").alias(value_col))
-        .groupBy(*key_cols)
-        .applyInPandas(run, schema)
-    )
-
-
-def stream_kalman(
-    stream: DataFrame,
-    key_cols: list[str],
-    order_col: str,
-    value_col: str,
-    q_scale: float,
-    r_scale: float = 1.0,
-    timeout_s: int | None = None,
-):
-    """Streaming twin: (state, cov, step) per key in
-    applyInPandasWithState; within a micro-batch rows are sorted by
-    `order_col` (cross-batch order is the source's append order, the
-    engine-wide streaming contract). Emits the same rows as the batch
-    operator."""
-    import pickle
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols]
-        + [f"{order_col} long", f"{value_col} double", "filtered double", "step long"]
-    )
-    state_schema = "blob binary"
-    q, r = float(q_scale), float(r_scale)
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if timeout_s is not None and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            flt, step = pickle.loads(bytes(state.get[0]))
-        else:
-            flt, step = KalmanScalarFilter(0.0, q, r), 0
-        rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_col)
-            for t, v in zip(pdf[order_col], pdf[value_col]):
-                step += 1
-                rows.append((*key, int(t), float(v), flt.step(float(v), 1), step))
-        state.update((pickle.dumps((flt, step)),))
-        if timeout_s is not None:
-            state.setTimeoutDuration(timeout_s * 1000)
-        yield pd.DataFrame(
-            rows, columns=[*key_cols, order_col, value_col, "filtered", "step"]
-        )
-
-    return (
-        stream.select(
-            *key_cols, F.col(order_col).cast("long").alias(order_col),
-            F.col(value_col).cast("double").alias(value_col),
-        )
-        .groupBy(*key_cols)
-        .applyInPandasWithState(
-            fn,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.ProcessingTimeTimeout
-            if timeout_s is not None
-            else GroupStateTimeout.NoTimeout,
-        )
+    sel = df.select(*key_cols, order_col, F.col(value_col).cast("double").alias(value_col))
+    return keyed_fold(
+        sel,
+        key_cols,
+        [order_col],
+        lambda: (KalmanScalarFilter(0.0, q, r), 0),
+        step,
+        schema,
+        None if timeout_s is None else timeout_s * 1000,
     )
 
 
@@ -279,7 +213,7 @@ def kalman_smooth_events(spark, sf_dir: str) -> DataFrame:
         .filter(F.col("_rn") <= _KAL_STEPS)
         .drop("_rn")
     )
-    flt = kalman_filter_batch(
+    flt = kalman_filter(
         head, ["event_type"], "event_id", "value", _KAL_Q, _KAL_R
     )
     return flt.filter(F.col("step") % 20 == 0).select(

@@ -50,7 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from macrobase_spark.artifacts import artifact, sf_size
+from macrobase_spark.artifacts import artifact, clip_fixture_n
 from macrobase_spark.queries import register
 
 # -- K-weighting filter design (BS.1770-4) -----------------------------------
@@ -352,13 +352,9 @@ def generate_loudness_clips(spark, n: int):
     )
 
 
-def _loudness_n(sf_dir: str) -> int:
-    return sf_size(sf_dir, 100_000, 1000)
-
-
 @artifact("loudness", 1)
 def loudness_blocks_parquet(spark, sf_dir: str, out: str) -> None:
-    n = _loudness_n(sf_dir)
+    n = clip_fixture_n(sf_dir)
     loudness_blocks(generate_loudness_clips(spark, n)).write.mode(
         "overwrite"
     ).parquet(out)

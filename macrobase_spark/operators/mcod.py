@@ -19,8 +19,8 @@ for exactly this semantics; distributed, the natural shape is different:
   window populations and a vectorized kernel (chunked GEMM) scores each
   window independently. Windows are embarrassingly parallel: 10^12 points
   = 10^9 independent W-point tasks.
-- STREAM RENDERING (`stream_mcod`): applyInPandasWithState per stream key:
-  the state carries the last W-S points' coordinates; each completed slide
+- STREAM RENDERING (`stream_mcod`): a `keyed_fold` per stream key: the
+  state carries the last W-S points' coordinates; each completed slide
   triggers one vectorized detection. Count windows are only well-defined
   per key in a distributed stream (global arrival order does not exist) —
   same contract as streaming/stateful.py.
@@ -30,8 +30,6 @@ in tests/test_mcod.py, mirroring the engine's batch==stream discipline.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -45,6 +43,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from macrobase_spark.streaming.stateful import keyed_fold
 
 
 def neighbor_counts(X: np.ndarray, R: float) -> np.ndarray:
@@ -179,9 +179,9 @@ def stream_mcod(
     slide: int = 256,
     idle_timeout_ms: int | None = None,
 ) -> DataFrame:
-    """Per-key MCOD over a stream: state = (arrival counter, tail of W-S
-    coordinate rows + their times); every completed slide runs one
-    vectorized detection and emits the slide's rows. outputMode('append').
+    """Per-key MCOD: state = (next window id, tail of W-S coordinate rows
+    + their times); every completed slide runs one vectorized detection
+    and emits the slide's rows. On a stream use outputMode('append').
 
     idle_timeout_ms: drop a key's buffered state after this much processing
     time with no arrivals — the state-GC a 10^6-key deployment needs (a key
@@ -190,9 +190,6 @@ def stream_mcod(
     trailing slide)."""
     W, S, k = window_size, slide, min_neighbors
     d = len(feature_cols)
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import ArrayType
-
     out_schema = StructType(
         [
             StructField("key", StringType()),
@@ -203,77 +200,36 @@ def stream_mcod(
             StructField("is_outlier", BooleanType()),
         ]
     )
-    state_schema = StructType(
-        [
-            StructField("n_seen", LongType()),
-            StructField("next_window", LongType()),
-            StructField("buf_t", ArrayType(LongType())),
-            StructField("buf_x", ArrayType(DoubleType())),  # row-major coords
-        ]
-    )
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in out_schema.fields])
-            return
-        if state.exists:
-            n_seen, wid, buf_t, buf_x = state.get
-            buf_t = list(buf_t)
-            X = np.asarray(buf_x, dtype=np.float64).reshape(len(buf_t), d) if buf_t else np.empty((0, d))
-        else:
-            n_seen, wid = 0, 0
-            buf_t, X = [], np.empty((0, d))
+    def step(st, key, pdf):
+        wid, buf_t, X = st
+        buf_t = buf_t + pdf[time_col].tolist()
+        X = np.vstack([X, pdf[feature_cols].to_numpy(dtype=np.float64)])
         rows = []
-        chunks = [c for c in pdfs if len(c)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(time_col)  # arrow chunks of one
-            # micro-batch may arrive unordered; a key's batch is bounded
-            buf_t.extend(int(t) for t in pdf[time_col].to_numpy())
-            X = np.vstack([X, pdf[feature_cols].to_numpy(dtype=np.float64)])
-            n_seen += len(pdf)
-            # fire every completed window: first at W points, then every S
-            while len(buf_t) >= W:
-                win_t = buf_t[:W]
-                win_X = X[:W]
-                counts = neighbor_counts(win_X, max_distance)
-                new_from = 0 if wid == 0 else W - S
-                for j in range(new_from, W):
-                    rows.append(
-                        (
-                            key[0],
-                            wid,
-                            win_t[j],
-                            int(counts[j]),
-                            float(k) - float(counts[j]),
-                            bool(counts[j] < k),
-                        )
-                    )
-                wid += 1
-                buf_t = buf_t[S:]
-                X = X[S:]
-        state.update((n_seen, wid, list(buf_t), [float(v) for v in X.ravel()]))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+        # fire every completed window: first at W points, then every S
+        while len(buf_t) >= W:
+            win_t = buf_t[:W]
+            counts = neighbor_counts(X[:W], max_distance)
+            new_from = 0 if wid == 0 else W - S
+            for j in range(new_from, W):
+                c = int(counts[j])
+                rows.append((key[0], wid, win_t[j], c, float(k) - float(c), c < k))
+            wid += 1
+            buf_t, X = buf_t[S:], X[S:]
+        return (wid, buf_t, X), pd.DataFrame(rows, columns=out_schema.fieldNames())
 
-    return (
+    return keyed_fold(
         stream_df.selectExpr(
-            f"cast({key_col} as string) as key", f"cast({time_col} as long) as {time_col}",
+            f"cast({key_col} as string) as key",
+            f"cast({time_col} as long) as {time_col}",
             *feature_cols,
-        )
-        .groupBy("key")
-        .applyInPandasWithState(
-            fn,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout_ms is not None
-            else GroupStateTimeout.NoTimeout,
-        )
+        ),
+        ["key"],
+        [time_col],
+        lambda: (0, [], np.empty((0, d))),
+        step,
+        out_schema,
+        idle_timeout_ms,
     )
 
 

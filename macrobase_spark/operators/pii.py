@@ -32,7 +32,7 @@ from typing import Iterator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from macrobase_spark.artifacts import artifact, sf_size
+from macrobase_spark.artifacts import artifact, clip_fixture_n
 from macrobase_spark.queries import register
 
 # Java-regex ∩ RE2 portable patterns (no lookaround, no backrefs)
@@ -128,13 +128,9 @@ def generate_pii_docs(spark, n: int) -> DataFrame:
     )
 
 
-def _pii_n(sf_dir: str) -> int:
-    return sf_size(sf_dir, 100_000, 1000)
-
-
 @artifact("pii_docs", 1)
 def pii_docs_parquet(spark, sf_dir: str, out: str) -> None:
-    n = _pii_n(sf_dir)
+    n = clip_fixture_n(sf_dir)
     generate_pii_docs(spark, n).write.mode("overwrite").parquet(out)
 
 

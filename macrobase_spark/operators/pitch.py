@@ -48,7 +48,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from macrobase_spark.artifacts import artifact, sf_size
+from macrobase_spark.artifacts import artifact, clip_fixture_n
 from macrobase_spark.queries import register
 
 FRAME = 2048
@@ -285,13 +285,9 @@ def generate_pitch_clips(spark, n: int):
     )
 
 
-def _pitch_n(sf_dir: str) -> int:
-    return sf_size(sf_dir, 100_000, 1000)
-
-
 @artifact("pitch", 1)
 def pitch_features_parquet(spark, sf_dir: str, out: str) -> None:
-    n = _pitch_n(sf_dir)
+    n = clip_fixture_n(sf_dir)
     pitch_features(generate_pitch_clips(spark, n)).write.mode(
         "overwrite"
     ).parquet(out)

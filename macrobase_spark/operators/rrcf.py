@@ -26,9 +26,9 @@ Spark-first: the forest is a driver-fit, broadcast model. Batch scoring
 (`rrcf_score`) is the STATIONARY rendering — CoDisp against the trained
 forest, no insertion (embarrassingly parallel; the evolving semantics are
 inherently sequential per stream). The EVOLVING rendering (`stream_rrcf`)
-runs per stream key in applyInPandasWithState with the whole forest —
-pointer structure, rng state and all — pickled into a BinaryType state
-column; each point is forget-if-over-threshold → insert → CoDisp, exactly
+runs per stream key in a `keyed_fold` whose state is the whole forest —
+pointer structure, rng state and all; each point is
+forget-if-over-threshold → insert → CoDisp, exactly
 the reference's updateAndScore loop. Randomness is seeded (the reference
 uses Math.random()); determinism is asserted by the stream==replay test.
 """
@@ -42,13 +42,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from macrobase_spark.streaming.stateful import keyed_fold
 
 
 class Leaf:
@@ -326,13 +327,10 @@ def stream_rrcf(
     idle_timeout_ms: int | None = None,
 ) -> DataFrame:
     """Per-key evolving RRCF: the forest (pointer structure + rng state)
-    lives pickled in a BinaryType state column; every point runs the
-    reference's forget→insert→CoDisp loop in arrival order.
+    is the key's fold state; every point runs the reference's
+    forget→insert→CoDisp loop in time order. On a stream use
     outputMode('append')."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     init_blob = _init_blob(forest, forget_threshold)
-
     out_schema = StructType(
         [
             StructField("key", StringType()),
@@ -340,46 +338,28 @@ def stream_rrcf(
             StructField("score", DoubleType()),
         ]
     )
-    state_schema = StructType([StructField("blob", BinaryType())])
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            state.remove()  # idle-key GC: the key restarts from the trained forest
-            yield pd.DataFrame(columns=[fld.name for fld in out_schema.fields])
-            return
-        blob = state.get[0] if state.exists else init_blob
-        f: RRCFForest = pickle.loads(bytes(blob))
-        rows = []
-        chunks = [c for c in pdfs if len(c)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(time_col)
-            X = pdf[feature_cols].to_numpy(dtype=np.float64)
-            ts = pdf[time_col].to_numpy()
-            for i in range(len(X)):
-                rows.append((key[0], int(ts[i]), f.update_and_score(X[i])))
-        state.update((pickle.dumps(f),))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(rows, columns=[fld.name for fld in out_schema.fields])
+    def step(f: RRCFForest, key, pdf):
+        X = pdf[feature_cols].to_numpy(dtype=np.float64)
+        rows = [
+            (key[0], int(t), f.update_and_score(x))
+            for t, x in zip(pdf[time_col].to_numpy(), X)
+        ]
+        return f, pd.DataFrame(rows, columns=out_schema.fieldNames())
 
-    return (
+    # an idle key (idle_timeout_ms) restarts from the trained forest
+    return keyed_fold(
         stream_df.selectExpr(
             f"cast({key_col} as string) as key",
             f"cast({time_col} as long) as {time_col}",
             *feature_cols,
-        )
-        .groupBy("key")
-        .applyInPandasWithState(
-            fn,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout_ms is not None
-            else GroupStateTimeout.NoTimeout,
-        )
+        ),
+        ["key"],
+        [time_col],
+        lambda: pickle.loads(init_blob),
+        step,
+        out_schema,
+        idle_timeout_ms,
     )
 
 

@@ -38,7 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from macrobase_spark.artifacts import artifact, sf_size
+from macrobase_spark.artifacts import artifact, clip_fixture_n
 from macrobase_spark.queries import register
 
 SCORECARD_SCHEMA = StructType(
@@ -306,13 +306,9 @@ def generate_qa_clips(spark, n: int) -> DataFrame:
     )
 
 
-def _qa_n(sf_dir: str) -> int:
-    return sf_size(sf_dir, 100_000, 1000)
-
-
 @artifact("scorecard", 2)
 def scorecard_parquet(spark, sf_dir: str, out: str) -> None:
-    n = _qa_n(sf_dir)
+    n = clip_fixture_n(sf_dir)
     scorecard_features(generate_qa_clips(spark, n)).write.mode(
         "overwrite"
     ).parquet(out)

@@ -44,7 +44,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from macrobase_spark.artifacts import artifact, sf_size
+from macrobase_spark.artifacts import artifact, clip_fixture_n
 from macrobase_spark.queries import register
 
 SILENCE_SCHEMA = StructType(
@@ -194,13 +194,9 @@ def generate_silence_clips(spark, n: int):
     )
 
 
-def _silence_n(sf_dir: str) -> int:
-    return sf_size(sf_dir, 100_000, 1000)
-
-
 @artifact("silence", 1)
 def silence_features_parquet(spark, sf_dir: str, out: str) -> None:
-    n = _silence_n(sf_dir)
+    n = clip_fixture_n(sf_dir)
     silence_features(generate_silence_clips(spark, n)).write.mode(
         "overwrite"
     ).parquet(out)

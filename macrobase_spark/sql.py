@@ -381,14 +381,23 @@ class MacroBaseSQL:
         )
         pos = 0
 
+        def bad(what: str) -> ValueError:
+            return ValueError(f"malformed predicate {text!r}: {what}")
+
         def peek():
             return tokens[pos] if pos < len(tokens) else None
 
         def take():
             nonlocal pos
+            if pos >= len(tokens):
+                raise bad("unexpected end")
             t = tokens[pos]
             pos += 1
             return t
+
+        def expect(want: str, what: str) -> None:
+            if take().upper() != want:
+                raise bad(what)
 
         def atom():
             nonlocal pos
@@ -396,7 +405,7 @@ class MacroBaseSQL:
             if t == "(":
                 take()
                 e = expr()
-                assert take() == ")"
+                expect(")", "missing ')'")
                 return e
             if t is not None and t.upper() == "NOT":
                 take()
@@ -404,35 +413,37 @@ class MacroBaseSQL:
             left = operand(take())
             op = take()
             negate = False
-            if op is not None and op.upper() == "NOT":
+            if op.upper() == "NOT":
                 negate = True
                 op = take()
-            opu = op.upper() if op is not None else ""
+            opu = op.upper()
             if opu == "BETWEEN":
                 lo = operand(take())
-                assert take().upper() == "AND"
+                expect("AND", "BETWEEN needs 'AND'")
                 hi = operand(take())
                 cond = (left >= lo) & (left <= hi)
             elif opu == "IN":
-                assert take() == "("
+                expect("(", "IN needs '('")
                 items = [operand(take())]
                 while peek() == ",":
                     take()
                     items.append(operand(take()))
-                assert take() == ")"
+                expect(")", "IN list needs ')'")
                 cond = left == items[0]
                 for it in items[1:]:  # OR of equalities: works for lit AND col members
                     cond = cond | (left == it)
             elif opu == "LIKE":
                 pat = take()
-                assert pat.startswith("'"), "LIKE pattern must be a string literal"
+                if not pat.startswith("'"):
+                    raise bad("LIKE pattern must be a string literal")
                 cond = left.like(pat[1:-1])
             elif opu == "IS":
                 nxt = take()
-                if nxt is not None and nxt.upper() == "NOT":
+                if nxt.upper() == "NOT":
                     negate = not negate
                     nxt = take()
-                assert nxt is not None and nxt.upper() == "NULL"
+                if nxt.upper() != "NULL":
+                    raise bad("IS needs NULL or NOT NULL")
                 cond = left.isNull()
             else:
                 ops = {
@@ -445,6 +456,8 @@ class MacroBaseSQL:
                     "<=": lambda a, b: a <= b,
                     ">=": lambda a, b: a >= b,
                 }
+                if op not in ops:
+                    raise bad(f"unknown operator {op!r}")
                 cond = ops[op](left, operand(take()))
             return ~cond if negate else cond
 

@@ -8,9 +8,9 @@
   trick is unnecessary on streams because the watermark already bounds
   state; the time-interval predicate IS the state-cleanup contract.
 
-- ``stream_asof_join``: per-key most-recent-reference enrichment as an
-  applyInPandasWithState state machine: the state is ONE reference row
-  per key (the latest seen), probes forward-fill from it. Correct under
+- ``stream_asof_join``: per-key most-recent-reference enrichment as a
+  ``keyed_fold`` state machine: the state is ONE reference row per key
+  (the latest seen), probes forward-fill from it. Correct under
   the same batch-monotonic event-time arrival the reference's streaming
   operators assume (WindowedOperator.java:84 has no watermarking either —
   documented contract, matching streaming/windowed.py); within a
@@ -26,13 +26,14 @@ key by definition (same contract as the reference's single stream).
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
+
+from macrobase_spark.streaming.stateful import keyed_fold
 
 
 def stream_range_join(
@@ -117,27 +118,15 @@ def stream_asof_join(
         + [StructField(f"{ts_col}{suffix}", p_fields[ts_col])]
         + [StructField(f"{c}{suffix}", r_fields[c]) for c in carry]
     )
-    # state = latest ref per key: micros + carry payload (micros as long —
-    # pandas Timestamps don't round-trip the state serializer cleanly)
-    state_schema = StructType(
-        [StructField("__ref_us", LongType())]
-        + [StructField(f"__c_{c}", r_fields[c]) for c in carry]
-    )
     out_cols = [f.name for f in out_schema.fields]
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            st = list(state.get)
-        else:
-            st = [None] + [None] * len(carry)
+    def step(st, key, pdf):
+        # st = the key's latest reference row: its time in micros, then
+        # its carry payload
         rows = []
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["__ts", "__side"], kind="stable")
         ts_us = pdf["__ts"].astype("datetime64[us]").astype("int64").to_numpy()
         sides = pdf["__side"].to_numpy()
-        for i, (pos, row) in enumerate(pdf.iterrows()):
+        for i, (_, row) in enumerate(pdf.iterrows()):
             if sides[i] == 0:
                 st = [int(ts_us[i])] + [row[f"__c_{c}"] for c in carry]
             else:
@@ -151,9 +140,8 @@ def stream_asof_join(
                     + [matched_ts]
                     + st[1:]
                 )
-        state.update(tuple(st))
-        yield pd.DataFrame(rows, columns=out_cols)
+        return st, pd.DataFrame(rows, columns=out_cols)
 
-    return u.groupBy(*on).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        u, on, ["__ts", "__side"], lambda: [None] * (1 + len(carry)), step, out_schema
     )

@@ -14,7 +14,7 @@ Design: reuse the batch kernel everywhere the streaming model allows.
   manifest on the right) — Structured Streaming re-plans the static side
   per micro-batch, so a manifest refresh between batches is picked up.
 - uniqueness is the ONE check that needs cross-batch state:
-  `stream_duplicate_clips` keys applyInPandasWithState by clip_id and
+  `stream_duplicate_clips` keys a `keyed_fold` by clip_id and
   emits a violation on every arrival after the first. State is O(distinct
   keys) — at corpus scale bound it with `ttl_minutes` (processing-time
   timeout), the standard dedup-state bound; an expired key that recurs
@@ -38,14 +38,12 @@ verdicts) and adds the cross-batch checks the reference cannot express.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from macrobase_spark.operators.checks import (
     SuiteConfig,
@@ -53,6 +51,7 @@ from macrobase_spark.operators.checks import (
     row_local_checks,
 )
 from macrobase_spark.plans.manifest import RunManifest
+from macrobase_spark.streaming.stateful import keyed_fold
 
 VIOLATION_SCHEMA = StructType(
     [
@@ -61,8 +60,6 @@ VIOLATION_SCHEMA = StructType(
         StructField("detail", StringType()),
     ]
 )
-
-_DUP_STATE_SCHEMA = StructType([StructField("seen", LongType())])
 
 
 def stream_row_violations(
@@ -87,39 +84,26 @@ def stream_duplicate_clips(
     does not exist mid-stream, so the streaming face reports arrivals; the
     flagged clip_id set is identical (gated by tests).
 
-    State per key = one i64. `ttl_minutes` bounds total state via a
+    State per key = one arrival count. `ttl_minutes` bounds total state via a
     processing-time timeout (dedup-at-scale contract: a key silent for the
     TTL is forgotten and would be re-admitted)."""
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_minutes
-        else GroupStateTimeout.NoTimeout
-    )
+    cols = VIOLATION_SCHEMA.fieldNames()
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame([], columns=["clip_id", "check", "detail"])
-            return
-        seen = state.get[0] if state.exists else 0
-        n_new = 0
-        for pdf in pdfs:
-            n_new += len(pdf)
+    def step(seen, key, pdf):
         out = [
             (key[0], "uniqueness", f"duplicate arrival #{k}")
-            for k in range(max(seen + 1, 2), seen + n_new + 1)
+            for k in range(max(seen + 1, 2), seen + len(pdf) + 1)
         ]
-        state.update((seen + n_new,))
-        if ttl_minutes:
-            state.setTimeoutDuration(ttl_minutes * 60_000)
-        yield pd.DataFrame(out, columns=["clip_id", "check", "detail"])
+        return seen + len(pdf), pd.DataFrame(out, columns=cols)
 
-    return (
-        scored.select("clip_id")
-        .groupBy("clip_id")
-        .applyInPandasWithState(fn, VIOLATION_SCHEMA, _DUP_STATE_SCHEMA, "append", timeout)
+    return keyed_fold(
+        scored.select("clip_id"),
+        ["clip_id"],
+        None,
+        lambda: 0,
+        step,
+        VIOLATION_SCHEMA,
+        ttl_minutes * 60_000 if ttl_minutes else None,
     )
 
 

@@ -7,13 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from macrobase_spark.operators.arima import (
-    arima_score_batch,
+    arima_score,
     arima_trace,
     fit_arma,
     fit_auto,
     forecast,
     select_d,
-    stream_arima,
 )
 
 
@@ -91,11 +90,11 @@ def test_batch_partition_invariance(spark):
     df = spark.createDataFrame(rows, "key string, t long, value double")
     a = {
         (r["key"], r["t"], round(r["score"], 9))
-        for r in arima_score_batch(df, ["key"], "t", "value", 30).collect()
+        for r in arima_score(df, ["key"], "t", "value", 30).collect()
     }
     b = {
         (r["key"], r["t"], round(r["score"], 9))
-        for r in arima_score_batch(
+        for r in arima_score(
             df.repartition(7), ["key"], "t", "value", 30
         ).collect()
     }
@@ -117,7 +116,7 @@ def test_stream_matches_batch(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        stream_arima(stream, ["key"], "t", "value", 25)
+        arima_score(stream, ["key"], "t", "value", 25)
         .writeStream.format("memory")
         .queryName("arima_sink")
         .outputMode("append")
@@ -133,6 +132,6 @@ def test_stream_matches_batch(spark, tmp_path):
         q.stop()
     want = {
         (r["key"], r["t"], round(r["score"], 9))
-        for r in arima_score_batch(df, ["key"], "t", "value", 25).collect()
+        for r in arima_score(df, ["key"], "t", "value", 25).collect()
     }
     assert got == want and len(want) == 150

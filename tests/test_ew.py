@@ -254,11 +254,9 @@ def test_no_decay_regime_matches_numpy_replay(spark):
 
 
 def test_stream_matches_batch(spark, tmp_path):
-    """stream_ew_flags over micro-batched files == ew_classify_flags on the
+    """ew_classify_flags over micro-batched files == ew_classify_flags on the
     same rows (one resumable state machine per key)."""
     from pyspark.sql import functions as F
-
-    from macrobase_spark.operators.ew import stream_ew_flags
 
     rng = np.random.default_rng(21)
     rows = [
@@ -282,7 +280,7 @@ def test_stream_matches_batch(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        stream_ew_flags(stream, "key", "value", ["key"], "t", p)
+        ew_classify_flags(stream, "value", ["key"], "t", p, key_cols=["key"])
         .writeStream.format("memory")
         .queryName("ew_sink")
         .outputMode("append")
@@ -291,7 +289,7 @@ def test_stream_matches_batch(spark, tmp_path):
     try:
         q.processAllAvailable()
         got = {
-            (r["key"], r["ord"]): (round(r["score"], 9), r["outlier"])
+            (r["key"], r["__ord"]): (round(r["score"], 9), r["outlier"])
             for r in spark.table("ew_sink").collect()
         }
     finally:

@@ -13,9 +13,8 @@ from macrobase_spark.operators.kalman import (
     KalmanFlattenedMatrixFilter,
     KalmanScalarFilter,
     KalmanVectorFilter,
-    kalman_filter_batch,
+    kalman_filter,
     kalman_weights,
-    stream_kalman,
 )
 
 REF_2G = "/root/reference/contrib/src/test/resources/data/2gaussians-500points.csv.gz"
@@ -78,12 +77,12 @@ def test_batch_partition_invariant(spark):
     ]
     df = spark.createDataFrame(rows, "key string, t long, value double")
     a = sorted(
-        map(tuple, kalman_filter_batch(df, ["key"], "t", "value", 0.01).collect())
+        map(tuple, kalman_filter(df, ["key"], "t", "value", 0.01).collect())
     )
     b = sorted(
         map(
             tuple,
-            kalman_filter_batch(
+            kalman_filter(
                 df.repartition(17), ["key"], "t", "value", 0.01
             ).collect(),
         )
@@ -107,7 +106,7 @@ def test_stream_matches_batch(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        stream_kalman(stream, ["key"], "t", "value", 0.01)
+        kalman_filter(stream, ["key"], "t", "value", 0.01)
         .writeStream.format("memory")
         .queryName("kalman_sink")
         .outputMode("append")
@@ -123,6 +122,6 @@ def test_stream_matches_batch(spark, tmp_path):
         q.stop()
     want = {
         (r["key"], r["t"], round(r["filtered"], 9))
-        for r in kalman_filter_batch(df, ["key"], "t", "value", 0.01).collect()
+        for r in kalman_filter(df, ["key"], "t", "value", 0.01).collect()
     }
     assert got == want and len(want) == 240

@@ -274,7 +274,7 @@ def test_chain_arima_classifier(spark):
     the scores equal the operator run directly."""
     import numpy as np
 
-    from macrobase_spark.operators.arima import arima_score_batch
+    from macrobase_spark.operators.arima import arima_score
     from macrobase_spark.pipelines import classify_chain
 
     rng = np.random.default_rng(9)
@@ -302,7 +302,7 @@ def test_chain_arima_classifier(spark):
     assert {"key", "t", "value", "attr", col} <= set(out.columns)
     want = {
         (r["key"], r["t"], round(r["score"], 9))
-        for r in arima_score_batch(df, ["key"], "t", "value", 40).collect()
+        for r in arima_score(df, ["key"], "t", "value", 40).collect()
     }
     got = {(r["key"], r["t"], round(r[col], 9)) for r in res}
     assert got == want
