@@ -12,8 +12,9 @@ Design rules (100 TB first):
   strategies (predicate pushdown, partial aggregation, broadcast, skew split)
 - no driver-side row data: only aggregates, thresholds, frequent itemsets,
   and manifests ever reach the driver
-- Python only at the edges, always Arrow-vectorized (pandas UDFs), never
-  per-row
+- Python only at the edges, always over Arrow batches: whole-batch kernels
+  where the math vectorizes, and one row runner (`functions/rows.map_rows`)
+  for per-payload decoders and per-id fixture generators
 """
 
 __version__ = "0.1.0"

@@ -11,7 +11,7 @@ protection (CRC present) flag, and number_of_raw_data_blocks (each
 block = 1024 PCM samples), so the walk produces frame count and
 sample-accurate duration to compare against the dur_ms metadata.
 
-Spark-first shape: identical to operators/mp3.py — one mapInPandas scan
+Spark-first shape: identical to operators/mp3.py — one row-runner scan
 of the payload bytes (O(n_frames) pointer chase per clip, constant work
 per frame), narrow profile relation out, verdict CASE + stats aggregate
 as codegen SQL replayed verbatim by the DuckDB oracle over the
@@ -22,15 +22,12 @@ validation contract.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from macrobase_spark.artifacts import artifact, decode_fixture_n
-from macrobase_spark.operators.mp3 import stream_scorecard
+from macrobase_spark.operators.mp3 import stream_clips, stream_profiles, stream_scorecard
 from macrobase_spark.queries import register
 
 # ISO/IEC 14496-3 sampling_frequency_index table (13 valid entries).
@@ -104,20 +101,7 @@ def adts_stream(clip_id: int, n_frames: int) -> tuple[bytes, int, int]:
 def generate_adts_clips(spark: SparkSession, n: int, n_frames: int = 8) -> DataFrame:
     """(clip_id, bytes, sr_hz, dur_ms, codec='aac') fixture table —
     deterministic at any partitioning."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for s in pdf["id"].to_numpy():
-                buf, sr, dur = adts_stream(int(s), n_frames)
-                rows.append((f"aac-{int(s):08d}", buf, sr, dur, "aac"))
-            yield pd.DataFrame(
-                rows, columns=["clip_id", "bytes", "sr_hz", "dur_ms", "codec"]
-            )
-
-    return spark.range(n).mapInPandas(
-        gen, "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string"
-    )
+    return stream_clips(spark, n, "aac", lambda i: adts_stream(i, n_frames))
 
 
 def walk_adts(buf: bytes | None) -> tuple[int, float, int, int, int, bool, int]:
@@ -179,25 +163,8 @@ _PROFILE_SCHEMA = (
 
 
 def adts_profiles(df: DataFrame) -> DataFrame:
-    """Per-clip ADTS profile in ONE mapInPandas scan of the payload."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for cid, dm, b in zip(pdf["clip_id"], pdf["dur_ms"], pdf["bytes"]):
-                f, ed, sr, ch, nc, tr, junk = walk_adts(
-                    bytes(b) if b is not None else None
-                )
-                out.append((cid, int(dm), f, ed, sr, ch, nc, tr, junk))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "clip_id", "dur_ms", "n_frames", "est_dur_ms", "sr_hz_stream",
-                    "channels", "n_crc_frames", "truncated", "junk_trailing",
-                ],
-            )
-
-    return df.select("clip_id", "dur_ms", "bytes").mapInPandas(run, _PROFILE_SCHEMA)
+    """Per-clip ADTS profile in ONE scan of the payload."""
+    return stream_profiles(df, walk_adts, _PROFILE_SCHEMA)
 
 
 _VERDICT_SQL = """

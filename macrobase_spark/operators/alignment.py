@@ -31,13 +31,15 @@ the build brief's audio+transcript pair contract.
 
 from __future__ import annotations
 
-from typing import Iterator
+import functools
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from macrobase_spark.artifacts import artifact, clip_fixture_n
+from macrobase_spark.functions.rows import map_rows
+from macrobase_spark.operators.audio import _decode_wav_view, _run_lengths
 from macrobase_spark.queries import register
 from macrobase_spark.operators.silence import (
     generate_silence_clips,
@@ -58,29 +60,23 @@ def srt_for_silence_clips(feats: DataFrame) -> DataFrame:
     that PAIR is the cues_over_silence misalignment, planted by
     construction rather than by a dedicated residue."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cid, ns, sr in zip(pdf["clip_id"], pdf["n_samples"], pdf["sr_hz"]):
-                i = int(cid.split("_")[-1])
-                dur_ms = int(ns) * 1000 // max(int(sr), 1)
-                if i % 11 == 6:
-                    doc = ""
-                else:
-                    blocks = []
-                    for k in range(3):
-                        start = int(dur_ms * (0.05 + 0.30 * k))
-                        end = start + int(dur_ms * 0.25)
-                        words = " ".join(
-                            _WORDS[(i + k + j) % len(_WORDS)] for j in range(4)
-                        )
-                        blocks.append(f"{k + 1}\n{_fmt_ts(start)} --> {_fmt_ts(end)}\n{words}")
-                    doc = "\n\n".join(blocks)
-                rows.append((cid, dur_ms, doc))
-            yield pd.DataFrame(rows, columns=["clip_id", "dur_ms", "transcript_srt"])
+    def gen(cid, ns, sr):
+        i = int(cid.split("_")[-1])
+        dur_ms = ns * 1000 // max(sr, 1)
+        if i % 11 == 6:
+            return [(cid, dur_ms, "")]
+        blocks = []
+        for k in range(3):
+            start = int(dur_ms * (0.05 + 0.30 * k))
+            end = start + int(dur_ms * 0.25)
+            words = " ".join(_WORDS[(i + k + j) % len(_WORDS)] for j in range(4))
+            blocks.append(f"{k + 1}\n{_fmt_ts(start)} --> {_fmt_ts(end)}\n{words}")
+        return [(cid, dur_ms, "\n\n".join(blocks))]
 
-    return feats.select("clip_id", "n_samples", "sr_hz").mapInPandas(
-        gen, "clip_id string, dur_ms int, transcript_srt string"
+    return map_rows(
+        feats.select("clip_id", "n_samples", "sr_hz"),
+        gen,
+        "clip_id string, dur_ms int, transcript_srt string",
     )
 
 
@@ -176,43 +172,36 @@ def transcript_alignment_stats_q(spark, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _silence_span_rows(thresh, min_run_ms, clip_id, raw):
+    dec = _decode_wav_view(raw)
+    if dec is None or len(dec[1]) == 0:
+        return []
+    sr, pcm = dec
+    quiet = np.abs(pcm) < thresh
+    if not quiet.any():
+        return []
+    starts, lens = _run_lengths(quiet)
+    ms = 1000.0 / sr
+    keep = [(st, ln) for st, ln in zip(starts, lens) if ln * ms >= min_run_ms]
+    return [
+        (clip_id, j, int(round(st * ms)), int(round((st + ln) * ms)))
+        for j, (st, ln) in enumerate(keep)
+    ]
+
+
 def silence_spans(
     df: DataFrame, thresh: float = 0.01, min_run_ms: float = 50.0
 ) -> DataFrame:
     """(clip_id, span_idx, start_ms, end_ms) — the ACTUAL silent
     intervals of each clip (runs of |sample| < thresh at least
     min_run_ms long), the span-grain complement of
-    `silence.silence_features`' per-clip scalars. One mapInPandas decode
+    `silence.silence_features`' per-clip scalars. One decode
     scan; the emitted relation is ~30 B/row and everything downstream is
     SQL."""
-    from macrobase_spark.operators.audio import _decode_wav_view, _run_lengths
-
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for cid, b in zip(pdf["clip_id"], pdf["bytes"]):
-                dec = _decode_wav_view(np.frombuffer(bytes(b), dtype=np.uint8)) if b is not None else None
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                if len(pcm) == 0:
-                    continue
-                quiet = np.abs(pcm) < thresh
-                if not quiet.any():
-                    continue
-                starts, lens = _run_lengths(quiet)
-                ms = 1000.0 / sr
-                j = 0
-                for st, ln in zip(starts, lens):
-                    if ln * ms >= min_run_ms:
-                        out.append((cid, j, int(round(st * ms)), int(round((st + ln) * ms))))
-                        j += 1
-            yield pd.DataFrame(out, columns=["clip_id", "span_idx", "start_ms", "end_ms"])
-
-    return df.select("clip_id", "bytes").mapInPandas(
-        run, "clip_id string, span_idx int, start_ms int, end_ms int"
+    return map_rows(
+        df.select("clip_id", "bytes"),
+        functools.partial(_silence_span_rows, thresh, min_run_ms),
+        "clip_id string, span_idx int, start_ms int, end_ms int",
     )
 
 

@@ -1,8 +1,10 @@
 """Audio column operators: WAV/PCM synth, decode, SNR validation.
 
 The target table carries audio as an opaque ``binary`` column
-(BASELINE input_hint). Everything here is Arrow-batched via mapInPandas —
-bytes never cross row-at-a-time Python. Decode is REAL for PCM16 WAV
+(BASELINE input_hint). The suite's scan (`score_clips`) is one mapInArrow
+kernel over whole batches; the per-clip operators run on the shared row
+runner (functions/rows.map_rows), which hands each payload over as a
+zero-copy uint8 view. Decode is REAL for PCM16 WAV
 (numpy frombuffer) AND for three genuine compressed formats — G.711
 mu-law / A-law and IMA ADPCM, as standard tagged WAV containers — via the
 pure-numpy kernels in operators/codecs.py. mp3/flac/opus/aac stay stubbed
@@ -19,12 +21,11 @@ payloads fail the check and become violation rows.
 
 from __future__ import annotations
 
+import functools
 import io
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -37,6 +38,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from macrobase_spark.functions.rows import _binary_views, map_rows
 
 # -- deterministic per-clip parameters (pure functions of the 64-bit id) ----
 
@@ -168,7 +171,7 @@ def decode_audio(b: bytes) -> tuple[int, np.ndarray] | None:
         from macrobase_spark.operators.flac import decode_flac
 
         return decode_flac(bytes(b))
-    return decode_wav(b)
+    return decode_wav(bytes(b))
 
 
 def wav_bytes_codec(pcm: np.ndarray, sr: int, codec: str, block_align: int = 256) -> bytes:
@@ -388,61 +391,41 @@ FEATURES_SCHEMA = StructType(
 )
 
 
+def _audio_features(clip_id, raw):
+    dec = _decode_wav_view(raw)
+    if dec is None or len(dec[1]) == 0:
+        return [(clip_id, False, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)]
+    sr, pcm = dec
+    zcr = float((np.diff(np.signbit(pcm)) != 0).mean()) if len(pcm) > 1 else 0.0
+    spec = np.abs(np.fft.rfft(pcm))
+    freqs = np.fft.rfftfreq(len(pcm), d=1.0 / sr)
+    domf = cent = 0.0
+    if spec.sum() > 0:
+        domf = float(freqs[int(spec[1:].argmax()) + 1]) if len(spec) > 1 else 0.0
+        cent = float((freqs * spec).sum() / spec.sum())
+    return [
+        (
+            clip_id,
+            True,
+            float(np.sqrt(np.mean(pcm * pcm))),
+            float(np.abs(pcm).max()),
+            float((np.abs(pcm) >= 0.999).mean()),
+            zcr,
+            domf,
+            cent,
+        )
+    ]
+
+
 def extract_audio_features(df: DataFrame) -> DataFrame:
-    """Per-clip DSP features over Arrow batches: RMS, peak, clipping ratio,
-    zero-crossing rate, dominant frequency (rFFT argmax), spectral centroid.
+    """Per-clip DSP features: RMS, peak, clipping ratio, zero-crossing
+    rate, dominant frequency (rFFT argmax), spectral centroid.
 
     This is the engine's multimodal feature-extract operator: binary column
-    in, typed feature columns out, numpy per batch — the same plumbing a
+    in, typed feature columns out, numpy per clip — the same plumbing a
     compressed-codec decoder or an embedding model would slot into (those
     decoders aren't in this container: see decode_compressed)."""
-
-    def run(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            col = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            offsets, data = _binary_views(col["bytes"])
-            ok = np.zeros(n, dtype=bool)
-            rms = np.zeros(n)
-            peak = np.zeros(n)
-            clip_r = np.zeros(n)
-            zcr = np.zeros(n)
-            domf = np.zeros(n)
-            cent = np.zeros(n)
-            for i in range(n):
-                dec = _decode_wav_view(data[offsets[i] : offsets[i + 1]])
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                if len(pcm) == 0:
-                    continue
-                ok[i] = True
-                rms[i] = float(np.sqrt(np.mean(pcm * pcm)))
-                peak[i] = float(np.abs(pcm).max())
-                clip_r[i] = float((np.abs(pcm) >= 0.999).mean())
-                zcr[i] = float((np.diff(np.signbit(pcm)) != 0).mean()) if len(pcm) > 1 else 0.0
-                spec = np.abs(np.fft.rfft(pcm))
-                freqs = np.fft.rfftfreq(len(pcm), d=1.0 / sr)
-                if spec.sum() > 0:
-                    domf[i] = float(freqs[int(spec[1:].argmax()) + 1]) if len(spec) > 1 else 0.0
-                    cent[i] = float((freqs * spec).sum() / spec.sum())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    col["clip_id"],
-                    pa.array(ok),
-                    pa.array(rms),
-                    pa.array(peak),
-                    pa.array(clip_r),
-                    pa.array(zcr),
-                    pa.array(domf),
-                    pa.array(cent),
-                ],
-                names=[f.name for f in FEATURES_SCHEMA.fields],
-            )
-
-    return df.select("clip_id", "bytes").mapInArrow(run, FEATURES_SCHEMA)
+    return map_rows(df.select("clip_id", "bytes"), _audio_features, FEATURES_SCHEMA)
 
 
 # -- Spark-side: the vectorized SNR validation operator ----------------------
@@ -502,19 +485,6 @@ def _run_lengths(quiet: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return starts, ends - starts
 
 
-def _binary_views(arr) -> tuple[np.ndarray, np.ndarray]:
-    """(offsets, data) numpy views over an Arrow binary array's buffers —
-    zero-copy access to every payload; no per-row bytes objects."""
-    import pyarrow as pa
-
-    off_dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    offsets = np.frombuffer(arr.buffers()[1], dtype=off_dtype)[
-        arr.offset : arr.offset + len(arr) + 1
-    ]
-    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-    return offsets, data
-
-
 def _decode_wav_view(raw: np.ndarray) -> tuple[int, np.ndarray] | None:
     """decode_wav over a uint8 view (no copies except the 44-byte header and,
     when the PCM slice lands on an odd address, one aligned copy)."""
@@ -529,7 +499,7 @@ def _decode_wav_i16(raw: np.ndarray) -> tuple[int, np.ndarray] | None:
     """_decode_wav_view without the per-clip float conversion: returns the
     int16 sample view; the batch scorer converts whole shape-group matrices
     at once (one vectorized pass instead of one small astype per clip)."""
-    if len(raw) < 44:
+    if raw is None or len(raw) < 44:
         return None
     header = raw[:44].tobytes()
     if header[:4] != b"RIFF" or header[8:12] != b"WAVE":
@@ -829,45 +799,26 @@ def score_clips_from_files(
     )
 
 
+def _snr_row(clip_id, clip_index, sr_hz, raw, *carried):
+    dec = decode_audio(raw)
+    if dec is None:
+        return [(clip_id, False, -np.inf, False, *carried)]
+    sr, pcm = dec
+    ref = render_reference(clip_index, int(sr), len(pcm))
+    return [(clip_id, True, snr_db(ref, pcm), sr == sr_hz, *carried)]
+
+
 def snr_check(
     df: DataFrame, min_snr_db: float = 30.0, carry_cols: list[str] | None = None
 ) -> DataFrame:
     """Decode every clip's PCM and score SNR vs the deterministic reference
-    render — mapInPandas over Arrow batches (no per-row Python dispatch;
-    numpy does the per-clip math).
+    render, one clip at a time on the row runner (numpy does the per-clip
+    math).
 
     `carry_cols` rides extra input columns (e.g. codec) through the scan so
     callers don't need a join back to the (possibly generate-on-read)
     source — a second scan would re-run the generator and a shuffle."""
     carry = list(carry_cols or [])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["clip_id"].to_numpy()
-            idx = pdf["clip_index"].to_numpy(dtype=np.int64)
-            srs = pdf["sr_hz"].to_numpy()
-            out_ok = np.zeros(len(pdf), dtype=bool)
-            out_snr = np.full(len(pdf), -np.inf)
-            out_srm = np.zeros(len(pdf), dtype=bool)
-            for i, b in enumerate(pdf["bytes"]):
-                dec = decode_audio(b)
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                out_ok[i] = True
-                out_srm[i] = sr == srs[i]
-                ref = render_reference(int(idx[i]), int(sr), len(pcm))
-                out_snr[i] = snr_db(ref, pcm)
-            out = {
-                "clip_id": ids,
-                "decode_ok": out_ok,
-                "snr_db": out_snr,
-                "sr_match": out_srm,
-            }
-            for c in carry:
-                out[c] = pdf[c].to_numpy()
-            yield pd.DataFrame(out)
-
     # the reference render is keyed by the clip's content identity, which the
     # fixture encodes in the clip_id ("clip_%012d" % index) — duplicates
     # share both clip_id and payload, so this stays correct for them
@@ -878,12 +829,12 @@ def snr_check(
         ).alias("clip_index"),
         "sr_hz",
         "bytes",
-        *[c for c in carry if c not in ("clip_id", "sr_hz")],
+        *[F.col(c).alias(f"_carry{k}") for k, c in enumerate(carry)],
     )
     schema = StructType(
         SNR_SCHEMA.fields + [df.schema[c] for c in carry]
     )
-    return cols.mapInPandas(run, schema).withColumn(
+    return map_rows(cols, _snr_row, schema).withColumn(
         "snr_pass", F.col("decode_ok") & (F.col("snr_db") >= F.lit(min_snr_db))
     )
 
@@ -983,6 +934,26 @@ RESAMPLED_SCHEMA = StructType(
 )
 
 
+def resample_linear(pcm: np.ndarray, sr: int, target_sr: int) -> np.ndarray:
+    """Linear-interpolation resample of one float signal sr → target_sr
+    (output length round(len·target/sr), at least 1)."""
+    if sr == target_sr:
+        return pcm
+    n_out = max(int(round(len(pcm) * target_sr / sr)), 1)
+    t_out = np.arange(n_out, dtype=np.float64) * (sr / target_sr)
+    return np.interp(t_out, np.arange(len(pcm), dtype=np.float64), pcm)
+
+
+def _resampled_row(target_sr, clip_id, raw):
+    dec = decode_audio(raw)
+    if dec is None:
+        return [(clip_id, False, 0, 0, None)]
+    sr, pcm = dec
+    res = resample_linear(pcm, sr, target_sr)
+    out_pcm = np.clip(res * 32767.0, -32768, 32767).astype(np.int16)
+    return [(clip_id, True, target_sr, len(out_pcm), wav_bytes(out_pcm, target_sr))]
+
+
 def resample_clips(
     df: DataFrame,
     target_sr: int,
@@ -994,45 +965,14 @@ def resample_clips(
     feature extraction or model ingest (audio mirror of image
     resize_images). Binary WAV in, binary PCM16 WAV at target_sr out;
     undecodable clips pass through as NULL bytes with decode_ok=false.
-    One mapInPandas pass; np.interp per clip (vectorized over samples).
+    One scan; np.interp per clip (vectorized over samples).
     Compressed inputs (G.711/ADPCM WAV) decode transparently and re-emit
     as PCM16."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, oks, srs, ns, outs = [], [], [], [], []
-            for i, raw in enumerate(pdf[bytes_col]):
-                ids.append(pdf[id_col].iloc[i])
-                dec = decode_audio(raw)
-                if dec is None:
-                    oks.append(False)
-                    srs.append(0)
-                    ns.append(0)
-                    outs.append(None)
-                    continue
-                sr, pcm = dec
-                if sr == target_sr:
-                    res = pcm
-                else:
-                    n_out = max(int(round(len(pcm) * target_sr / sr)), 1)
-                    t_out = np.arange(n_out, dtype=np.float64) * (sr / target_sr)
-                    res = np.interp(t_out, np.arange(len(pcm), dtype=np.float64), pcm)
-                out_pcm = np.clip(res * 32767.0, -32768, 32767).astype(np.int16)
-                oks.append(True)
-                srs.append(target_sr)
-                ns.append(len(out_pcm))
-                outs.append(wav_bytes(out_pcm, target_sr))
-            yield pd.DataFrame(
-                {
-                    "clip_id": ids,
-                    "decode_ok": oks,
-                    "sr_hz": np.array(srs, dtype=np.int32),
-                    "n_samples": np.array(ns, dtype=np.int32),
-                    "bytes": outs,
-                }
-            )
-
-    return df.select(id_col, bytes_col).mapInPandas(run, RESAMPLED_SCHEMA)
+    return map_rows(
+        df.select(id_col, bytes_col),
+        functools.partial(_resampled_row, target_sr),
+        RESAMPLED_SCHEMA,
+    )
 
 
 # -- resample integrity check -------------------------------------------------
@@ -1049,53 +989,42 @@ RESAMPLE_CHECK_SCHEMA = StructType(
 )
 
 
+def _resample_check_row(resample, target_sr, min_snr_db, clip_id, sr_hz, raw):
+    """One clip of a resample check: decode → `resample` to `target_sr` →
+    SNR against the reference render at the new rate, clamped to ±999 dB."""
+    dec = decode_audio(raw)
+    if dec is None:
+        return [(clip_id, sr_hz, False, 0, -999.0, False)]
+    sr, pcm = dec
+    res = resample(pcm, sr, target_sr)
+    ref = render_reference(int(clip_id[5:]), target_sr, len(res))
+    snr = float(np.clip(snr_db(ref, res), -999.0, 999.0))
+    return [(clip_id, sr_hz, True, len(res), float(np.round(snr, 6)), snr >= min_snr_db)]
+
+
+def resample_check_rows(
+    df: DataFrame, resample, target_sr: int, min_snr_db: float
+) -> DataFrame:
+    """The resample check of every clip with resampler
+    `resample(pcm, sr, target_sr)` (the linear and the sinc paths)."""
+    return map_rows(
+        df.select("clip_id", "sr_hz", "bytes"),
+        functools.partial(_resample_check_row, resample, target_sr, min_snr_db),
+        RESAMPLE_CHECK_SCHEMA,
+    )
+
+
 def resample_check(df: DataFrame, target_sr: int = 16000, min_snr_db: float = 20.0) -> DataFrame:
     """Validate the resample stage end-to-end: decode → linear-interp to
     `target_sr` → SNR against the deterministic reference render AT THE NEW
     RATE. This is the check a pipeline runs after sample-rate normalization
     to prove the resampler didn't mangle content (phase drift, off-by-one
-    length math, aliasing of in-band energy). One mapInPandas scan; emits
+    length math, aliasing of in-band energy). One scan; emits
     the claimed sr_hz so stats group by original rate. SNR is clamped to
     ±999 dB (parquet/oracle-portable — no ±inf). The 20 dB bar reflects
     honest linear-interp error: a 500 Hz tone sampled at 8 kHz interpolates
     at ~-36 dB; anti-aliased polyphase resampling would raise it."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            ids = pdf["clip_id"].tolist()
-            srs = pdf["sr_hz"].to_numpy()
-            oks = np.zeros(n, dtype=bool)
-            nouts = np.zeros(n, dtype=np.int32)
-            snrs = np.full(n, -999.0)
-            for i, raw in enumerate(pdf["bytes"]):
-                dec = decode_audio(raw if isinstance(raw, bytes) else bytes(raw or b""))
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                oks[i] = True
-                if sr == target_sr:
-                    res = pcm
-                else:
-                    n_out = max(int(round(len(pcm) * target_sr / sr)), 1)
-                    t_out = np.arange(n_out, dtype=np.float64) * (sr / target_sr)
-                    res = np.interp(t_out, np.arange(len(pcm), dtype=np.float64), pcm)
-                nouts[i] = len(res)
-                idx = int(ids[i][5:])
-                ref = render_reference(idx, target_sr, len(res))
-                snrs[i] = float(np.clip(snr_db(ref, res), -999.0, 999.0))
-            yield pd.DataFrame(
-                {
-                    "clip_id": ids,
-                    "sr_hz": srs.astype(np.int32),
-                    "decode_ok": oks,
-                    "n_out": nouts,
-                    "snr_db": np.round(snrs, 6),
-                    "snr_pass": oks & (snrs >= min_snr_db),
-                }
-            )
-
-    return df.select("clip_id", "sr_hz", "bytes").mapInPandas(run, RESAMPLE_CHECK_SCHEMA)
+    return resample_check_rows(df, resample_linear, target_sr, min_snr_db)
 
 
 def clips_resampled(spark, sf_dir: str) -> DataFrame:

@@ -38,10 +38,7 @@ multimodal corpus the build brief targets.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -54,6 +51,7 @@ from pyspark.sql.types import (
 )
 
 from macrobase_spark.artifacts import artifact, decode_fixture_n
+from macrobase_spark.functions.rows import map_rows
 from macrobase_spark.operators.audio import decode_audio, sin_samples, splitmix64, u01
 from macrobase_spark.queries import register
 
@@ -111,35 +109,21 @@ FP_SCHEMA = StructType(
 )
 
 
+def _fingerprint_row(clip_id, raw):
+    dec = decode_audio(raw)
+    if dec is None:
+        return [(clip_id, False, 0, 0)]
+    return [(clip_id, True, *fingerprint_pcm(*dec))]
+
+
 def audio_fingerprints(
     df: DataFrame, id_col: str = "clip_id", bytes_col: str = "bytes"
 ) -> DataFrame:
-    """ONE mapInPandas scan of the payload column → (id, decode_ok, fp_hi,
+    """ONE scan of the payload column → (id, decode_ok, fp_hi,
     fp_lo). Compressed WAV payloads (G.711/ADPCM) decode transparently via
     decode_wav, so a mu-law re-encode of a PCM clip fingerprints to (nearly)
     the same bits — the property the near-dup join exploits."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            ids = pdf[id_col].tolist()
-            oks = np.zeros(n, dtype=bool)
-            his = np.zeros(n, dtype=np.int64)
-            los = np.zeros(n, dtype=np.int64)
-            for i, raw in enumerate(pdf[bytes_col]):
-                dec = decode_audio(raw if isinstance(raw, bytes) else bytes(raw or b""))
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                oks[i] = True
-                his[i], los[i] = fingerprint_pcm(sr, pcm)
-            yield pd.DataFrame(
-                {"clip_id": ids, "decode_ok": oks, "fp_hi": his, "fp_lo": los}
-            )
-
-    return df.select(
-        F.col(id_col).alias(id_col), F.col(bytes_col).alias(bytes_col)
-    ).mapInPandas(run, FP_SCHEMA)
+    return map_rows(df.select(id_col, bytes_col), _fingerprint_row, FP_SCHEMA)
 
 
 def audio_near_dup_pairs(
@@ -283,31 +267,21 @@ def generate_fp_clips(spark, n: int) -> DataFrame:
     tests; the dedup query never reads it)."""
     from macrobase_spark.operators.audio import wav_bytes, wav_bytes_codec
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, codecs, srcs = [], [], [], []
-            for i in pdf["id"]:
-                i = int(i)
-                sr = [16000, 22050, 44100][(i // 10) % 3]
-                kind = i % 10
-                src = i - kind if kind in (1, 2, 3) else i
-                pcm = fp_clip_content(src, sr)
-                if kind == 1:
-                    blob, codec = wav_bytes_codec(pcm, sr, "mulaw"), "mulaw"
-                elif kind == 2:
-                    blob, codec = wav_bytes_codec(pcm, sr, "adpcm"), "adpcm"
-                else:
-                    blob, codec = wav_bytes(pcm, sr), "pcm_s16le"
-                ids.append(f"fp_{i:012d}")
-                blobs.append(blob)
-                codecs.append(codec)
-                srcs.append(src)
-            yield pd.DataFrame(
-                {"clip_id": ids, "bytes": blobs, "codec": codecs, "src_id": srcs}
-            )
+    def gen(i):
+        sr = [16000, 22050, 44100][(i // 10) % 3]
+        kind = i % 10
+        src = i - kind if kind in (1, 2, 3) else i
+        pcm = fp_clip_content(src, sr)
+        if kind == 1:
+            blob, codec = wav_bytes_codec(pcm, sr, "mulaw"), "mulaw"
+        elif kind == 2:
+            blob, codec = wav_bytes_codec(pcm, sr, "adpcm"), "adpcm"
+        else:
+            blob, codec = wav_bytes(pcm, sr), "pcm_s16le"
+        return [(f"fp_{i:012d}", blob, codec, src)]
 
     parts = max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, FP_CLIPS_SCHEMA)
+    return map_rows(spark.range(0, n, numPartitions=parts), gen, FP_CLIPS_SCHEMA)
 
 
 # ---- registry query + oracle (materialized-fingerprint recipe) -------------

@@ -23,7 +23,7 @@ of the total, and bandwidth_ratio = rolloff_hz / (sr/2). Spectral
 flatness (geometric/arithmetic mean of the PSD) rides along as a
 tonality feature.
 
-Spark shape: the same single mapInArrow scan as every audio check — the
+Spark shape: the same single row-runner scan as every audio check — the
 payload bytes are touched once, the output is a ~40 B/clip feature
 relation, classification is a shared CASE over stored columns and the
 rollup is a tiny aggregate; DuckDB replays the relational layer verbatim
@@ -32,8 +32,6 @@ kernel is pinned by synthetic-comb tests in tests/test_bandwidth.py.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -48,6 +46,8 @@ from pyspark.sql.types import (
 )
 
 from macrobase_spark.artifacts import artifact, clip_fixture_n
+from macrobase_spark.functions.rows import map_rows
+from macrobase_spark.operators.audio import _decode_wav_view
 from macrobase_spark.queries import register
 
 FRAME = 2048
@@ -88,48 +88,30 @@ BANDWIDTH_SCHEMA = StructType(
 )
 
 
+def _bandwidth_row(clip_id, raw):
+    dec = _decode_wav_view(raw)
+    if dec is None:
+        return [(clip_id, False, 0, None, None, None)]
+    sr, pcm = dec
+    prof = spectral_profile(pcm, sr)
+    if prof is None:
+        return [(clip_id, False, sr, None, None, None)]
+    rolloff, flatness = prof
+    return [
+        (
+            clip_id,
+            True,
+            sr,
+            round(rolloff, 3),
+            round(rolloff / (sr / 2.0), 6),
+            round(flatness, 6),
+        )
+    ]
+
+
 def bandwidth_features(df: DataFrame) -> DataFrame:
-    """Per-clip spectral profile over Arrow batches (one scan of bytes)."""
-    from macrobase_spark.operators.audio import _binary_views, _decode_wav_view
-
-    def run(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            col = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            offsets, data = _binary_views(col["bytes"])
-            ok = np.zeros(n, dtype=bool)
-            srs = np.zeros(n, dtype=np.int32)
-            roll = np.full(n, np.nan)
-            ratio = np.full(n, np.nan)
-            flat = np.full(n, np.nan)
-            for i in range(n):
-                dec = _decode_wav_view(data[offsets[i] : offsets[i + 1]])
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                prof = spectral_profile(pcm, sr)
-                srs[i] = sr
-                if prof is None:
-                    continue
-                ok[i] = True
-                roll[i] = round(prof[0], 3)
-                ratio[i] = round(prof[0] / (sr / 2.0), 6)
-                flat[i] = round(prof[1], 6)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    col["clip_id"],
-                    pa.array(ok),
-                    pa.array(srs, type=pa.int32()),
-                    pa.array(roll, mask=np.isnan(roll)),
-                    pa.array(ratio, mask=np.isnan(ratio)),
-                    pa.array(flat, mask=np.isnan(flat)),
-                ],
-                names=[f.name for f in BANDWIDTH_SCHEMA.fields],
-            )
-
-    return df.select("clip_id", "bytes").mapInArrow(run, BANDWIDTH_SCHEMA)
+    """Per-clip spectral profile (one scan of bytes)."""
+    return map_rows(df.select("clip_id", "bytes"), _bandwidth_row, BANDWIDTH_SCHEMA)
 
 
 _CLASS_EXPR = """
@@ -159,8 +141,6 @@ def generate_bandwidth_clips(spark, n: int):
     - id % 31 == 8 -> digital silence                   'unmeasurable'
     - else         -> comb to 0.88 x Nyquist            'full_band'
     """
-    import pandas as pd
-
     from macrobase_spark.operators.audio import sin_samples, wav_bytes
     from macrobase_spark.operators.resample import resample_sinc
 
@@ -178,27 +158,22 @@ def generate_bandwidth_clips(spark, n: int):
             )
         return sig
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for s in pdf["id"]:
-                i = int(s)
-                if i % 31 == 8:
-                    sig = np.zeros(ns)
-                elif i % 13 == 2:
-                    lo = comb(8000, int(8000 * 0.8), 0.167 * 24000.0, i % 5)
-                    sig = resample_sinc(lo, 8000, sr)[:ns]
-                elif i % 7 == 3:
-                    sig = comb(sr, ns, 0.45 * 24000.0, i % 5)
-                else:
-                    sig = comb(sr, ns, 0.88 * 24000.0, i % 5)
-                pcm = np.clip(sig * 32767, -32768, 32767).astype(np.int16)
-                rows.append((f"bclip_{i:09d}", wav_bytes(pcm, sr)))
-            yield pd.DataFrame(rows, columns=["clip_id", "bytes"])
+    def gen(i):
+        if i % 31 == 8:
+            sig = np.zeros(ns)
+        elif i % 13 == 2:
+            lo = comb(8000, int(8000 * 0.8), 0.167 * 24000.0, i % 5)
+            sig = resample_sinc(lo, 8000, sr)[:ns]
+        elif i % 7 == 3:
+            sig = comb(sr, ns, 0.45 * 24000.0, i % 5)
+        else:
+            sig = comb(sr, ns, 0.88 * 24000.0, i % 5)
+        pcm = np.clip(sig * 32767, -32768, 32767).astype(np.int16)
+        return [(f"bclip_{i:09d}", wav_bytes(pcm, sr))]
 
     parts = max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(
-        gen, "clip_id string, bytes binary"
+    return map_rows(
+        spark.range(0, n, numPartitions=parts), gen, "clip_id string, bytes binary"
     )
 
 

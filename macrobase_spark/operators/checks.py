@@ -112,19 +112,11 @@ def uniqueness_check(scored: DataFrame) -> DataFrame:
     return _v(dups, "uniqueness", F.concat(F.lit("duplicate x"), F.col("n")))
 
 
-def null_checks(scored: DataFrame) -> DataFrame:
-    nulls = _v(scored.filter(F.col("transcript_null")), "null_transcript", "transcript is null")
-    empties = _v(
-        scored.filter(F.col("transcript_empty")), "empty_transcript", "transcript is empty"
-    )
-    return nulls.unionByName(empties)
-
-
 def row_local_checks(scored: DataFrame) -> DataFrame:
     """null/empty transcript + SNR violations in ONE scan: each row emits its
-    (possibly several) violation structs and explodes them — identical rows
-    to null_checks ∪ snr_violations, but one pass instead of three. At 10^12
-    rows every saved pass over the scored relation is a saved stage."""
+    (possibly several) violation structs and explodes them — one pass, not
+    one per check. At 10^12 rows every saved pass over the scored relation
+    is a saved stage."""
     snr_detail = F.when(~F.col("decode_ok"), F.lit("decode failed")).otherwise(
         F.concat(F.lit("snr_db="), F.round("snr_db", 1).cast("string"))
     )
@@ -157,17 +149,6 @@ def ref_integrity_check(scored: DataFrame, manifest: DataFrame) -> DataFrame:
     splitting covers hot keys otherwise. Anti join needs no dedup."""
     orphans = scored.join(manifest.select("clip_id"), "clip_id", "left_anti")
     return _v(orphans, "ref_integrity", "missing from manifest")
-
-
-def snr_violations(scored: DataFrame) -> DataFrame:
-    bad = scored.filter(~F.col("snr_pass"))
-    return _v(
-        bad,
-        "snr",
-        F.when(~F.col("decode_ok"), F.lit("decode failed")).otherwise(
-            F.concat(F.lit("snr_db="), F.round("snr_db", 1).cast("string"))
-        ),
-    )
 
 
 def mad_scores(meds: list[float]):

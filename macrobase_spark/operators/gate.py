@@ -12,7 +12,7 @@ spent. The per-format deep checks (decode+SNR for WAV/FLAC, the
 frame/page walks for mp3/ADTS/Ogg) each exist as their own operators;
 the gate is the router in front of them.
 
-Spark-first shape: ONE mapInPandas scan of the payload bytes emits a
+Spark-first shape: ONE row-runner scan of the payload bytes emits a
 narrow (clip_id, codec, format_detected, verdict, label_ok) relation;
 the stats rollup and the verdict/label CASE logic are codegen SQL
 replayed verbatim by the DuckDB oracle over the materialized gate
@@ -22,14 +22,11 @@ a mislabeled clip still lands in the RIGHT structural check.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from macrobase_spark.artifacts import artifact, decode_fixture_n
+from macrobase_spark.functions.rows import map_rows
 from macrobase_spark.queries import register
 from macrobase_spark.operators.aac import adts_stream, walk_adts
 from macrobase_spark.operators.mp3 import mp3_stream, walk_mp3
@@ -224,29 +221,32 @@ def gate_clip(buf: bytes | None) -> tuple[str, str]:
     return fmt, v
 
 
+def _gate_row(cid, codec, raw):
+    fmt, verdict = gate_clip(None if raw is None else raw.tobytes())
+    return [(cid, codec, fmt, verdict, EXPECTED_FORMAT.get(codec, "unknown") == fmt)]
+
+
 def transport_gate(df: DataFrame) -> DataFrame:
-    """ONE mapInPandas scan: sniff + route + structural check + label
+    """ONE scan: sniff + route + structural check + label
     agreement. Output is narrow; every downstream rollup is codegen."""
-
-    expected = EXPECTED_FORMAT
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for cid, codec, b in zip(pdf["clip_id"], pdf["codec"], pdf["bytes"]):
-                fmt, verdict = gate_clip(bytes(b) if b is not None else None)
-                out.append(
-                    (cid, codec, fmt, verdict, expected.get(codec, "unknown") == fmt)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["clip_id", "codec", "format_detected", "verdict", "label_ok"],
-            )
-
-    return df.select("clip_id", "codec", "bytes").mapInPandas(
-        run,
+    return map_rows(
+        df.select("clip_id", "codec", "bytes"),
+        _gate_row,
         "clip_id string, codec string, format_detected string, verdict string, label_ok boolean",
     )
+
+
+_MIXED_BUILDERS = [
+    ("mp3", lambda i: mp3_stream(i, 8)[0]),
+    ("aac", lambda i: adts_stream(i, 8)[0]),
+    ("opus", lambda i: ogg_opus_stream(i)[0]),
+]
+
+
+def _mixed_row(i):
+    k = i % 3
+    build_k = (k + 1) % 3 if i % 89 == 7 else k
+    return [(f"mix-{i:08d}", _MIXED_BUILDERS[build_k][1](i), _MIXED_BUILDERS[k][0])]
 
 
 def generate_mixed_clips(spark: SparkSession, n: int) -> DataFrame:
@@ -255,25 +255,7 @@ def generate_mixed_clips(spark: SparkSession, n: int) -> DataFrame:
     MISLABELING plant on top: id % 89 == 7 declares a codec whose bytes
     are actually the NEXT format in the cycle — the gate must still
     route by magic and flag label_ok=false."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        builders = [
-            ("mp3", lambda i: mp3_stream(i, 8)[0]),
-            ("aac", lambda i: adts_stream(i, 8)[0]),
-            ("opus", lambda i: ogg_opus_stream(i)[0]),
-        ]
-        for pdf in batches:
-            rows = []
-            for s in pdf["id"].to_numpy():
-                i = int(s)
-                k = i % 3
-                declared = builders[k][0]
-                build_k = (k + 1) % 3 if i % 89 == 7 else k
-                buf = builders[build_k][1](i)
-                rows.append((f"mix-{i:08d}", buf, declared))
-            yield pd.DataFrame(rows, columns=["clip_id", "bytes", "codec"])
-
-    return spark.range(n).mapInPandas(gen, "clip_id string, bytes binary, codec string")
+    return map_rows(spark.range(n), _mixed_row, "clip_id string, bytes binary, codec string")
 
 
 def mixed_fixture_gate(spark: SparkSession, sf_dir: str) -> DataFrame:

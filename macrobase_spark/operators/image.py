@@ -13,12 +13,12 @@ is format-agnostic via the magic-sniffing `decode_image` entry point, so
 another codec is a one-line dispatch.
 
 Operators:
-- `image_features`: mapInArrow pass → decode verdict + width/height +
+- `image_features`: one row-runner pass → decode verdict + width/height +
   channel means + luminance mean/std per image.
 - `resize_images`: nearest-neighbor resize (real numpy kernel), binary in →
   binary out, the shape every preprocessing pipeline needs.
 - `sample_frames`: video frame sampling over a length-prefixed frame
-  container — one row in, every k-th frame out (mapInPandas explode); the
+  container — one row in, every k-th frame out (a row-runner explode); the
   container here is the deterministic test fixture's, but the operator only
   assumes "binary blob → list of frame blobs", which is what a real
   demuxer plugs into.
@@ -26,10 +26,9 @@ Operators:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -41,6 +40,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from macrobase_spark.functions.rows import map_rows
 
 # -- PPM (P6) codec: real, stdlib+numpy ------------------------------------
 
@@ -203,9 +204,11 @@ def decode_png(raw: bytes) -> np.ndarray | None:
 def decode_image(raw: bytes) -> np.ndarray | None:
     """Magic-sniffing decode: PPM (P6) or PNG → (h, w, 3) uint8, None on
     corruption or unsupported format. The single entry every image operator
-    uses, so a new codec is a one-line dispatch."""
+    uses, so a new codec is a one-line dispatch. Takes bytes or any
+    buffer (the row runner's uint8 views)."""
     if raw is None or len(raw) < 8:
         return None
+    raw = bytes(raw)
     if raw[:2] == b"P6":
         return decode_ppm(raw)
     if raw[:8] == PNG_MAGIC:
@@ -265,46 +268,28 @@ IMAGE_FEATURES_SCHEMA = StructType(
 )
 
 
+def _image_features_row(image_id, raw):
+    img = decode_image(raw)
+    if img is None:
+        return [(image_id, False, 0, 0, 0.0, 0.0, 0.0, 0.0, 0.0)]
+    f = img.reshape(-1, 3).astype(np.float64)
+    luma = f @ np.array([0.2126, 0.7152, 0.0722])
+    return [
+        (
+            image_id,
+            True,
+            img.shape[1],
+            img.shape[0],
+            *f.mean(axis=0),
+            float(luma.mean()),
+            float(luma.std()),
+        )
+    ]
+
+
 def image_features(df: DataFrame, id_col: str = "image_id", bytes_col: str = "bytes") -> DataFrame:
-    """Binary column in, typed feature columns out — numpy per batch."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            ok = np.zeros(n, dtype=bool)
-            wd = np.zeros(n, dtype=np.int32)
-            ht = np.zeros(n, dtype=np.int32)
-            mr = np.zeros(n)
-            mg = np.zeros(n)
-            mb = np.zeros(n)
-            lm = np.zeros(n)
-            ls = np.zeros(n)
-            for i, raw in enumerate(pdf[bytes_col]):
-                img = decode_image(raw)
-                if img is None:
-                    continue
-                ok[i] = True
-                ht[i], wd[i] = img.shape[:2]
-                f = img.reshape(-1, 3).astype(np.float64)
-                mr[i], mg[i], mb[i] = f.mean(axis=0)
-                luma = f @ np.array([0.2126, 0.7152, 0.0722])
-                lm[i] = float(luma.mean())
-                ls[i] = float(luma.std())
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf[id_col].to_numpy(),
-                    "decode_ok": ok,
-                    "width": wd,
-                    "height": ht,
-                    "mean_r": mr,
-                    "mean_g": mg,
-                    "mean_b": mb,
-                    "luma_mean": lm,
-                    "luma_std": ls,
-                }
-            )
-
-    return df.select(id_col, bytes_col).mapInPandas(run, IMAGE_FEATURES_SCHEMA)
+    """Binary column in, typed feature columns out — numpy per image."""
+    return map_rows(df.select(id_col, bytes_col), _image_features_row, IMAGE_FEATURES_SCHEMA)
 
 
 RESIZED_SCHEMA = StructType(
@@ -316,27 +301,23 @@ RESIZED_SCHEMA = StructType(
 )
 
 
+def _resized_row(out_w, out_h, image_id, raw):
+    img = decode_image(raw)
+    if img is None:
+        return [(image_id, False, None)]
+    return [(image_id, True, ppm_bytes(resize_nearest(img, out_w, out_h)))]
+
+
 def resize_images(
     df: DataFrame, out_w: int, out_h: int, id_col: str = "image_id", bytes_col: str = "bytes"
 ) -> DataFrame:
     """Decode → nearest-neighbor resize → re-encode, binary in binary out
     (undecodable images pass through as NULL bytes with decode_ok=false)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, oks, outs = [], [], []
-            for i, raw in enumerate(pdf[bytes_col]):
-                img = decode_image(raw)
-                ids.append(pdf[id_col].iloc[i])
-                if img is None:
-                    oks.append(False)
-                    outs.append(None)
-                else:
-                    oks.append(True)
-                    outs.append(ppm_bytes(resize_nearest(img, out_w, out_h)))
-            yield pd.DataFrame({"image_id": ids, "decode_ok": oks, "bytes": outs})
-
-    return df.select(id_col, bytes_col).mapInPandas(run, RESIZED_SCHEMA)
+    return map_rows(
+        df.select(id_col, bytes_col),
+        functools.partial(_resized_row, out_w, out_h),
+        RESIZED_SCHEMA,
+    )
 
 
 # -- video: length-prefixed frame container ---------------------------------
@@ -388,21 +369,11 @@ def sample_frames(
     `frame`, embedding models, ...) compose directly. Corrupt containers
     yield no rows (they surface via the features/validation path instead)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids, idxs, blobs = [], [], []
-            for i, raw in enumerate(pdf[bytes_col]):
-                frames = split_video(raw)
-                if frames is None:
-                    continue
-                vid = pdf[id_col].iloc[i]
-                for j in range(0, len(frames), every_k):
-                    vids.append(vid)
-                    idxs.append(j)
-                    blobs.append(frames[j])
-            yield pd.DataFrame({"video_id": vids, "frame_idx": idxs, "frame": blobs})
+    def frames_of(vid, raw):
+        frames = split_video(None if raw is None else raw.tobytes())
+        return [(vid, j, frames[j]) for j in range(0, len(frames or []), every_k)]
 
-    return df.select(id_col, bytes_col).mapInPandas(run, FRAMES_SCHEMA)
+    return map_rows(df.select(id_col, bytes_col), frames_of, FRAMES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

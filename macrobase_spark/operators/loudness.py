@@ -21,7 +21,7 @@ surviving blocks). True peak = max |4x polyphase-sinc oversample|
 (reuses operators/resample.polyphase kernel).
 
 Spark shape (the part that must survive 10^12 clips):
-- ONE mapInArrow scan of the payload bytes does decode -> K-weight (FFT
+- ONE row-runner scan of the payload bytes does decode -> K-weight (FFT
   convolution with a memoized truncated impulse response — the IIR cascade
   run zero-state is exactly a causal FIR up to a sub-1e-10 truncation
   tail, so the whole filter is vectorized numpy, no per-sample Python) ->
@@ -36,8 +36,6 @@ Spark shape (the part that must survive 10^12 clips):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -51,6 +49,8 @@ from pyspark.sql.types import (
 )
 
 from macrobase_spark.artifacts import artifact, clip_fixture_n
+from macrobase_spark.functions.rows import map_rows
+from macrobase_spark.operators.audio import _decode_wav_view
 from macrobase_spark.queries import register
 
 # -- K-weighting filter design (BS.1770-4) -----------------------------------
@@ -185,65 +185,26 @@ LOUDNESS_SCHEMA = StructType(
 )
 
 
+def _loudness_rows(clip_id, raw):
+    dec = _decode_wav_view(raw)
+    if dec is None or len(dec[1]) == 0:
+        return []
+    sr, pcm = dec
+    sp = round(float(np.max(np.abs(pcm))), 6)
+    tp = round(true_peak(pcm, sr), 6)
+    msqs = block_mean_squares(pcm, sr)
+    if len(msqs) == 0:
+        return [(clip_id, sr, -1, 0.0, sp, tp)]
+    return [(clip_id, sr, j, float(m), sp, tp) for j, m in enumerate(msqs)]
+
+
 def loudness_blocks(df: DataFrame) -> DataFrame:
     """(clip_id, sr_hz, block_idx, msq, sample_peak, true_peak) — one row
     per 400 ms gating block; the per-clip peaks ride on every block row
     (~9 blocks/clip, so the redundancy is a few repeated doubles against a
     second scan of the payload bytes). Clips too short for one block emit
     a single block_idx=-1 sentinel row so they stay visible downstream."""
-    from macrobase_spark.operators.audio import _binary_views, _decode_wav_view
-
-    def run(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            col = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            offsets, data = _binary_views(col["bytes"])
-            ids = col["clip_id"].to_pylist()
-            out_id: list[str] = []
-            out_sr: list[int] = []
-            out_bi: list[int] = []
-            out_msq: list[float] = []
-            out_sp: list[float] = []
-            out_tp: list[float] = []
-            for i in range(b.num_rows):
-                dec = _decode_wav_view(data[offsets[i] : offsets[i + 1]])
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                if len(pcm) == 0:
-                    continue
-                sp = float(np.max(np.abs(pcm)))
-                tp = round(true_peak(pcm, sr), 6)
-                msqs = block_mean_squares(pcm, sr)
-                if len(msqs) == 0:
-                    out_id.append(ids[i])
-                    out_sr.append(sr)
-                    out_bi.append(-1)
-                    out_msq.append(0.0)
-                    out_sp.append(round(sp, 6))
-                    out_tp.append(tp)
-                    continue
-                for j, m in enumerate(msqs):
-                    out_id.append(ids[i])
-                    out_sr.append(sr)
-                    out_bi.append(j)
-                    out_msq.append(float(m))
-                    out_sp.append(round(sp, 6))
-                    out_tp.append(tp)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, type=pa.string()),
-                    pa.array(out_sr, type=pa.int32()),
-                    pa.array(out_bi, type=pa.int32()),
-                    pa.array(out_msq, type=pa.float64()),
-                    pa.array(out_sp, type=pa.float64()),
-                    pa.array(out_tp, type=pa.float64()),
-                ],
-                names=[f.name for f in LOUDNESS_SCHEMA.fields],
-            )
-
-    return df.select("clip_id", "bytes").mapInArrow(run, LOUDNESS_SCHEMA)
+    return map_rows(df.select("clip_id", "bytes"), _loudness_rows, LOUDNESS_SCHEMA)
 
 
 # -- gated integration (pure declarative, oracle-replayable) ------------------
@@ -320,35 +281,28 @@ def generate_loudness_clips(spark, n: int):
     - id % 11 == 3 -> amp 0.003 (~ -53.4 LUFS)        ('too_quiet')
     - else         -> amp 0.25  (~ -15.1 LUFS)        ('ok')
     """
-    import pandas as pd
-
     from macrobase_spark.operators.audio import sin_samples, wav_bytes
 
     sr = 16000
     ns = int(sr * 1.2)
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for s in pdf["id"]:
-                i = int(s)
-                if i % 19 == 5:
-                    sig = np.zeros(ns)
-                elif i % 17 == 9:
-                    sig = 0.97 * sin_samples(2 * np.pi * 4000.0 / sr, ns, np.pi / 4)
-                elif i % 13 == 7:
-                    sig = 0.5 * sin_samples(2 * np.pi * 997.0 / sr, ns)
-                elif i % 11 == 3:
-                    sig = 0.003 * sin_samples(2 * np.pi * 997.0 / sr, ns)
-                else:
-                    sig = 0.25 * sin_samples(2 * np.pi * 997.0 / sr, ns)
-                pcm = np.clip(sig * 32767, -32768, 32767).astype(np.int16)
-                rows.append((f"lclip_{i:09d}", wav_bytes(pcm, sr)))
-            yield pd.DataFrame(rows, columns=["clip_id", "bytes"])
+    def gen(i):
+        if i % 19 == 5:
+            sig = np.zeros(ns)
+        elif i % 17 == 9:
+            sig = 0.97 * sin_samples(2 * np.pi * 4000.0 / sr, ns, np.pi / 4)
+        elif i % 13 == 7:
+            sig = 0.5 * sin_samples(2 * np.pi * 997.0 / sr, ns)
+        elif i % 11 == 3:
+            sig = 0.003 * sin_samples(2 * np.pi * 997.0 / sr, ns)
+        else:
+            sig = 0.25 * sin_samples(2 * np.pi * 997.0 / sr, ns)
+        pcm = np.clip(sig * 32767, -32768, 32767).astype(np.int16)
+        return [(f"lclip_{i:09d}", wav_bytes(pcm, sr))]
 
     parts = max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(
-        gen, "clip_id string, bytes binary"
+    return map_rows(
+        spark.range(0, n, numPartitions=parts), gen, "clip_id string, bytes binary"
     )
 
 

@@ -2,11 +2,12 @@
 training-data pipeline derives from validated audio (mel filterbank over
 framed rFFT power spectra, log, DCT-II), pure numpy, one Arrow pass.
 
-Spark-first shape: `extract_mfcc` is a stateless mapInArrow over
-(clip_id, bytes) — the same one-scan discipline as the SNR kernel
-(operators/audio.py): payloads decode straight out of the Arrow binary
-buffer as numpy views, all frames of a clip go through ONE batched rFFT
-(np.fft.rfft over the (n_frames, frame) matrix), and the mel/DCT projection
+Spark-first shape: `extract_mfcc` is a stateless row-runner map
+(functions/rows.map_rows) over (clip_id, bytes) — the same one-scan
+discipline as the SNR kernel (operators/audio.py): payloads decode
+straight out of the Arrow binary buffer as numpy views, all frames of a
+clip go through ONE batched rFFT (np.fft.rfft over the (n_frames, frame)
+matrix), and the mel/DCT projection
 is two small GEMMs. Per-clip output is the frame-mean MFCC vector — a
 fixed-width `array<double>` ready for the embedding-similarity operators
 (similarity.py) or a drift monitor. At 10^12 rows the op is embarrassingly
@@ -23,6 +24,8 @@ contract (same plumbing as extract_audio_features, audio.py:355).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -34,6 +37,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from macrobase_spark.functions.rows import map_rows
+from macrobase_spark.operators.audio import _decode_wav_view
 
 N_MFCC = 13
 N_MELS = 26
@@ -132,6 +138,15 @@ def mfcc_clip(
     return logmel @ dct.T  # (n_frames, n_mfcc)
 
 
+def _mfcc_row(n_mfcc, n_mels, frame_ms, hop_ms, clip_id, raw):
+    dec = _decode_wav_view(raw)
+    if dec is None or dec[0] <= 0 or len(dec[1]) == 0:
+        return [(clip_id, False, 0, None)]
+    sr, pcm = dec
+    m = mfcc_clip(pcm, sr, n_mfcc, n_mels, frame_ms, hop_ms)
+    return [(clip_id, True, m.shape[0], np.round(m.mean(axis=0), 6))]
+
+
 def extract_mfcc(
     df: DataFrame,
     n_mfcc: int = N_MFCC,
@@ -139,42 +154,13 @@ def extract_mfcc(
     frame_ms: float = FRAME_MS,
     hop_ms: float = HOP_MS,
 ) -> DataFrame:
-    """Per-clip frame-mean MFCC vector over Arrow batches (mapInArrow,
-    zero-copy payload views — audio.py's scan discipline)."""
-    from macrobase_spark.operators.audio import _binary_views, _decode_wav_view
-
-    def run(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            col = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            offsets, data = _binary_views(col["bytes"])
-            ok = np.zeros(n, dtype=bool)
-            n_frames = np.zeros(n, dtype=np.int64)
-            vecs: list = [None] * n
-            for i in range(n):
-                dec = _decode_wav_view(data[offsets[i] : offsets[i + 1]])
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                if sr <= 0 or len(pcm) == 0:
-                    continue
-                m = mfcc_clip(pcm, sr, n_mfcc, n_mels, frame_ms, hop_ms)
-                ok[i] = True
-                n_frames[i] = m.shape[0]
-                vecs[i] = np.round(m.mean(axis=0), 6)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    col["clip_id"],
-                    pa.array(ok),
-                    pa.array(n_frames),
-                    pa.array(vecs, type=pa.list_(pa.float64())),
-                ],
-                names=[f.name for f in MFCC_SCHEMA.fields],
-            )
-
-    return df.select("clip_id", "bytes").mapInArrow(run, MFCC_SCHEMA)
+    """Per-clip frame-mean MFCC vector (one scan of bytes, zero-copy
+    payload views)."""
+    return map_rows(
+        df.select("clip_id", "bytes"),
+        functools.partial(_mfcc_row, n_mfcc, n_mels, frame_ms, hop_ms),
+        MFCC_SCHEMA,
+    )
 
 
 # ---- materialized fixture + registered query --------------------------------

@@ -17,7 +17,7 @@ Reference parity: the reference engine ingests CSV rows and has no
 binary payloads; this serves the build brief's multimodal validation
 contract (BASELINE input_hint: bytes:binary + codec:string).
 
-Spark-first shape: the walk is a mapInPandas pass over Arrow batches —
+Spark-first shape: the walk is a row-runner pass over Arrow batches —
 per clip it is an O(n_frames) pointer chase doing constant work per
 frame (a few int ops on 4 header bytes; ~8 frames per 200 ms fixture
 clip, ~380 frames for a real 10 s clip), with NO sample-level math, so
@@ -30,14 +30,12 @@ over the materialized profile parquet.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from macrobase_spark.artifacts import artifact, decode_fixture_n
+from macrobase_spark.functions.rows import map_rows
 from macrobase_spark.queries import register
 
 # MPEG-1 Layer III tables (ISO/IEC 11172-3). Index 0 = "free format"
@@ -117,23 +115,23 @@ def mp3_stream(clip_id: int, n_frames: int) -> tuple[bytes, int, int]:
     return buf, sr, true_dur_ms
 
 
-def generate_mp3_clips(spark: SparkSession, n: int, n_frames: int = 8) -> DataFrame:
-    """(clip_id, bytes, sr_hz, dur_ms, codec='mp3') fixture table —
-    deterministic at any partitioning (pure function of the id)."""
+_CLIPS_SCHEMA = "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for s in pdf["id"].to_numpy():
-                buf, sr, dur = mp3_stream(int(s), n_frames)
-                rows.append((f"mp3-{int(s):08d}", buf, sr, dur, "mp3"))
-            yield pd.DataFrame(
-                rows, columns=["clip_id", "bytes", "sr_hz", "dur_ms", "codec"]
-            )
 
-    return spark.range(n).mapInPandas(
-        gen, "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string"
+def stream_clips(spark: SparkSession, n: int, codec: str, stream) -> DataFrame:
+    """(clip_id, bytes, sr_hz, dur_ms, codec) fixture rows from
+    `stream(id) -> (payload, sr_hz, dur_ms)` — deterministic at any
+    partitioning (pure function of the id)."""
+    return map_rows(
+        spark.range(n),
+        lambda i: [(f"{codec}-{i:08d}", *stream(i), codec)],
+        _CLIPS_SCHEMA,
     )
+
+
+def generate_mp3_clips(spark: SparkSession, n: int, n_frames: int = 8) -> DataFrame:
+    """(clip_id, bytes, sr_hz, dur_ms, codec='mp3') fixture table."""
+    return stream_clips(spark, n, "mp3", lambda i: mp3_stream(i, n_frames))
 
 
 # ---------------------------------------------------------------------------
@@ -197,28 +195,21 @@ _PROFILE_SCHEMA = (
 )
 
 
+def stream_profiles(df: DataFrame, walk, schema: str) -> DataFrame:
+    """(clip_id, dur_ms, *walk(payload)) per clip in ONE scan of the
+    payload bytes (`walk` takes the payload as bytes, or None)."""
+    return map_rows(
+        df.select("clip_id", "dur_ms", "bytes"),
+        lambda cid, dm, raw: [(cid, dm, *walk(None if raw is None else raw.tobytes()))],
+        schema,
+    )
+
+
 def mp3_profiles(df: DataFrame) -> DataFrame:
-    """Per-clip stream profile in ONE mapInPandas scan of the payload
+    """Per-clip stream profile in ONE scan of the payload
     bytes; the output relation is narrow (no payload) so everything
     downstream is codegen over ~60-byte rows."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for cid, dm, b in zip(pdf["clip_id"], pdf["dur_ms"], pdf["bytes"]):
-                f, ed, sr, bmin, bmax, id3, tr, junk = walk_mp3(
-                    bytes(b) if b is not None else None
-                )
-                out.append((cid, int(dm), f, ed, sr, bmin, bmax, id3, tr, junk))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "clip_id", "dur_ms", "n_frames", "est_dur_ms", "sr_hz_stream",
-                    "br_kbps_min", "br_kbps_max", "id3_bytes", "truncated", "junk_trailing",
-                ],
-            )
-
-    return df.select("clip_id", "dur_ms", "bytes").mapInPandas(run, _PROFILE_SCHEMA)
+    return stream_profiles(df, walk_mp3, _PROFILE_SCHEMA)
 
 
 # verdict is a pure CASE over the profile columns — identical SQL in both

@@ -17,7 +17,7 @@ page; granule positions are 48 kHz PCM sample counts by the Opus
 mapping (RFC 7845 §4), so `(last_granule - pre_skip) / 48` is the
 stream's duration in ms, compared against the dur_ms metadata.
 
-Spark-first shape: identical to mp3/aac — one mapInPandas scan,
+Spark-first shape: identical to mp3/aac — one row-runner scan,
 O(pages) walk with a table-driven CRC over ~300-byte pages, narrow
 profile relation, verdict CASE + stats aggregate replayed verbatim by
 the DuckDB oracle over the materialized profiles.
@@ -26,15 +26,12 @@ the DuckDB oracle over the materialized profiles.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from macrobase_spark.artifacts import artifact, decode_fixture_n
-from macrobase_spark.operators.mp3 import stream_scorecard
+from macrobase_spark.operators.mp3 import stream_clips, stream_profiles, stream_scorecard
 from macrobase_spark.queries import register
 
 SAMPLES_PER_PACKET = 960  # one 20 ms Opus frame at the 48 kHz granule clock
@@ -186,20 +183,7 @@ def ogg_opus_stream(clip_id: int, n_audio_pages: int = 4, pkts_per_page: int = 3
 def generate_ogg_clips(spark: SparkSession, n: int) -> DataFrame:
     """(clip_id, bytes, sr_hz, dur_ms, codec='opus') fixture table —
     deterministic at any partitioning."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for s in pdf["id"].to_numpy():
-                buf, sr, dur = ogg_opus_stream(int(s))
-                rows.append((f"opus-{int(s):08d}", buf, sr, dur, "opus"))
-            yield pd.DataFrame(
-                rows, columns=["clip_id", "bytes", "sr_hz", "dur_ms", "codec"]
-            )
-
-    return spark.range(n).mapInPandas(
-        gen, "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string"
-    )
+    return stream_clips(spark, n, "opus", ogg_opus_stream)
 
 
 def walk_ogg(buf: bytes | None) -> tuple[int, int, int, bool, bool, int, int, float, bool, int]:
@@ -278,24 +262,8 @@ _PROFILE_SCHEMA = (
 
 
 def ogg_profiles(df: DataFrame) -> DataFrame:
-    """Per-clip Ogg profile in ONE mapInPandas scan of the payload."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for cid, dm, b in zip(pdf["clip_id"], pdf["dur_ms"], pdf["bytes"]):
-                r = walk_ogg(bytes(b) if b is not None else None)
-                out.append((cid, int(dm)) + r)
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "clip_id", "dur_ms", "n_pages", "n_crc_bad", "n_seq_gaps",
-                    "has_bos", "has_eos", "channels", "pre_skip",
-                    "est_dur_ms", "truncated", "junk_trailing",
-                ],
-            )
-
-    return df.select("clip_id", "dur_ms", "bytes").mapInPandas(run, _PROFILE_SCHEMA)
+    """Per-clip Ogg profile in ONE scan of the payload."""
+    return stream_profiles(df, walk_ogg, _PROFILE_SCHEMA)
 
 
 # precedence: unwalkable states first, then per-page damage, then

@@ -27,12 +27,11 @@ original (never mutating source data).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from macrobase_spark.artifacts import artifact, clip_fixture_n
+from macrobase_spark.functions.rows import map_rows
 from macrobase_spark.queries import register
 
 # Java-regex ∩ RE2 portable patterns (no lookaround, no backrefs)
@@ -100,31 +99,24 @@ def generate_pii_docs(spark, n: int) -> DataFrame:
     - id % 17 == 6 -> 2 emails + phone + ip (pii_heavy, 4 hits)
     - else         -> clean prose
     """
-    import pandas as pd
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for s in pdf["id"]:
-                i = int(s)
-                base = f"doc {i} alpha beta gamma delta epsilon zeta"
-                if i % 11 == 3:
-                    txt = f"{base} contact user{i}@example.com for details"
-                elif i % 13 == 4:
-                    txt = f"{base} call +123-555-{i % 10000:04d} from 10.0.{i % 256}.{(i * 7) % 256} now"
-                elif i % 17 == 6:
-                    txt = (
-                        f"{base} a{i}@mail.org b{i}@mail.org "
-                        f"123-555-{i % 10000:04d} host 192.168.{i % 256}.{(i * 3) % 256}"
-                    )
-                else:
-                    txt = f"{base} nothing sensitive here {i * 31}"
-                rows.append((i, txt))
-            yield pd.DataFrame(rows, columns=["doc_id", "text"])
+    def gen(i):
+        base = f"doc {i} alpha beta gamma delta epsilon zeta"
+        if i % 11 == 3:
+            txt = f"{base} contact user{i}@example.com for details"
+        elif i % 13 == 4:
+            txt = f"{base} call +123-555-{i % 10000:04d} from 10.0.{i % 256}.{(i * 7) % 256} now"
+        elif i % 17 == 6:
+            txt = (
+                f"{base} a{i}@mail.org b{i}@mail.org "
+                f"123-555-{i % 10000:04d} host 192.168.{i % 256}.{(i * 3) % 256}"
+            )
+        else:
+            txt = f"{base} nothing sensitive here {i * 31}"
+        return [(i, txt)]
 
     parts = max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(
-        gen, "doc_id long, text string"
+    return map_rows(
+        spark.range(0, n, numPartitions=parts), gen, "doc_id long, text string"
     )
 
 

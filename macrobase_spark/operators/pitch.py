@@ -23,7 +23,7 @@ no audio handling; this extends the build brief's multimodal contract
 alongside operators/audio.py (SNR), silence.py (dead air), loudness.py
 (BS.1770) and bandwidth.py (fake sample rate).
 
-Spark shape: the standard one-mapInArrow scan of the payload bytes ->
+Spark shape: the standard one row-runner scan of the payload bytes ->
 ~50 B/clip feature relation -> shared verdict CASE over stored columns
 -> tiny rollup. Per-clip kernel cost is bounded regardless of clip
 length (<= 16 YIN frames + one 65536-point rFFT), so the scan stays
@@ -33,8 +33,6 @@ pinned by planted-frequency recovery in tests/test_pitch.py.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -49,6 +47,8 @@ from pyspark.sql.types import (
 )
 
 from macrobase_spark.artifacts import artifact, clip_fixture_n
+from macrobase_spark.functions.rows import map_rows
+from macrobase_spark.operators.audio import _decode_wav_view
 from macrobase_spark.queries import register
 
 FRAME = 2048
@@ -162,50 +162,30 @@ PITCH_SCHEMA = StructType(
 )
 
 
+def _pitch_row(clip_id, raw):
+    dec = _decode_wav_view(raw)
+    if dec is None:
+        return [(clip_id, False, 0, None, None, None)]
+    sr, pcm = dec
+    prof = pitch_profile(pcm, sr)
+    if prof is None:
+        return [(clip_id, False, sr, None, None, None)]
+    f0, voiced, hum = prof
+    return [
+        (
+            clip_id,
+            True,
+            sr,
+            None if np.isnan(f0) else round(f0, 2),
+            round(voiced, 4),
+            None if np.isnan(hum) else round(hum, 2),
+        )
+    ]
+
+
 def pitch_features(df: DataFrame) -> DataFrame:
-    """Per-clip pitch/hum profile over Arrow batches (one scan of bytes)."""
-    from macrobase_spark.operators.audio import _binary_views, _decode_wav_view
-
-    def run(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            col = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            offsets, data = _binary_views(col["bytes"])
-            ok = np.zeros(n, dtype=bool)
-            srs = np.zeros(n, dtype=np.int32)
-            f0 = np.full(n, np.nan)
-            vr = np.full(n, np.nan)
-            hum = np.full(n, np.nan)
-            for i in range(n):
-                dec = _decode_wav_view(data[offsets[i] : offsets[i + 1]])
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                srs[i] = sr
-                prof = pitch_profile(pcm, sr)
-                if prof is None:
-                    continue
-                ok[i] = True
-                if not np.isnan(prof[0]):
-                    f0[i] = round(prof[0], 2)
-                vr[i] = round(prof[1], 4)
-                if not np.isnan(prof[2]):
-                    hum[i] = round(prof[2], 2)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    col["clip_id"],
-                    pa.array(ok),
-                    pa.array(srs, type=pa.int32()),
-                    pa.array(f0, mask=np.isnan(f0)),
-                    pa.array(vr, mask=np.isnan(vr)),
-                    pa.array(hum, mask=np.isnan(hum)),
-                ],
-                names=[f.name for f in PITCH_SCHEMA.fields],
-            )
-
-    return df.select("clip_id", "bytes").mapInArrow(run, PITCH_SCHEMA)
+    """Per-clip pitch/hum profile (one scan of bytes)."""
+    return map_rows(df.select("clip_id", "bytes"), _pitch_row, PITCH_SCHEMA)
 
 
 _CLASS_EXPR = """
@@ -236,8 +216,6 @@ def generate_pitch_clips(spark, n: int):
     - id % 7 == 3  -> deterministic uniform noise          'unvoiced'
     - else         -> 5-harmonic tone, f0 in {165..245}    'voiced'
     """
-    import pandas as pd
-
     from macrobase_spark.operators.audio import sin_samples, u01, wav_bytes
 
     sr = 48000
@@ -256,32 +234,25 @@ def generate_pitch_clips(spark, n: int):
         ids = np.arange(length, dtype=np.uint64)
         return 0.3 * (2.0 * u01(ids, salt=1000 + salt) - 1.0)
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for s in pdf["id"]:
-                i = int(s)
-                if i % 31 == 8:
-                    sig = np.zeros(ns)
-                elif i % 13 == 2:
-                    sig = harmonic(165.0 + 20.0 * (i % 5), ns, i % 5)
-                    sig += 0.35 * sin_samples(2 * np.pi * 50.0 / sr, ns)
-                elif i % 17 == 5:
-                    v = 6 * FRAME
-                    sig = np.concatenate(
-                        [harmonic(205.0, v, i % 5), noise(ns - v, i % 9)]
-                    )
-                elif i % 7 == 3:
-                    sig = noise(ns, i % 9)
-                else:
-                    sig = harmonic(165.0 + 20.0 * (i % 5), ns, i % 5)
-                pcm = np.clip(sig * 32767, -32768, 32767).astype(np.int16)
-                rows.append((f"pclip_{i:09d}", wav_bytes(pcm, sr)))
-            yield pd.DataFrame(rows, columns=["clip_id", "bytes"])
+    def gen(i):
+        if i % 31 == 8:
+            sig = np.zeros(ns)
+        elif i % 13 == 2:
+            sig = harmonic(165.0 + 20.0 * (i % 5), ns, i % 5)
+            sig += 0.35 * sin_samples(2 * np.pi * 50.0 / sr, ns)
+        elif i % 17 == 5:
+            v = 6 * FRAME
+            sig = np.concatenate([harmonic(205.0, v, i % 5), noise(ns - v, i % 9)])
+        elif i % 7 == 3:
+            sig = noise(ns, i % 9)
+        else:
+            sig = harmonic(165.0 + 20.0 * (i % 5), ns, i % 5)
+        pcm = np.clip(sig * 32767, -32768, 32767).astype(np.int16)
+        return [(f"pclip_{i:09d}", wav_bytes(pcm, sr))]
 
     parts = max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(
-        gen, "clip_id string, bytes binary"
+    return map_rows(
+        spark.range(0, n, numPartitions=parts), gen, "clip_id string, bytes binary"
     )
 
 

@@ -7,13 +7,15 @@ HAVING filter bounds the output, so it is safe at any scale. This is the
 input to the engine's salting/AQE-skew decisions (the clips fixture plants
 the skew it finds: ~60% opus, ~70% 16 kHz). Oracle-able exactly.
 
-`sketch_column_stats`: per-column profile using Spark's built-in Apache
-DataSketches aggregates — HLL for distinct counts, KLL for quantiles —
-which are JVM-side, single-pass, and MERGEABLE (executor partials union
-associatively), the property the north_star's "exact-merge sketches"
-contract names. Estimates are sketch-accurate, not exact, so the query
-registers rows-only with the driver; tests gate the relative error vs
-exact at small scale instead.
+`sketch_column_stats`: per-column profile from JVM-side, single-pass,
+MERGEABLE aggregates (executor partials union associatively), the
+property the north_star's "exact-merge sketches" contract names: the
+DataSketches HLL for distinct counts and `percentile_approx` (a
+Greenwald-Khanna summary) for quantiles. KLL would also merge, but its
+compaction is randomized, so its quantiles changed from run to run over
+the same input; percentile_approx returns the same values every run.
+Estimates are approximate, not exact, so the query registers without an
+oracle; tests gate the relative error vs exact at small scale instead.
 
 Reference parity: the reference's per-batch `Stats`/profiler only tracks
 memory (BasicMemoryProfiler); column profiling at scale is the build
@@ -69,10 +71,10 @@ def sketch_column_stats(
     df: DataFrame, numeric_cols: list[str], quantiles: tuple[float, ...] = (0.5, 0.95, 0.99)
 ) -> DataFrame:
     """Single-pass mergeable column profile: count, null count, min/max,
-    HLL-sketch distinct estimate, KLL-sketch quantiles. Everything is a
-    JVM-side DataSketches aggregate — no Python, no second scan, and the
-    per-partition sketch partials merge exactly (the property that makes
-    the same plan correct at 10^12 rows / thousands of executors).
+    HLL-sketch distinct estimate, percentile_approx quantiles (rank error
+    at most n/10000). Everything is a JVM-side aggregate — no Python, no
+    second scan, and the per-partition partials merge (the property that
+    makes the same plan correct at 10^12 rows / thousands of executors).
     Returns one row per column."""
     qnames = [f"p{int(q * 100)}" for q in quantiles]
     aggs = [F.count(F.lit(1)).alias("__n_rows")]
@@ -85,12 +87,7 @@ def sketch_column_stats(
             F.hll_sketch_estimate(F.hll_sketch_agg(col.cast("string"))).alias(
                 f"{c}__distinct"
             ),
-            *[
-                F.kll_sketch_get_quantile_double(
-                    F.kll_sketch_agg_double(d), F.lit(q)
-                ).alias(f"{c}__{qn}")
-                for q, qn in zip(quantiles, qnames)
-            ],
+            F.percentile_approx(d, list(quantiles)).alias(f"{c}__q"),
         ]
     one = df.agg(*aggs)  # ONE scan, one 1-row result
     structs = [
@@ -101,7 +98,7 @@ def sketch_column_stats(
             F.col(f"{c}__min").alias("min"),
             F.col(f"{c}__max").alias("max"),
             F.col(f"{c}__distinct").cast("long").alias("approx_distinct"),
-            *[F.col(f"{c}__{qn}").alias(qn) for qn in qnames],
+            *[F.col(f"{c}__q")[i].alias(qn) for i, qn in enumerate(qnames)],
         )
         for c in numeric_cols
     ]
@@ -132,8 +129,9 @@ def hot_keys_clips_q(spark, sf_dir):
     return hot_keys(scored, ["codec", "sr_hz"], min_share=0.2)
 
 
-@register("sketch_column_stats_clips")  # rows-only: sketch estimates are
-# engine-specific (DataSketches HLL/KLL), no cross-engine oracle exists;
+@register("sketch_column_stats_clips")  # rows-only: the estimates are
+# engine-specific (DataSketches HLL, Spark's percentile_approx), no
+# cross-engine oracle exists;
 # accuracy is gated vs exact in tests/test_profile.py instead.
 def sketch_column_stats_clips_q(spark, sf_dir):
     scored = spark.read.parquet(scored_parquet(spark, sf_dir))

@@ -18,7 +18,7 @@ one (n_out × K+1) GEMV-shaped product per clip, memory-bounded and
 Arrow-batch friendly. Filters are memoized per (L, M) — the corpus has
 five sample rates, so five tables ever.
 
-At 10^12 clips this runs inside the same single mapInPandas scan of
+At 10^12 clips this runs inside the same single row-runner scan of
 `bytes` as the linear path: map-only, zero shuffle, per-clip cost
 O(n_out · K).
 """
@@ -27,10 +27,8 @@ from __future__ import annotations
 
 from functools import lru_cache
 from math import gcd
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -104,46 +102,11 @@ def resample_check_sinc(
     rate. The bar is 40 dB (vs the linear path's honest 20): the fixture's
     planted noise floor caps a PERFECT resampler near ~46 dB, and linear
     interpolation of low-rate clips lands in the 20-36 dB band — so this
-    threshold certifies the anti-aliasing actually happened. Same one-scan
-    mapInPandas shape and schema as the linear check."""
-    from macrobase_spark.operators.audio import (
-        RESAMPLE_CHECK_SCHEMA,
-        decode_audio,
-        render_reference,
-        snr_db,
-    )
+    threshold certifies the anti-aliasing actually happened. The linear
+    check's per-clip function and schema with this resampler."""
+    from macrobase_spark.operators.audio import resample_check_rows
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            ids = pdf["clip_id"].tolist()
-            srs = pdf["sr_hz"].to_numpy()
-            oks = np.zeros(n, dtype=bool)
-            nouts = np.zeros(n, dtype=np.int32)
-            snrs = np.full(n, -999.0)
-            for i, raw in enumerate(pdf["bytes"]):
-                dec = decode_audio(raw if isinstance(raw, bytes) else bytes(raw or b""))
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                oks[i] = True
-                res = resample_sinc(pcm, sr, target_sr)
-                nouts[i] = len(res)
-                idx = int(ids[i][5:])
-                ref = render_reference(idx, target_sr, len(res))
-                snrs[i] = float(np.clip(snr_db(ref, res), -999.0, 999.0))
-            yield pd.DataFrame(
-                {
-                    "clip_id": ids,
-                    "sr_hz": srs.astype(np.int32),
-                    "decode_ok": oks,
-                    "n_out": nouts,
-                    "snr_db": np.round(snrs, 6),
-                    "snr_pass": oks & (snrs >= min_snr_db),
-                }
-            )
-
-    return df.select("clip_id", "sr_hz", "bytes").mapInPandas(run, RESAMPLE_CHECK_SCHEMA)
+    return resample_check_rows(df, resample_sinc, target_sr, min_snr_db)
 
 
 @artifact("resample_sinc", 1)

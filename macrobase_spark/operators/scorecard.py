@@ -3,7 +3,7 @@
 The suite's audio checks each own a bytes-scan (SNR, silence, loudness,
 bandwidth, pitch/hum). A production gate wants them TOGETHER, and at
 10^12 rows the decode dominates — so this operator fuses the whole
-scorecard into a single mapInArrow pass: decode once, then compute
+scorecard into a single row-runner pass: decode once, then compute
 level (RMS dBFS / peak / clipping ratio), dead air (silence ratio +
 longest run), spectral bandwidth (99% rolloff vs container Nyquist,
 via operators/bandwidth.spectral_profile), and voicing / mains hum
@@ -24,8 +24,6 @@ clips_validation_suite scan discipline.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,6 +37,11 @@ from pyspark.sql.types import (
 )
 
 from macrobase_spark.artifacts import artifact, clip_fixture_n
+from macrobase_spark.functions.rows import map_rows
+from macrobase_spark.operators.audio import _decode_wav_view, _run_lengths
+from macrobase_spark.operators.bandwidth import spectral_profile
+from macrobase_spark.operators.flac import decode_flac
+from macrobase_spark.operators.pitch import pitch_profile
 from macrobase_spark.queries import register
 
 SCORECARD_SCHEMA = StructType(
@@ -88,6 +91,40 @@ def _is_compressed_transport(raw: np.ndarray) -> bool:
     return False
 
 
+def _scorecard_row(clip_id, raw):
+    if raw is not None and _is_compressed_transport(raw):
+        return [(clip_id, False, "skipped_compressed", 0) + (None,) * 7]
+    dec = _decode_wav_view(raw)
+    if dec is None and raw is not None and raw[:4].tobytes() == b"fLaC":
+        dec = decode_flac(raw.tobytes())  # float64 in [-1, 1)
+    if dec is None or len(dec[1]) == 0:
+        return [(clip_id, False, "failed", 0) + (None,) * 7]
+    sr, pcm = dec
+    rms = float(np.sqrt(np.mean(pcm * pcm)))
+    quiet = np.abs(pcm) < 0.01
+    longest = 0.0
+    if quiet.any():
+        _, lens = _run_lengths(quiet)
+        longest = round(float(lens.max() * 1000.0 / sr), 3)
+    prof = spectral_profile(pcm, sr)
+    pp = pitch_profile(pcm, sr)
+    return [
+        (
+            clip_id,
+            True,
+            "ok",
+            sr,
+            round(20.0 * np.log10(max(rms, 1e-10)), 2),
+            round(float((np.abs(pcm) >= 0.999).mean()), 6),
+            round(float(quiet.mean()), 6),
+            longest,
+            None if prof is None else round(prof[0] / (sr / 2.0), 6),
+            None if pp is None else round(pp[1], 4),
+            None if pp is None or np.isnan(pp[2]) else round(pp[2], 2),
+        )
+    ]
+
+
 def scorecard_features(df: DataFrame) -> DataFrame:
     """All audio QA features from ONE decode per clip (one scan of bytes).
 
@@ -96,90 +133,7 @@ def scorecard_features(df: DataFrame) -> DataFrame:
     decode_status='skipped_compressed' — distinguished from 'failed'
     (corrupt/unknown payload) so corpus pass-rates never silently fold
     scope limits into failure stats."""
-    from macrobase_spark.operators.audio import (
-        _binary_views,
-        _decode_wav_view,
-        _run_lengths,
-    )
-    from macrobase_spark.operators.flac import decode_flac as _decode_flac
-    from macrobase_spark.operators.bandwidth import spectral_profile
-    from macrobase_spark.operators.pitch import pitch_profile
-
-    def run(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            col = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            offsets, data = _binary_views(col["bytes"])
-            ok = np.zeros(n, dtype=bool)
-            status = np.full(n, "failed", dtype=object)
-            srs = np.zeros(n, dtype=np.int32)
-            out = {
-                k: np.full(n, np.nan)
-                for k in (
-                    "rms_dbfs",
-                    "clip_ratio",
-                    "silence_ratio",
-                    "longest_silence_ms",
-                    "bandwidth_ratio",
-                    "voiced_ratio",
-                    "hum_db",
-                )
-            }
-            for i in range(n):
-                raw = data[offsets[i] : offsets[i + 1]]
-                if _is_compressed_transport(raw):
-                    status[i] = "skipped_compressed"
-                    continue
-                dec = _decode_wav_view(raw)
-                if dec is None and len(raw) >= 4 and raw[:4].tobytes() == b"fLaC":
-                    dec = _decode_flac(raw.tobytes())  # float64 in [-1, 1)
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                if len(pcm) == 0:
-                    continue
-                ok[i] = True
-                status[i] = "ok"
-                srs[i] = sr
-                rms = float(np.sqrt(np.mean(pcm * pcm)))
-                out["rms_dbfs"][i] = round(
-                    20.0 * np.log10(max(rms, 1e-10)), 2
-                )
-                out["clip_ratio"][i] = round(float((np.abs(pcm) >= 0.999).mean()), 6)
-                quiet = np.abs(pcm) < 0.01
-                out["silence_ratio"][i] = round(float(quiet.mean()), 6)
-                if quiet.any():
-                    _, lens = _run_lengths(quiet)
-                    out["longest_silence_ms"][i] = round(
-                        float(lens.max() * 1000.0 / sr), 3
-                    )
-                else:
-                    out["longest_silence_ms"][i] = 0.0
-                prof = spectral_profile(pcm, sr)
-                if prof is not None:
-                    out["bandwidth_ratio"][i] = round(prof[0] / (sr / 2.0), 6)
-                pp = pitch_profile(pcm, sr)
-                if pp is not None:
-                    out["voiced_ratio"][i] = round(pp[1], 4)
-                    if not np.isnan(pp[2]):
-                        out["hum_db"][i] = round(pp[2], 2)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    col["clip_id"],
-                    pa.array(ok),
-                    pa.array(list(status), type=pa.string()),
-                    pa.array(srs, type=pa.int32()),
-                    *[
-                        pa.array(out[f.name], mask=np.isnan(out[f.name]))
-                        for f in SCORECARD_SCHEMA.fields[4:]
-                    ],
-                ],
-                names=[f.name for f in SCORECARD_SCHEMA.fields],
-            )
-
-    return df.select("clip_id", "bytes").mapInArrow(run, SCORECARD_SCHEMA)
+    return map_rows(df.select("clip_id", "bytes"), _scorecard_row, SCORECARD_SCHEMA)
 
 
 # shared flag layer — identical text in the oracle
@@ -218,8 +172,6 @@ def generate_qa_clips(spark, n: int) -> DataFrame:
     silence (%31==8), hum (%13==2), upsampled (%11==5), clipped (%19==7),
     quiet -38 dBFS (%23==9), mid-clip 150 ms dead air (%29==11),
     else clean voiced wideband."""
-    import pandas as pd
-
     from macrobase_spark.operators.audio import sin_samples, u01, wav_bytes
     from macrobase_spark.operators.resample import resample_sinc
 
@@ -239,70 +191,60 @@ def generate_qa_clips(spark, n: int) -> DataFrame:
         per *= rms / np.sqrt(np.mean(per * per))
         return np.tile(per, length // period + 1)[:length]
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def gen(i):
         from macrobase_spark.operators.mp3 import mp3_frame
 
-        for pdf in batches:
-            rows = []
-            for s in pdf["id"]:
-                i = int(s)
-                if i % 41 == 13:
-                    # corrupt payload: no known magic, no sync anywhere —
-                    # must land in decode_status='failed'
-                    junk = (
-                        np.clip(
-                            (u01(np.arange(200, dtype=np.uint64), salt=911 + i) * 200),
-                            0,
-                            200,
-                        )
-                        .astype(np.uint8)
-                        .tobytes()
-                    )
-                    rows.append((f"qclip_{i:09d}", b"\x00\x01" + junk))
-                    continue
-                if i % 37 == 12:
-                    # structurally-valid mp3 frame stream: out of decode
-                    # scope → decode_status='skipped_compressed', never
-                    # counted as a decode FAILURE
-                    buf = b"".join(
-                        mp3_frame(7, i % 3, (i + k) % 2, seed=i * 31 + k)
-                        for k in range(4)
-                    )
-                    rows.append((f"qclip_{i:09d}", buf))
-                    continue
-                if i % 31 == 8:
-                    sig = np.zeros(ns)
-                elif i % 13 == 2:
-                    sig = wideband(ns, i % 7) + 0.35 * sin_samples(
-                        2 * np.pi * 50.0 / sr, ns
-                    )
-                elif i % 11 == 5:
-                    # 8 kHz-bandwidth content sinc-upsampled into the 48 kHz
-                    # container: a narrowband 5-harmonic voice stand-in
-                    f0 = 165.0 + 20.0 * (i % 5)
-                    lo = np.zeros(int(8000 * 0.8))
-                    for k in range(1, 6):
-                        lo += 0.12 * sin_samples(
-                            2 * np.pi * k * f0 / 8000.0, len(lo), phase=0.41 * k
-                        )
-                    sig = resample_sinc(lo, 8000, sr)[:ns]
-                elif i % 19 == 7:
-                    sig = np.clip(3.0 * wideband(ns, i % 7), -1.0, 1.0)
-                elif i % 23 == 9:
-                    sig = wideband(ns, i % 7, rms=0.0126)  # ~-38 dBFS
-                elif i % 29 == 11:
-                    sig = wideband(ns, i % 7)
-                    at = int(ns * 0.4)
-                    sig[at : at + int(sr * 0.150)] = 0.0  # mid-clip dead air
-                else:
-                    sig = wideband(ns, i % 7)
-                pcm = np.clip(sig * 32767, -32768, 32767).astype(np.int16)
-                rows.append((f"qclip_{i:09d}", wav_bytes(pcm, sr)))
-            yield pd.DataFrame(rows, columns=["clip_id", "bytes"])
+        if i % 41 == 13:
+            # corrupt payload: no known magic, no sync anywhere —
+            # must land in decode_status='failed'
+            junk = (
+                np.clip(
+                    (u01(np.arange(200, dtype=np.uint64), salt=911 + i) * 200),
+                    0,
+                    200,
+                )
+                .astype(np.uint8)
+                .tobytes()
+            )
+            return [(f"qclip_{i:09d}", b"\x00\x01" + junk)]
+        if i % 37 == 12:
+            # structurally-valid mp3 frame stream: out of decode
+            # scope → decode_status='skipped_compressed', never
+            # counted as a decode FAILURE
+            buf = b"".join(
+                mp3_frame(7, i % 3, (i + k) % 2, seed=i * 31 + k) for k in range(4)
+            )
+            return [(f"qclip_{i:09d}", buf)]
+        if i % 31 == 8:
+            sig = np.zeros(ns)
+        elif i % 13 == 2:
+            sig = wideband(ns, i % 7) + 0.35 * sin_samples(2 * np.pi * 50.0 / sr, ns)
+        elif i % 11 == 5:
+            # 8 kHz-bandwidth content sinc-upsampled into the 48 kHz
+            # container: a narrowband 5-harmonic voice stand-in
+            f0 = 165.0 + 20.0 * (i % 5)
+            lo = np.zeros(int(8000 * 0.8))
+            for k in range(1, 6):
+                lo += 0.12 * sin_samples(
+                    2 * np.pi * k * f0 / 8000.0, len(lo), phase=0.41 * k
+                )
+            sig = resample_sinc(lo, 8000, sr)[:ns]
+        elif i % 19 == 7:
+            sig = np.clip(3.0 * wideband(ns, i % 7), -1.0, 1.0)
+        elif i % 23 == 9:
+            sig = wideband(ns, i % 7, rms=0.0126)  # ~-38 dBFS
+        elif i % 29 == 11:
+            sig = wideband(ns, i % 7)
+            at = int(ns * 0.4)
+            sig[at : at + int(sr * 0.150)] = 0.0  # mid-clip dead air
+        else:
+            sig = wideband(ns, i % 7)
+        pcm = np.clip(sig * 32767, -32768, 32767).astype(np.int16)
+        return [(f"qclip_{i:09d}", wav_bytes(pcm, sr))]
 
     parts = max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(
-        gen, "clip_id string, bytes binary"
+    return map_rows(
+        spark.range(0, n, numPartitions=parts), gen, "clip_id string, bytes binary"
     )
 
 

@@ -4,7 +4,7 @@ cannot see.
 A clip can decode cleanly and still be unusable training data: fully
 silent (dead microphone), padded with long leading/trailing silence, or
 interrupted by mid-clip dead air. `silence_features` measures this in ONE
-Arrow pass over the payload bytes (the same mapInArrow plumbing as
+pass over the payload bytes (the same row runner as
 audio.extract_audio_features): per clip, the silence ratio, the
 leading/trailing silent span, the longest silent run, and the count of
 silent runs at least `min_run_ms` long — all from a single boolean
@@ -29,7 +29,7 @@ payload bytes never enter the JVM when scanned via the files path).
 
 from __future__ import annotations
 
-from typing import Iterator
+import functools
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -45,6 +45,7 @@ from pyspark.sql.types import (
 )
 
 from macrobase_spark.artifacts import artifact, clip_fixture_n
+from macrobase_spark.functions.rows import map_rows
 from macrobase_spark.queries import register
 
 SILENCE_SCHEMA = StructType(
@@ -62,71 +63,56 @@ SILENCE_SCHEMA = StructType(
 )
 
 
-from macrobase_spark.operators.audio import _run_lengths  # shared kernel helper
+from macrobase_spark.operators.audio import _decode_wav_view, _run_lengths
 from macrobase_spark.operators.clips_suite import scored_parquet
+
+
+def _silence_row(thresh, min_run_ms, clip_id, raw):
+    dec = _decode_wav_view(raw)
+    if dec is None or len(dec[1]) == 0:
+        return [(clip_id, False, 0, 0, 0.0, 0.0, 0.0, 0.0, 0)]
+    sr, pcm = dec
+    quiet = np.abs(pcm) < thresh
+    lead = trail = longest = 0.0
+    nruns = 0
+    if quiet.any():
+        starts, lens = _run_lengths(quiet)
+        ms = 1000.0 / sr
+        if starts[0] == 0:
+            lead = lens[0] * ms
+        if starts[-1] + lens[-1] == len(pcm):
+            trail = lens[-1] * ms
+        longest = lens.max() * ms
+        nruns = int((lens * ms >= min_run_ms).sum())
+    # np.round, as the fused scan (audio.score_record_batch) rounds: the two
+    # must agree bit for bit, and Python's round differs near halfway points
+    return [
+        (
+            clip_id,
+            True,
+            sr,
+            len(pcm),
+            np.round(quiet.mean(), 6),
+            np.round(lead, 3),
+            np.round(trail, 3),
+            np.round(longest, 3),
+            nruns,
+        )
+    ]
 
 
 def silence_features(
     df: DataFrame, thresh: float = 0.01, min_run_ms: float = 50.0
 ) -> DataFrame:
-    """Per-clip silence profile over Arrow batches. `thresh` is the
+    """Per-clip silence profile. `thresh` is the
     full-scale amplitude below which a sample counts as silent; a tone's
     isolated zero-crossing samples form sub-millisecond runs that only the
     ratio sees, so the run statistics isolate REAL silent spans."""
-    from macrobase_spark.operators.audio import _binary_views, _decode_wav_view
-
-    def run(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            col = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            offsets, data = _binary_views(col["bytes"])
-            ok = np.zeros(n, dtype=bool)
-            srs = np.zeros(n, dtype=np.int32)
-            nsamp = np.zeros(n, dtype=np.int64)
-            ratio = np.zeros(n)
-            lead = np.zeros(n)
-            trail = np.zeros(n)
-            longest = np.zeros(n)
-            nruns = np.zeros(n, dtype=np.int64)
-            for i in range(n):
-                dec = _decode_wav_view(data[offsets[i] : offsets[i + 1]])
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                if len(pcm) == 0:
-                    continue
-                ok[i] = True
-                srs[i] = sr
-                nsamp[i] = len(pcm)
-                quiet = np.abs(pcm) < thresh
-                ratio[i] = float(quiet.mean())
-                if quiet.any():
-                    starts, lens = _run_lengths(quiet)
-                    ms = 1000.0 / sr
-                    if starts[0] == 0:
-                        lead[i] = lens[0] * ms
-                    if starts[-1] + lens[-1] == len(pcm):
-                        trail[i] = lens[-1] * ms
-                    longest[i] = lens.max() * ms
-                    nruns[i] = int((lens * ms >= min_run_ms).sum())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    col["clip_id"],
-                    pa.array(ok),
-                    pa.array(srs, type=pa.int32()),
-                    pa.array(nsamp),
-                    pa.array(np.round(ratio, 6)),
-                    pa.array(np.round(lead, 3)),
-                    pa.array(np.round(trail, 3)),
-                    pa.array(np.round(longest, 3)),
-                    pa.array(nruns),
-                ],
-                names=[f.name for f in SILENCE_SCHEMA.fields],
-            )
-
-    return df.select("clip_id", "bytes").mapInArrow(run, SILENCE_SCHEMA)
+    return map_rows(
+        df.select("clip_id", "bytes"),
+        functools.partial(_silence_row, thresh, min_run_ms),
+        SILENCE_SCHEMA,
+    )
 
 
 _CLASS_EXPR = """
@@ -158,39 +144,32 @@ def generate_silence_clips(spark, n: int):
     (pads stay under the 100 ms dead-air bar so the classes are disjoint)
     (precedence as in _CLASS_EXPR: dead_clip > dead_air > padded)
     """
-    import pandas as pd
-
     from macrobase_spark.operators.audio import sin_samples, tone_hz, wav_bytes
 
     sr = 16000
     base_n = int(sr * 0.4)
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for s in pdf["id"]:
-                i = int(s)
-                f0 = float(tone_hz(np.array([i], dtype=np.uint64))[0])
-                sig = 0.8 * sin_samples(2 * np.pi * f0 / sr, base_n)  # libm-free
-                if i % 23 == 4:
-                    sig = np.zeros(base_n)
-                elif i % 7 == 2:
-                    gap = int(sr * 0.150)
-                    at = int(base_n * 0.4)
-                    sig = np.concatenate([sig[:at], np.zeros(gap), sig[at:]])
-                elif i % 5 == 1:
-                    pad = int(sr * (0.055 + 0.010 * (i % 4)))
-                    sig = np.concatenate([np.zeros(pad), sig])
-                elif i % 5 == 3:
-                    pad = int(sr * (0.060 + 0.015 * (i % 3)))
-                    sig = np.concatenate([sig, np.zeros(pad)])
-                pcm = np.clip(sig * 32767, -32768, 32767).astype(np.int16)
-                rows.append((f"sclip_{i:09d}", wav_bytes(pcm, sr)))
-            yield pd.DataFrame(rows, columns=["clip_id", "bytes"])
+    def gen(i):
+        f0 = float(tone_hz(np.array([i], dtype=np.uint64))[0])
+        sig = 0.8 * sin_samples(2 * np.pi * f0 / sr, base_n)  # libm-free
+        if i % 23 == 4:
+            sig = np.zeros(base_n)
+        elif i % 7 == 2:
+            gap = int(sr * 0.150)
+            at = int(base_n * 0.4)
+            sig = np.concatenate([sig[:at], np.zeros(gap), sig[at:]])
+        elif i % 5 == 1:
+            pad = int(sr * (0.055 + 0.010 * (i % 4)))
+            sig = np.concatenate([np.zeros(pad), sig])
+        elif i % 5 == 3:
+            pad = int(sr * (0.060 + 0.015 * (i % 3)))
+            sig = np.concatenate([sig, np.zeros(pad)])
+        pcm = np.clip(sig * 32767, -32768, 32767).astype(np.int16)
+        return [(f"sclip_{i:09d}", wav_bytes(pcm, sr))]
 
     parts = max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(
-        gen, "clip_id string, bytes binary"
+    return map_rows(
+        spark.range(0, n, numPartitions=parts), gen, "clip_id string, bytes binary"
     )
 
 

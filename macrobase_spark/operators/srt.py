@@ -17,7 +17,7 @@ engines:
 - coverage:     sum(cue spans)/dur_ms — how much of the audio is
                 transcribed (reported for clean clips)
 
-Spark-first split: the ONLY Python is the tokenizer (mapInPandas,
+Spark-first split: the ONLY Python is the tokenizer (the row runner,
 O(lines) per clip, constant work per line — same family as the
 mp3/ADTS/Ogg walkers); ordering/overlap/bounds/coverage are window +
 aggregate SQL (one clip_id Exchange), replayed verbatim by the DuckDB
@@ -32,14 +32,13 @@ the build brief's audio+transcript input contract.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from macrobase_spark.artifacts import artifact, decode_fixture_n
+from macrobase_spark.functions.rows import map_rows
 from macrobase_spark.queries import register
 
 _TS = re.compile(r"^(\d{2}):([0-5]\d):([0-5]\d),(\d{3})$")
@@ -144,16 +143,17 @@ def generate_srt_clips(spark: SparkSession, n: int, n_cues: int = 5) -> DataFram
             blocks.append(f"{idx}\n{ts}\n{w}")
         return dur_ms, "\n\n".join(blocks)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid in pdf["id"].to_numpy():
-                i = int(sid)
-                dur, srt = build(i)
-                rows.append((f"srt-{i:08d}", dur, srt))
-            yield pd.DataFrame(rows, columns=["clip_id", "dur_ms", "transcript_srt"])
+    return _document_table(spark, n, "srt", build)
 
-    return spark.range(n).mapInPandas(gen, "clip_id string, dur_ms int, transcript_srt string")
+
+def _document_table(spark: SparkSession, n: int, prefix: str, build) -> DataFrame:
+    """(clip_id, dur_ms, transcript_srt) rows from `build(id) -> (dur_ms,
+    document)`."""
+    return map_rows(
+        spark.range(n),
+        lambda i: [(f"{prefix}-{i:08d}", *build(i))],
+        "clip_id string, dur_ms int, transcript_srt string",
+    )
 
 
 _VTT_TS = re.compile(r"^(?:(\d{1,2}):)?([0-5]\d):([0-5]\d)\.(\d{3})$")
@@ -178,7 +178,7 @@ def parse_vtt(text: str | None) -> list[tuple[int, int | None, int | None, int, 
     for block in blocks[1:]:
         # drop whitespace-only lines too: a line of just " " would survive
         # an `!= ""` filter and make the first-token split below index an
-        # empty list (IndexError inside mapInPandas = dead Spark task)
+        # empty list (an IndexError inside the tokenizer = dead Spark task)
         lines = [ln for ln in block.split("\n") if ln.strip()]
         # comment/style blocks: FIRST TOKEN is NOTE/STYLE/REGION (a cue
         # identifier may legally merely START with those letters, e.g.
@@ -232,16 +232,7 @@ def generate_vtt_clips(spark: SparkSession, n: int, n_cues: int = 5) -> DataFram
             doc = doc.split("\n\n", 1)[1]  # drop the WEBVTT header
         return dur_ms, doc
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid in pdf["id"].to_numpy():
-                i = int(sid)
-                dur, doc = build(i)
-                rows.append((f"vtt-{i:08d}", dur, doc))
-            yield pd.DataFrame(rows, columns=["clip_id", "dur_ms", "transcript_srt"])
-
-    return spark.range(n).mapInPandas(gen, "clip_id string, dur_ms int, transcript_srt string")
+    return _document_table(spark, n, "vtt", build)
 
 
 _CUE_SCHEMA = (
@@ -251,26 +242,15 @@ _CUE_SCHEMA = (
 
 
 def srt_cues(df: DataFrame, dialect: str = "srt") -> DataFrame:
-    """ONE mapInPandas tokenize pass -> the narrow cue relation. All
+    """ONE tokenize pass -> the narrow cue relation. All
     timing semantics live in SQL downstream. `dialect` picks the
     tokenizer ('srt' or 'vtt'); the validation layer is shared."""
     parse = {"srt": parse_srt, "vtt": parse_vtt}[dialect]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for cid, dm, txt in zip(pdf["clip_id"], pdf["dur_ms"], pdf["transcript_srt"]):
-                for pos, start, end, nch, bad in parse(txt):
-                    out.append((cid, int(dm), pos, start, end, nch, bad))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "clip_id", "dur_ms", "cue_idx", "start_ms", "end_ms",
-                    "n_chars", "malformed",
-                ],
-            )
-
-    return df.select("clip_id", "dur_ms", "transcript_srt").mapInPandas(run, _CUE_SCHEMA)
+    return map_rows(
+        df.select("clip_id", "dur_ms", "transcript_srt"),
+        lambda cid, dm, txt: [(cid, dm, *cue) for cue in parse(txt)],
+        _CUE_SCHEMA,
+    )
 
 
 def srt_clip_verdicts(cues: DataFrame) -> DataFrame:

@@ -22,15 +22,15 @@ follow the fixture conventions of sources/clips.py (pure functions of id).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from macrobase_spark.artifacts import artifact
+from macrobase_spark.functions.rows import map_rows
 from macrobase_spark.operators.clips_suite import clips_n, clips_table_path
 from macrobase_spark.queries import register
 from macrobase_spark.sources.clips import WORDS, row_params, splitmix64
@@ -77,6 +77,15 @@ def _mutate(i: int, ref: str) -> str | None:
     return ref
 
 
+@functools.lru_cache(maxsize=1)
+def _params_block(block: int) -> tuple[list[str], list[int]]:
+    """(codec, n_words) of ids block·1024 .. block·1024+1023: `row_params`
+    is vectorized (one call per id costs ~10× the transcript itself), and
+    a partition's ids are consecutive."""
+    p = row_params(np.arange(block << 10, (block + 1) << 10))
+    return p.codec.tolist(), p.n_words.tolist()
+
+
 def generate_transcript_pairs(
     spark: SparkSession, n: int, partitions: int | None = None
 ) -> DataFrame:
@@ -84,21 +93,13 @@ def generate_transcript_pairs(
     cycles through the planted mutations above; everything is a pure
     function of id, so the relation is identical at any parallelism."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            p = row_params(ids)
-            rows = []
-            for s, r in zip(ids, p.itertuples()):
-                i = int(s)
-                ref = _ref_transcript(i, int(r.n_words))
-                rows.append((f"clip_{i:012d}", r.codec, _mutate(i, ref), ref))
-            yield pd.DataFrame(
-                rows, columns=["clip_id", "codec", "transcript", "ref_transcript"]
-            )
+    def gen(i):
+        codecs, n_words = _params_block(i >> 10)
+        ref = _ref_transcript(i, n_words[i & 1023])
+        return [(f"clip_{i:012d}", codecs[i & 1023], _mutate(i, ref), ref)]
 
     parts = partitions or max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, PAIR_SCHEMA)
+    return map_rows(spark.range(0, n, numPartitions=parts), gen, PAIR_SCHEMA)
 
 
 def transcript_integrity(

@@ -12,12 +12,10 @@ are exactly computable, so feature extraction is testable bit-for-bit.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from macrobase_spark.functions.rows import map_rows
 from macrobase_spark.operators.audio import splitmix64
 from macrobase_spark.operators.image import ppm_bytes, video_bytes
 
@@ -48,29 +46,22 @@ def _image_payload(i: int, w: int, h: int) -> bytes:
     return raw
 
 
-def generate_images(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].to_numpy():
-                i = int(i)
-                w, h = SIZES[i % len(SIZES)]
-                rows.append(
-                    (
-                        f"img_{i:010d}",
-                        _image_payload(i, w, h),
-                        w,
-                        h,
-                        "ppm",
-                        LABELS[i % len(LABELS)],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "width", "height", "fmt", "label"]
-            )
+def _image_table(
+    spark: SparkSession, n: int, partitions: int | None, prefix: str, fmt: str, payload
+) -> DataFrame:
+    """IMAGES_SCHEMA rows from `payload(id, w, h) -> bytes`; the size and
+    label cycle with the id."""
+
+    def gen(i):
+        w, h = SIZES[i % len(SIZES)]
+        return [(f"{prefix}_{i:010d}", payload(i, w, h), w, h, fmt, LABELS[i % len(LABELS)])]
 
     parts = partitions or max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, IMAGES_SCHEMA)
+    return map_rows(spark.range(0, n, numPartitions=parts), gen, IMAGES_SCHEMA)
+
+
+def generate_images(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
+    return _image_table(spark, n, partitions, "img", "ppm", _image_payload)
 
 
 def generate_videos(
@@ -79,25 +70,17 @@ def generate_videos(
     """Videos = FRMV containers of PPM frames (frame f of video i is the
     gradient image of id i*1000+f)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].to_numpy():
-                i = int(i)
-                w, h = SIZES[i % len(SIZES)]
-                frames = [
-                    ppm_bytes(image_array(i * 1000 + f, w, h))
-                    for f in range(frames_per_video)
-                ]
-                raw = video_bytes(frames)
-                if i % 53 == 3:  # planted: truncated container
-                    raw = raw[: len(raw) // 3]
-                rows.append((f"vid_{i:010d}", raw, frames_per_video))
-            yield pd.DataFrame(rows, columns=["video_id", "bytes", "n_frames"])
+    def gen(i):
+        w, h = SIZES[i % len(SIZES)]
+        frames = [ppm_bytes(image_array(i * 1000 + f, w, h)) for f in range(frames_per_video)]
+        raw = video_bytes(frames)
+        if i % 53 == 3:  # planted: truncated container
+            raw = raw[: len(raw) // 3]
+        return [(f"vid_{i:010d}", raw, frames_per_video)]
 
     parts = partitions or max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(
-        gen, "video_id string, bytes binary, n_frames int"
+    return map_rows(
+        spark.range(0, n, numPartitions=parts), gen, "video_id string, bytes binary, n_frames int"
     )
 
 
@@ -113,28 +96,17 @@ def generate_png_images(spark: SparkSession, n: int, partitions: int | None = No
     """
     from macrobase_spark.operators.image import encode_png
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].to_numpy():
-                i = int(i)
-                w, h = SIZES[i % len(SIZES)]
-                raw = encode_png(image_array(i, w, h))
-                if i % 89 == 11:  # corrupt: flip a byte inside the IDAT chunk
-                    b = bytearray(raw)
-                    b[len(b) // 2] ^= 0xFF
-                    raw = bytes(b)
-                elif i % 113 == 17:  # truncated
-                    raw = raw[: len(raw) // 2]
-                rows.append(
-                    (f"png_{i:010d}", raw, w, h, "png", LABELS[i % len(LABELS)])
-                )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "width", "height", "fmt", "label"]
-            )
+    def payload(i, w, h):
+        raw = encode_png(image_array(i, w, h))
+        if i % 89 == 11:  # corrupt: flip a byte inside the IDAT chunk
+            b = bytearray(raw)
+            b[len(b) // 2] ^= 0xFF
+            return bytes(b)
+        if i % 113 == 17:  # truncated
+            return raw[: len(raw) // 2]
+        return raw
 
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, IMAGES_SCHEMA)
+    return _image_table(spark, n, partitions, "png", "png", payload)
 
 
 def generate_jpeg_images(
@@ -151,29 +123,18 @@ def generate_jpeg_images(
     """
     from macrobase_spark.operators.jpeg import encode_jpeg
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].to_numpy():
-                i = int(i)
-                w, h = SIZES[i % len(SIZES)]
-                rst = 4 if i % 3 == 0 else 0
-                raw = encode_jpeg(image_array(i, w, h), quality=90, restart_interval=rst)
-                if i % 103 == 23:  # corrupt: break the segment walk
-                    b = bytearray(raw)
-                    b[4] ^= 0xFF
-                    raw = bytes(b)
-                elif i % 137 == 31:  # truncated mid-entropy
-                    raw = raw[: len(raw) // 2]
-                rows.append(
-                    (f"jpg_{i:010d}", raw, w, h, "jpeg", LABELS[i % len(LABELS)])
-                )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "width", "height", "fmt", "label"]
-            )
+    def payload(i, w, h):
+        rst = 4 if i % 3 == 0 else 0
+        raw = encode_jpeg(image_array(i, w, h), quality=90, restart_interval=rst)
+        if i % 103 == 23:  # corrupt: break the segment walk
+            b = bytearray(raw)
+            b[4] ^= 0xFF
+            return bytes(b)
+        if i % 137 == 31:  # truncated mid-entropy
+            return raw[: len(raw) // 2]
+        return raw
 
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, IMAGES_SCHEMA)
+    return _image_table(spark, n, partitions, "jpg", "jpeg", payload)
 
 
 def generate_webp_images(
@@ -193,36 +154,25 @@ def generate_webp_images(
     """
     from macrobase_spark.operators.webp import encode_webp
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].to_numpy():
-                i = int(i)
-                w, h = SIZES[i % len(SIZES)]
-                img = image_array(i, w, h)
-                f = i % 5
-                if f == 0:
-                    raw = encode_webp(img)
-                elif f == 1:
-                    raw = encode_webp(img, subtract_green=True)
-                elif f == 2:
-                    raw = encode_webp(img, predictor=True, subtract_green=True)
-                elif f == 3:
-                    raw = encode_webp((img // 64) * 64, palette=True)
-                else:
-                    raw = encode_webp((img // 64) * 64, use_rle=True)
-                if i % 101 == 19:  # corrupt: flip the VP8L signature byte
-                    b = bytearray(raw)
-                    b[raw.index(b"VP8L") + 8] ^= 0xFF
-                    raw = bytes(b)
-                elif i % 139 == 29:  # truncated mid-bitstream
-                    raw = raw[: len(raw) // 2]
-                rows.append(
-                    (f"webp_{i:010d}", raw, w, h, "webp", LABELS[i % len(LABELS)])
-                )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "width", "height", "fmt", "label"]
-            )
+    def payload(i, w, h):
+        img = image_array(i, w, h)
+        f = i % 5
+        if f == 0:
+            raw = encode_webp(img)
+        elif f == 1:
+            raw = encode_webp(img, subtract_green=True)
+        elif f == 2:
+            raw = encode_webp(img, predictor=True, subtract_green=True)
+        elif f == 3:
+            raw = encode_webp((img // 64) * 64, palette=True)
+        else:
+            raw = encode_webp((img // 64) * 64, use_rle=True)
+        if i % 101 == 19:  # corrupt: flip the VP8L signature byte
+            b = bytearray(raw)
+            b[raw.index(b"VP8L") + 8] ^= 0xFF
+            return bytes(b)
+        if i % 139 == 29:  # truncated mid-bitstream
+            return raw[: len(raw) // 2]
+        return raw
 
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 4)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, IMAGES_SCHEMA)
+    return _image_table(spark, n, partitions, "webp", "webp", payload)

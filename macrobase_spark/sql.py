@@ -404,7 +404,7 @@ class MacroBaseSQL:
             t = peek()
             if t == "(":
                 take()
-                e = expr()
+                e = disjunction()
                 expect(")", "missing ')'")
                 return e
             if t is not None and t.upper() == "NOT":
@@ -470,12 +470,22 @@ class MacroBaseSQL:
                 return F.col(t[1:-1])
             return F.col(t)
 
-        def expr():
-            left = atom()
-            while peek() is not None and peek().upper() in ("AND", "OR"):
-                op = take().upper()
-                right = atom()
-                left = (left & right) if op == "AND" else (left | right)
+        # SQL precedence: NOT (in atom) binds tightest, then AND, then OR
+        def disjunction():
+            left = conjunction()
+            while (peek() or "").upper() == "OR":
+                take()
+                left = left | conjunction()
             return left
 
-        return expr()
+        def conjunction():
+            left = atom()
+            while (peek() or "").upper() == "AND":
+                take()
+                left = left & atom()
+            return left
+
+        cond = disjunction()
+        if pos < len(tokens):
+            raise bad(f"unexpected {tokens[pos]!r} after a complete predicate")
+        return cond

@@ -1,5 +1,6 @@
-"""Config-driven pipelines against the reference's own demo configs and
-fixtures (read from /root/reference at test time; skipped if absent)."""
+"""Config-driven pipelines: against the reference's own demo configs and
+fixtures (read from the REF checkout at test time; those cases skip if it
+is absent), and over frames the tests build themselves."""
 
 import json
 import os
@@ -12,7 +13,7 @@ from macrobase_spark.pipelines import run_config
 
 REF = "/root/reference"
 
-pytestmark = pytest.mark.skipif(
+needs_demo = pytest.mark.skipif(
     not os.path.isdir(f"{REF}/core/demo"), reason="reference demo configs absent"
 )
 
@@ -42,6 +43,7 @@ def _yaml_lite(path: str) -> dict:
     return conf
 
 
+@needs_demo
 def test_batch_yaml_demo(spark):
     """core/demo/batch.yaml: percentile(usage,1.0) + aplinear global_ratio 10
     over sample.csv — same fixture as golden query 4 (ratio 10, support .2)."""
@@ -65,6 +67,7 @@ def test_batch_yaml_demo(spark):
         assert r["support"] == pytest.approx(sub["_OUTLIER"].sum() / total_out)
 
 
+@needs_demo
 def test_cube_json_demo(spark):
     """core/demo/cube.json: arithmetic cube classifier over sample_cubed.csv."""
     conf = json.load(open(f"{REF}/core/demo/cube.json"))
@@ -75,6 +78,7 @@ def test_cube_json_demo(spark):
         assert r["global_ratio"] >= 10.0
 
 
+@needs_demo
 def test_cube_quantile_demo(spark):
     conf = json.load(open(f"{REF}/core/demo/cube_quantile.json"))
     res = run_config(spark, conf, base_dir=REF)
@@ -82,6 +86,7 @@ def test_cube_quantile_demo(spark):
     assert "_OUTLIER" in res.classified.columns
 
 
+@needs_demo
 def test_double_predicate_demo(spark):
     conf = json.load(open(f"{REF}/core/demo/double_predicate.json"))
     res = run_config(spark, conf, base_dir=REF)
@@ -89,6 +94,7 @@ def test_double_predicate_demo(spark):
     assert len(rows) > 0
 
 
+@needs_demo
 def test_tiny_conf(spark):
     conf = _yaml_lite(f"{REF}/core/src/test/resources/tiny_conf.yaml")
     conf["inputURI"] = "csv://core/src/test/resources/tiny.csv"
@@ -114,6 +120,7 @@ def test_meanshift_summarizer_planted(spark):
     assert got["hot"]["mean_shift"] == pytest.approx(10.0)
 
 
+@needs_demo
 def test_cube_meanshift_fixture(spark):
     """CountMeanShift cube pipeline over the lib mean-shift fixture
     (sample_cubedshift.csv: time-split, meanLatency shift)."""
