@@ -26,7 +26,7 @@ import io
 import struct
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -278,7 +278,7 @@ def sin_samples(w: float, n: int, phase: float = 0.0) -> np.ndarray:
 
 def render_reference(clip_index: int, sr: int, n_samples: int) -> np.ndarray:
     """The deterministic reference render: unit sine at f0(clip_index)."""
-    f0 = float(tone_hz(np.array([clip_index], dtype=np.uint64))[0])
+    f0 = float(tone_hz(np.array([clip_index]).astype(np.uint64))[0])
     return 0.8 * sin_samples(2 * np.pi * f0 / sr, n_samples)
 
 
@@ -799,13 +799,24 @@ def score_clips_from_files(
     )
 
 
-def _snr_row(clip_id, clip_index, sr_hz, raw, *carried):
+def _snr_row(clip_id, index, sr_hz, raw, *carried):
     dec = decode_audio(raw)
     if dec is None:
         return [(clip_id, False, -np.inf, False, *carried)]
     sr, pcm = dec
-    ref = render_reference(clip_index, int(sr), len(pcm))
+    ref = render_reference(index, int(sr), len(pcm))
     return [(clip_id, True, snr_db(ref, pcm), sr == sr_hz, *carried)]
+
+
+def clip_index() -> Column:
+    """The reference render's key: the content index the fixture encodes in
+    the clip_id ("clip_%012d" % index), -1 for an id of any other shape —
+    `try_cast`, so a foreign id never fails the task under ANSI mode.
+    Duplicates share both clip_id and payload, so this stays correct for
+    them."""
+    return F.coalesce(
+        F.substring("clip_id", 6, 12).try_cast("long"), F.lit(-1)
+    ).alias("clip_index")
 
 
 def snr_check(
@@ -819,14 +830,9 @@ def snr_check(
     callers don't need a join back to the (possibly generate-on-read)
     source — a second scan would re-run the generator and a shuffle."""
     carry = list(carry_cols or [])
-    # the reference render is keyed by the clip's content identity, which the
-    # fixture encodes in the clip_id ("clip_%012d" % index) — duplicates
-    # share both clip_id and payload, so this stays correct for them
     cols = df.select(
         "clip_id",
-        F.coalesce(
-            F.substring("clip_id", 6, 12).cast("long"), F.lit(-1)
-        ).alias("clip_index"),
+        clip_index(),
         "sr_hz",
         "bytes",
         *[F.col(c).alias(f"_carry{k}") for k, c in enumerate(carry)],
@@ -989,7 +995,7 @@ RESAMPLE_CHECK_SCHEMA = StructType(
 )
 
 
-def _resample_check_row(resample, target_sr, min_snr_db, clip_id, sr_hz, raw):
+def _resample_check_row(resample, target_sr, min_snr_db, clip_id, index, sr_hz, raw):
     """One clip of a resample check: decode → `resample` to `target_sr` →
     SNR against the reference render at the new rate, clamped to ±999 dB."""
     dec = decode_audio(raw)
@@ -997,7 +1003,7 @@ def _resample_check_row(resample, target_sr, min_snr_db, clip_id, sr_hz, raw):
         return [(clip_id, sr_hz, False, 0, -999.0, False)]
     sr, pcm = dec
     res = resample(pcm, sr, target_sr)
-    ref = render_reference(int(clip_id[5:]), target_sr, len(res))
+    ref = render_reference(index, target_sr, len(res))
     snr = float(np.clip(snr_db(ref, res), -999.0, 999.0))
     return [(clip_id, sr_hz, True, len(res), float(np.round(snr, 6)), snr >= min_snr_db)]
 
@@ -1008,7 +1014,7 @@ def resample_check_rows(
     """The resample check of every clip with resampler
     `resample(pcm, sr, target_sr)` (the linear and the sinc paths)."""
     return map_rows(
-        df.select("clip_id", "sr_hz", "bytes"),
+        df.select("clip_id", clip_index(), "sr_hz", "bytes"),
         functools.partial(_resample_check_row, resample, target_sr, min_snr_db),
         RESAMPLE_CHECK_SCHEMA,
     )

@@ -128,7 +128,7 @@ def minhash_lsh_candidates(
     n: int = 3,
     num_hashes: int = 6,
     bands: int = 2,
-    max_bucket: int | None = 10000,
+    max_bucket: int | None = None,
     cache: str = "local",
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing any band of the MinHash signature.
@@ -142,12 +142,13 @@ def minhash_lsh_candidates(
     scale. The join spreads a size-s bucket's s·(s−1)/2 output rows across
     the shuffle instead of one array.
 
-    Scale guard: buckets larger than `max_bucket` are EXCLUDED from the pair
-    join and logged — every member pair inside such a bucket is a near-dup
-    of every other, so the quadratic pair list adds no information beyond
-    the bucket id; recover them group-wise from the bucket key if needed.
-    Pass max_bucket=None for the exact (unguarded) semantics the oracle
-    replays. `cache` follows simhash_candidates' vocabulary ("local" /
+    The default is the exact (unguarded) pair join the oracle replays.
+    Scale guard, opt-in: buckets larger than `max_bucket` are EXCLUDED from
+    the pair join and logged — every member pair inside such a bucket is a
+    near-dup of every other, so the quadratic pair list adds no information
+    beyond the bucket id; recover them group-wise from the bucket key if
+    needed. The guard costs a materialization and a bucket-count job.
+    `cache` follows simhash_candidates' vocabulary ("local" /
     "persist" / "checkpoint") for the reused bands relation."""
     rows_per_band = num_hashes // bands
     sh = with_shingles(df.select(id_col, text_col), text_col, n)

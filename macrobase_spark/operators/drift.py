@@ -1,38 +1,55 @@
-"""PSI (population stability index) histogram drift — the distribution-level
-complement to the suite's MAD-over-group-medians drift check (checks.py).
+"""Histogram drift: the distribution-level complement to the suite's
+MAD-over-group-medians drift check (checks.py), on numeric metrics (dur_ms,
+sr_hz) and categorical columns (codec).
 
-For a metric column and a grouping (e.g. dur_ms by codec): bin the metric on
-the GLOBAL quantile edges, compare each group's bin-share vector a_i to the
-global share vector e_i, and score PSI = Σ (a_i − e_i)·ln(a_i / e_i).
-PSI ≥ 0.2 is the conventional "significant shift" bar; the planted aac
-duration drift (sources/clips.py: dur_ms × 3) scores far above it while the
-clean codecs sit near 0.
+A reference `Histogram` is fit once — `fit_bins`: quantile edges plus the
+row count of every bin; `fit_categories`: the top-K categories plus one
+bucket pooling the rest — and baked into the comparison plan as literals.
+`histogram_drift` then puts one conditional counter per bucket into a
+single groupBy(group_cols) aggregate and scores each group's counts
+against the reference with stateless arithmetic:
 
-Scale design: two partial-agg shuffles, both tiny after the map side —
-(1) one pass for the global edges (exact `percentile` here so the DuckDB
-oracle matches bit-for-bit; swap `approx_percentile` at 10^12 rows — the
-t-digest sketch path the column-stats check already uses), (2) one
-groupBy(group, bin) count whose output is |groups|×|bins| rows. The bin
-assignment is a chain of codegen'd comparisons against broadcast scalar
-edges — no UDF, no shuffle. Densification (groups × bins grid) happens on
-the already-tiny aggregate.
+- psi  = Σ (a_i − e_i)·ln(a_i / e_i), shares floored at 1e-6; PSI ≥ 0.2 is
+  the conventional "significant shift" bar;
+- ks_d = max_j |CDF_g(e_j) − CDF_ref(e_j)| at the edges — on the quantile
+  grid a deterministic lower bound of the exact two-sample KS statistic
+  that tightens as n_bins grows (exact KS needs the distinct-value grid, a
+  |groups|×|values| blowup);
+- w1   = Σ_j |CDF_g(e_j) − CDF_ref(e_j)|·(e_{j+1} − e_j), Wasserstein-1 over
+  the interior edge span, in the METRIC'S OWN UNITS (milliseconds of
+  shifted duration) — the quantity a data-quality SLA can bound;
+- chi2 = n·Σ (a_i − e_i)² / e_i, the raw Pearson statistic (df = k − 1).
 
-Reference parity: the reference engine's drift analogue is the classify →
-summarize pipeline over batch metrics; PSI serves the build brief's
-"distribution-drift detection on dur_ms/sr_hz/codec histograms" contract.
+One plan serves every drift form. "Vs global" fits the reference on the
+frame itself (the planted aac duration drift, sources/clips.py dur_ms × 3,
+scores far above the bar while clean codecs sit near 0); a two-snapshot
+monitor fits it on a reference frame (train table vs incoming batch); and
+`window=(time_col, duration)` adds an event-time window key, so a stream
+whose caller set `withWatermark` runs the same aggregate in append mode
+(state = |windows|×|groups| rows of B counters). Bin assignment is a chain
+of codegen'd comparisons — no UDF; the only shuffle is the one
+partial-aggregated groupBy. The reference CDF is cumulative integer counts
+over the total, so vs-global rows equal the oracles' dense groups × bins
+grid bit for bit.
+
+Exact `percentile` edges here so the DuckDB oracles match bit-for-bit;
+swap `approx_percentile` at 10^12 rows.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass, replace
 from functools import reduce
+from itertools import accumulate
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from macrobase_spark.operators.clips_suite import scored_parquet
 from macrobase_spark.queries import register
 
 EPS = 1e-6
+STATS = ("psi", "ks_d", "w1", "chi2")
 
 
 def quantile_edges(df: DataFrame, metric: str, n_bins: int = 10) -> list[float]:
@@ -44,59 +61,137 @@ def quantile_edges(df: DataFrame, metric: str, n_bins: int = 10) -> list[float]:
     return [float(x) for x in row["qs"]]
 
 
-def _bin_expr(metric: str, edges: list[float]):
-    return reduce(
-        lambda acc, e: acc + (F.col(metric) > F.lit(e)).cast("int"),
-        edges,
-        F.lit(0),
-    ).alias("bin")
+@dataclass(frozen=True)
+class Histogram:
+    """A reference histogram of `column`: `counts[b]` rows in bucket b.
+
+    Numeric (`edges`, the B−1 interior cut points): bucket = the number of
+    edges below the value; a NULL value falls in no bucket. Categorical
+    (`categories`): bucket i is categories[i], and the last bucket pools
+    every other value and NULL."""
+
+    column: str
+    counts: tuple[int, ...]
+    edges: tuple[float, ...] | None = None
+    categories: tuple[str, ...] | None = None
+
+    def bucket(self) -> Column:
+        if self.edges is not None:
+            v = F.col(self.column)
+            return reduce(lambda acc, e: acc + (v > F.lit(e)).cast("int"), self.edges, F.lit(0))
+        cat = F.col(self.column).cast("string")
+        return reduce(
+            lambda acc, ic: F.when(cat == F.lit(ic[1]), ic[0]).otherwise(acc),
+            reversed(list(enumerate(self.categories))),
+            F.lit(len(self.categories)),
+        )
+
+    @property
+    def shares(self) -> list[float]:
+        total = sum(self.counts)
+        return [c / total for c in self.counts]
+
+    @property
+    def cdf(self) -> list[float]:
+        total = sum(self.counts)
+        return [c / total for c in accumulate(self.counts)]
 
 
-def psi_drift(
-    df: DataFrame,
-    metric: str,
-    group_cols: list[str],
-    n_bins: int = 10,
-    min_psi: float = 0.2,
-    edges: list[float] | None = None,
-) -> DataFrame:
-    """Per-group PSI of `metric` against the global distribution.
-
-    Returns (group_cols…, n, psi, drifted) — one row per group, psi rounded
-    to 6 dp, drifted = psi ≥ min_psi."""
+def fit_bins(
+    df: DataFrame, metric: str, n_bins: int, edges: list[float] | None = None
+) -> Histogram:
+    """Fit a numeric reference on `df`: `edges` (default: its exact quantile
+    cut points, one job) and every bin's row count (one |bins|-row job)."""
     if edges is None:
         edges = quantile_edges(df, metric, n_bins)
-    binned = df.select(*group_cols, _bin_expr(metric, edges))
-    counts = binned.groupBy(*group_cols, "bin").agg(F.count(F.lit(1)).alias("c"))
-    # global bin shares (e_i) — |bins| rows, broadcast into the join
-    gtot = binned.count()
-    gshare = (
-        binned.groupBy("bin")
-        .agg((F.count(F.lit(1)) / F.lit(float(gtot))).alias("e"))
+    elif len(edges) != n_bins - 1:
+        raise ValueError(f"need {n_bins - 1} edges for {n_bins} bins, got {len(edges)}")
+    hist = Histogram(metric, (), edges=tuple(edges))
+    got = dict(df.groupBy(hist.bucket().alias("b")).count().collect())
+    return replace(hist, counts=tuple(got.get(b, 0) for b in range(n_bins)))
+
+
+def fit_categories(df: DataFrame, column: str, top_k: int) -> Histogram:
+    """Fit a categorical reference on `df`: the `top_k` most frequent values
+    of `column` (ties broken by value, so the fit is deterministic) plus one
+    bucket for everything else and NULL. The top-K bound runs inside the
+    Spark job, so at 10^12 rows only k rows reach the driver."""
+    top = [
+        r
+        for r in df.groupBy(F.col(column).cast("string").alias("cat"))
+        .count()
+        .orderBy(F.desc("count"), F.asc_nulls_last("cat"))
+        .limit(top_k)
+        .collect()
+        if r["cat"] is not None
+    ]
+    other = df.count() - sum(r["count"] for r in top)
+    return Histogram(
+        column,
+        (*(r["count"] for r in top), other),
+        categories=tuple(r["cat"] for r in top),
     )
-    # densify: every group × every bin (both sides are tiny aggregates)
-    groups = counts.groupBy(*group_cols).agg(F.sum("c").alias("n"))
-    grid = groups.crossJoin(F.broadcast(gshare.select("bin")))
-    dense = (
-        grid.join(counts, [*group_cols, "bin"], "left")
-        .na.fill({"c": 0})
-        .join(F.broadcast(gshare), "bin")
+
+
+def histogram_drift(
+    df: DataFrame,
+    group_cols: list[str],
+    ref: Histogram,
+    stats: list[str],
+    window: tuple[str, str] | None = None,
+) -> DataFrame:
+    """Score every group's histogram of `ref.column` in `df` against `ref`
+    with `stats` (a subset of STATS; w1 needs numeric edges).
+
+    ONE groupBy(group_cols) aggregate of per-bucket conditional counters,
+    then stateless arithmetic. `window=(time_col, duration)` also groups by
+    the event-time window; on a stream, set the watermark on `df` first.
+    Returns ([ws, we,] group_cols…, n, *stats), each stat rounded to 6 dp;
+    threshold flags are the caller's comparison columns."""
+    unknown = set(stats) - set(STATS)
+    if unknown or ("w1" in stats and ref.edges is None):
+        raise ValueError(f"stats must be drawn from {STATS} (w1 needs edges), got {stats}")
+    keys = (["w"] if window else []) + list(group_cols)
+    binned = df.select(
+        *([F.window(*window).alias("w")] if window else []),
+        *group_cols,
+        ref.bucket().alias("_bin"),
     )
-    a = F.greatest(F.col("c") / F.col("n"), F.lit(EPS))
-    e = F.greatest(F.col("e"), F.lit(EPS))
-    return (
-        dense.groupBy(*group_cols, "n")
-        .agg(F.round(F.sum((a - e) * F.log(a / e)), 6).alias("psi"))
-        .select(
-            *group_cols,
-            F.col("n").cast("long").alias("n"),
-            "psi",
-            (F.col("psi") >= F.lit(min_psi)).alias("drifted"),
-        )
+    agg = binned.groupBy(*keys).agg(
+        *[F.sum((F.col("_bin") == b).cast("long")).alias(f"c{b}") for b in range(len(ref.counts))]
+    )
+    c = [F.col(f"c{b}") for b in range(len(ref.counts))]
+    n = sum(c)
+    a = [F.greatest(cb / n, F.lit(EPS)) for cb in c]
+    e = [F.lit(max(s, EPS)) for s in ref.shares]
+    # |CDF_g − CDF_ref| at every edge (the last bucket's gap is 0)
+    gaps = [F.abs(cum / n - F.lit(r)) for cum, r in zip(accumulate(c), ref.cdf)]
+    edges = ref.edges or ()
+    formulas = {
+        "psi": sum((ai - ei) * F.log(ai / ei) for ai, ei in zip(a, e)),
+        "ks_d": F.greatest(*gaps) if len(gaps) > 1 else gaps[0],
+        "w1": sum((g * F.lit(hi - lo) for g, lo, hi in zip(gaps, edges, edges[1:])), F.lit(0.0)),
+        "chi2": sum((cb / n - F.lit(s)) ** 2 / ei for cb, s, ei in zip(c, ref.shares, e)) * n,
+    }
+    return agg.select(
+        *([F.col("w.start").alias("ws"), F.col("w.end").alias("we")] if window else []),
+        *group_cols,
+        n.cast("long").alias("n"),
+        *[F.round(formulas[s], 6).alias(s) for s in stats],
     )
 
 
 _S = scored_parquet.scan()
+
+
+def _dur_drift(spark, sf_dir: str, n_bins: int, stat: str, bar: float) -> DataFrame:
+    """`stat` of dur_ms by codec against the whole scored relation, flagged
+    at `bar`."""
+    scored = spark.read.parquet(scored_parquet(spark, sf_dir))
+    ref = fit_bins(scored, "dur_ms", n_bins)
+    return histogram_drift(scored, ["codec"], ref, [stat]).withColumn(
+        "drifted", F.col(stat) >= bar
+    )
 
 
 @register(
@@ -136,66 +231,7 @@ _S = scored_parquet.scan()
 def psi_drift_clips_q(spark, sf_dir):
     """PSI of dur_ms by codec over the scored clips relation — recovers the
     planted aac duration drift (×3) as the only flagged group."""
-    scored = spark.read.parquet(scored_parquet(spark, sf_dir))
-    return psi_drift(scored, "dur_ms", ["codec"], n_bins=10, min_psi=0.2)
-
-
-def ks_drift(
-    df: DataFrame,
-    metric: str,
-    group_cols: list[str],
-    n_bins: int = 20,
-    min_d: float = 0.1,
-    edges: list[float] | None = None,
-) -> DataFrame:
-    """Per-group two-sample Kolmogorov–Smirnov drift of `metric` vs the
-    global distribution, evaluated on the global quantile grid.
-
-    D_g = max over grid cut points x of |CDF_g(x) − CDF_global(x)|. On the
-    quantile grid this is a deterministic lower bound of the exact KS
-    statistic that tightens as n_bins grows; exact KS needs the full
-    distinct-value grid (|groups|×|values| blowup — wrong at 10^12 rows),
-    while the grid version reuses PSI's shape: one edges pass, one
-    groupBy(group, bin) count, then window cumsums over the already-tiny
-    |groups|×|bins| aggregate. Complements PSI: KS is sensitive to
-    location/shape shifts even when per-bin shares stay small.
-
-    Returns (group_cols…, n, ks_d, drifted) — drifted = ks_d ≥ min_d.
-    """
-    from pyspark.sql import Window
-
-    if edges is None:
-        edges = quantile_edges(df, metric, n_bins)
-    binned = df.select(*group_cols, _bin_expr(metric, edges))
-    counts = binned.groupBy(*group_cols, "bin").agg(F.count(F.lit(1)).alias("c"))
-    gtot = binned.count()
-    gcnt = binned.groupBy("bin").agg(F.count(F.lit(1)).alias("gc"))
-    groups = counts.groupBy(*group_cols).agg(F.sum("c").alias("n"))
-    grid = groups.crossJoin(F.broadcast(gcnt.select("bin")))
-    dense = (
-        grid.join(counts, [*group_cols, "bin"], "left")
-        .na.fill({"c": 0})
-        .join(F.broadcast(gcnt), "bin")
-    )
-    w = Window.partitionBy(*group_cols).orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = dense.select(
-        *group_cols,
-        "n",
-        (F.sum("c").over(w) / F.col("n")).alias("cum_a"),
-        (F.sum("gc").over(w) / F.lit(float(gtot))).alias("cum_e"),
-    )
-    return (
-        cum.groupBy(*group_cols, "n")
-        .agg(F.round(F.max(F.abs(F.col("cum_a") - F.col("cum_e"))), 6).alias("ks_d"))
-        .select(
-            *group_cols,
-            F.col("n").cast("long").alias("n"),
-            "ks_d",
-            (F.col("ks_d") >= F.lit(min_d)).alias("drifted"),
-        )
-    )
+    return _dur_drift(spark, sf_dir, 10, "psi", 0.2)
 
 
 @register(
@@ -236,76 +272,7 @@ def ks_drift(
 def ks_drift_clips_q(spark, sf_dir):
     """Quantile-grid KS of dur_ms by codec over the scored clips relation —
     flags the planted aac duration drift (×3) like PSI, via CDF distance."""
-    scored = spark.read.parquet(scored_parquet(spark, sf_dir))
-    return ks_drift(scored, "dur_ms", ["codec"], n_bins=20, min_d=0.1)
-
-
-def w1_drift(
-    df: DataFrame,
-    metric: str,
-    group_cols: list[str],
-    n_bins: int = 20,
-    min_w1: float = 50.0,
-    edges: list[float] | None = None,
-) -> DataFrame:
-    """Per-group Wasserstein-1 (earth-mover) drift of `metric` vs the
-    global distribution, on the global quantile grid.
-
-    W1 = ∫|CDF_g − CDF_global| dt, discretized over the interior edge
-    span: Σ_j |CDF_g(e_j) − CDF_global(e_j)|·(e_{j+1} − e_j). Unlike KS
-    (max CDF gap, unitless) and PSI (log-share divergence), W1 reads in
-    the METRIC'S OWN UNITS (here: milliseconds of duration shifted) —
-    the quantity a data-quality SLA can actually bound. Same plan shape
-    as ks_drift: one edges pass, one groupBy(group, bin) count, window
-    cumsums over the tiny |groups|×|bins| aggregate; the edge widths
-    enter as a broadcast literal array. Exact-percentile edges here so
-    the DuckDB oracle matches; swap approx_percentile at cluster scale.
-
-    Returns (group_cols…, n, w1, drifted) — drifted = w1 ≥ min_w1.
-    """
-    from pyspark.sql import Window
-
-    if edges is None:
-        edges = quantile_edges(df, metric, n_bins)
-    widths = [edges[j + 1] - edges[j] for j in range(len(edges) - 1)]
-    binned = df.select(*group_cols, _bin_expr(metric, edges))
-    counts = binned.groupBy(*group_cols, "bin").agg(F.count(F.lit(1)).alias("c"))
-    gtot = binned.count()
-    gcnt = binned.groupBy("bin").agg(F.count(F.lit(1)).alias("gc"))
-    groups = counts.groupBy(*group_cols).agg(F.sum("c").alias("n"))
-    grid = groups.crossJoin(F.broadcast(gcnt.select("bin")))
-    dense = (
-        grid.join(counts, [*group_cols, "bin"], "left")
-        .na.fill({"c": 0})
-        .join(F.broadcast(gcnt), "bin")
-    )
-    w = Window.partitionBy(*group_cols).orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    # bin b's cumulative share is the CDF at edge e_{b+1}; its weight is
-    # the span to the next edge (0 past the last interior edge)
-    warr = F.array(*[F.lit(float(x)) for x in widths])
-    cum = dense.select(
-        *group_cols,
-        "n",
-        (F.sum("c").over(w) / F.col("n")).alias("cum_a"),
-        (F.sum("gc").over(w) / F.lit(float(gtot))).alias("cum_e"),
-        F.coalesce(F.try_element_at(warr, F.col("bin") + 1), F.lit(0.0)).alias("wd"),
-    )
-    return (
-        cum.groupBy(*group_cols, "n")
-        .agg(
-            F.round(
-                F.sum(F.abs(F.col("cum_a") - F.col("cum_e")) * F.col("wd")), 6
-            ).alias("w1")
-        )
-        .select(
-            *group_cols,
-            F.col("n").cast("long").alias("n"),
-            "w1",
-            (F.col("w1") >= F.lit(min_w1)).alias("drifted"),
-        )
-    )
+    return _dur_drift(spark, sf_dir, 20, "ks_d", 0.1)
 
 
 @register(
@@ -328,7 +295,11 @@ def w1_drift(
       FROM {_S} s
     ),
     gtot AS (SELECT CAST(count(*) AS DOUBLE) AS t FROM binned),
-    gcnt AS (SELECT bin, count(*) AS gc FROM binned GROUP BY bin),
+    gcnt AS (
+      SELECT b.bin, count(x.bin) AS gc
+      FROM (SELECT CAST(range AS INT) AS bin FROM range(20)) b
+      LEFT JOIN binned x ON x.bin = b.bin GROUP BY b.bin
+    ),
     groups AS (SELECT codec, CAST(count(*) AS BIGINT) AS n FROM binned GROUP BY codec),
     counts AS (SELECT codec, bin, count(*) AS c FROM binned GROUP BY codec, bin),
     dense AS (
@@ -353,89 +324,9 @@ def w1_drift(
 def w1_drift_clips_q(spark, sf_dir):
     """Quantile-grid Wasserstein-1 of dur_ms by codec over the scored clips
     relation — reports the planted aac duration drift (×3) in
-    MILLISECONDS of shifted duration mass."""
-    scored = spark.read.parquet(scored_parquet(spark, sf_dir))
-    return w1_drift(scored, "dur_ms", ["codec"], n_bins=20, min_w1=50.0)
-
-
-def snapshot_shares(
-    ref_df: DataFrame, metric: str, n_bins: int = 10
-) -> tuple[list[float], list[float]]:
-    """Fit (edges, bin shares) of `metric` on a reference snapshot — the
-    train-time distribution a monitor compares incoming batches against.
-    Two tiny jobs (quantile pass + one |bins|-row aggregate); the result is
-    baked into the comparison plan as broadcast literals."""
-    edges = quantile_edges(ref_df, metric, n_bins)
-    rb = ref_df.select(_bin_expr(metric, edges))
-    rn = rb.count()
-    cnt = {
-        r["bin"]: r["c"]
-        for r in rb.groupBy("bin").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    return edges, [cnt.get(b, 0) / rn for b in range(n_bins)]
-
-
-def snapshot_drift(
-    ref_df: DataFrame,
-    cur_df: DataFrame,
-    metric: str,
-    group_cols: list[str],
-    n_bins: int = 10,
-    min_psi: float = 0.2,
-    min_d: float = 0.1,
-    edges: list[float] | None = None,
-    ref_shares: list[float] | None = None,
-) -> DataFrame:
-    """Two-snapshot drift: PSI and quantile-grid KS of the CURRENT
-    DataFrame's `metric` distribution (per group) against a REFERENCE
-    snapshot — the production monitor form (train table vs incoming batch),
-    where psi_drift/ks_drift compare groups against their own pooled
-    global.
-
-    One shuffle over the current table: per-bin conditional counters inside
-    a single groupBy(group_cols) aggregate (the windowed_psi shape without
-    the window); PSI and the KS maximum are stateless arithmetic against
-    the broadcast reference shares. Returns
-    (group_cols…, n, psi, ks_d, psi_drifted, ks_drifted)."""
-    if edges is None or ref_shares is None:
-        edges, ref_shares = snapshot_shares(ref_df, metric, n_bins)
-    n_bins = len(ref_shares)
-    binned = cur_df.select(*group_cols, _bin_expr(metric, edges))
-    bin_counts = [
-        F.sum((F.col("bin") == b).cast("long")).alias(f"c{b}") for b in range(n_bins)
-    ]
-    agg = binned.groupBy(*group_cols).agg(*bin_counts)
-    n = sum(F.col(f"c{b}") for b in range(n_bins))
-    psi = sum(
-        (
-            F.greatest(F.col(f"c{b}") / n, F.lit(EPS))
-            - F.lit(max(ref_shares[b], EPS))
-        )
-        * F.log(
-            F.greatest(F.col(f"c{b}") / n, F.lit(EPS))
-            / F.lit(max(ref_shares[b], EPS))
-        )
-        for b in range(n_bins)
-    )
-    ref_cum = 0.0
-    obs_cum = None
-    diffs = []
-    for b in range(n_bins - 1):
-        ref_cum += ref_shares[b]
-        obs_cum = F.col(f"c{b}") if obs_cum is None else obs_cum + F.col(f"c{b}")
-        diffs.append(F.abs(obs_cum / n - F.lit(ref_cum)))
-    ks = F.greatest(*diffs) if len(diffs) > 1 else diffs[0]
-    return agg.select(
-        *group_cols,
-        n.cast("long").alias("n"),
-        F.round(psi, 6).alias("psi"),
-        F.round(ks, 6).alias("ks_d"),
-    ).withColumns(
-        {
-            "psi_drifted": F.col("psi") >= F.lit(min_psi),
-            "ks_drifted": F.col("ks_d") >= F.lit(min_d),
-        }
-    )
+    MILLISECONDS of shifted duration mass. The oracle's grid spans every
+    bin, populated or not, as the kernel's counters do."""
+    return _dur_drift(spark, sf_dir, 20, "w1", 50.0)
 
 
 @register(
@@ -491,87 +382,10 @@ def snapshot_drift_clips_q(spark, sf_dir):
     duration distribution; current = every codec. The planted aac ×3
     duration drift flags on both PSI and KS; clean codecs stay quiet."""
     scored = spark.read.parquet(scored_parquet(spark, sf_dir))
-    return snapshot_drift(
-        scored.filter(F.col("codec") == "opus"), scored, "dur_ms", ["codec"]
+    ref = fit_bins(scored.filter(F.col("codec") == "opus"), "dur_ms", 10)
+    return histogram_drift(scored, ["codec"], ref, ["psi", "ks_d"]).withColumns(
+        {"psi_drifted": F.col("psi") >= 0.2, "ks_drifted": F.col("ks_d") >= 0.1}
     )
-
-
-# ---- categorical drift (codec/sr_hz histograms) ------------------------------
-
-
-def categorical_shares(
-    ref_df: DataFrame, column: str, top_k: int = 50
-) -> list[tuple[str, float]]:
-    """Fit the reference share of each category of `column`: top_k
-    categories by count (ties broken by category value so the fit is
-    deterministic), everything else pooled into '__other__'. One tiny
-    aggregate; the result is baked into the comparison plan as broadcast
-    literals — at 10^12 rows the category list must be bounded, which is
-    exactly what the top-K + other pooling guarantees."""
-    rows = (
-        ref_df.groupBy(F.col(column).cast("string").alias("cat"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.asc_nulls_last("cat"))
-        .limit(top_k)
-        .collect()
-    )
-    total = ref_df.count()
-    shares = [(r["cat"], r["c"] / total) for r in rows if r["cat"] is not None]
-    tail = 1.0 - sum(s for _, s in shares)
-    shares.append(("__other__", max(tail, 0.0)))
-    return shares
-
-
-def categorical_drift(
-    ref_df: DataFrame,
-    cur_df: DataFrame,
-    column: str,
-    group_cols: list[str],
-    top_k: int = 50,
-    min_psi: float = 0.2,
-    shares: list[tuple[str, float]] | None = None,
-) -> DataFrame:
-    """Drift of a CATEGORICAL column's histogram (the north rule names
-    codec histograms explicitly; quantile-bin PSI/KS only cover numeric
-    metrics). Compares each group's category-share vector in `cur_df`
-    against the reference snapshot's shares.
-
-    Plan shape = snapshot_drift's: ONE groupBy(group_cols) aggregate whose
-    per-category conditional counters are baked from the broadcast
-    reference fit (categories not in the fit count as '__other__'), then
-    PSI and the chi-square statistic are stateless arithmetic over the
-    |groups|×|categories| counters. NULL category counts as '__other__'.
-
-    Returns (group_cols…, n, psi, chi2, psi_drifted). chi2 is the Pearson
-    statistic n·Σ(obs_share−ref_share)²/ref_share (df = k−1), reported raw
-    so callers pick their own critical value; psi_drifted applies the
-    conventional PSI ≥ min_psi bar."""
-    if shares is None:
-        shares = categorical_shares(ref_df, column, top_k)
-    known = [c for c, _ in shares if c != "__other__"]
-    cat = F.col(column).cast("string")
-    bucket = F.when(cat.isin(known), cat).otherwise(F.lit("__other__"))
-    counters = [
-        F.sum((bucket == F.lit(c)).cast("long")).alias(f"c{i}")
-        for i, (c, _) in enumerate(shares)
-    ]
-    agg = cur_df.groupBy(*group_cols).agg(*counters)
-    n = sum(F.col(f"c{i}") for i in range(len(shares)))
-    psi = sum(
-        (F.greatest(F.col(f"c{i}") / n, F.lit(EPS)) - F.lit(max(s, EPS)))
-        * F.log(F.greatest(F.col(f"c{i}") / n, F.lit(EPS)) / F.lit(max(s, EPS)))
-        for i, (_, s) in enumerate(shares)
-    )
-    chi2 = sum(
-        (F.col(f"c{i}") / n - F.lit(s)) ** 2 / F.lit(max(s, EPS))
-        for i, (_, s) in enumerate(shares)
-    ) * n
-    return agg.select(
-        *group_cols,
-        n.cast("long").alias("n"),
-        F.round(psi, 6).alias("psi"),
-        F.round(chi2, 6).alias("chi2"),
-    ).withColumn("psi_drifted", F.col("psi") >= F.lit(min_psi))
 
 
 @register(
@@ -609,7 +423,10 @@ def categorical_drift_clips_q(spark, sf_dir):
     failing population flac-heavy, so the failed group's codec histogram
     drifts hard while the passing group's stays at the reference."""
     scored = spark.read.parquet(scored_parquet(spark, sf_dir))
+    ref = fit_categories(scored, "codec", 50)
     cur = scored.withColumn("failed", ~F.col("decode_ok"))
-    return categorical_drift(scored, cur, "codec", ["failed"], top_k=50).orderBy(
-        "failed"
+    return (
+        histogram_drift(cur, ["failed"], ref, ["psi", "chi2"])
+        .withColumn("psi_drifted", F.col("psi") >= 0.2)
+        .orderBy("failed")
     )

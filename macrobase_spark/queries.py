@@ -772,8 +772,8 @@ def register(name: str, oracle: str | None = None):
 _EXTENSIONS = """
     operators.audio operators.audio_fp operators.dedup operators.similarity
     operators.pq operators.text operators.clips_suite operators.detectors
-    operators.contrib_stats operators.kalman operators.arima operators.vargmm
-    operators.contextual operators.ew operators.legacy_transforms
+    operators.contrib_stats operators.drift operators.kalman operators.arima
+    operators.vargmm operators.contextual operators.ew operators.legacy_transforms
     operators.loudness operators.bandwidth operators.pitch operators.ecod
     operators.copod operators.mp3 operators.aac operators.ogg operators.gate
     operators.srt operators.alignment operators.pca operators.hbos
@@ -781,7 +781,7 @@ _EXTENSIONS = """
     operators.hst operators.image operators.mcod operators.profile
     operators.silence operators.sniff operators.rrcf
     operators.subspace_explainers operators.transcript operators.temporal
-    operators.resample operators.mfcc operators.drift operators.constraints
+    operators.resample operators.mfcc operators.constraints
     plans.metrics_repo sources.icetable functions.skew functions.sampling
 """.split()
 

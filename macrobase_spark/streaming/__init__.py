@@ -1,7 +1,3 @@
-from macrobase_spark.streaming.drift import (  # noqa: F401
-    reference_distribution,
-    windowed_psi,
-)
 from macrobase_spark.streaming.validate import (  # noqa: F401
     batch_processor,
     stream_duplicate_clips,
@@ -13,6 +9,5 @@ from macrobase_spark.streaming.windowed import (  # noqa: F401
     count_sliding_window,
     count_tumbling_window,
     moving_average,
-    stream_windowed_explain,
     windowed_explain,
 )

@@ -21,7 +21,7 @@ Design: reuse the batch kernel everywhere the streaming model allows.
   later is re-admitted, exactly like any TTL'd streaming dedup.
 - `windowed_violation_rates` aggregates per-(event-time window, codec)
   violation rates with a watermark — the drift monitors
-  (streaming/drift.py) consume the same shape.
+  (operators/drift.histogram_drift with `window=`) consume the same shape.
 - `validate_stream` is the operational runner: foreachBatch scores each
   micro-batch, derives per-partition verdict rows, and appends them to the
   checkpointed RunManifest (plans/manifest.py) keyed by the micro-batch id.

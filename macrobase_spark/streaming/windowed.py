@@ -68,8 +68,11 @@ def windowed_explain(
     total_count), filtered by the support + ratio thresholds.
 
     Two shuffles total (per-attr-value agg, per-window totals), both
-    partial-aggregated map-side; works identically on a stream (see
-    stream_windowed_explain).
+    partial-aggregated map-side; works identically on a stream whose
+    caller set `withWatermark(ts_col, …)`, with slide=None: streaming joins
+    of two windowed aggregates need matching watermarks, which tumbling
+    windows give for free. The reference assumes in-order arrival and has
+    no watermarking (WindowedOperator.java:84).
     """
     win = F.window(F.col(ts_col), window_len, slide) if slide else F.window(
         F.col(ts_col), window_len
@@ -109,39 +112,6 @@ def windowed_explain(
             tc,
         )
         .filter((F.col("support") >= min_support) & (F.col(ratio_metric) >= min_ratio_metric))
-    )
-
-
-def stream_windowed_explain(
-    stream_df: DataFrame,
-    ts_col: str,
-    window_len: str,
-    outlier_predicate: Column,
-    attributes: list[str],
-    watermark: str = "0 seconds",
-    min_support: float = 0.2,
-    min_ratio_metric: float = 1.5,
-    ratio_metric: str = "global_ratio",
-) -> DataFrame:
-    """The SAME windowed explain over a Structured Streaming source.
-
-    The reference assumes in-order arrival and has no watermarking
-    (WindowedOperator.java:84); `watermark` adds the late-data bound Spark
-    needs for state cleanup. Tumbling windows only — streaming joins of two
-    windowed aggregates require matching watermarks, which tumbling gives us
-    for free.
-    """
-    wm = stream_df.withWatermark(ts_col, watermark)
-    return windowed_explain(
-        wm,
-        ts_col,
-        window_len,
-        None,
-        outlier_predicate,
-        attributes,
-        min_support,
-        min_ratio_metric,
-        ratio_metric,
     )
 
 

@@ -112,6 +112,23 @@ def test_resample_check_clips_table(spark):
     assert r0["decode_ok"] and r0["n_out"] > 0
 
 
+def test_checks_accept_foreign_clip_ids(spark):
+    """An id not shaped `clip_<digits>` (the pitch fixture's `pclip_…`)
+    keys the reference render at index -1 in both the SNR and the resample
+    check instead of failing the task on a cast."""
+    from macrobase_spark.operators.audio import render_reference, resample_check, snr_check
+
+    pcm = np.round(render_reference(-1, 8000, 800) * 32767).astype(np.int16)
+    df = spark.createDataFrame(
+        [("pclip_000000000000", 8000, wav_bytes(pcm, 8000))],
+        "clip_id string, sr_hz int, bytes binary",
+    )
+    (snr,) = snr_check(df).collect()
+    assert snr["clip_id"] == "pclip_000000000000" and snr["decode_ok"] and snr["snr_pass"]
+    (res,) = resample_check(df, target_sr=16000).collect()
+    assert res["decode_ok"] and res["n_out"] == 1600 and res["snr_pass"], res
+
+
 def test_dedup_audio_content_query_matches_oracle(spark):
     """Registry query vs DuckDB oracle at the sf0.01 fixture size (the
     driver's exact comparison, value-level)."""

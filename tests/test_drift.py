@@ -5,7 +5,18 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from macrobase_spark.operators.drift import psi_drift, quantile_edges
+from macrobase_spark.operators.drift import (
+    fit_bins,
+    fit_categories,
+    histogram_drift,
+    quantile_edges,
+)
+
+
+def drift_vs_global(df, stat, n_bins, bar, edges=None):
+    """`stat` of v by g against the frame's own histogram, flagged at `bar`."""
+    ref = fit_bins(df, "v", n_bins, edges)
+    return histogram_drift(df, ["g"], ref, [stat]).withColumn("drifted", F.col(stat) >= bar)
 
 
 @pytest.fixture(scope="module")
@@ -22,7 +33,7 @@ def shifted(spark):
 
 
 def test_planted_shift_recovered(shifted):
-    got = {r["g"]: (r["psi"], r["drifted"]) for r in psi_drift(shifted, "v", ["g"]).collect()}
+    got = {r["g"]: (r["psi"], r["drifted"]) for r in drift_vs_global(shifted, "psi", 10, 0.2).collect()}
     assert got["c"][1] is True and got["c"][0] > 1.0
     assert got["a"][1] is False and got["a"][0] < 0.1
     assert got["b"][1] is False and got["b"][0] < 0.1
@@ -34,7 +45,7 @@ def test_identical_distribution_scores_zeroish(spark):
     df = spark.createDataFrame(
         [(["x", "y"][i % 2], float(v)) for i, v in enumerate(vals)], "g string, v double"
     )
-    for r in psi_drift(df, "v", ["g"]).collect():
+    for r in drift_vs_global(df, "psi", 10, 0.2).collect():
         assert r["psi"] < 0.05 and not r["drifted"], r
 
 
@@ -43,7 +54,7 @@ def test_explicit_edges_and_counts(spark):
         [("a", float(i)) for i in range(100)] + [("b", float(i + 80)) for i in range(100)],
         "g string, v double",
     )
-    res = {r["g"]: r for r in psi_drift(df, "v", ["g"], edges=[50.0, 100.0, 150.0]).collect()}
+    res = {r["g"]: r for r in drift_vs_global(df, "psi", 4, 0.2, edges=[50.0, 100.0, 150.0]).collect()}
     assert res["a"]["n"] == 100 and res["b"]["n"] == 100
     # a occupies bins {0,1}, b bins {1,2,3} -> both diverge from the pooled dist
     assert res["a"]["psi"] > 0.2 and res["b"]["psi"] > 0.2
@@ -66,16 +77,14 @@ def test_edges_match_duckdb_quantiles(spark):
 def test_aggregate_is_group_grain(shifted):
     """Output is one row per group — the relation a monitor stores, not a
     per-row blowup; and binning adds no Python (pure column expressions)."""
-    out = psi_drift(shifted, "v", ["g"])
+    out = drift_vs_global(shifted, "psi", 10, 0.2)
     assert out.count() == 3
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PythonUDF" not in plan and "mapInPandas" not in plan.lower()
 
 
 def test_ks_planted_shift_recovered(shifted):
-    from macrobase_spark.operators.drift import ks_drift
-
-    got = {r["g"]: (r["ks_d"], r["drifted"]) for r in ks_drift(shifted, "v", ["g"]).collect()}
+    got = {r["g"]: (r["ks_d"], r["drifted"]) for r in drift_vs_global(shifted, "ks_d", 20, 0.1).collect()}
     # c is N(160,10) vs pooled ~N(100,10): CDFs barely overlap -> D near 1
     assert got["c"][1] is True and got["c"][0] > 0.8
     assert got["a"][1] is False and got["a"][0] < 0.1
@@ -86,8 +95,6 @@ def test_ks_matches_scipy_on_grid(spark):
     """Grid KS == direct numpy evaluation of max |CDF_g - CDF_global| at
     the same quantile edges (independent reimplementation)."""
     import numpy as np
-    from macrobase_spark.operators.drift import ks_drift, quantile_edges
-
     rng = np.random.default_rng(11)
     a = rng.normal(0, 1, 1500)
     b = rng.normal(0.7, 1.3, 700)
@@ -97,7 +104,7 @@ def test_ks_matches_scipy_on_grid(spark):
     )
     edges = quantile_edges(df, "v", 20)
     pooled = np.concatenate([a, b])
-    got = {r["g"]: r["ks_d"] for r in ks_drift(df, "v", ["g"], edges=edges).collect()}
+    got = {r["g"]: r["ks_d"] for r in drift_vs_global(df, "ks_d", 20, 0.1, edges).collect()}
     for name, arr in [("a", a), ("b", b)]:
         # CDF at bin k (k = #edges <= x boundary) evaluated at each edge
         cdf_g = np.array([(arr <= e).mean() for e in edges])
@@ -107,9 +114,7 @@ def test_ks_matches_scipy_on_grid(spark):
 
 
 def test_ks_group_grain_no_python(shifted):
-    from macrobase_spark.operators.drift import ks_drift
-
-    out = ks_drift(shifted, "v", ["g"])
+    out = drift_vs_global(shifted, "ks_d", 20, 0.1)
     assert out.count() == 3
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PythonUDF" not in plan and "mapInPandas" not in plan.lower()
@@ -118,8 +123,6 @@ def test_ks_group_grain_no_python(shifted):
 def test_snapshot_drift_planted(spark):
     """Reference = clean N(100,10); current batch has group c shifted.
     Both PSI and KS flag only the shifted group."""
-    from macrobase_spark.operators.drift import snapshot_drift
-
     rng = np.random.default_rng(5)
     ref = spark.createDataFrame(
         [(float(v),) for v in rng.normal(100, 10, 4000)], "v double"
@@ -127,7 +130,9 @@ def test_snapshot_drift_planted(spark):
     rows = [("a", float(v)) for v in rng.normal(100, 10, 1500)]
     rows += [("c", float(v)) for v in rng.normal(160, 10, 800)]
     cur = spark.createDataFrame(rows, "g string, v double")
-    got = {r["g"]: r for r in snapshot_drift(ref, cur, "v", ["g"]).collect()}
+    got = {r["g"]: r for r in histogram_drift(cur, ["g"], fit_bins(ref, "v", 10), ["psi", "ks_d"])
+        .withColumns({"psi_drifted": F.col("psi") >= 0.2, "ks_drifted": F.col("ks_d") >= 0.1})
+        .collect()}
     assert got["c"]["psi_drifted"] and got["c"]["ks_drifted"]
     assert got["c"]["ks_d"] > 0.8 and got["c"]["psi"] > 1.0
     assert not got["a"]["psi_drifted"] and not got["a"]["ks_drifted"]
@@ -135,13 +140,11 @@ def test_snapshot_drift_planted(spark):
 
 
 def test_snapshot_drift_single_aggregate(spark):
-    from macrobase_spark.operators.drift import snapshot_drift
-
     ref = spark.range(2000).select((F.col("id") % 97).cast("double").alias("v"))
     cur = spark.range(1000).select(
         F.lit("g").alias("g"), (F.col("id") % 89).cast("double").alias("v")
     )
-    out = snapshot_drift(ref, cur, "v", ["g"])
+    out = histogram_drift(cur, ["g"], fit_bins(ref, "v", 10), ["psi", "ks_d"])
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     # the comparison plan itself is ONE aggregate pair over cur
     assert plan.count("Aggregate") <= 2
@@ -152,8 +155,6 @@ def test_snapshot_drift_single_aggregate(spark):
 
 
 def test_categorical_drift_recovers_planted_codec_shift(spark):
-    from macrobase_spark.operators.drift import categorical_drift
-
     ref = spark.createDataFrame(
         [("opus",)] * 60 + [("flac",)] * 20 + [("aac",)] * 20, "codec string"
     ).withColumn("grp", F.lit("ref"))
@@ -163,7 +164,9 @@ def test_categorical_drift_recovers_planted_codec_shift(spark):
         + [("bad", "flac")] * 80 + [("bad", "opus")] * 20,
         "grp string, codec string",
     )
-    rows = {r["grp"]: r for r in categorical_drift(ref, cur, "codec", ["grp"]).collect()}
+    rows = {r["grp"]: r for r in histogram_drift(cur, ["grp"], fit_categories(ref, "codec", 50), ["psi", "chi2"])
+        .withColumn("psi_drifted", F.col("psi") >= 0.2)
+        .collect()}
     assert rows["clean"]["psi"] < 0.01 and not rows["clean"]["psi_drifted"]
     assert rows["bad"]["psi"] > 0.5 and rows["bad"]["psi_drifted"]
     assert rows["bad"]["chi2"] > rows["clean"]["chi2"]
@@ -173,29 +176,29 @@ def test_categorical_drift_recovers_planted_codec_shift(spark):
 def test_categorical_drift_other_pooling_and_nulls(spark):
     """Categories outside the top-k fit (and NULLs) pool into __other__ on
     both the reference and current side."""
-    from macrobase_spark.operators.drift import categorical_drift, categorical_shares
-
     ref = spark.createDataFrame(
         [("a",)] * 50 + [("b",)] * 30 + [("c",)] * 10 + [("d",)] * 10, "cat string"
     )
-    shares = categorical_shares(ref, "cat", top_k=2)
-    assert [c for c, _ in shares] == ["a", "b", "__other__"]
-    assert abs(dict(shares)["__other__"] - 0.2) < 1e-9
+    hist = fit_categories(ref, "cat", 2)
+    assert hist.categories == ("a", "b") and len(hist.counts) == 3
+    assert abs(hist.shares[-1] - 0.2) < 1e-9
     cur = spark.createDataFrame(
         [("g", "a")] * 50 + [("g", "b")] * 30 + [("g", "zzz")] * 10 + [("g", None)] * 10,
         "grp string, cat string",
     )
-    row = categorical_drift(ref, cur, "cat", ["grp"], top_k=2).collect()[0]
+    row = (
+        histogram_drift(cur, ["grp"], hist, ["psi"])
+        .withColumn("psi_drifted", F.col("psi") >= 0.2)
+        .collect()[0]
+    )
     # zzz and NULL both land in __other__, matching the ref tail exactly
     assert row["psi"] < 1e-6 and not row["psi_drifted"]
 
 
 def test_w1_planted_shift_in_metric_units(shifted):
-    from macrobase_spark.operators.drift import w1_drift
-
     got = {
         r["g"]: (r["w1"], r["drifted"])
-        for r in w1_drift(shifted, "v", ["g"], min_w1=10.0).collect()
+        for r in drift_vs_global(shifted, "w1", 20, 10.0).collect()
     }
     # c is N(160,10) vs pooled ~N(104): the grid-truncated W1 must read a
     # large fraction of the ~56-unit shift; clean groups read ~0
@@ -209,15 +212,13 @@ def test_w1_matches_numpy_on_grid(spark):
     exact edges + counts (independent reimplementation)."""
     import numpy as np
 
-    from macrobase_spark.operators.drift import quantile_edges, w1_drift
-
     rng = np.random.default_rng(11)
     a = rng.normal(50.0, 5.0, 1500)
     b = rng.normal(62.0, 8.0, 500)
     rows = [("a", float(v)) for v in a] + [("b", float(v)) for v in b]
     df = spark.createDataFrame(rows, "g string, v double")
     edges = quantile_edges(df, "v", 20)
-    got = {r["g"]: r["w1"] for r in w1_drift(df, "v", ["g"], n_bins=20).collect()}
+    got = {r["g"]: r["w1"] for r in drift_vs_global(df, "w1", 20, 50.0).collect()}
     allv = np.concatenate([a, b])
     for g, vals in (("a", a), ("b", b)):
         w1 = 0.0
@@ -229,9 +230,23 @@ def test_w1_matches_numpy_on_grid(spark):
 
 
 def test_w1_group_grain_no_python(shifted):
-    from macrobase_spark.operators.drift import w1_drift
-
-    out = w1_drift(shifted, "v", ["g"])
+    out = drift_vs_global(shifted, "w1", 20, 50.0)
     assert out.count() == 3
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PythonUDF" not in plan and "mapInPandas" not in plan.lower()
+
+
+def test_w1_spans_empty_bins(spark):
+    """Edges 1/3/5 over [1]×4 ∪ [5]×4 leave the middle bin empty; its width
+    still carries CDF mass, so W1 is the grid formula's 2.0 per group."""
+    df = spark.createDataFrame([("a", 1.0)] * 4 + [("b", 5.0)] * 4, "g string, v double")
+    edges = quantile_edges(df, "v", 4)
+    assert edges == [1.0, 3.0, 5.0]
+    allv = np.array([1.0] * 4 + [5.0] * 4)
+    got = {r["g"]: r["w1"] for r in drift_vs_global(df, "w1", 4, 50.0).collect()}
+    for g, vals in (("a", np.array([1.0] * 4)), ("b", np.array([5.0] * 4))):
+        want = sum(
+            abs((vals <= edges[j]).mean() - (allv <= edges[j]).mean()) * (edges[j + 1] - edges[j])
+            for j in range(len(edges) - 1)
+        )
+        assert want == 2.0 and got[g] == pytest.approx(want, abs=1e-6), (g, got[g])

@@ -74,12 +74,12 @@ def test_ecod_scores_invariant_under_monotone_transform(spark):
 
 
 def test_w1_self_distance_is_zero(spark):
-    from macrobase_spark.operators.drift import w1_drift
+    from macrobase_spark.operators.drift import fit_bins, histogram_drift
 
     rng = np.random.default_rng(21)
     vals = rng.normal(100.0, 15.0, 1200)
     # two groups drawn from the SAME values (interleaved) — grid W1 ≈ 0
     rows = [("a" if i % 2 == 0 else "b", float(v)) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "g string, v double")
-    got = {r["g"]: r["w1"] for r in w1_drift(df, "v", ["g"], min_w1=5.0).collect()}
+    got = {r["g"]: r["w1"] for r in histogram_drift(df, ["g"], fit_bins(df, "v", 20), ["w1"]).collect()}
     assert got["a"] < 2.0 and got["b"] < 2.0

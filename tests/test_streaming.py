@@ -10,7 +10,6 @@ from macrobase_spark.streaming import (
     count_sliding_window,
     count_tumbling_window,
     moving_average,
-    stream_windowed_explain,
     windowed_explain,
 )
 
@@ -64,18 +63,18 @@ def test_stream_matches_batch(spark, planted_stream, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = stream_windowed_explain(
-        stream,
-        "ts",
-        "1 hour",
-        F.col("value") > 99.0,
-        ["attr"],
+    out = windowed_explain(
         # the data spans 3 h and arrives one FILE per micro-batch in listing
         # order, which is not event-time order — a 0 s watermark (the
         # reference's in-order assumption) would drop whole files as late
         # nondeterministically (the residual 1-in-N flake); a watermark
         # covering the span makes arrival order irrelevant
-        watermark="4 hours",
+        stream.withWatermark("ts", "4 hours"),
+        "ts",
+        "1 hour",
+        None,
+        F.col("value") > 99.0,
+        ["attr"],
         min_support=0.5,
         min_ratio_metric=2.0,
     )

@@ -1,11 +1,19 @@
-"""Windowed PSI drift: planted-window recovery, batch/stream equivalence,
-and reference-distribution fit."""
+"""Windowed histogram drift (PSI, KS, categorical): planted-window
+recovery, batch/stream equivalence, and reference-distribution fit."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from macrobase_spark.streaming.drift import reference_distribution, windowed_psi
+from macrobase_spark.operators.drift import fit_bins, fit_categories, histogram_drift
+
+
+def windowed(df, ref, stats, bar):
+    """`stats` per (1-hour window, g) against `ref`, flagged at `bar` on
+    the first stat."""
+    return histogram_drift(df, ["g"], ref, stats, window=("ts", "1 hour")).withColumn(
+        "drifted", F.col(stats[0]) >= bar
+    )
 
 
 @pytest.fixture(scope="module")
@@ -29,16 +37,11 @@ def drift_stream(spark):
 @pytest.fixture(scope="module")
 def ref(spark, drift_stream):
     """Reference fit on the un-drifted hour 0."""
-    return reference_distribution(
-        drift_stream.filter(F.hour("ts") == 0), "value", n_bins=10
-    )
+    return fit_bins(drift_stream.filter(F.hour("ts") == 0), "value", 10)
 
 
 def test_planted_window_recovered(drift_stream, ref):
-    edges, shares = ref
-    res = windowed_psi(
-        drift_stream, "ts", "1 hour", "value", ["g"], edges, shares
-    ).collect()
+    res = windowed(drift_stream, ref, ["psi"], 0.2).collect()
     assert len(res) == 6  # 3 windows × 2 groups
     for r in res:
         if r["g"] == "x" and r["ws"].hour == 1:
@@ -48,18 +51,17 @@ def test_planted_window_recovered(drift_stream, ref):
 
 
 def test_reference_distribution_shape(ref):
-    edges, shares = ref
+    edges, shares = ref.edges, ref.shares
     assert len(edges) == 9 and len(shares) == 10
     assert abs(sum(shares) - 1.0) < 1e-9
     assert all(0.05 < s < 0.2 for s in shares)  # deciles of a smooth dist
 
 
 def test_stream_matches_batch(spark, drift_stream, ref, tmp_path):
-    """The SAME windowed_psi plan over a file stream (append mode) emits
+    """The SAME windowed PSI plan over a file stream (append mode) emits
     the batch result exactly once per finalized window. The watermark (3 h)
     exceeds the data span so file-listing order can't drop anything as
     late; the far-future sentinels still push every window closed."""
-    edges, shares = ref
     src = str(tmp_path / "psi_src")
     drift_stream.select("id", "g", "value", "ts").write.mode("overwrite").parquet(src)
     stream = (
@@ -67,9 +69,7 @@ def test_stream_matches_batch(spark, drift_stream, ref, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = windowed_psi(
-        stream, "ts", "1 hour", "value", ["g"], edges, shares, watermark="3 hours"
-    )
+    out = windowed(stream.withWatermark("ts", "3 hours"), ref, ["psi"], 0.2)
     q = (
         out.writeStream.format("memory")
         .queryName("psidrift")
@@ -101,9 +101,7 @@ def test_stream_matches_batch(spark, drift_stream, ref, tmp_path):
         q.stop()
     exp = {
         (r["ws"], r["g"]): (r["n"], r["psi"], r["drifted"])
-        for r in windowed_psi(
-            drift_stream, "ts", "1 hour", "value", ["g"], edges, shares
-        ).collect()
+        for r in windowed(drift_stream, ref, ["psi"], 0.2).collect()
     }
     assert got == exp and len(got) == 6
 
@@ -111,21 +109,15 @@ def test_stream_matches_batch(spark, drift_stream, ref, tmp_path):
 def test_single_stateful_operator(spark, drift_stream, ref):
     """The plan carries exactly one aggregate pair (partial+final) over the
     window — PSI arithmetic is stateless projection, not a second agg."""
-    edges, shares = ref
     plan = (
-        windowed_psi(drift_stream, "ts", "1 hour", "value", ["g"], edges, shares)
+        windowed(drift_stream, ref, ["psi"], 0.2)
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     assert plan.count("Aggregate") <= 2
 
 
 def test_ks_planted_window_recovered(drift_stream, ref):
-    from macrobase_spark.streaming.drift import windowed_ks
-
-    edges, shares = ref
-    res = windowed_ks(
-        drift_stream, "ts", "1 hour", "value", ["g"], edges, shares
-    ).collect()
+    res = windowed(drift_stream, ref, ["ks_d"], 0.1).collect()
     assert len(res) == 6
     for r in res:
         if r["g"] == "x" and r["ws"].hour == 1:
@@ -136,11 +128,8 @@ def test_ks_planted_window_recovered(drift_stream, ref):
 
 
 def test_ks_stream_matches_batch(spark, drift_stream, ref, tmp_path):
-    """windowed_ks over a file stream (append mode) == the same plan on the
+    """Windowed KS over a file stream (append mode) == the same plan on the
     batch DataFrame, one emission per finalized window."""
-    from macrobase_spark.streaming.drift import windowed_ks
-
-    edges, shares = ref
     src = str(tmp_path / "ks_src")
     drift_stream.select("id", "g", "value", "ts").write.mode("overwrite").parquet(src)
     stream = (
@@ -148,9 +137,7 @@ def test_ks_stream_matches_batch(spark, drift_stream, ref, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = windowed_ks(
-        stream, "ts", "1 hour", "value", ["g"], edges, shares, watermark="3 hours"
-    )
+    out = windowed(stream.withWatermark("ts", "3 hours"), ref, ["ks_d"], 0.1)
     q = (
         out.writeStream.format("memory")
         .queryName("ksdrift")
@@ -179,19 +166,14 @@ def test_ks_stream_matches_batch(spark, drift_stream, ref, tmp_path):
         q.stop()
     exp = {
         (r["ws"], r["g"]): (r["n"], r["ks_d"], r["drifted"])
-        for r in windowed_ks(
-            drift_stream, "ts", "1 hour", "value", ["g"], edges, shares
-        ).collect()
+        for r in windowed(drift_stream, ref, ["ks_d"], 0.1).collect()
     }
     assert got == exp and len(got) == 6
 
 
 def test_ks_single_stateful_operator(spark, drift_stream, ref):
-    from macrobase_spark.streaming.drift import windowed_ks
-
-    edges, shares = ref
     plan = (
-        windowed_ks(drift_stream, "ts", "1 hour", "value", ["g"], edges, shares)
+        windowed(drift_stream, ref, ["ks_d"], 0.1)
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     assert plan.count("Aggregate") <= 2
@@ -217,13 +199,8 @@ def cat_stream(spark):
 
 
 def test_categorical_planted_window_recovered(spark, cat_stream):
-    from macrobase_spark.operators.drift import categorical_shares
-    from macrobase_spark.streaming.drift import windowed_categorical
-
-    shares = categorical_shares(cat_stream.filter(F.hour("ts") == 0), "codec")
-    res = windowed_categorical(
-        cat_stream, "ts", "1 hour", "codec", ["g"], shares
-    ).collect()
+    shares = fit_categories(cat_stream.filter(F.hour("ts") == 0), "codec", 50)
+    res = windowed(cat_stream, shares, ["psi", "chi2"], 0.2).collect()
     assert len(res) == 6
     for r in res:
         if r["g"] == "x" and r["ws"].hour == 1:
@@ -235,18 +212,8 @@ def test_categorical_planted_window_recovered(spark, cat_stream):
 def test_categorical_stream_matches_batch(spark, cat_stream, tmp_path):
     """Same plan over a file stream (append mode, watermark beyond the data
     span) emits the batch rows exactly once per finalized window."""
-    from macrobase_spark.operators.drift import categorical_shares
-    from macrobase_spark.streaming.drift import windowed_categorical
-
-    shares = categorical_shares(cat_stream.filter(F.hour("ts") == 0), "codec")
-    batch = sorted(
-        map(
-            tuple,
-            windowed_categorical(
-                cat_stream, "ts", "1 hour", "codec", ["g"], shares
-            ).collect(),
-        )
-    )
+    shares = fit_categories(cat_stream.filter(F.hour("ts") == 0), "codec", 50)
+    batch = sorted(map(tuple, windowed(cat_stream, shares, ["psi", "chi2"], 0.2).collect()))
     src = tmp_path / "cat_src"
     cat_stream.write.parquet(str(src))
     # far-future sentinel rows so every real window passes the watermark
@@ -264,9 +231,7 @@ def test_categorical_stream_matches_batch(spark, cat_stream, tmp_path):
     )
     sent.write.mode("append").parquet(str(src))
     stream = spark.readStream.schema(cat_stream.schema).parquet(str(src))
-    out = windowed_categorical(
-        stream, "ts", "1 hour", "codec", ["g"], shares, watermark="3 hours"
-    )
+    out = windowed(stream.withWatermark("ts", "3 hours"), shares, ["psi", "chi2"], 0.2)
     q = (
         out.writeStream.format("memory")
         .queryName("cat_drift_sink")
@@ -287,12 +252,9 @@ def test_categorical_stream_matches_batch(spark, cat_stream, tmp_path):
 
 
 def test_categorical_single_stateful_operator(spark, cat_stream):
-    from macrobase_spark.operators.drift import categorical_shares
-    from macrobase_spark.streaming.drift import windowed_categorical
-
-    shares = categorical_shares(cat_stream.filter(F.hour("ts") == 0), "codec")
+    shares = fit_categories(cat_stream.filter(F.hour("ts") == 0), "codec", 50)
     plan = (
-        windowed_categorical(cat_stream, "ts", "1 hour", "codec", ["g"], shares)
+        windowed(cat_stream, shares, ["psi", "chi2"], 0.2)
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     assert plan.count("Aggregate") <= 2
