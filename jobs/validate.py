@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 from pathlib import Path
@@ -22,6 +23,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from macrobase_spark.functions.rows import local_rows  # noqa: E402
 from macrobase_spark.operators.checks import SuiteConfig, run_suite  # noqa: E402
 from macrobase_spark.plans.manifest import RunManifest  # noqa: E402
 from macrobase_spark.session import get_spark  # noqa: E402
@@ -169,25 +171,26 @@ def main() -> int:
         print(json.dumps(out))
 
     run_manifest = RunManifest(args.manifest_dir)
-    all_parts = [r["codec"] for r in clips.select("codec").distinct().collect()]
-    # icetable mode resumes at SNAPSHOT grain (handled above): the
-    # incremental rows must be checked for every codec, including codecs
-    # already validated in earlier snapshots
-    todo = (
-        run_manifest.pending(spark, all_parts)
-        if args.resume and not args.iceberg_root
-        else all_parts
-    )
-    if not todo:
-        print(json.dumps({"status": "nothing to do", "partitions": 0}))
-        return 0
+    pending_clips = clips
+    # only a partition-grain resume needs the codec list: icetable mode
+    # resumes at SNAPSHOT grain (handled above) and checks the incremental
+    # rows for every codec, and a fresh run checks every codec too
+    if args.resume and not args.iceberg_root:
+        all_parts = [r["codec"] for r in clips.select("codec").distinct().collect()]
+        todo = run_manifest.pending(spark, all_parts)
+        if not todo:
+            print(json.dumps({"status": "nothing to do", "partitions": 0}))
+            return 0
+        # partition pruning: the filter on the partition column prunes at
+        # the source
+        pending_clips = clips.filter(F.col("codec").isin(todo))
 
-    # one suite run over the pending partitions (partition pruning: the
-    # filter on the partition column prunes at the source)
-    pending_clips = clips.filter(F.col("codec").isin(todo))
     res = run_suite(pending_clips, ref, SuiteConfig())
 
     verdicts = res.verdicts.collect()
+    if not verdicts:  # an empty table: no partition to record
+        print(json.dumps({"status": "nothing to do", "partitions": 0}))
+        return 0
     n_viol = res.violations.count()
     wall = time.time() - t0
 
@@ -214,32 +217,37 @@ def main() -> int:
     # tolerance — loose by design: a validation run's volume legitimately
     # varies, and the gate is for order-of-magnitude surprises like an
     # empty append or a violation explosion). First run never self-flags.
-    from macrobase_spark.plans.metrics_repo import anomaly_check, record_profile
+    from macrobase_spark.plans.metrics_repo import (
+        PROFILE_HISTORY_SCHEMA,
+        anomaly_check,
+        profile_long,
+        record_profile,
+    )
 
     hist_path = f"{args.manifest_dir.rstrip('/')}_profile_history"
     viol_rate = n_viol / max(total_rows, 1)
-    prof = spark.createDataFrame(
+    prof = local_rows(
+        spark,
         [("run", int(total_rows), int(n_viol), float(viol_rate))],
         "column string, n_rows long, n_violations long, violation_rate double",
     )
     metrics = ["n_rows", "n_violations", "violation_rate"]
     anomalies = []
-    import os as _os
+    prev_runs = 0
+    if os.path.isdir(hist_path):
+        import pyarrow.parquet as pq
 
-    if _os.path.isdir(hist_path):
-        from macrobase_spark.plans.metrics_repo import profile_long
-
+        # the history is a few rows per run: one driver-side read feeds
+        # both the anomaly gate and the next run number
+        hist = pq.read_table(hist_path, columns=["run_seq", "column", "metric", "value"])
+        prev_runs = max(hist.column("run_seq").to_pylist(), default=0)
         res = anomaly_check(
-            spark.read.parquet(hist_path), profile_long(prof, metrics),
+            local_rows(spark, zip(*hist.to_pydict().values()), PROFILE_HISTORY_SCHEMA),
+            profile_long(prof, metrics),
             method="relative", threshold=0.5, window=30,
         )
         anomalies = [r.asDict() for r in res.filter(F.col("status") == "anomaly").collect()]
-    prev_runs = (
-        spark.read.parquet(hist_path).agg(F.max("run_seq")).collect()[0][0]
-        if _os.path.isdir(hist_path)
-        else 0
-    )
-    record_profile(prof, hist_path, int(prev_runs or 0) + 1, metrics)
+    record_profile(prof, hist_path, prev_runs + 1, metrics)
 
     print(
         json.dumps(

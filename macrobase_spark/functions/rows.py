@@ -1,5 +1,5 @@
 """One row-map runner: the Python-UDF batch boundary of every per-row
-operator and fixture generator.
+operator and fixture generator, and one constructor for driver-side rows.
 
 Each multimodal check is a per-payload Python function (decode, walk,
 tokenize, fingerprint), and each synthetic fixture is a per-id Python
@@ -12,6 +12,12 @@ Binary columns reach the function as zero-copy uint8 views into the
 batch's buffers (no per-row ``bytes`` objects; call ``.tobytes()`` where
 a parser needs real bytes). Every other column arrives as its Python
 value, and nulls arrive as ``None``.
+
+`local_rows` types rows that are already on the driver (verdicts, drift,
+explanation, manifest and profile rows) the same way, into a pyarrow
+Table, so Spark holds them as a `LocalRelation`: collecting or joining
+such a frame launches no job, where a list-based `createDataFrame` builds
+an RDD whose every action is a job of `defaultParallelism` tasks.
 """
 
 from __future__ import annotations
@@ -19,7 +25,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
@@ -51,6 +57,42 @@ def _values(arr) -> list:
     return out
 
 
+def _arrow_schema(schema: StructType | str):
+    """(StructType, Arrow schema) of a StructType or DDL string."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        from pyspark.sql.types import _parse_datatype_string
+
+        schema = _parse_datatype_string(schema)
+    return schema, to_arrow_schema(schema)
+
+
+def _arrow_columns(rows: list[tuple], target, from_pandas: bool) -> list:
+    """Row tuples as one Arrow array per field of `target`; with
+    `from_pandas` a float NaN becomes null."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [()] * len(target)
+    return [
+        pa.array(c, type=f.type, from_pandas=from_pandas) for c, f in zip(cols, target)
+    ]
+
+
+def local_rows(
+    spark: SparkSession, rows: Iterable[tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver-side row tuples as a DataFrame typed by `schema` (a
+    StructType or DDL string), held as a `LocalRelation`: its actions
+    launch no Spark job. ``None`` is null; a float NaN stays NaN, as with
+    `createDataFrame` over a list."""
+    import pyarrow as pa
+
+    schema, target = _arrow_schema(schema)
+    table = pa.Table.from_arrays(_arrow_columns(list(rows), target, False), schema=target)
+    return spark.createDataFrame(table, schema)
+
+
 def map_rows(
     df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: StructType | str
 ) -> DataFrame:
@@ -64,26 +106,16 @@ def map_rows(
     input row alone, so a generator over ``spark.range`` yields the same
     rows at any partitioning."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    if isinstance(schema, str):
-        from pyspark.sql.types import _parse_datatype_string
-
-        schema = _parse_datatype_string(schema)
-    target = to_arrow_schema(schema)
+    schema, target = _arrow_schema(schema)
 
     def run(batches):
         for b in batches:
             rows = []
             for row in zip(*(_values(c) for c in b.columns)):
                 rows.extend(fn(*row))
-            cols = list(zip(*rows)) if rows else [()] * len(target)
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(c, type=f.type, from_pandas=True)
-                    for c, f in zip(cols, target)
-                ],
-                schema=target,
+                _arrow_columns(rows, target, True), schema=target
             )
 
     return df.mapInArrow(run, schema)

@@ -558,8 +558,12 @@ def score_record_batch(b):
 
     n = b.num_rows
     col = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-    idx = pc.cast(
-        pc.utf8_slice_codeunits(col["clip_id"], 5, 17), pa.int64()
+    # the reference render's content index, as clip_index(): the 12 digits
+    # after "clip_", -1 for an id of any other shape
+    digits = pc.utf8_slice_codeunits(col["clip_id"], 5, 17)
+    is_index = pc.fill_null(pc.ascii_is_decimal(digits), False)
+    idx = pc.if_else(
+        is_index, pc.cast(pc.if_else(is_index, digits, "0"), pa.int64()), -1
     ).to_numpy(zero_copy_only=False)
     srs = col["sr_hz"].to_numpy(zero_copy_only=False)
     offsets, data = _binary_views(col["bytes"])

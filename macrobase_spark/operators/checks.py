@@ -20,7 +20,12 @@ aggregation/join over it:
   only group-level rows ever leave the executors.
 - verdicts: per-partition rollup of violations; the driver sees one row per
   (partition, check).
-- explanation: APriori risk-ratio rounds over the narrow cache.
+- explanation: APriori risk-ratio lattice in cube mode over the rollup's
+  (partition, sr_hz) counts, in plain Python on the driver.
+
+Results that are built on the driver (drift rows, column stats, verdicts,
+explanation) are local relations (`functions.rows.local_rows`): reading
+them back launches no Spark job.
 """
 
 from __future__ import annotations
@@ -29,8 +34,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from macrobase_spark.functions.rows import local_rows
 from macrobase_spark.operators.audio import score_clips
-from macrobase_spark.operators.explain import ExplainParams, explain
+from macrobase_spark.operators.explain import ExplainParams, explain, explain_rows
 
 VIOLATION_COLS = ["clip_id", "check", "detail"]
 
@@ -319,8 +325,8 @@ CHECK_NAMES = ["uniqueness", "null_transcript", "empty_transcript", "ref_integri
 def _suite_from_scored(
     scored: DataFrame, manifest: DataFrame, cfg: SuiteConfig
 ) -> SuiteResult:
-    """Build the suite outputs from the materialized scored relation in TWO
-    distributed jobs total (the N-vs-4N scaling ratio is dominated by
+    """Build the suite outputs from the materialized scored relation with TWO
+    Spark actions after the scan (the N-vs-4N scaling ratio is dominated by
     sequential job latency, so every removed pass is efficiency):
 
     1. the row-violation materialization (uniqueness agg + explode scan +
@@ -332,13 +338,14 @@ def _suite_from_scored(
        violation-row counts, and flagged-row counts.
 
     Everything else derives from that ≤(|codec|·|sr|) + |codec| + 1 row
-    aggregate on the driver: drift (MAD over the group medians), column
-    stats, per-partition verdicts, and the risk-ratio explanation (the
-    lattice runs in CUBE mode over the group counts — identical numbers to
-    the raw path, reference APLSummarizer cube semantics). Each output is
-    identical, relation-for-relation, to the component functions
-    (row_violations / verdicts_from_violations / column_stats / explain) the
-    oracle queries certify — asserted by tests/test_clips.py.
+    aggregate on the driver, with no further Spark job: drift (MAD over the
+    group medians), column stats, per-partition verdicts, and the
+    risk-ratio explanation (`explain_rows`: the lattice runs in plain
+    Python in CUBE mode over the `fine` group counts — identical numbers to
+    the raw path, reference APLSummarizer cube semantics). Each output is a
+    local relation, identical, relation-for-relation, to the component
+    functions (row_violations / verdicts_from_violations / column_stats /
+    explain) the oracle queries certify — asserted by tests/test_clips.py.
     """
     part = cfg.partition_col
     row_viol = _materialize(row_violations(scored, manifest), cfg.cache)
@@ -399,11 +406,12 @@ def _suite_from_scored(
                         f"med={float(r['dur_q'][0]):.1f} score={float(s):.2f}",
                     )
                 )
-    drift = spark.createDataFrame(drift_out, "clip_id string, check string, detail string")
+    drift = local_rows(spark, drift_out, "clip_id string, check string, detail string")
     violations = row_viol.unionByName(drift)
 
     # --- column stats (part grain) ----------------------------------------
-    stats = spark.createDataFrame(
+    stats = local_rows(
+        spark,
         [
             (
                 r[part],
@@ -432,29 +440,23 @@ def _suite_from_scored(
                 verd_rows.append((r[part], r["n_rows"], c, int(nv), False))
         else:
             verd_rows.append((r[part], r["n_rows"], None, 0, True))
-    verdicts = spark.createDataFrame(
+    verdicts = local_rows(
+        spark,
         verd_rows,
         f"{part} string, n_rows long, check string, n_violations long, passed boolean",
     )
 
-    # --- explanation: lattice in cube mode over the fine-grain counts -----
-    cube = spark.createDataFrame(
-        [
-            (r[part], str(r["sr_hz"]), float(r["n_flagged"]), float(r["n_rows"]))
-            for r in fine
-        ],
-        f"{part} string, sr_hz_s string, _OUTLIER double, _count double",
-    )
-    explanation = explain(
-        cube,
+    # --- explanation: the lattice in cube mode over the fine-grain counts,
+    # on the driver (the cube holds at most |part|·|sr_hz| rows) -----------
+    explanation = explain_rows(
+        spark,
+        [(r["n_flagged"], r["n_rows"], r[part], str(r["sr_hz"])) for r in fine],
         ExplainParams(
             attributes=[part, "sr_hz_s"],
-            count_col="_count",
             min_support=cfg.explain_min_support,
             min_ratio_metric=cfg.explain_min_ratio,
             ratio_metric="risk_ratio",
             max_order=2,
-            cache_base=False,
         ),
     )
     return SuiteResult(violations, verdicts, explanation, stats, scored)

@@ -48,6 +48,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from macrobase_spark.functions.rows import local_rows
 from macrobase_spark.operators.clips_suite import clips_table, clips_table_path, scored_parquet
 
 RESULT_SCHEMA = StructType(
@@ -268,7 +269,7 @@ def verify(
     """
     aggs = [c.agg for ch in checks for c in ch.constraints]
     if not aggs:
-        return df.sparkSession.createDataFrame([], RESULT_SCHEMA)
+        return local_rows(df.sparkSession, [], RESULT_SCHEMA)
     grouped = df.groupBy(*group_by) if group_by else df.groupBy()
     one = grouped.agg(*aggs)
     structs = [c.result_struct(ch) for ch in checks for c in ch.constraints]
@@ -534,7 +535,7 @@ def schema_check(
         for f in df.schema.fields:
             if f.name not in declared:
                 rows.append((f.name, "unexpected", None, f.dataType.simpleString()))
-    return df.sparkSession.createDataFrame(rows, SCHEMA_VIOLATIONS_SCHEMA)
+    return local_rows(df.sparkSession, rows, SCHEMA_VIOLATIONS_SCHEMA)
 
 
 def schema_from_config(conf: dict) -> tuple[list, bool, bool]:

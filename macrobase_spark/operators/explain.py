@@ -17,22 +17,30 @@ What it computes (reference semantics):
   support, <ratio_metric>, outlier_count, total_count.
 
 How it runs (Spark-first, 100 TB-ready):
-- round k = ONE shuffle: explode each row's k-combinations of its *frequent*
-  singleton values, hash-aggregate sum(outlier), sum(count). Spark's
-  partial (map-side) aggregation absorbs key skew.
-- the ONLY data on the driver is per-round survivor aggregates — itemsets
-  that hold >= min_support of all outliers, so their count is bounded by
-  (#attrs choose k) / min_support regardless of input row count. Candidate
-  sets flow back into round k+1 as broadcast literals; the final violation
-  relation is assembled from those same aggregates, so each round's shuffle
-  executes exactly once.
-- the narrow (outlier, count, attrs) projection is cached across the
-  <=3 rounds and unpersisted at the end.
+- one shared KEEP/NEXT/PRUNE engine (`_lattice`) decides, round by round,
+  what to emit, what to expand and which candidates the next round counts;
+  only a round's "sum the aggregates per k-itemset" differs by input.
+- a DataFrame input (`explain`): round k = ONE shuffle — explode each row's
+  k-combinations of its *frequent* singleton values, hash-aggregate
+  sum(outlier), sum(count). Spark's partial (map-side) aggregation absorbs
+  key skew. The ONLY data on the driver is per-round survivor aggregates —
+  itemsets that hold >= min_support of all outliers, so their count is
+  bounded by (#attrs choose k) / min_support regardless of input row
+  count. Candidate sets flow back into round k+1 as broadcast literals;
+  the final violation relation is assembled from those same aggregates,
+  so each round's shuffle executes exactly once. The narrow (outlier,
+  count, attrs) projection is cached across the <=3 rounds.
+- rows already on the driver (`explain_rows`, the reference's cube mode:
+  APLSummarizer over group counts, as the clips suite's (codec, sr_hz)
+  rollup hands it over): each round is a dict sum in plain Python, and
+  no Spark job runs.
+- every result is a local relation (`functions.rows.local_rows`).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from itertools import combinations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -40,9 +48,13 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from macrobase_spark.functions.metrics import ratio_metric_py
+from macrobase_spark.functions.rows import local_rows
 from macrobase_spark.operators.classify import OUTLIER_COL
 
 _ITEMS = "_mb_items"
+# the most order-3 candidate keys a round filters with a literal isin list;
+# past it, a broadcast semi join against the keys
+_ISIN_MAX = 5000
 
 
 @dataclass
@@ -123,10 +135,8 @@ def explain(df: DataFrame, params: ExplainParams) -> DataFrame:
             base.unpersist()
 
 
-def _lattice_rounds(
-    base: DataFrame,
-    attrs: list[str],
-    n_aggs: int,
+def _lattice(
+    sum_round,
     support_thresh: float,
     metric_fn,
     min_metric: float,
@@ -135,188 +145,188 @@ def _lattice_rounds(
 ) -> list[tuple[tuple, tuple[float, ...]]]:
     """The shared APriori KEEP/NEXT/PRUNE engine over itemset orders 1..3.
 
-    `base` must carry aggregate source columns _g0.._g{n-1} plus the
-    attribute columns; _g0 is the outlier-count-like column the support
-    threshold applies to. `metric_fn(aggs) -> float` is the (non-monotonic)
-    quality metric; itemsets with _g0 >= support_thresh AND metric >=
-    min_metric are emitted (KEEP); under `prune`, KEEP stops expansion and
-    order-3 candidates require all 2-subsets to be NEXT pairs (reference
-    APrioriLinear.java:279-322, validateCandidate:347-367).
+    An item is (attr_idx, value); an itemset is a tuple of items in
+    attribute order. `sum_round(orders, freq, cands)` sums the aggregate
+    columns per itemset of each order in `orders`, over the items whose
+    value is in `freq[attr_idx]` (every non-null value when `freq` is
+    None) and, when `cands` is given, only for the itemsets in it; aggs[0]
+    is the outlier-count-like sum the support threshold applies to.
+    `_spark_sums` runs a round as a Spark aggregation, `_row_sums` over
+    rows already on the driver.
 
-    Returns [(items, aggs)] where items = ((attr_idx, value), ...).
-    Only support-bounded aggregates ever reach the driver.
-    """
-    gcols = [f"_g{i}" for i in range(n_aggs)]
-    sums = [F.sum(c).alias(c) for c in gcols]
-    emitted: list[tuple[tuple, tuple[float, ...]]] = []
+    `metric_fn(aggs) -> float` is the (non-monotonic) quality metric;
+    itemsets with aggs[0] >= support_thresh AND metric >= min_metric are
+    emitted (KEEP). Under `prune`, KEEP stops expansion, order-2 itemsets
+    pair the values of the order-1 NEXT itemsets, and an order-3 candidate
+    needs all three 2-subsets among the order-2 NEXT itemsets (reference
+    APrioriLinear.java:279-322, validateCandidate:347-367). Without
+    `prune` every order is summed in one round: the full support- and
+    metric-filtered cube (the oracle-expressible mode).
 
-    item_structs = F.array(
-        *[
-            F.struct(F.lit(i).alias("ai"), F.col(a).cast("string").alias("val"))
-            for i, a in enumerate(attrs)
+    Returns [(items, aggs)]."""
+
+    def survivors(orders, freq=None, cands=None):
+        return [
+            (items, aggs)
+            for items, aggs in sum_round(orders, freq, cands)
+            if aggs[0] >= support_thresh
         ]
-    )
 
     if not prune:
-        # no containment pruning ⇒ no inter-round dependency: every order's
-        # itemsets aggregate in ONE shuffle (explode the 1..max_order combos
-        # together). This is the full filtered cube — the oracle-expressible
-        # mode — so candidate sets aren't support-pruned between rounds
-        # anyway; the rounds would only add sequential job latency. With
-        # high-cardinality attribute sets prefer prune=True (the reference
-        # default), whose round-wise support pruning bounds the group count.
-        nullable_items = F.array(
-            *[
-                F.when(
-                    F.col(a).isNotNull(),
-                    F.struct(F.lit(i).alias("ai"), F.col(a).cast("string").alias("val")),
-                )
-                for i, a in enumerate(attrs)
-            ]
-        )
-        annotated = base.select(
-            *gcols, F.array_compact(nullable_items).alias(_ITEMS)
-        )
-        combos = F.concat(
-            *[_combos_expr(_ITEMS, k) for k in range(1, max_order + 1)]
-        )
-        rows = (
-            annotated.select(*gcols, F.explode(combos).alias("its"))
-            .groupBy("its")
-            .agg(*sums)
-            .filter(F.col("_g0") >= support_thresh)
-            .collect()
-        )
-        for r in rows:
-            items = tuple((it["ai"], it["val"]) for it in r["its"])
-            aggs = tuple(float(r[c]) for c in gcols)
+        # no inter-round dependency: rounds would only add sequential job
+        # latency. With high-cardinality attribute sets prefer prune=True
+        # (the reference default), whose round-wise support pruning bounds
+        # the group count.
+        return [
+            (items, aggs)
+            for items, aggs in survivors(tuple(range(1, max_order + 1)))
+            if metric_fn(aggs) >= min_metric
+        ]
+    emitted: list[tuple[tuple, tuple[float, ...]]] = []
+    level = survivors((1,))
+    for k in range(1, max_order + 1):
+        nxt = []
+        for items, aggs in level:
             if metric_fn(aggs) >= min_metric:
                 emitted.append((items, aggs))
-        return emitted
-    surv1_rows = (
-        base.select(*gcols, F.explode(item_structs).alias("it"))
-        .filter(F.col("it.val").isNotNull())
-        .groupBy("it")
-        .agg(*sums)
-        .filter(F.col("_g0") >= support_thresh)
-        .collect()
-    )
-    next1: list = []
-    for r in surv1_rows:
-        items = ((r["it"]["ai"], r["it"]["val"]),)
-        aggs = tuple(float(r[c]) for c in gcols)
-        passes = metric_fn(aggs) >= min_metric
-        if passes:
-            emitted.append((items, aggs))
-        if (not prune) or not passes:
-            # KEEP stops expansion under containment pruning
-            next1.append(r)
+            else:
+                nxt.append(items)
+        if k == max_order or not nxt:
+            break
+        if k == 1:
+            freq: dict[int, set[str]] = {}
+            for ((ai, val),) in nxt:
+                freq.setdefault(ai, set()).add(val)
+            level = survivors((2,), freq)
+            continue
+        # order-3 candidates: x < y < z in attribute order with (x, y),
+        # (x, z) and (y, z) all NEXT pairs
+        above: dict[tuple, set[tuple]] = {}
+        for x, y in nxt:
+            above.setdefault(x, set()).add(y)
+        cands = {
+            (x, y, z) for x, y in nxt for z in above.get(x, set()) & above.get(y, set())
+        }
+        if not cands:
+            break
+        level = survivors((3,), freq, cands)
+    return emitted
 
-    if max_order >= 2 and next1:
-        freq_by_attr: dict[int, list[str]] = {}
-        for r in next1:
-            freq_by_attr.setdefault(r["it"]["ai"], []).append(r["it"]["val"])
-        fitem_cols = []
+
+def _row_sums(rows: list[tuple], n_aggs: int):
+    """`sum_round` over driver rows (agg_0, .., agg_{n-1}, attr values..)."""
+
+    def sum_round(orders, freq, cands):
+        acc: dict[tuple, list[float]] = {}
+        for row in rows:
+            aggs = row[:n_aggs]
+            items = [
+                (i, v)
+                for i, v in enumerate(row[n_aggs:])
+                if v is not None and (freq is None or v in freq.get(i, ()))
+            ]
+            for k in orders:
+                for its in combinations(items, k):
+                    if cands is not None and its not in cands:
+                        continue
+                    s = acc.setdefault(its, [0.0] * n_aggs)
+                    for j, a in enumerate(aggs):
+                        s[j] += a
+        return [(its, tuple(s)) for its, s in acc.items()]
+
+    return sum_round
+
+
+def _spark_sums(base: DataFrame, attrs: list[str], n_aggs: int, support_thresh: float):
+    """`sum_round` as ONE Spark aggregation per round over `base`, which
+    carries aggregate columns _g0.._g{n-1} plus the attribute columns:
+    explode each row's k-combinations of its (frequent) items, hash-sum
+    the aggregates per itemset, and collect only the itemsets that reach
+    the support threshold."""
+    gcols = [f"_g{i}" for i in range(n_aggs)]
+
+    def sum_round(orders, freq, cands):
+        item_cols = []
         for i, a in enumerate(attrs):
-            vals = freq_by_attr.get(i)
-            if not vals:
+            if freq is not None and i not in freq:
                 continue
             c = F.col(a).cast("string")
-            fitem_cols.append(
-                F.when(
-                    c.isin(vals), F.struct(F.lit(i).alias("ai"), c.alias("val"))
-                ).otherwise(F.lit(None))
+            keep = c.isNotNull() if freq is None else c.isin(sorted(freq[i]))
+            item_cols.append(
+                F.when(keep, F.struct(F.lit(i).alias("ai"), c.alias("val")))
             )
-        annotated = base.select(
-            *gcols, F.array_compact(F.array(*fitem_cols)).alias(_ITEMS)
-        ).filter(F.size(_ITEMS) >= 2)
-        # cache only when the order-3 round will scan it a second time
-        cache_annotated = max_order >= 3
-        if cache_annotated:
-            annotated = annotated.persist(StorageLevel.MEMORY_ONLY)
-        surv2_rows = (
-            annotated.select(*gcols, F.explode(_combos_expr(_ITEMS, 2)).alias("its"))
-            .groupBy("its")
-            .agg(*sums)
+        combos = F.concat(*[_combos_expr(_ITEMS, k) for k in orders])
+        exploded = (
+            base.select(*gcols, F.array_compact(F.array(*item_cols)).alias(_ITEMS))
+            .filter(F.size(_ITEMS) >= min(orders))
+            .select(*gcols, F.explode(combos).alias("its"))
+        )
+        if cands is not None:
+            its = F.col("its")
+            key = F.concat_ws("\x00", *[its[j][f] for j in range(3) for f in ("ai", "val")])
+            keys = sorted("\x00".join(f"{ai}\x00{v}" for ai, v in c) for c in cands)
+            if len(keys) <= _ISIN_MAX:
+                exploded = exploded.filter(key.isin(keys))
+            else:
+                # a literal isin list this long would bloat the plan string
+                # and codegen: a broadcast LEFT SEMI join against the
+                # (support-bounded) candidate keys instead
+                kdf = local_rows(base.sparkSession, [(k,) for k in keys], "_sk string")
+                exploded = exploded.join(F.broadcast(kdf), key == F.col("_sk"), "left_semi")
+        rows = (
+            exploded.groupBy("its")
+            .agg(*[F.sum(c).alias(c) for c in gcols])
             .filter(F.col("_g0") >= support_thresh)
             .collect()
         )
-        next2_sets: list[tuple] = []
-        for r in surv2_rows:
-            items = tuple((it["ai"], it["val"]) for it in r["its"])
-            aggs = tuple(float(r[c]) for c in gcols)
-            passes = metric_fn(aggs) >= min_metric
-            if passes:
-                emitted.append((items, aggs))
-            if (not prune) or not passes:
-                next2_sets.append(items)
+        return [
+            (tuple((x["ai"], x["val"]) for x in r["its"]), tuple(float(r[c]) for c in gcols))
+            for r in rows
+        ]
 
-        if max_order >= 3 and next2_sets:
-            next2_keys = [
-                f"{a0}\x00{v0}\x00{a1}\x00{v1}" for ((a0, v0), (a1, v1)) in next2_sets
-            ]
-            triples = annotated.filter(F.size(_ITEMS) >= 3).select(
-                *gcols, F.explode(_combos_expr(_ITEMS, 3)).alias("its")
-            )
-            it = F.col("its")
-
-            def pkey(a, b):
-                return F.concat_ws("\x00", a["ai"], a["val"], b["ai"], b["val"])
-
-            if len(next2_keys) <= 5000:
-                valid = (
-                    pkey(it[0], it[1]).isin(next2_keys)
-                    & pkey(it[0], it[2]).isin(next2_keys)
-                    & pkey(it[1], it[2]).isin(next2_keys)
-                )
-                filtered = triples.filter(valid)
-            else:
-                # a literal isin list this long would bloat the plan string
-                # and codegen — validate via three broadcast LEFT SEMI joins
-                # against the survivor-key relation instead (support-bounded,
-                # so the broadcast stays small in bytes)
-                kdf = triples.sparkSession.createDataFrame(
-                    [(k,) for k in next2_keys], "_sk string"
-                )
-                filtered = triples
-                for a, b in ((0, 1), (0, 2), (1, 2)):
-                    filtered = filtered.join(
-                        F.broadcast(kdf),
-                        pkey(it[a], it[b]) == F.col("_sk"),
-                        "left_semi",
-                    )
-            surv3_rows = (
-                filtered.groupBy("its")
-                .agg(*sums)
-                .filter(F.col("_g0") >= support_thresh)
-                .collect()
-            )
-            for r in surv3_rows:
-                items = tuple((x["ai"], x["val"]) for x in r["its"])
-                aggs = tuple(float(r[c]) for c in gcols)
-                if metric_fn(aggs) >= min_metric:
-                    emitted.append((items, aggs))
-        if cache_annotated:
-            annotated.unpersist()
-    return emitted
+    return sum_round
 
 
 def _explain_rounds(spark, base: DataFrame, attrs: list[str], p: ExplainParams) -> DataFrame:
     g = base.agg(F.sum("_o").alias("o"), F.sum("_c").alias("n")).collect()[0]
     total_outliers, total_rows = float(g["o"] or 0.0), float(g["n"] or 0.0)
+    sums = _spark_sums(
+        base.select(F.col("_o").alias("_g0"), F.col("_c").alias("_g1"), *attrs),
+        attrs,
+        2,
+        p.min_support * total_outliers,
+    )
+    return _explanation(spark, sums, total_outliers, total_rows, p)
+
+
+def explain_rows(spark, rows: list[tuple], p: ExplainParams) -> DataFrame:
+    """`explain` over rows already on the driver, each
+    (outlier_count, count, *values of p.attributes): the reference's cube
+    mode (APLSummarizer over group counts). The lattice runs in plain
+    Python and the result is a local relation, so no Spark job runs; the
+    rows equal `explain` over the same rows as a DataFrame with
+    count_col set."""
+    rows = [(float(r[0]), float(r[1]), *r[2:]) for r in rows]
+    total_outliers = sum(r[0] for r in rows)
+    total_rows = sum(r[1] for r in rows)
+    return _explanation(spark, _row_sums(rows, 2), total_outliers, total_rows, p)
+
+
+def _explanation(
+    spark, sum_round, total_outliers: float, total_rows: float, p: ExplainParams
+) -> DataFrame:
+    """The violation-row relation of the risk-ratio lattice whose rounds
+    `sum_round` sums, given the global outlier and row totals."""
     schema = _result_schema(p)
     if total_outliers == 0.0 or total_rows == 0.0:
-        return spark.createDataFrame([], schema)
-    support_thresh = p.min_support * total_outliers
+        return local_rows(spark, [], schema)
 
     def primary(aggs: tuple[float, ...]) -> float:
         return ratio_metric_py(p.ratio_metric, aggs[0], aggs[1], total_outliers, total_rows)
 
-    emitted = _lattice_rounds(
-        base.select(F.col("_o").alias("_g0"), F.col("_c").alias("_g1"), *attrs),
-        attrs,
-        2,
-        support_thresh,
+    emitted = _lattice(
+        sum_round,
+        p.min_support * total_outliers,
         primary,
         p.min_ratio_metric,
         p.max_order,
@@ -327,11 +337,11 @@ def _explain_rounds(spark, base: DataFrame, attrs: list[str], p: ExplainParams) 
     out_rows = []
     for items, (oc, tc) in emitted:
         mvals = [ratio_metric_py(m, oc, tc, total_outliers, total_rows) for m in metrics]
-        padded: list = [None] * len(attrs)
+        padded: list = [None] * len(p.attributes)
         for ai, val in items:
             padded[ai] = val
         out_rows.append((*padded, oc / total_outliers, *mvals, oc, tc))
-    return spark.createDataFrame(out_rows, schema)
+    return local_rows(spark, out_rows, schema)
 
 
 def meanshift_explain(
@@ -366,7 +376,7 @@ def meanshift_explain(
         ]
         schema = StructType(fields)
         if total_oc == 0.0:
-            return spark.createDataFrame([], schema)
+            return local_rows(spark, [], schema)
 
         def mean_shift(aggs: tuple[float, ...]) -> float:
             oc, ic, oms, ims = aggs
@@ -374,10 +384,8 @@ def meanshift_explain(
                 return 0.0
             return (oms / oc) / (ims / ic)
 
-        emitted = _lattice_rounds(
-            base,
-            attrs,
-            4,
+        emitted = _lattice(
+            _spark_sums(base, attrs, 4, min_support * total_oc),
             min_support * total_oc,
             mean_shift,
             min_mean_shift,
@@ -390,7 +398,7 @@ def meanshift_explain(
             for ai, val in items:
                 padded[ai] = val
             rows.append((*padded, oc / total_oc, mean_shift((oc, ic, oms, ims)), oc, ic))
-        return spark.createDataFrame(rows, schema)
+        return local_rows(spark, rows, schema)
     finally:
         base.unpersist()
 
@@ -445,7 +453,7 @@ def meandev_explain(
         ]
         schema = StructType(fields)
         if total == 0.0:
-            return spark.createDataFrame([], schema)
+            return local_rows(spark, [], schema)
         g_mean = float(g["m1"]) / total
         g_var = float(g["m2"]) / total - g_mean * g_mean
         g_std = g_var**0.5 if g_var > 0 else 0.0
@@ -456,10 +464,8 @@ def meandev_explain(
                 return 0.0
             return abs(m1 / c - g_mean) / g_std
 
-        emitted = _lattice_rounds(
-            base,
-            attrs,
-            3,
+        emitted = _lattice(
+            _spark_sums(base, attrs, 3, min_support * total),
             min_support * total,
             mean_dev,
             min_std_dev,
@@ -472,7 +478,7 @@ def meandev_explain(
             for ai, val in items:
                 padded[ai] = val
             rows.append((*padded, c / total, mean_dev((c, m1, m2)), c))
-        return spark.createDataFrame(rows, schema)
+        return local_rows(spark, rows, schema)
     finally:
         base.unpersist()
 

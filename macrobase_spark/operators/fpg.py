@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from macrobase_spark.functions.metrics import ratio_metric_py
+from macrobase_spark.functions.rows import local_rows
 from macrobase_spark.operators.explain import ExplainParams, _result_schema
 from macrobase_spark.operators.classify import OUTLIER_COL
 
@@ -50,7 +51,7 @@ def fpgrowth_explain(df: DataFrame, params: ExplainParams) -> DataFrame:
     total_outliers, total_rows = float(g["o"] or 0.0), float(g["n"] or 0.0)
     schema = _result_schema(p)
     if total_outliers == 0.0:
-        return spark.createDataFrame([], schema)
+        return local_rows(spark, [], schema)
 
     # transactions: "i<SEP>value" items (attribute index embedded so equal
     # values in different columns stay distinct), outlier rows only
@@ -85,7 +86,7 @@ def fpgrowth_explain(df: DataFrame, params: ExplainParams) -> DataFrame:
         if len(r["items"]) <= p.max_order
     ]
     if not freq:
-        return spark.createDataFrame([], schema)
+        return local_rows(spark, [], schema)
 
     # ONE pass over the full relation: per-itemset outlier + total weights
     # via conditional aggregates. FPGrowth is the candidate DISCOVERY kernel
@@ -119,4 +120,4 @@ def fpgrowth_explain(df: DataFrame, params: ExplainParams) -> DataFrame:
             ai, val = item.split(_SEP, 1)
             padded[int(ai)] = val
         rows.append((*padded, oc / total_outliers, *mvals, oc, tc))
-    return spark.createDataFrame(rows, schema)
+    return local_rows(spark, rows, schema)

@@ -24,6 +24,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from macrobase_spark.functions.rows import local_rows
+
 MANIFEST_SCHEMA = StructType(
     [
         StructField("partition", StringType()),
@@ -51,7 +53,7 @@ class RunManifest:
 
     def read(self, spark: SparkSession) -> DataFrame:
         if not self.exists():
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
+            return local_rows(spark, [], MANIFEST_SCHEMA)
         return spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def completed_partitions(self, spark: SparkSession) -> list[str]:
@@ -76,21 +78,21 @@ class RunManifest:
         run_id = run_id or uuid.uuid4().hex[:12]
         now = time.time()
         full = [
-            {
-                "partition": str(r["partition"]),
-                "run_id": run_id,
-                "status": r.get("status", "completed"),
-                "n_rows": int(r.get("n_rows", 0)),
-                "n_violations": int(r.get("n_violations", 0)),
-                "passed": bool(r.get("passed", False)),
-                "metrics_json": json.dumps(r.get("metrics", {}), sort_keys=True),
-                "lineage": lineage,
-                "wall_clock_sec": float(r.get("wall_clock_sec", 0.0)),
-                "completed_at": now,
-            }
+            (
+                str(r["partition"]),
+                run_id,
+                r.get("status", "completed"),
+                int(r.get("n_rows", 0)),
+                int(r.get("n_violations", 0)),
+                bool(r.get("passed", False)),
+                json.dumps(r.get("metrics", {}), sort_keys=True),
+                lineage,
+                float(r.get("wall_clock_sec", 0.0)),
+                now,
+            )
             for r in rows
         ]
-        spark.createDataFrame(full, MANIFEST_SCHEMA).coalesce(1).write.mode("append").parquet(
+        local_rows(spark, full, MANIFEST_SCHEMA).coalesce(1).write.mode("append").parquet(
             self.path
         )
         return run_id

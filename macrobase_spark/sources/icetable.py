@@ -95,45 +95,46 @@ def _list_data_files(root: str) -> set[str]:
     return out
 
 
-def _file_stats(
-    spark: SparkSession, files: list[str], stat_cols: list[str], base: str
-) -> list[dict]:
-    """One job: per-file row counts and per-column min/max via a
-    groupBy(input_file_name()) aggregate — the manifest's scan-planning
-    stats, computed without a per-file job storm."""
-    if not files:
-        return []
-    df = spark.read.option("basePath", base).parquet(*files)
-    aggs = [F.count(F.lit(1)).alias("__n")]
+def _footer_stats(path: str, stat_cols: list[str]) -> dict:
+    """One data file's row count and per-column [min, max], read on the
+    driver from its parquet footer — no Spark job. Row groups holding only
+    nulls for a column are skipped (as min/max skip nulls); if any other
+    row group lacks statistics, or the column is not in the file, the
+    entry is [None, None], which scan planning treats as "may match"."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    if md.num_rows == 0:
+        return {"row_count": 0, "stats": {}}
+    index = {md.schema.column(j).path: j for j in range(md.num_columns)}
+    stats = {}
     for c in stat_cols:
-        aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
-    rows = (
-        df.withColumn("__f", F.input_file_name())
-        .groupBy("__f")
-        .agg(*aggs)
-        .collect()
-    )
-    by_path = {}
-    for r in rows:
-        path = r["__f"]
-        for p in (f"file://{base}", f"file:{base}", base):
-            if path.startswith(p):
-                path = base + path[len(p):]
+        lo = hi = None
+        for g in range(md.num_row_groups if c in index else 0):
+            rg = md.row_group(g)
+            st = rg.column(index[c]).statistics
+            if st is not None and not st.has_min_max and st.null_count == rg.num_rows:
+                continue
+            if st is None or not st.has_min_max:
+                lo = hi = None
                 break
-        by_path[path] = {
-            "row_count": r["__n"],
-            "stats": {c: [r[f"__min_{c}"], r[f"__max_{c}"]] for c in stat_cols},
-        }
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        stats[c] = [lo, hi]
+    return {"row_count": md.num_rows, "stats": stats}
+
+
+def _file_entries(files: list[str], stat_cols: list[str], base: str) -> list[dict]:
+    """The manifest entries of newly written data files: path, partition
+    values from the hive directory names, and the footer stats."""
     out = []
     for f in files:
-        ent = by_path.get(f, {"row_count": 0, "stats": {}})
         part = {}
-        rel = os.path.relpath(f, base)
-        for seg in rel.split(os.sep)[:-1]:
+        for seg in os.path.relpath(f, base).split(os.sep)[:-1]:
             if "=" in seg:
                 k, v = seg.split("=", 1)
                 part[k] = v
-        out.append({"path": f, "partition": part, **ent})
+        out.append({"path": f, "partition": part, **_footer_stats(f, stat_cols)})
     return out
 
 
@@ -189,8 +190,7 @@ def append(df: DataFrame, root: str) -> int:
     writer.parquet(_data_dir(root))
     new_files = sorted(_list_data_files(root) - before)
 
-    spark = df.sparkSession
-    entries = _file_stats(spark, new_files, meta["stat_cols"], _data_dir(root))
+    entries = _file_entries(new_files, meta["stat_cols"], _data_dir(root))
     prev = (
         read_manifest(root, meta["current_snapshot_id"])
         if meta["current_snapshot_id"] is not None

@@ -129,6 +129,39 @@ def test_checks_accept_foreign_clip_ids(spark):
     assert res["decode_ok"] and res["n_out"] == 1600 and res["snr_pass"], res
 
 
+def test_scan_kernel_keys_foreign_clip_ids_like_clip_index(spark):
+    """The suite's batch kernel keys the reference render as clip_index()
+    does: a batch mixing `clip_…` and `pclip_…` ids scores each row against
+    the render snr_check picks for it, instead of failing the batch."""
+    import pyarrow as pa
+
+    from macrobase_spark.operators.audio import render_reference, score_record_batch, snr_check
+
+    ids = ["clip_000000000001", "pclip_000000000000"]
+    pays = [
+        wav_bytes(np.round(render_reference(i, 8000, 800) * 32767).astype(np.int16), 8000)
+        for i in (1, -1)
+    ]
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "clip_id": ids,
+            "sr_hz": pa.array([8000, 8000], pa.int32()),
+            "dur_ms": pa.array([100, 100], pa.int32()),
+            "codec": ["wav", "wav"],
+            "transcript": ["a", "b"],
+            "bytes": pa.array(pays, pa.binary()),
+        }
+    )
+    got = score_record_batch(batch).to_pydict()
+    df = spark.createDataFrame(
+        list(zip(ids, [8000, 8000], pays)), "clip_id string, sr_hz int, bytes binary"
+    )
+    want = {r["clip_id"]: r["snr_db"] for r in snr_check(df).collect()}
+    assert got["clip_id"] == ids
+    for cid, snr in zip(got["clip_id"], got["snr_db"]):
+        assert snr > 30.0 and snr == pytest.approx(want[cid], abs=1e-3), cid
+
+
 def test_dedup_audio_content_query_matches_oracle(spark):
     """Registry query vs DuckDB oracle at the sf0.01 fixture size (the
     driver's exact comparison, value-level)."""

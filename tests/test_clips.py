@@ -109,6 +109,13 @@ def test_manifest_resume(spark, tmp_path, suite):
     assert mdf.filter(~F.col("passed")).count() == 1
 
 
+def test_suite_results_launch_no_job(suite, count_jobs):
+    """Everything the suite builds on the driver (verdicts, column stats,
+    explanation) is a local relation: reading it back launches no job."""
+    for df in (suite.verdicts, suite.column_stats, suite.explanation):
+        assert count_jobs(df.collect) == 0
+
+
 def test_fused_suite_matches_component_functions(spark, suite):
     """run_suite's fused single-aggregation fast path must produce the same
     relations as the component functions the oracle queries certify."""

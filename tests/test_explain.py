@@ -132,3 +132,59 @@ def test_diff_split_on_real_table(spark, sf_dir):
     for r in rows:
         assert r["support"] >= 0.05
         assert r["global_ratio"] >= 1.0
+
+
+def _canon(df):
+    """Schema and sorted rows, NaN made equal to itself."""
+    c = lambda v: "NaN" if isinstance(v, float) and math.isnan(v) else v  # noqa: E731
+    return str(df.schema), sorted(repr(tuple(map(c, r))) for r in df.collect())
+
+
+@pytest.mark.parametrize("prune", [True, False])
+@pytest.mark.parametrize("metric", ["risk_ratio", "global_ratio"])
+def test_driver_lattice_matches_explain(spark, prune, metric):
+    """Cube mode on the driver (`explain_rows`) returns exactly the rows of
+    `explain` over the same cube as a DataFrame, at every order, with and
+    without containment pruning, NULL attribute values included."""
+    from macrobase_spark.operators.explain import explain_rows
+
+    rng = random.Random(hash((prune, metric)) % 1000)
+    for max_order in (1, 2, 3):
+        for _ in range(3):
+            attrs = [f"a{j}" for j in range(rng.choice([2, 3]))]
+            rows = []
+            for _ in range(rng.randrange(4, 25)):
+                count = rng.randrange(1, 60)
+                vals = [
+                    None if rng.random() < 0.15 else f"v{rng.randrange(3)}" for _ in attrs
+                ]
+                rows.append((float(rng.randrange(0, count + 1)), float(count), *vals))
+            params = ExplainParams(
+                attributes=attrs,
+                count_col="_count",
+                min_support=rng.choice([0.05, 0.1, 0.2]),
+                min_ratio_metric=rng.choice([0.5, 1.0, 1.5]),
+                ratio_metric=metric,
+                max_order=max_order,
+                prune_containment=prune,
+            )
+            ddl = [f"{OUTLIER_COL} double", "_count double"] + [f"{a} string" for a in attrs]
+            cube = spark.createDataFrame(rows, ", ".join(ddl))
+            assert _canon(explain_rows(spark, rows, params)) == _canon(explain(cube, params))
+
+
+def test_order3_candidate_semi_join_path(spark, monkeypatch):
+    """Past `_ISIN_MAX` order-3 candidates, a round filters the exploded
+    triples with a broadcast semi join instead of an isin list: the same
+    rows either way."""
+    import macrobase_spark.operators.explain as E
+
+    df = make_planted(spark, n=1500, seed=3)
+    params = ExplainParams(
+        attributes=["a0", "a1", "a2", "a3"], min_support=0.02,
+        min_ratio_metric=2.0, ratio_metric="risk_ratio", max_order=3,
+    )
+    isin = explain(df, params)
+    assert any(sum(r[a] is not None for a in params.attributes) == 3 for r in isin.collect())
+    monkeypatch.setattr(E, "_ISIN_MAX", 0)
+    assert _canon(explain(df, params)) == _canon(isin)

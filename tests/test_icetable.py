@@ -153,3 +153,66 @@ def test_registered_fixture_prunes_files(spark):
     planned = plan_files(root, where=[("codec", "=", "opus"), ("dur_ms", "<=", 1500)])
     assert 0 < len(planned) < total
     assert all(e["partition"]["codec"] == "opus" for e in planned)
+
+
+def _scanned_file_stats(spark, root, cols):
+    """{path: {row_count, stats}} of a snapshot's files, computed by a Spark
+    scan: count and min/max per input file."""
+    from urllib.parse import unquote, urlparse
+
+    entries = read_manifest(root, current_snapshot_id(root))
+    aggs = [F.count(F.lit(1)).alias("n")]
+    for c in cols:
+        aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
+    rows = (
+        spark.read.option("basePath", os.path.join(root, "data"))
+        .parquet(*[e["path"] for e in entries])
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(*aggs)
+        .collect()
+    )
+    return {
+        unquote(urlparse(r["f"]).path): {
+            "row_count": r["n"],
+            "stats": {c: [r[f"lo_{c}"], r[f"hi_{c}"]] for c in cols},
+        }
+        for r in rows
+    }
+
+
+def test_append_stats_equal_a_spark_scan(spark, table, tmp_path):
+    """The per-file row counts and min/max `append` records from parquet
+    footers equal a Spark scan of the same files: for this module's table
+    and for the registered fixture's recipe (dur_ms and sr_hz stats)."""
+    from macrobase_spark.sources.clips import generate_clips
+
+    root = str(tmp_path / "fixture")
+    clips = generate_clips(spark, 800, max_payload_ms=50)
+    cut = f"clip_{500:012d}"
+    create_table(
+        clips.filter(F.col("clip_id") < cut), root,
+        partition_by=["codec"], stat_cols=["dur_ms", "sr_hz"],
+    )
+    append(clips.filter(F.col("clip_id") >= cut), root)
+    for r, cols in ((table[0], ["dur_ms"]), (root, ["dur_ms", "sr_hz"])):
+        recorded = {
+            e["path"]: {"row_count": e["row_count"], "stats": e["stats"]}
+            for e in read_manifest(r, current_snapshot_id(r))
+        }
+        assert recorded == _scanned_file_stats(spark, r, cols)
+
+
+def test_footer_stats_missing_and_all_null_row_groups(tmp_path):
+    """A row group without statistics for a column makes the column's
+    entry [None, None]; a row group holding only nulls is skipped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from macrobase_spark.sources.icetable import _footer_stats
+
+    t = pa.table({"a": pa.array([None, None, 5, 9], pa.int32()), "b": pa.array([1, 2, 3, 4])})
+    path = str(tmp_path / "f.parquet")
+    pq.write_table(t, path, row_group_size=2, write_statistics=["a"])
+    assert _footer_stats(path, ["a", "b", "zz"]) == {
+        "row_count": 4, "stats": {"a": [5, 9], "b": [None, None], "zz": [None, None]}
+    }

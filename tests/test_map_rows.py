@@ -1,11 +1,14 @@
 """The row-map runner's contract: what a per-row function receives, what
-it may return, and how the output is typed."""
+it may return, and how the output is typed; and the driver-side row
+constructor `local_rows`."""
 
 import math
 
 import numpy as np
 
-from macrobase_spark.functions.rows import map_rows
+import pytest
+
+from macrobase_spark.functions.rows import local_rows, map_rows
 
 
 def test_inputs_binary_views_and_nulls(spark):
@@ -72,3 +75,48 @@ def test_generator_rows_do_not_depend_on_partitioning(spark):
     b = map_rows(spark.range(0, 50, numPartitions=7), gen, schema)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     assert a.count() == 50
+
+
+def _canon(df):
+    c = lambda v: "NaN" if isinstance(v, float) and math.isnan(v) else v  # noqa: E731
+    return df.schema, [tuple(map(c, r)) for r in df.collect()]
+
+
+_SUITE = "codec string, n_rows long"
+_SCHEMAS = {
+    "manifest": None,
+    "explain": None,
+    "drift": "clip_id string, check string, detail string",
+    "stats": f"{_SUITE}, transcript_null_rate double, min_dur_ms int, max_dur_ms int, "
+    "dur_ms_p50 double, dur_ms_p95 double, n_sr_values long, avg_payload_bytes double",
+    "verdicts": f"{_SUITE}, check string, n_violations long, passed boolean",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SCHEMAS))
+def test_local_rows_equals_list_create_dataframe(spark, name):
+    """`local_rows` holds the same rows and schema as `createDataFrame` over
+    the list (NULL stays NULL, NaN stays NaN, an empty list types an empty
+    frame), as a LocalRelation."""
+    from macrobase_spark.operators.explain import ExplainParams, _result_schema
+    from macrobase_spark.plans.manifest import MANIFEST_SCHEMA
+
+    schema = {
+        "manifest": MANIFEST_SCHEMA,
+        "explain": _result_schema(
+            ExplainParams(attributes=["codec", "sr_hz_s"], ratio_metric="risk_ratio")
+        ),
+    }.get(name) or _SCHEMAS[name]
+    df0 = spark.createDataFrame([], schema)
+    samples = {
+        "string": ["a", None], "bigint": [7, None], "int": [3, None],
+        "double": [float("nan"), None, 1.5], "boolean": [True, None],
+    }
+    types = [f.dataType.simpleString() for f in df0.schema]
+    rows = [
+        tuple(samples[t][i % len(samples[t])] for t in types) for i in range(3)
+    ]
+    for data in (rows, []):
+        got = local_rows(spark, data, schema)
+        assert _canon(got) == _canon(spark.createDataFrame(data, schema))
+        assert got._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
