@@ -8,6 +8,13 @@ Packaging: `python -m zipfile -c engine.zip macrobase_spark` produces the
 --py-files artifact; on a real cluster the clips source is an Iceberg table
 (`spark.read.table(...)`) instead of the synthetic generator, and the
 partition list comes from the table's partition metadata.
+
+The run's Spark jobs are the suite's own (the scan and one keyed rollup).
+Its bookkeeping is driver work that launches none: the lineage high-water
+mark and the profile history are read with pyarrow, the violation count
+comes from the rollup (`SuiteResult.violation_counts`), the anomaly gate
+runs over driver rows (`metrics_repo.anomaly_rows`), and the manifest and
+profile-history rows are written with pyarrow.
 """
 
 from __future__ import annotations
@@ -23,7 +30,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from macrobase_spark.functions.rows import local_rows  # noqa: E402
 from macrobase_spark.operators.checks import SuiteConfig, run_suite  # noqa: E402
 from macrobase_spark.plans.manifest import RunManifest  # noqa: E402
 from macrobase_spark.session import get_spark  # noqa: E402
@@ -112,11 +118,11 @@ def main() -> int:
         ice_snap = current_snapshot_id(args.iceberg_root)
         last = None
         man = RunManifest(args.manifest_dir)
-        if args.resume and man.exists():
+        if args.resume:
             import re as _re
 
-            for r in man.read(spark).select("lineage").distinct().collect():
-                m = _re.search(r"#snap=(\d+)", r["lineage"] or "")
+            for (lineage,) in man.read_rows("lineage"):
+                m = _re.search(r"#snap=(\d+)", lineage or "")
                 if m:
                     last = max(last or 0, int(m.group(1)))
         if last is not None and last >= ice_snap:
@@ -177,13 +183,17 @@ def main() -> int:
     # rows for every codec, and a fresh run checks every codec too
     if args.resume and not args.iceberg_root:
         all_parts = [r["codec"] for r in clips.select("codec").distinct().collect()]
-        todo = run_manifest.pending(spark, all_parts)
+        todo = run_manifest.pending(all_parts)
         if not todo:
             print(json.dumps({"status": "nothing to do", "partitions": 0}))
             return 0
         # partition pruning: the filter on the partition column prunes at
-        # the source
-        pending_clips = clips.filter(F.col("codec").isin(todo))
+        # the source; `isin` never matches NULL, so a pending NULL codec
+        # (recorded as partition 'None') needs its own conjunct
+        keep = F.col("codec").isin([p for p in todo if p is not None])
+        if None in todo:
+            keep = keep | F.col("codec").isNull()
+        pending_clips = clips.filter(keep)
 
     res = run_suite(pending_clips, ref, SuiteConfig())
 
@@ -191,7 +201,7 @@ def main() -> int:
     if not verdicts:  # an empty table: no partition to record
         print(json.dumps({"status": "nothing to do", "partitions": 0}))
         return 0
-    n_viol = res.violations.count()
+    n_viol = sum(res.violation_counts.values())
     wall = time.time() - t0
 
     by_part: dict[str, dict] = {}
@@ -209,7 +219,7 @@ def main() -> int:
         if args.iceberg_root
         else f"synthetic-clips@n={args.n}"
     )
-    run_id = run_manifest.record(spark, rows, lineage=lineage)
+    run_id = run_manifest.record(rows, lineage=lineage)
     total_rows = sum(d["n_rows"] for d in by_part.values())
 
     # metric-history anomaly gate: record this run's headline metrics and
@@ -217,37 +227,28 @@ def main() -> int:
     # tolerance — loose by design: a validation run's volume legitimately
     # varies, and the gate is for order-of-magnitude surprises like an
     # empty append or a violation explosion). First run never self-flags.
-    from macrobase_spark.plans.metrics_repo import (
-        PROFILE_HISTORY_SCHEMA,
-        anomaly_check,
-        profile_long,
-        record_profile,
-    )
+    from macrobase_spark.plans.metrics_repo import anomaly_rows, record_history
 
     hist_path = f"{args.manifest_dir.rstrip('/')}_profile_history"
-    viol_rate = n_viol / max(total_rows, 1)
-    prof = local_rows(
-        spark,
-        [("run", int(total_rows), int(n_viol), float(viol_rate))],
-        "column string, n_rows long, n_violations long, violation_rate double",
-    )
-    metrics = ["n_rows", "n_violations", "violation_rate"]
-    anomalies = []
-    prev_runs = 0
+    current = [
+        ("run", "n_rows", float(total_rows)),
+        ("run", "n_violations", float(n_viol)),
+        ("run", "violation_rate", n_viol / max(total_rows, 1)),
+    ]
+    history = []
     if os.path.isdir(hist_path):
         import pyarrow.parquet as pq
 
         # the history is a few rows per run: one driver-side read feeds
         # both the anomaly gate and the next run number
-        hist = pq.read_table(hist_path, columns=["run_seq", "column", "metric", "value"])
-        prev_runs = max(hist.column("run_seq").to_pylist(), default=0)
-        res = anomaly_check(
-            local_rows(spark, zip(*hist.to_pydict().values()), PROFILE_HISTORY_SCHEMA),
-            profile_long(prof, metrics),
-            method="relative", threshold=0.5, window=30,
-        )
-        anomalies = [r.asDict() for r in res.filter(F.col("status") == "anomaly").collect()]
-    record_profile(prof, hist_path, prev_runs + 1, metrics)
+        cols = pq.read_table(hist_path, columns=["run_seq", "column", "metric", "value"])
+        history = list(zip(*cols.to_pydict().values()))
+    anomalies = [
+        r.asDict()
+        for r in anomaly_rows(history, current, method="relative", threshold=0.5, window=30)
+        if r["status"] == "anomaly"
+    ]
+    record_history(hist_path, max((r[0] for r in history), default=0) + 1, current)
 
     print(
         json.dumps(

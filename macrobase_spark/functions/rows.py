@@ -18,10 +18,13 @@ explanation, manifest and profile rows) the same way, into a pyarrow
 Table, so Spark holds them as a `LocalRelation`: collecting or joining
 such a frame launches no job, where a list-based `createDataFrame` builds
 an RDD whose every action is a job of `defaultParallelism` tasks.
+`write_rows` appends such rows to a parquet directory without Spark.
 """
 
 from __future__ import annotations
 
+import os
+import uuid
 from collections.abc import Callable, Iterable
 
 import numpy as np
@@ -79,6 +82,16 @@ def _arrow_columns(rows: list[tuple], target, from_pandas: bool) -> list:
     ]
 
 
+def _arrow_table(rows: Iterable[tuple], schema: StructType | str):
+    """(StructType, pyarrow Table) of driver-side row tuples."""
+    import pyarrow as pa
+
+    schema, target = _arrow_schema(schema)
+    return schema, pa.Table.from_arrays(
+        _arrow_columns(list(rows), target, False), schema=target
+    )
+
+
 def local_rows(
     spark: SparkSession, rows: Iterable[tuple], schema: StructType | str
 ) -> DataFrame:
@@ -86,11 +99,24 @@ def local_rows(
     StructType or DDL string), held as a `LocalRelation`: its actions
     launch no Spark job. ``None`` is null; a float NaN stays NaN, as with
     `createDataFrame` over a list."""
-    import pyarrow as pa
-
-    schema, target = _arrow_schema(schema)
-    table = pa.Table.from_arrays(_arrow_columns(list(rows), target, False), schema=target)
+    schema, table = _arrow_table(rows, schema)
     return spark.createDataFrame(table, schema)
+
+
+def write_rows(path: str, rows: Iterable[tuple], schema: StructType | str) -> None:
+    """Append driver-side row tuples, typed as `local_rows` types them, to
+    the parquet directory `path` as one `part-<uuid>.parquet` file: the
+    file Spark's writer would produce for the same rows, with no job. It is
+    written under a dot-prefixed name, which Spark and pyarrow readers
+    skip, and then renamed, so a driver crash never leaves a torn file."""
+    import pyarrow.parquet as pq
+
+    _, table = _arrow_table(rows, schema)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def map_rows(

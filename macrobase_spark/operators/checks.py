@@ -9,17 +9,19 @@ Scan discipline (the property that makes this work at 10^12 rows):
 the heavy table — `bytes` payloads dominate its width — is scanned EXACTLY
 ONCE, by `score_clips` (operators.audio): one Arrow-batched pass that decodes
 PCM, scores SNR, and projects every scalar the checks need into a ~60-byte
-row. That narrow scored relation is persisted; every check below is an
-aggregation/join over it:
+row. That narrow scored relation is persisted; every check below reads it:
 
-- uniqueness: ONE hash aggregation on the key. Spark's partial aggregation
-  is the two-phase (salted) aggregate — hot keys collapse map-side.
-- referential: scored LEFT ANTI broadcast(dim-keys); AQE skew-join handles a
-  skewed fk. The fact table is never shuffled.
+- row checks: null/empty transcript and SNR are decided by each scored row
+  alone (`row_local_checks`, one explode pass — also the streaming face).
+- keyed checks: uniqueness and referential integrity both key on
+  `clip_id`, so they share ONE window over scored ∪ manifest keys
+  partitioned by `clip_id` (`_keyed`): one exchange and one sort give every
+  scored row its id's scored count, manifest presence and per-id violation
+  counts. `row_violations` is a narrow projection of that relation.
 - drift: two-level aggregation (rows → group stats → MAD over group medians);
   only group-level rows ever leave the executors.
-- verdicts: per-partition rollup of violations; the driver sees one row per
-  (partition, check).
+- verdicts, column stats, per-check violation counts: ONE rollup over the
+  keyed relation; the driver sees one row per (partition, sr_hz) group.
 - explanation: APriori risk-ratio lattice in cube mode over the rollup's
   (partition, sr_hz) counts, in plain Python on the driver.
 
@@ -32,21 +34,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from macrobase_spark.functions.rows import local_rows
 from macrobase_spark.operators.audio import score_clips
 from macrobase_spark.operators.explain import ExplainParams, explain, explain_rows
 
 VIOLATION_COLS = ["clip_id", "check", "detail"]
-
-
-def _v(df: DataFrame, check: str, detail) -> DataFrame:
-    return df.select(
-        F.col("clip_id"),
-        F.lit(check).alias("check"),
-        (detail if not isinstance(detail, str) else F.lit(detail)).alias("detail"),
-    )
 
 
 @dataclass
@@ -107,54 +101,106 @@ class SuiteResult:
     explanation: DataFrame  # risk-ratio violation-row explanations
     column_stats: DataFrame
     scored: DataFrame  # the narrow one-scan relation (persisted)
+    violation_counts: dict[str, int]  # violation rows per check, drift included
 
 
-def uniqueness_check(scored: DataFrame) -> DataFrame:
-    dups = (
-        scored.groupBy("clip_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-    )
-    return _v(dups, "uniqueness", F.concat(F.lit("duplicate x"), F.col("n")))
-
-
-def row_local_checks(scored: DataFrame) -> DataFrame:
-    """null/empty transcript + SNR violations in ONE scan: each row emits its
-    (possibly several) violation structs and explodes them — one pass, not
-    one per check. At 10^12 rows every saved pass over the scored relation
-    is a saved stage."""
+def _row_checks() -> list[tuple[str, Column, Column]]:
+    """(check, condition, detail) of every check a scored row decides
+    alone: transcript null/empty and the SNR/decode verdict."""
     snr_detail = F.when(~F.col("decode_ok"), F.lit("decode failed")).otherwise(
         F.concat(F.lit("snr_db="), F.round("snr_db", 1).cast("string"))
     )
+    return [
+        ("null_transcript", F.col("transcript_null"), F.lit("transcript is null")),
+        ("empty_transcript", F.col("transcript_empty"), F.lit("transcript is empty")),
+        ("snr", ~F.col("snr_pass"), snr_detail),
+    ]
 
-    def v(check: str, detail) -> Column:
-        return F.struct(
-            F.lit(check).alias("check"),
-            (detail if not isinstance(detail, str) else F.lit(detail)).alias("detail"),
-        )
 
-    return scored.select(
-        "clip_id",
-        F.explode(
-            F.array_compact(
-                F.array(
-                    F.when(F.col("transcript_null"), v("null_transcript", "transcript is null")),
-                    F.when(F.col("transcript_empty"), v("empty_transcript", "transcript is empty")),
-                    F.when(~F.col("snr_pass"), v("snr", snr_detail)),
-                )
-            )
-        ).alias("_v"),
+def _violation_rows(df: DataFrame, checks: list[tuple[str, Column, Column]]) -> DataFrame:
+    """(clip_id, check, detail) rows of `df` in ONE scan: each row emits a
+    struct per (check, condition, detail) whose condition holds, and the
+    array explodes — one pass, not one per check."""
+    structs = [
+        F.when(cond, F.struct(F.lit(c).alias("check"), detail.alias("detail")))
+        for c, cond, detail in checks
+    ]
+    return df.select(
+        "clip_id", F.explode(F.array_compact(F.array(*structs))).alias("_v")
     ).select("clip_id", F.col("_v.check").alias("check"), F.col("_v.detail").alias("detail"))
 
 
+def row_local_checks(scored: DataFrame) -> DataFrame:
+    """null/empty transcript + SNR violations in one explode pass. Stateless,
+    so it runs unchanged on a stream (streaming.validate)."""
+    return _violation_rows(scored, _row_checks())
+
+
 def ref_integrity_check(scored: DataFrame, manifest: DataFrame) -> DataFrame:
-    """LEFT ANTI join against the manifest keys. No broadcast hint and no
-    distinct: the manifest is fact-sized (one row per clip), so forcing a
-    broadcast would ship the whole key set to every task; AQE picks
-    broadcast automatically when the right side IS small, and its skew-join
-    splitting covers hot keys otherwise. Anti join needs no dedup."""
+    """LEFT ANTI join against the manifest keys: the stream-static face of
+    the referential check (a stream cannot take the batch suite's keyed
+    window). No broadcast hint and no distinct: AQE picks broadcast when
+    the manifest IS small, and an anti join needs no dedup."""
     orphans = scored.join(manifest.select("clip_id"), "clip_id", "left_anti")
-    return _v(orphans, "ref_integrity", "missing from manifest")
+    return orphans.select(
+        "clip_id",
+        F.lit("ref_integrity").alias("check"),
+        F.lit("missing from manifest").alias("detail"),
+    )
+
+
+def _keyed(scored: DataFrame, manifest: DataFrame) -> DataFrame:
+    """The scored rows, each carrying its `clip_id`'s totals, from ONE
+    window over scored ∪ manifest keys partitioned by `clip_id` (one
+    exchange, one sort — instead of an aggregation for uniqueness, an
+    anti-join for referential integrity and a join back per consumer):
+
+    - `_n`: scored rows with this id;
+    - `_in_man`: the manifest holds the id (NULL keys never match);
+    - `_n_<check>`: the id's scored rows failing each row check;
+    - `_rn`: row number within the id; scored rows sort before manifest
+      rows, so row 1 is a scored row and carries the uniqueness row.
+
+    NULL ids form one window partition of their own, as in a GROUP BY."""
+    keys = (
+        manifest.select("clip_id")
+        .filter(F.col("clip_id").isNotNull())
+        .withColumn("_m", F.lit(True))
+    )
+    both = scored.withColumn("_m", F.lit(False)).unionByName(keys, allowMissingColumns=True)
+    first = Window.partitionBy("clip_id").orderBy("_m")
+    per_id = first.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+
+    def count(cond: Column) -> Column:
+        return F.count(F.when(cond, 1)).over(per_id)
+
+    return both.select(
+        "*",
+        count(~F.col("_m")).alias("_n"),
+        F.max("_m").over(per_id).alias("_in_man"),
+        *[count(cond).alias(f"_n_{c}") for c, cond, _ in _row_checks()],
+        F.row_number().over(first).alias("_rn"),
+    ).filter(~F.col("_m"))
+
+
+CHECK_NAMES = ["uniqueness", "null_transcript", "empty_transcript", "ref_integrity", "snr"]
+
+
+def _keyed_checks() -> list[tuple[str, Column, Column, Column]]:
+    """(check, condition, detail, id count) over `_keyed` rows, in
+    CHECK_NAMES order. The id count is the number of violation rows of the
+    check that carry the row's clip_id."""
+    n, orphan = F.col("_n"), ~F.col("_in_man")
+    checks = {
+        "uniqueness": (
+            (F.col("_rn") == 1) & (n > 1),
+            F.concat(F.lit("duplicate x"), n),
+            F.when(n > 1, 1).otherwise(0),
+        ),
+        "ref_integrity": (orphan, F.lit("missing from manifest"), F.when(orphan, n).otherwise(0)),
+        **{c: (cond, detail, F.col(f"_n_{c}")) for c, cond, detail in _row_checks()},
+    }
+    return [(c, *checks[c]) for c in CHECK_NAMES]
 
 
 def mad_scores(meds: list[float]):
@@ -264,33 +310,30 @@ def run_suite_files(
 
 
 def row_violations(scored: DataFrame, manifest: DataFrame) -> DataFrame:
-    """All row-level (clip_id-attributed) violations: uniqueness, transcript
-    nulls/empties, referential integrity, SNR decode failures.
-
-    THREE passes over the narrow scored relation, not five: the row-local
-    checks (nulls/empties/snr) share one explode scan; uniqueness is the one
-    aggregation that genuinely needs a shuffle; referential is the anti-join."""
-    return (
-        uniqueness_check(scored)
-        .unionByName(row_local_checks(scored))
-        .unionByName(ref_integrity_check(scored, manifest))
-    )
+    """All row-level (clip_id-attributed) violations: one `duplicate x<n>`
+    row per id held by n > 1 scored rows, one row per null/empty transcript
+    and per failed SNR/decode, and one `ref_integrity` row per scored row
+    whose id the manifest lacks (NULL ids included). A narrow projection of
+    the keyed window (`_keyed`): one exchange over scored ∪ manifest keys."""
+    return _violation_rows(_keyed(scored, manifest), [c[:3] for c in _keyed_checks()])
 
 
 def verdicts_from_violations(
     scored: DataFrame, row_viol: DataFrame, partition_col: str
 ) -> DataFrame:
     """Per-partition verdicts: attribute row-level violations back to their
-    partition via the scored rows."""
+    partition via the scored rows. A NULL partition value is a partition
+    like any other (null-safe join), as in the suite's rollup."""
     per_part = (
-        scored.select("clip_id", partition_col)
+        scored.select("clip_id", F.col(partition_col).alias("_p"))
         .join(row_viol, "clip_id")
-        .groupBy(partition_col, "check")
+        .groupBy("_p", "check")
         .agg(F.count(F.lit(1)).alias("n_violations"))
     )
     part_sizes = scored.groupBy(partition_col).agg(F.count(F.lit(1)).alias("n_rows"))
     return (
-        part_sizes.join(per_part, partition_col, "left")
+        part_sizes.join(per_part, F.col(partition_col).eqNullSafe(F.col("_p")), "left")
+        .drop("_p")
         .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)))
         .withColumn("passed", F.col("n_violations") == 0)
     )
@@ -319,50 +362,41 @@ def explain_from_violations(
     )
 
 
-CHECK_NAMES = ["uniqueness", "null_transcript", "empty_transcript", "ref_integrity", "snr"]
-
-
 def _suite_from_scored(
     scored: DataFrame, manifest: DataFrame, cfg: SuiteConfig
 ) -> SuiteResult:
-    """Build the suite outputs from the materialized scored relation with TWO
-    Spark actions after the scan (the N-vs-4N scaling ratio is dominated by
-    sequential job latency, so every removed pass is efficiency):
-
-    1. the row-violation materialization (uniqueness agg + explode scan +
-       anti-join, one union job);
-    2. ONE rollup aggregation over scored ⋈ violations-per-clip that
-       computes, grouped by (partition_col, sr_hz) AND (partition_col):
-       row counts, transcript-null counts, dur_ms min/max + mergeable
-       percentile sketches, HLL sr_hz distinct, payload sums, per-check
-       violation-row counts, and flagged-row counts.
+    """Build the suite outputs from the materialized scored relation with
+    ONE Spark action after the scan (the N-vs-4N scaling ratio is dominated by
+    sequential job latency, so every removed pass is efficiency): a rollup over
+    the keyed window (`_keyed`, one `clip_id` exchange over scored ∪ manifest
+    keys) that computes, grouped by (partition_col, sr_hz), (partition_col) and
+    the grand total: row counts, transcript-null counts, dur_ms min/max +
+    mergeable percentile sketches, HLL sr_hz distinct, payload sums, flagged-row
+    counts, per-check violation-row counts attributed to the rows' partitions
+    (`_vc<i>`: each scored row carries its id's count, as a join of the
+    violation rows back to scored on `clip_id` would — a NULL id joins
+    nothing), and per-check violation-row totals (`_vr<i>`, read at the grand
+    total).
 
     Everything else derives from that ≤(|codec|·|sr|) + |codec| + 1 row
     aggregate on the driver, with no further Spark job: drift (MAD over the
-    group medians), column stats, per-partition verdicts, and the
-    risk-ratio explanation (`explain_rows`: the lattice runs in plain
+    group medians), column stats, per-partition verdicts, the violation counts,
+    and the risk-ratio explanation (`explain_rows`: the lattice runs in plain
     Python in CUBE mode over the `fine` group counts — identical numbers to
     the raw path, reference APLSummarizer cube semantics). Each output is a
     local relation, identical, relation-for-relation, to the component
     functions (row_violations / verdicts_from_violations / column_stats /
     explain) the oracle queries certify — asserted by tests/test_clips.py.
+    `violations` stays a lazy projection of the keyed window: nothing is
+    materialized besides the scan.
     """
     part = cfg.partition_col
-    row_viol = _materialize(row_violations(scored, manifest), cfg.cache)
-
-    vc_cols = [f"_vc{i}" for i in range(len(CHECK_NAMES))]
-    viol_by_clip = row_viol.groupBy("clip_id").agg(
-        *[
-            F.sum(F.when(F.col("check") == c, 1).otherwise(0)).alias(vc)
-            for c, vc in zip(CHECK_NAMES, vc_cols)
-        ]
-    )
-    # AQE picks broadcast when the violating-clip set is small; at
-    # violation-heavy scale this is one sort-merge shuffle — still the only
-    # scored-relation join in the whole suite
-    enriched = scored.join(viol_by_clip, "clip_id", "left")
+    keyed = _keyed(scored, manifest)
+    checks = _keyed_checks()
+    has_id = F.col("clip_id").isNotNull()
+    vc = [F.when(has_id, id_count).otherwise(0) for _, _, _, id_count in checks]
     agg_rows = (
-        enriched.rollup(part, "sr_hz")
+        keyed.rollup(part, "sr_hz")
         .agg(
             # grouping_id distinguishes rollup subtotal rows from data rows
             # that genuinely carry NULL group values (a NULL sr_hz clip must
@@ -375,12 +409,9 @@ def _suite_from_scored(
             F.percentile_approx("dur_ms", F.array(F.lit(0.5), F.lit(0.95)), 10000).alias("dur_q"),
             F.approx_count_distinct("sr_hz").alias("n_sr"),
             F.sum("payload_bytes").alias("payload_sum"),
-            F.sum(
-                F.when(
-                    sum((F.coalesce(F.col(vc), F.lit(0)) for vc in vc_cols), F.lit(0)) > 0, 1
-                ).otherwise(0)
-            ).alias("n_flagged"),
-            *[F.sum(F.coalesce(F.col(vc), F.lit(0))).alias(vc) for vc in vc_cols],
+            F.count(F.when(sum(vc, F.lit(0)) > 0, 1)).alias("n_flagged"),
+            *[F.sum(v).alias(f"_vc{i}") for i, v in enumerate(vc)],
+            *[F.count(F.when(c[1], 1)).alias(f"_vr{i}") for i, c in enumerate(checks)],
         )
         .collect()
     )
@@ -389,6 +420,7 @@ def _suite_from_scored(
     # subtotal, 3 = grand total — NULL-safe, unlike testing the values
     fine = [r for r in agg_rows if r["_gid"] == 0]
     coarse = [r for r in agg_rows if r["_gid"] == 1]
+    total = next((r for r in agg_rows if r["_gid"] == 3), None)
 
     # --- drift: MAD robust z over the (part, sr_hz) group medians ---------
     drift_out = []
@@ -407,7 +439,11 @@ def _suite_from_scored(
                     )
                 )
     drift = local_rows(spark, drift_out, "clip_id string, check string, detail string")
-    violations = row_viol.unionByName(drift)
+    violations = _violation_rows(keyed, [c[:3] for c in checks]).unionByName(drift)
+    violation_counts = {
+        c: int(total[f"_vr{i}"]) if total else 0 for i, c in enumerate(CHECK_NAMES)
+    }
+    violation_counts["drift"] = len(drift_out)
 
     # --- column stats (part grain) ----------------------------------------
     stats = local_rows(
@@ -434,7 +470,7 @@ def _suite_from_scored(
     # --- per-partition verdicts (part grain, one row per present check) ---
     verd_rows = []
     for r in coarse:
-        present = [(c, r[vc]) for c, vc in zip(CHECK_NAMES, vc_cols) if r[vc] > 0]
+        present = [(c, r[f"_vc{i}"]) for i, c in enumerate(CHECK_NAMES) if r[f"_vc{i}"] > 0]
         if present:
             for c, nv in present:
                 verd_rows.append((r[part], r["n_rows"], c, int(nv), False))
@@ -450,7 +486,12 @@ def _suite_from_scored(
     # on the driver (the cube holds at most |part|·|sr_hz| rows) -----------
     explanation = explain_rows(
         spark,
-        [(r["n_flagged"], r["n_rows"], r[part], str(r["sr_hz"])) for r in fine],
+        # sr_hz as Spark casts it to string (explain_from_violations): an
+        # int's digits, and NULL stays NULL
+        [
+            (r["n_flagged"], r["n_rows"], r[part], None if r["sr_hz"] is None else str(r["sr_hz"]))
+            for r in fine
+        ],
         ExplainParams(
             attributes=[part, "sr_hz_s"],
             min_support=cfg.explain_min_support,
@@ -459,4 +500,4 @@ def _suite_from_scored(
             max_order=2,
         ),
     )
-    return SuiteResult(violations, verdicts, explanation, stats, scored)
+    return SuiteResult(violations, verdicts, explanation, stats, scored, violation_counts)

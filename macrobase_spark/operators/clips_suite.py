@@ -218,7 +218,7 @@ def clips_row_violations_q(spark, sf_dir):
     SELECT sizes.codec, sizes.n_rows, per."check",
            coalesce(per.n_violations, 0) AS n_violations,
            coalesce(per.n_violations, 0) = 0 AS passed
-    FROM sizes LEFT JOIN per ON sizes.codec = per.codec
+    FROM sizes LEFT JOIN per ON sizes.codec IS NOT DISTINCT FROM per.codec
     """,
 )
 def clips_partition_verdicts_q(spark, sf_dir):

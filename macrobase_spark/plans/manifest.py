@@ -4,6 +4,10 @@ parquet table of partition-grain verdict rows. A resumed run anti-joins the
 partition list against completed manifest rows and processes only the rest
 (at cluster scale this is an Iceberg table and the anti-join prunes whole
 partitions before any data is read).
+
+A run adds a few rows, so recording and the resume reads are driver work
+(pyarrow, `functions.rows.write_rows`): they launch no Spark job. `read`
+is the Spark face for queries over the whole history.
 """
 
 from __future__ import annotations
@@ -14,7 +18,6 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -24,7 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from macrobase_spark.functions.rows import local_rows
+from macrobase_spark.functions.rows import local_rows, write_rows
 
 MANIFEST_SCHEMA = StructType(
     [
@@ -48,7 +51,8 @@ class RunManifest:
 
     def exists(self) -> bool:
         return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for f in os.listdir(self.path)
+            f.endswith(".parquet") and not f.startswith((".", "_"))
+            for f in os.listdir(self.path)
         )
 
     def read(self, spark: SparkSession) -> DataFrame:
@@ -56,25 +60,20 @@ class RunManifest:
             return local_rows(spark, [], MANIFEST_SCHEMA)
         return spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
-    def completed_partitions(self, spark: SparkSession) -> list[str]:
+    def read_rows(self, *columns: str) -> list[tuple]:
+        """`columns` of every manifest row, read on the driver."""
         if not self.exists():
             return []
-        return [
-            r["partition"]
-            for r in self.read(spark)
-            .filter(F.col("status") == "completed")
-            .select("partition")
-            .distinct()
-            .collect()
-        ]
+        import pyarrow.parquet as pq
 
-    def record(
-        self,
-        spark: SparkSession,
-        rows: list[dict],
-        run_id: str | None = None,
-        lineage: str = "",
-    ) -> str:
+        return list(zip(*pq.read_table(self.path, columns=list(columns)).to_pydict().values()))
+
+    def completed_partitions(self) -> set[str]:
+        return {p for p, st in self.read_rows("partition", "status") if st == "completed"}
+
+    def record(self, rows: list[dict], run_id: str | None = None, lineage: str = "") -> str:
+        """Append one run's partition rows as one parquet file (atomic: see
+        `write_rows`). Returns the run id."""
         run_id = run_id or uuid.uuid4().hex[:12]
         now = time.time()
         full = [
@@ -92,11 +91,9 @@ class RunManifest:
             )
             for r in rows
         ]
-        local_rows(spark, full, MANIFEST_SCHEMA).coalesce(1).write.mode("append").parquet(
-            self.path
-        )
+        write_rows(self.path, full, MANIFEST_SCHEMA)
         return run_id
 
-    def pending(self, spark: SparkSession, all_partitions: list[str]) -> list[str]:
-        done = set(self.completed_partitions(spark))
+    def pending(self, all_partitions: list) -> list:
+        done = self.completed_partitions()
         return [p for p in all_partitions if str(p) not in done]

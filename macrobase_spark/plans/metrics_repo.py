@@ -37,12 +37,16 @@ state persistence is the build brief's scale addition.
 
 from __future__ import annotations
 
+import math
 import os
+import statistics
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from macrobase_spark.artifacts import artifact_path
+from macrobase_spark.functions.rows import local_rows, write_rows
 from macrobase_spark.operators.clips_suite import scored_parquet
 
 
@@ -219,10 +223,27 @@ _register_clips_query()
 # trailing runs — "row count within tolerance of its recent median", not a
 # hand-maintained absolute bound. At 10^12 rows absolute thresholds rot;
 # the history relation stays tiny (runs x columns x metrics), so every
-# statistic here is exact, declarative, and costs no data scan.
+# statistic here is exact and costs no data scan: the rule runs once, over
+# driver rows (`anomaly_rows`), behind both the row face and the Spark face
+# (`anomaly_check`), as `explain._lattice` serves both explain faces.
 # --------------------------------------------------------------------------
 
-PROFILE_HISTORY_SCHEMA = "run_seq long, column string, metric string, value double"
+# the nullability Spark's writer gave the history files (run_seq and metric
+# were literals)
+PROFILE_HISTORY_SCHEMA = (
+    "run_seq long NOT NULL, column string, metric string NOT NULL, value double"
+)
+ANOMALY_SCHEMA = StructType(
+    [
+        StructField("column", StringType()),
+        StructField("metric", StringType()),
+        StructField("value", DoubleType()),
+        StructField("baseline", DoubleType()),
+        StructField("deviation", DoubleType()),
+        StructField("status", StringType(), False),
+        StructField("n_history", LongType(), False),
+    ]
+)
 
 
 def profile_long(profile: DataFrame, metrics: list[str]) -> DataFrame:
@@ -237,12 +258,91 @@ def profile_long(profile: DataFrame, metrics: list[str]) -> DataFrame:
     ).select("column", "s.metric", "s.value")
 
 
+def record_history(path: str, run_seq: int, rows) -> None:
+    """Append one run's (column, metric, value) rows to the history
+    relation at `path` — the same append-only parquet contract as the run
+    manifest, written on the driver (`functions.rows.write_rows`)."""
+    write_rows(path, [(run_seq, c, m, v) for c, m, v in rows], PROFILE_HISTORY_SCHEMA)
+
+
 def record_profile(profile: DataFrame, path: str, run_seq: int, metrics: list[str]) -> None:
-    """Append one run's profile (long form) to the history relation —
-    same append-only parquet contract as the run manifest."""
-    profile_long(profile, metrics).select(
-        F.lit(run_seq).cast("long").alias("run_seq"), "column", "metric", "value"
-    ).write.mode("append").parquet(path)
+    """Append one run's profile (long form) to the history relation."""
+    record_history(path, run_seq, profile_long(profile, metrics).collect())
+
+
+def _round6(x: float | None) -> float | None:
+    """Spark's round(x, 6): HALF_UP on the shortest decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    if x is None or not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def anomaly_rows(
+    history,
+    current,
+    method: str = "mad",
+    threshold: float = 3.0,
+    window: int | None = None,
+) -> list[Row]:
+    """Judge each (column, metric, value) row of `current` against the
+    trailing `window` runs (by run_seq) of the (run_seq, column, metric,
+    value) rows of `history`:
+
+    - method='relative': anomaly iff |value - median| / |median| > threshold
+    - method='mad':      anomaly iff |value - median| > threshold * MAD
+                         (robust z-score; MAD==0 degrades to exact-match:
+                         any deviation from a constant history is anomalous)
+    - method='stddev':   anomaly iff |value - mean| > threshold * stddev
+                         (sample stddev; needs >= 2 runs, else never fires)
+
+    Medians are exact; null values are skipped by the statistics but
+    counted in n_history, and an undefined deviation (null value, zero
+    median under 'relative') passes. Returns ANOMALY_SCHEMA rows (column,
+    metric, value, baseline, deviation, status, n_history), baseline and
+    deviation rounded to 6 places; metrics with no history rows pass
+    (status 'ok', baseline null) so a first run never self-flags."""
+    if method not in ("relative", "mad", "stddev"):
+        raise ValueError(f"unknown anomaly method {method!r}")
+    hist = list(history)
+    if window is not None:
+        top = max((r[0] for r in hist if r[0] is not None), default=None)
+        hist = [r for r in hist if top is not None and r[0] is not None and r[0] > top - window]
+    by_key: dict[tuple, list] = {}
+    for _, col, met, v in hist:
+        by_key.setdefault((col, met), []).append(v)
+    out = []
+    for col, met, value in current:
+        rows = by_key.get((col, met), [])
+        vals = [v for v in rows if v is not None]
+        baseline = dev = None
+        anomalous = False
+        if vals:
+            med, mean = statistics.median(vals), statistics.fmean(vals)
+            baseline = mean if method == "stddev" else med
+            if value is not None:
+                dev = abs(value - baseline)
+                if method == "relative":
+                    dev = dev / abs(med) if med else None
+                    anomalous = dev is not None and dev > threshold
+                elif method == "mad":
+                    mad = statistics.median([abs(v - med) for v in vals])
+                    anomalous = dev > threshold * mad if mad > 0 else dev > 0
+                elif len(vals) > 1:
+                    anomalous = dev > threshold * statistics.stdev(vals)
+        out.append(
+            Row(
+                column=col,
+                metric=met,
+                value=value,
+                baseline=_round6(baseline),
+                deviation=_round6(dev),
+                status="anomaly" if anomalous else "ok",
+                n_history=len(rows),
+            )
+        )
+    return out
 
 
 def anomaly_check(
@@ -252,68 +352,18 @@ def anomaly_check(
     threshold: float = 3.0,
     window: int | None = None,
 ) -> DataFrame:
-    """Judge each (column, metric) of `current` (long form) against the
-    trailing `window` runs of `history`:
-
-    - method='relative': anomaly iff |value - median| / |median| > threshold
-    - method='mad':      anomaly iff |value - median| > threshold * MAD
-                         (robust z-score; MAD==0 degrades to exact-match:
-                         any deviation from a constant history is anomalous)
-    - method='stddev':   anomaly iff |value - mean| > threshold * stddev
-                         (sample stddev; needs >= 2 runs, else never fires)
-
-    All statistics are EXACT percentiles/moments over the tiny history
-    relation — fully declarative (two aggregations + one broadcast join),
-    no collect. Returns (column, metric, value, baseline, deviation,
-    status, n_history); metrics with no history rows pass (status 'ok',
-    baseline null) so a first run never self-flags."""
-    h = history
-    if window is not None:
-        mx = h.agg(F.max("run_seq").alias("m"))
-        h = h.join(F.broadcast(mx)).filter(
-            F.col("run_seq") > F.col("m") - window
-        ).drop("m")
-    med = h.groupBy("column", "metric").agg(
-        F.expr("percentile(value, 0.5)").alias("__med"),
-        F.avg("value").alias("__mean"),
-        F.stddev("value").alias("__sd"),
-        F.count(F.lit(1)).alias("n_history"),
+    """`anomaly_rows` over relations: `history` (run_seq, column, metric,
+    value) and `current` (column, metric, value), both tiny, are collected
+    and judged on the driver; the result is a local relation of
+    ANOMALY_SCHEMA whose first three fields are `current`'s."""
+    current = current.select("column", "metric", "value")
+    rows = anomaly_rows(
+        history.select("run_seq", "column", "metric", "value").collect(),
+        current.collect(),
+        method, threshold, window,
     )
-    if method == "mad":
-        mad = (
-            h.join(F.broadcast(med.select("column", "metric", "__med")), ["column", "metric"])
-            .groupBy("column", "metric")
-            .agg(F.expr("percentile(abs(value - __med), 0.5)").alias("__mad"))
-        )
-        med = med.join(mad, ["column", "metric"])
-    j = current.join(F.broadcast(med), ["column", "metric"], "left")
-    if method == "relative":
-        dev = F.abs(F.col("value") - F.col("__med")) / F.abs(F.col("__med"))
-        is_anom = dev > threshold
-        baseline = F.col("__med")
-    elif method == "mad":
-        dev = F.abs(F.col("value") - F.col("__med"))
-        is_anom = F.when(F.col("__mad") > 0, dev > threshold * F.col("__mad")).otherwise(
-            dev > 0
-        )
-        baseline = F.col("__med")
-    elif method == "stddev":
-        dev = F.abs(F.col("value") - F.col("__mean"))
-        is_anom = dev > threshold * F.col("__sd")
-        baseline = F.col("__mean")
-    else:
-        raise ValueError(f"unknown anomaly method {method!r}")
-    return j.select(
-        "column",
-        "metric",
-        "value",
-        F.round(baseline, 6).alias("baseline"),
-        F.round(dev, 6).alias("deviation"),
-        F.when(F.col("n_history").isNull() | ~is_anom.eqNullSafe(F.lit(True)), "ok")
-        .otherwise("anomaly")
-        .alias("status"),
-        F.coalesce("n_history", F.lit(0)).alias("n_history"),
-    )
+    schema = StructType(current.schema.fields + ANOMALY_SCHEMA.fields[3:])
+    return local_rows(current.sparkSession, rows, schema)
 
 
 # --------------------------------------------------------------------------

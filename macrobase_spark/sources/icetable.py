@@ -48,6 +48,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from macrobase_spark.functions.rows import local_rows
+
 
 def _meta_dir(root: str) -> str:
     return os.path.join(root, "metadata")
@@ -262,6 +264,26 @@ def plan_files(
     return entries
 
 
+def _scan(spark: SparkSession, root: str, entries: list[dict]) -> DataFrame:
+    """The rows of the given data files, typed by the table metadata: the
+    data columns, then the partition columns (Spark appends those from the
+    hive paths), each with its metadata type. That is what Spark's inference
+    over the files gives, without the job it launches, and a scan of no
+    file has the same schema."""
+    meta = _read_metadata(root)
+    spec = meta["partition_spec"]
+    types = {f["name"]: f["type"] for f in meta["schema"]}
+    names = [n for n in types if n not in spec] + spec
+    schema = ", ".join(f"`{n}` {types[n]}" for n in names)
+    if not entries:
+        return local_rows(spark, [], schema)
+    return (
+        spark.read.schema(schema)
+        .option("basePath", _data_dir(root))
+        .parquet(*[e["path"] for e in entries])
+    )
+
+
 def read_table(
     spark: SparkSession,
     root: str,
@@ -272,18 +294,7 @@ def read_table(
     for time travel), with manifest-level file skipping for `where`
     conjuncts. The residual predicate is ALSO applied Spark-side (file
     skipping is a superset guarantee, exactly like Iceberg's)."""
-    entries = plan_files(root, snapshot_id, where)
-    meta = _read_metadata(root)
-    if not entries:
-        cols = ", ".join(f"`{f['name']}` {f['type']}" for f in meta["schema"])
-        parts = ", ".join(
-            f"`{c}` string" for c in meta["partition_spec"] if c
-        )
-        schema = ", ".join(x for x in [cols, parts] if x)
-        return spark.createDataFrame([], schema)
-    df = spark.read.option("basePath", _data_dir(root)).parquet(
-        *[e["path"] for e in entries]
-    )
+    df = _scan(spark, root, plan_files(root, snapshot_id, where))
     for col, op, val in where or []:
         c = F.col(col)
         df = df.filter(
@@ -308,12 +319,7 @@ def read_incremental(
     spark: SparkSession, root: str, from_snapshot: int | None, to_snapshot: int | None = None
 ) -> DataFrame:
     """The rows appended between two snapshots, as a DataFrame."""
-    entries = incremental_files(root, from_snapshot, to_snapshot)
-    if not entries:
-        return read_table(spark, root, to_snapshot).limit(0)
-    return spark.read.option("basePath", _data_dir(root)).parquet(
-        *[e["path"] for e in entries]
-    )
+    return _scan(spark, root, incremental_files(root, from_snapshot, to_snapshot))
 
 
 # ---------------------------------------------------------------------------

@@ -79,10 +79,11 @@ def stream_duplicate_clips(
 ) -> DataFrame:
     """Cross-batch uniqueness: emits one violation row per duplicate ARRIVAL
     (the 2nd, 3rd, … sighting of a clip_id), matching the batch check's
-    flagged-key set while staying incremental. The batch `uniqueness_check`
-    emits one row per duplicated key with the final count — a final count
-    does not exist mid-stream, so the streaming face reports arrivals; the
-    flagged clip_id set is identical (gated by tests).
+    flagged-key set while staying incremental. The batch uniqueness check
+    (`checks.row_violations`) emits one row per duplicated key with the
+    final count — a final count does not exist mid-stream, so the streaming
+    face reports arrivals; the flagged clip_id set is identical (gated by
+    tests).
 
     State per key = one arrival count. `ttl_minutes` bounds total state via a
     processing-time timeout (dedup-at-scale contract: a key silent for the
@@ -164,15 +165,9 @@ def batch_processor(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         from macrobase_spark.operators.audio import score_clips
 
-        spark = batch_df.sparkSession
         manifest = RunManifest(run_manifest_path)
         lineage = f"stream-batch:{batch_id}"
-        already = (
-            manifest.read(spark).filter(F.col("lineage") == lineage).limit(1).count()
-            if manifest.exists()
-            else 0
-        )
-        if already:
+        if (lineage,) in manifest.read_rows("lineage"):
             return
         scored = score_clips(batch_df, cfg.min_snr_db).persist()
         try:
@@ -194,7 +189,6 @@ def batch_processor(
                 .collect()
             )
             manifest.record(
-                spark,
                 [
                     {
                         "partition": r[pc],

@@ -98,12 +98,12 @@ def test_manifest_resume(spark, tmp_path, suite):
         {"partition": p, "n_rows": 1, "n_violations": 0, "passed": True}
         for p in parts[:-1]
     ]
-    m.record(spark, rows, lineage="clips@n=3000")
-    pending = m.pending(spark, parts)
+    m.record(rows, lineage="clips@n=3000")
+    pending = m.pending(parts)
     assert pending == [parts[-1]]
     # completing the rest empties the queue
-    m.record(spark, [{"partition": parts[-1], "n_rows": 1, "n_violations": 2, "passed": False}])
-    assert m.pending(spark, parts) == []
+    m.record([{"partition": parts[-1], "n_rows": 1, "n_violations": 2, "passed": False}])
+    assert m.pending(parts) == []
     mdf = m.read(spark)
     assert mdf.count() == len(parts)
     assert mdf.filter(~F.col("passed")).count() == 1
@@ -116,9 +116,13 @@ def test_suite_results_launch_no_job(suite, count_jobs):
         assert count_jobs(df.collect) == 0
 
 
-def test_fused_suite_matches_component_functions(spark, suite):
-    """run_suite's fused single-aggregation fast path must produce the same
-    relations as the component functions the oracle queries certify."""
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _assert_suite_matches_components(res, manifest):
+    """The suite's relations equal the component functions the oracle
+    queries certify, computed over the same scored relation."""
     from macrobase_spark.operators.checks import (
         column_stats,
         explain_from_violations,
@@ -126,8 +130,9 @@ def test_fused_suite_matches_component_functions(spark, suite):
         verdicts_from_violations,
     )
 
-    scored = suite.scored
-    viol = row_violations(scored, generate_manifest(spark, N))
+    scored = res.scored
+    viol = row_violations(scored, manifest)
+    assert _rows(res.violations.filter(F.col("check") != "drift")) == _rows(viol)
 
     ref_verd = {
         (r["codec"], r["check"]): (r["n_rows"], r["n_violations"], r["passed"])
@@ -135,12 +140,13 @@ def test_fused_suite_matches_component_functions(spark, suite):
     }
     got_verd = {
         (r["codec"], r["check"]): (r["n_rows"], r["n_violations"], r["passed"])
-        for r in suite.verdicts.collect()
+        for r in res.verdicts.collect()
     }
     assert got_verd == ref_verd
 
     ref_stats = {r["codec"]: r.asDict() for r in column_stats(scored, "codec").collect()}
-    for r in suite.column_stats.collect():
+    assert len(ref_stats) == res.column_stats.count()
+    for r in res.column_stats.collect():
         ref = ref_stats[r["codec"]]
         for k, v in r.asDict().items():
             if isinstance(v, float):
@@ -154,9 +160,102 @@ def test_fused_suite_matches_component_functions(spark, suite):
     }
     got_exp = {
         (r["codec"], r["sr_hz_s"]): (r["outlier_count"], r["total_count"], r["risk_ratio"])
-        for r in suite.explanation.collect()
+        for r in res.explanation.collect()
     }
     assert got_exp == ref_exp
+
+
+def test_fused_suite_matches_component_functions(spark, suite):
+    """run_suite's fused single-aggregation fast path must produce the same
+    relations as the component functions the oracle queries certify."""
+    _assert_suite_matches_components(suite, generate_manifest(spark, N))
+
+
+def hostile_clips(spark, n: int = N):
+    """generate_clips(n) made hostile to the keyed pass, with its manifest:
+    NULL clip_ids on several rows (each duplicated too), NULL sr_hz on every
+    null-transcript row and more, NULL codecs, duplicated ids that carry
+    null-transcript and SNR violations, an orphan duplicate (id 263), and a
+    manifest that holds a NULL key."""
+    c = generate_clips(spark, n, max_payload_ms=50).withColumn(
+        "_i", F.substring("clip_id", 6, 12).cast("long")
+    )
+    i = F.col("_i")
+    c = (
+        c.withColumn("clip_id", F.when(i % 401 == 5, None).otherwise(F.col("clip_id")))
+        .withColumn("sr_hz", F.when((i % 211 == 3) | (i % 97 == 3), None).otherwise(F.col("sr_hz")))
+        .withColumn("codec", F.when(i % 89 == 4, None).otherwise(F.col("codec")))
+    )
+    dups = c.filter((i % 211 == 3) | (i % 601 == 9) | (i == 263) | (i % 401 == 5))
+    manifest = generate_manifest(spark, n).unionByName(
+        spark.createDataFrame(
+            [(None, "crawl-a", "cc0")], "clip_id string, source string, license string"
+        )
+    )
+    return c.unionByName(dups).drop("_i"), manifest
+
+
+# violation rows of the hostile fixture, as the join-based suite that the
+# keyed pass replaced counted them
+HOSTILE_VIOLATIONS = 148
+
+
+@pytest.fixture(scope="module")
+def hostile(spark):
+    clips, manifest = hostile_clips(spark)
+    return run_suite(clips, manifest, SuiteConfig()), manifest
+
+
+def test_keyed_pass_on_hostile_data(hostile):
+    """On NULL keys, duplicated violating ids and NULL groups, the keyed
+    window gives the rows of the grouping/anti-join definition (uniqueness
+    as a GROUP BY, referential integrity as a LEFT ANTI join), the suite's
+    relations equal the component functions, and the per-check violation
+    counts add up to the violation rows. The counts are those of the
+    join-based suite this keyed pass replaced."""
+    from macrobase_spark.operators.checks import (
+        ref_integrity_check,
+        row_local_checks,
+        row_violations,
+    )
+
+    res, manifest = hostile
+    scored = res.scored
+    dups = (
+        scored.groupBy("clip_id").count().filter(F.col("count") > 1).select(
+            "clip_id",
+            F.lit("uniqueness").alias("check"),
+            F.concat(F.lit("duplicate x"), F.col("count")).alias("detail"),
+        )
+    )
+    grouped = dups.unionByName(row_local_checks(scored)).unionByName(
+        ref_integrity_check(scored, manifest)
+    )
+    assert _rows(row_violations(scored, manifest)) == _rows(grouped)
+    _assert_suite_matches_components(res, manifest)
+    n = res.violations.count()
+    assert sum(res.violation_counts.values()) == n
+    assert res.violation_counts == {
+        c: res.violations.filter(F.col("check") == c).count() for c in res.violation_counts
+    }
+    assert res.violations.filter(F.col("clip_id").isNull()).filter(
+        F.col("check") == "uniqueness"
+    ).count() == 1
+    assert n == HOSTILE_VIOLATIONS
+
+
+def test_null_sr_hz_stays_null_in_explanation(hostile):
+    """sr_hz is an explanation attribute as Spark casts it to string: a
+    NULL sr_hz stays NULL (no item), never the string 'None'. The hostile
+    fixture's NULL-sr_hz group holds every null-transcript row, enough
+    support and risk ratio to be emitted were it an item."""
+    from macrobase_spark.operators.checks import explain_from_violations, row_violations
+
+    res, manifest = hostile
+    rows = _rows(res.explanation)
+    assert rows and all(v != "None" for r in rows for v in r)
+    ref = explain_from_violations(res.scored, row_violations(res.scored, manifest), SuiteConfig())
+    assert rows == _rows(ref)
 
 
 def test_files_scan_matches_jvm_scan(spark, tmp_path):

@@ -122,6 +122,27 @@ def test_empty_plan_returns_typed_empty(spark, table):
     assert "clip_id" in df.columns and "codec" in df.columns
 
 
+def test_scan_schema_comes_from_metadata(spark, table, count_jobs):
+    """Every read takes its schema from the table metadata: the data
+    columns, then the partition columns. A read whose conjuncts prune every
+    file has the same names, types and order as one that reads files (it
+    used to carry `codec` twice), both equal what Spark infers from the
+    files, and building an incremental read launches no job."""
+    root, *_ = table
+    full = read_table(spark, root)
+    empty = read_table(spark, root, where=[("codec", "=", "nope")])
+    inferred = spark.read.option("basePath", os.path.join(root, "data")).parquet(
+        *[e["path"] for e in plan_files(root)]
+    )
+    assert [(f.name, f.dataType) for f in empty.schema] == [
+        (f.name, f.dataType) for f in full.schema
+    ]
+    assert full.schema == inferred.schema
+    assert full.columns == ["clip_id", "dur_ms", "seq", "codec"]
+    assert empty.select("codec").count() == 0
+    assert count_jobs(lambda: read_incremental(spark, root, 1)) == 0
+
+
 def test_incremental_feeds_metrics_repo(spark, table, tmp_path):
     """The daily-append handoff: profile ONLY the rows added by the newest
     snapshot and merge with the prior state — equals a full-table profile

@@ -172,3 +172,80 @@ def test_record_profile_round_trip(spark, tmp_path):
     cur = profile_long(prof, ["n_rows", "sum"])
     res = anomaly_check(hist, cur, "relative", 0.01)
     assert all(r["status"] == "ok" for r in res.collect())  # unchanged profile
+
+
+def _expected_anomalies(history, current, method, threshold, window):
+    """The anomaly rule restated with numpy, per current row:
+    (status, n_history, baseline, deviation)."""
+    import numpy as np
+
+    if window is not None and history:
+        top = max(r[0] for r in history)
+        history = [r for r in history if r[0] > top - window]
+    out = {}
+    for col, met, value in current:
+        vals = np.array([v for _, c, m, v in history if (c, m) == (col, met)])
+        if not len(vals):
+            out[(col, met)] = ("ok", 0, None, None)
+            continue
+        med, mean = float(np.median(vals)), float(vals.mean())
+        if method == "relative":
+            base, dev = med, abs(value - med) / abs(med)
+            anom = dev > threshold
+        elif method == "mad":
+            base, dev = med, abs(value - med)
+            mad = float(np.median(np.abs(vals - med)))
+            anom = dev > threshold * mad if mad > 0 else dev > 0
+        else:
+            base, dev = mean, abs(value - mean)
+            anom = len(vals) > 1 and dev > threshold * float(vals.std(ddof=1))
+        out[(col, met)] = ("anomaly" if anom else "ok", len(vals), base, dev)
+    return out
+
+
+@pytest.mark.parametrize("method,threshold", [("relative", 0.1), ("mad", 3.0), ("stddev", 2.0)])
+@pytest.mark.parametrize("window", [None, 3])
+def test_anomaly_row_face_equals_spark_face(spark, method, threshold, window):
+    """The rule runs once (`anomaly_rows`): over seeded histories — a noisy
+    metric, a constant one and a metric seen for the first time — the row
+    face and `anomaly_check` return the same rows, and both equal the rule
+    restated with numpy. An empty history (a first run) never flags."""
+    import numpy as np
+
+    from macrobase_spark.plans.metrics_repo import (
+        PROFILE_HISTORY_SCHEMA,
+        anomaly_check,
+        anomaly_rows,
+    )
+
+    def faces(history, current):
+        rows = anomaly_rows(history, current, method, threshold, window)
+        spark_rows = anomaly_check(
+            spark.createDataFrame(history, PROFILE_HISTORY_SCHEMA),
+            spark.createDataFrame(current, "column string, metric string, value double"),
+            method, threshold, window,
+        ).collect()
+        assert sorted(map(tuple, rows)) == sorted(map(tuple, spark_rows))
+        return {(r["column"], r["metric"]): r for r in rows}
+
+    for seed in range(4):
+        rng = np.random.default_rng(seed)
+        history = [
+            (i, "c", "n_rows", float(rng.normal(100, 5)))
+            for i in range(1, 7)
+        ] + [(i, "c", "min", 1.0) for i in range(1, 7)]
+        current = [
+            ("c", "n_rows", float(rng.normal(100, 15))),
+            ("c", "min", float(rng.choice([1.0, 1.5]))),
+            ("c", "fresh", 5.0),
+        ]
+        got = faces(history, current)
+        for key, (status, n, base, dev) in _expected_anomalies(
+            history, current, method, threshold, window
+        ).items():
+            r = got[key]
+            assert (r["status"], r["n_history"]) == (status, n), (seed, key)
+            for v, want in ((r["baseline"], base), (r["deviation"], dev)):
+                assert v == (None if want is None else pytest.approx(want, abs=1e-6))
+    first = faces([], [("c", "n_rows", 100.0)])
+    assert tuple(first[("c", "n_rows")]) == ("c", "n_rows", 100.0, None, None, "ok", 0)

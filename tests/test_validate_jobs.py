@@ -1,15 +1,35 @@
-"""Job count of one `jobs/validate.py --resume` round over an icetable
-append, run in-process as the benchmark runs it."""
+"""Job counts of the suite and of one `jobs/validate.py --resume` round
+over an icetable append, run in-process as the benchmark runs it, and the
+partition-grain resume of a `--table` run."""
 
 import importlib.util
 import json
+import os
 import sys
 from pathlib import Path
 
-from macrobase_spark.sources.clips import generate_clips
+from pyspark.sql import functions as F
+
+from macrobase_spark.operators.checks import SuiteConfig, run_suite
+from macrobase_spark.sources.clips import generate_clips, generate_manifest
 from macrobase_spark.sources.icetable import append, create_table
 
 REPO = Path(__file__).resolve().parent.parent
+
+
+def _validate_module():
+    spec = importlib.util.spec_from_file_location("validate_job", REPO / "jobs" / "validate.py")
+    validate = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(validate)
+    return validate
+
+
+def _run(validate, monkeypatch, capsys, *args) -> dict:
+    """One in-process `validate.py` run; its last JSON line."""
+    monkeypatch.setattr(sys, "argv", ["validate.py", *args])
+    capsys.readouterr()
+    assert validate.main() == 0
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
 
 def test_validate_resume_round_job_count(spark, tmp_path, count_jobs, monkeypatch, capsys):
@@ -17,23 +37,71 @@ def test_validate_resume_round_job_count(spark, tmp_path, count_jobs, monkeypatc
     which validates only the appended snapshot. Built on list-based
     `createDataFrame` results, a Spark-side explanation lattice, a codec
     `distinct()`, two profile-history reads and a stats job per append,
-    this round launched 33 jobs; with driver-sized results local, it
-    launches 20."""
-    spec = importlib.util.spec_from_file_location("validate_job", REPO / "jobs" / "validate.py")
-    validate = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(validate)
+    this round launched 33 jobs. With driver-sized results local it
+    launched 20. With the keyed rollup and validate's bookkeeping (lineage
+    read, violation count, anomaly gate, manifest and profile writes) on
+    the driver, it launches 4: the scan and the rollup's three."""
+    validate = _validate_module()
     root, mdir = str(tmp_path / "ice"), str(tmp_path / "manifest")
-    monkeypatch.setattr(
-        sys, "argv",
-        ["validate.py", "--iceberg-root", root, "--manifest-dir", mdir, "--resume"],
-    )
+    args = ["--iceberg-root", root, "--manifest-dir", mdir, "--resume"]
     clips = generate_clips(spark, 3000, max_payload_ms=50)
     cut = f"clip_{2000:012d}"
-    create_table(clips.filter(f"clip_id < '{cut}'"), root, partition_by=["codec"], stat_cols=["dur_ms"])
-    assert validate.main() == 0
+    create_table(
+        clips.filter(f"clip_id < '{cut}'"), root, partition_by=["codec"], stat_cols=["dur_ms"]
+    )
+    _run(validate, monkeypatch, capsys, *args)
     append(clips.filter(f"clip_id >= '{cut}'"), root)
-    capsys.readouterr()
-    n_jobs = count_jobs(validate.main)
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    out = {}
+    n_jobs = count_jobs(lambda: out.update(_run(validate, monkeypatch, capsys, *args)))
     assert out["rows"] == 1000
-    assert n_jobs <= 20
+    assert n_jobs <= 4
+
+
+def test_run_suite_job_count(spark, count_jobs):
+    """After the scan's one job, the suite runs one keyed rollup: a
+    `clip_id` exchange for the window, an exchange for the rollup and the
+    collect — 3 jobs (the row-violation checkpoint and the join back to the
+    scored rows it replaced cost 4 more)."""
+    clips = generate_clips(spark, 2000, max_payload_ms=50).localCheckpoint()
+    manifest = generate_manifest(spark, 2000)
+    assert count_jobs(lambda: run_suite(clips, manifest, SuiteConfig())) <= 1 + 3
+
+
+def test_partition_resume_includes_null_codec(spark, tmp_path, monkeypatch, capsys):
+    """A `--table` resume validates the NULL-codec partition too (an
+    `isin` filter alone never matches NULL), records it as 'None', and the
+    next run has nothing to do. The manifest and profile-history rows it
+    writes on the driver have the file schema Spark's writer gives the
+    same rows, and Spark and pyarrow read the same rows from them."""
+    import pyarrow.parquet as pq
+
+    from macrobase_spark.functions.rows import local_rows
+    from macrobase_spark.plans.manifest import MANIFEST_SCHEMA
+    from macrobase_spark.plans.metrics_repo import PROFILE_HISTORY_SCHEMA
+
+    validate = _validate_module()
+    table, mdir = str(tmp_path / "clips"), str(tmp_path / "manifest")
+    idx = F.substring("clip_id", 6, 12).cast("long")
+    generate_clips(spark, 600, max_payload_ms=50).withColumn(
+        "codec", F.when(idx < 100, None).otherwise(F.col("codec"))
+    ).write.parquet(table)
+    args = ["--table", table, "--manifest-dir", mdir, "--resume"]
+    first = _run(validate, monkeypatch, capsys, *args)
+    assert (first["rows"], first["partitions"]) == (600, 6)
+    assert _run(validate, monkeypatch, capsys, *args)["status"] == "nothing to do"
+
+    hist = f"{mdir}_profile_history"
+    for path, schema in ((mdir, MANIFEST_SCHEMA), (hist, PROFILE_HISTORY_SCHEMA)):
+        ref = str(tmp_path / f"spark_{os.path.basename(path)}")
+        rows = [tuple(r.values()) for r in pq.read_table(path).to_pylist()]
+        local_rows(spark, rows, schema).write.parquet(ref)
+
+        def file_schema(d):
+            f = next(x for x in sorted(os.listdir(d)) if x.endswith(".parquet"))
+            return pq.read_schema(os.path.join(d, f)).remove_metadata()
+
+        assert file_schema(path) == file_schema(ref)
+        assert spark.read.parquet(path).schema == spark.read.parquet(ref).schema
+        got = [tuple(r) for r in spark.read.parquet(path).collect()]
+        want = [tuple(r) for r in spark.read.parquet(ref).collect()]
+        assert sorted(got, key=repr) == sorted(want, key=repr) == sorted(rows, key=repr)
