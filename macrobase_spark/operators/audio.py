@@ -565,7 +565,8 @@ def score_record_batch(b):
     idx = pc.if_else(
         is_index, pc.cast(pc.if_else(is_index, digits, "0"), pa.int64()), -1
     ).to_numpy(zero_copy_only=False)
-    srs = col["sr_hz"].to_numpy(zero_copy_only=False)
+    # a NULL sr_hz matches no header rate (headers carry rates >= 0)
+    srs = pc.fill_null(col["sr_hz"], -1).to_numpy(zero_copy_only=False)
     offsets, data = _binary_views(col["bytes"])
     plen = np.diff(offsets).astype(np.int64)
     out_snr = np.full(n, -np.inf)
@@ -579,7 +580,7 @@ def score_record_batch(b):
     # (sr, n_samples) shape group — most clips share a shape, so
     # sin/reductions run over 2D blocks instead of small arrays
     out_ok, srd, nsd = _parse_pcm16_headers(offsets, data)
-    out_srm = out_ok & (srd == np.asarray(srs).astype(np.int64))
+    out_srm = out_ok & (srd == srs.astype(np.int64))
     valid = np.flatnonzero(out_ok & (nsd > 0))
     order = valid[np.lexsort((nsd[valid], srd[valid]))]
     bounds = (

@@ -14,9 +14,10 @@ the same banded-LSH shuffle shape as SimHash text dedup
     Hamming(xor) ≤ threshold               (bit_count — JVM codegen)
 
 At 10^12 rows this is the MinHash-LSH plan: no all-pairs comparison exists
-anywhere; candidate generation is an equi-join on 14-bit band keys and hot
-buckets (silence, identical test tones) are dropped-and-logged via
-`max_bucket` exactly like dedup.simhash_candidates.
+anywhere; candidate generation is an equi-join on 14-bit band keys
+(dedup.banded_pairs, the join behind dedup.simhash_candidates too) and hot
+buckets (silence, identical test tones) are dropped via `max_bucket`, with
+the drops observed in dedup.GUARD_DROPS["audio_near_dup_pairs"].
 
 Robustness, measured on the fixture (tests/test_audio_fp.py): exact
 re-container = 0 flipped bits; G.711 mu-law/A-law and IMA ADPCM re-encodes
@@ -53,6 +54,7 @@ from pyspark.sql.types import (
 from macrobase_spark.artifacts import artifact, decode_fixture_n
 from macrobase_spark.functions.rows import map_rows
 from macrobase_spark.operators.audio import decode_audio, sin_samples, splitmix64, u01
+from macrobase_spark.operators.dedup import banded_pairs
 from macrobase_spark.queries import register
 
 # 16 overlapping triangular bands, log-spaced 150 Hz .. 3800 Hz (absolute Hz
@@ -147,9 +149,10 @@ def audio_near_dup_pairs(
     join (linear, no all-pairs anywhere); the build side stays at 8 rows
     per record.
 
-    The join key is (band, key) — one bucketed shuffle; `max_bucket` drops
-    degenerate hot buckets (silence / identical test tones), sized on EXACT
-    keys, with the same drop-and-log contract as simhash_candidates.
+    The join key is (band, key) — one bucketed shuffle (dedup.banded_pairs);
+    `max_bucket` drops degenerate hot buckets (silence / identical test
+    tones), sized on EXACT keys, and the drops are observed in
+    dedup.GUARD_DROPS["audio_near_dup_pairs"], as for simhash_candidates.
     Emits (clip_a, clip_b, hamming), a<b, distinct.
     """
     if "decode_ok" in fp.columns:
@@ -177,40 +180,18 @@ def audio_near_dup_pairs(
         id_col, "fp_hi", "fp_lo",
         F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
     )
-    if max_bucket is not None:
-        sizes = e.groupBy("band", "key").agg(F.count(F.lit(1)).alias("_bn"))
-        hot = sizes.filter(F.col("_bn") > max_bucket)
-        n_hot = hot.count()
-        if n_hot:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "audio_near_dup_pairs: dropping %d hot LSH buckets (> %d members)",
-                n_hot, max_bucket,
-            )
-            e = e.join(F.broadcast(hot.select("band", "key")), ["band", "key"], "left_anti")
-    probe_side = e
+    probe = None
     if multi_probe:
-        probes = F.array(*[F.lit(0)] + [F.lit(1 << k) for k in range(14)])
-        probe_side = e.withColumn("_p", F.explode(probes)).select(
-            id_col, "fp_hi", "fp_lo", "band",
-            F.expr("key ^ _p").alias("key"),
-        )
-    a = probe_side.select(
-        F.col(id_col).alias("clip_a"), F.col("fp_hi").alias("ha"),
-        F.col("fp_lo").alias("la"), "band", "key",
-    )
-    b = e.select(
-        F.col(id_col).alias("clip_b"), F.col("fp_hi").alias("hb"),
-        F.col("fp_lo").alias("lb"), "band", "key",
-    )
+        flips = [F.col("key").bitwiseXOR(F.lit(1 << k)) for k in range(14)]
+        probe = ("key", F.explode(F.array(F.col("key"), *flips)))
+    pairs = banded_pairs(e, id_col, ["band", "key"], max_bucket, "audio_near_dup_pairs", probe)
     return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("clip_a") < F.col("clip_b"))
-        .select(
-            "clip_a", "clip_b",
+        pairs.select(
+            F.col(f"a_{id_col}").alias("clip_a"),
+            F.col(f"b_{id_col}").alias("clip_b"),
             (
-                F.bit_count(F.expr("ha ^ hb")) + F.bit_count(F.expr("la ^ lb"))
+                F.bit_count(F.col("a_fp_hi").bitwiseXOR(F.col("b_fp_hi")))
+                + F.bit_count(F.col("a_fp_lo").bitwiseXOR(F.col("b_fp_lo")))
             ).alias("hamming"),
         )
         .filter(F.col("hamming") <= hamming_max)

@@ -7,11 +7,16 @@ Five families, each Spark-first:
 - n-gram Jaccard: inverted-index self-join on shingles (never O(n²) rows);
   per-doc shingle sets are built with pure array expressions, zero Python.
 - MinHash + LSH: per-row signature (array expressions over md5 — no shuffle
-  at all), band keys, then ONE group-by on (band, key) to find candidates.
+  at all), band keys, then ONE self-join on (band, key) to find candidates.
   This is the 100 TB path: cost is O(n · bands), not O(n²).
 - SimHash: 64-bit signature from xxhash64 token hashes (per-row expression),
   16-bit bands for hamming-neighbor candidates.
 - embedding cosine near-dup: see macrobase_spark.operators.similarity.
+
+Jaccard, MinHash, SimHash and the audio fingerprint near-dups
+(operators/audio_fp.py) share one bucket self-join, `banded_pairs`; it and
+the LSH cosine path (operators/similarity.py) share one hot-bucket guard,
+`bucket_guard`, whose drops are observed in `GUARD_DROPS`.
 
 The md5-based MinHash is deliberately engine-portable (identical hex in
 Spark and DuckDB) so the oracle can verify the *exact* candidate set.
@@ -19,7 +24,9 @@ Spark and DuckDB) so the oracle can verify the *exact* candidate set.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from macrobase_spark.queries import register
@@ -67,6 +74,91 @@ def exact_dedup(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
+class GuardDrops:
+    """What one guarded relation dropped: `.get` is {"rows": hot rows
+    dropped, "buckets": hot buckets dropped}.
+
+    The counts are observed (`DataFrame.observe`) as the guarded rows go by,
+    so they arrive with the relation's first action and cost no job of their
+    own; `.get` blocks until that action has run. When that action's result
+    is empty, Spark's adaptive planner may prune the guarded stage from the
+    finished plan before it reports, and the observation comes back empty;
+    `.get` then counts the hot rows with one job."""
+
+    def __init__(self, name: str, sized: DataFrame, counts: list[Column]):
+        self.observation = Observation(name)
+        self._sized, self._counts = sized, counts
+
+    @property
+    def get(self) -> dict:
+        if self.observation._jo.getRow().length() == 0:  # pruned, see above
+            return self._sized.agg(*self._counts).first().asDict()
+        return self.observation.get
+
+
+GUARD_DROPS: dict[str, GuardDrops] = {}
+"""Operator name -> the drops of its latest guarded relation."""
+
+
+def bucket_guard(
+    df: DataFrame, key_cols: list[str], max_bucket: int | None, name: str | None
+) -> DataFrame:
+    """Drop the rows of every bucket (rows sharing `key_cols`) larger than
+    `max_bucket`; None returns `df` unchanged — the exact relation the
+    oracles replay.
+
+    The bucket size is `count(1) OVER (PARTITION BY key_cols)`: the window
+    hash-partitions on the key, which is the partitioning a self-join on
+    the same key needs, so the guard rides the join's own exchange and
+    launches no job. What it drops is observed on the way through into
+    `GUARD_DROPS[name]` instead of being re-counted by a job of its own:
+    `rows` is the hot row count, `buckets` is Σ 1/size over the hot rows.
+    name=None observes nothing (the second side of a self-join)."""
+    if max_bucket is None:
+        return df
+    sized = df.withColumn("_bn", F.count(F.lit(1)).over(Window.partitionBy(*key_cols)))
+    hot = F.col("_bn") > max_bucket
+    if name is not None:
+        counts = [
+            F.count(F.when(hot, 1)).alias("rows"),
+            F.coalesce(F.round(F.sum(F.when(hot, 1 / F.col("_bn")))), F.lit(0))
+            .cast("long")
+            .alias("buckets"),
+        ]
+        drops = GUARD_DROPS[name] = GuardDrops(name, sized, counts)
+        sized = sized.observe(drops.observation, *counts)
+    return sized.filter(~hot).drop("_bn")
+
+
+def banded_pairs(
+    df: DataFrame,
+    id_col: str,
+    key_cols: list[str],
+    max_bucket: int | None,
+    name: str,
+    probe: tuple[str, Column] | None = None,
+) -> DataFrame:
+    """Bucket self-join: every pair of rows of `df` that share `key_cols`,
+    once (a_<id> < b_<id>), with each column of `df` as a_<col> and b_<col>.
+    Only rows sharing a bucket ever meet — never O(n²) — and buckets larger
+    than `max_bucket` are dropped first (`bucket_guard`, sized on the exact
+    keys). Side a reports the drops: it is the side every join strategy
+    reads to its end (the streamed side of a sort-merge join, and the
+    shuffled side under `probe`).
+
+    `probe` = (key column, exploding expression) replaces that key on side
+    a only with the rows the expression explodes to (multi-probe LSH: side
+    a probes neighbouring keys, side b stays on the exact ones)."""
+    a = bucket_guard(df, key_cols, max_bucket, name)
+    if probe is not None:
+        a = a.withColumn(*probe)
+    a = a.select(*[F.col(c).alias(f"a_{c}") for c in df.columns])
+    b = bucket_guard(df, key_cols, max_bucket, None)
+    b = b.select(*[F.col(c).alias(f"b_{c}") for c in df.columns])
+    on = reduce(lambda x, y: x & y, [F.col(f"a_{k}") == F.col(f"b_{k}") for k in key_cols])
+    return a.join(b, on & (F.col(f"a_{id_col}") < F.col(f"b_{id_col}")))
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -86,33 +178,20 @@ def jaccard_pairs(
     with document frequency above the cap from the INDEX (set sizes keep
     the full sets, so the reported Jaccard becomes a tight lower bound —
     a true near-dup pair shares many rare shingles and still surfaces).
-    None = exact semantics (what the oracle verifies)."""
+    None = exact semantics (what the oracle verifies); the drops are
+    observed in GUARD_DROPS["jaccard_pairs"] (rows = index rows, buckets =
+    shingles)."""
     sh = with_shingles(df.select(id_col, text_col), text_col, n)
     e = sh.select(
         F.col(id_col).alias("doc"), F.size("shingles").alias("sz"), F.explode("shingles").alias("s")
     )
-    if max_doc_freq is not None:
-        dfreq = e.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
-        hot = dfreq.filter(F.col("_df") > max_doc_freq)
-        n_hot = hot.count()  # shingle-grained, bounded
-        if n_hot:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "jaccard_pairs: dropped %d hot shingle(s) with doc-freq > %d "
-                "from the inverted index (jaccard is a lower bound for pairs "
-                "sharing them)", n_hot, max_doc_freq
-            )
-        e = e.join(dfreq.filter(F.col("_df") <= max_doc_freq).select("s"), "s")
-    a = e.alias("a")
-    b = e.alias("b")
     inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        banded_pairs(e, "doc", ["s"], max_doc_freq, "jaccard_pairs")
+        .groupBy(F.col("a_doc").alias("doc_a"), F.col("b_doc").alias("doc_b"))
         .agg(
             F.count(F.lit(1)).alias("inter"),
-            F.first("a.sz").alias("sa"),
-            F.first("b.sz").alias("sb"),
+            F.first("a_sz").alias("sa"),
+            F.first("b_sz").alias("sb"),
         )
     )
     j = F.col("inter") / (F.col("sa") + F.col("sb") - F.col("inter"))
@@ -129,7 +208,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 6,
     bands: int = 2,
     max_bucket: int | None = None,
-    cache: str = "local",
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing any band of the MinHash signature.
 
@@ -144,12 +222,12 @@ def minhash_lsh_candidates(
 
     The default is the exact (unguarded) pair join the oracle replays.
     Scale guard, opt-in: buckets larger than `max_bucket` are EXCLUDED from
-    the pair join and logged — every member pair inside such a bucket is a
-    near-dup of every other, so the quadratic pair list adds no information
-    beyond the bucket id; recover them group-wise from the bucket key if
-    needed. The guard costs a materialization and a bucket-count job.
-    `cache` follows simhash_candidates' vocabulary ("local" /
-    "persist" / "checkpoint") for the reused bands relation."""
+    the pair join — every member pair inside such a bucket is a near-dup of
+    every other, so the quadratic pair list adds no information beyond the
+    bucket id; recover them group-wise from the bucket key if needed. The
+    guard rides the pair join's exchange (`bucket_guard`: no job of its
+    own) and its drops are observed in
+    GUARD_DROPS["minhash_lsh_candidates"]."""
     rows_per_band = num_hashes // bands
     sh = with_shingles(df.select(id_col, text_col), text_col, n)
     sig = sh.select(F.col(id_col).alias("doc"), *minhash_signature("shingles", num_hashes))
@@ -163,29 +241,8 @@ def minhash_lsh_candidates(
         for bi in range(bands)
     ]
     exploded = sig.select("doc", F.explode(F.array(*band_cols)).alias("bk"))
-    if max_bucket is not None:
-        # consumed twice (bucket counts, pair join) — materialize so the
-        # shingle-explode + signature lineage runs once
-        from macrobase_spark.operators.checks import _materialize
-
-        exploded = _materialize(exploded, cache)
-        counts = exploded.groupBy("bk").agg(F.count(F.lit(1)).alias("_n"))
-        n_dropped = counts.filter(F.col("_n") > max_bucket).count()
-        if n_dropped:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "minhash_lsh_candidates: dropped %d bucket(s) larger than %d "
-                "docs (pairs within them are not emitted)", n_dropped, max_bucket
-            )
-        keep = counts.filter((F.col("_n") > 1) & (F.col("_n") <= max_bucket)).select("bk")
-        exploded = exploded.join(keep, "bk")
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    pairs = a.join(
-        b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.doc") < F.col("b.doc"))
-    ).select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-    return pairs.distinct()
+    pairs = banded_pairs(exploded, "doc", ["bk"], max_bucket, "minhash_lsh_candidates")
+    return pairs.select(F.col("a_doc").alias("doc_a"), F.col("b_doc").alias("doc_b")).distinct()
 
 
 def simhash_signature(
@@ -252,7 +309,6 @@ def simhash_candidates(
     n_bands: int = 4,
     max_bucket: int | None = 10000,
     token_hash: str = "xxhash64",
-    cache: str = "local",
 ) -> DataFrame:
     """SimHash near-duplicate pairs.
 
@@ -269,18 +325,9 @@ def simhash_candidates(
     control is `max_bucket` — buckets larger than it (near-identical boiler-
     plate clusters; every member pair is a near-dup of every other, so
     emitting the quadratic pair list adds no information) are EXCLUDED from
-    the pair join and logged. Set max_bucket=None for the exact semantics
-    the oracle verifies.
-
-    `cache` picks the materialization for the reused bands relation (same
-    vocabulary and trade-offs as checks.SuiteConfig.cache): "local" —
-    fastest, but non-replicated blocks with truncated lineage (an executor
-    loss kills the job); "persist" — MEMORY_AND_DISK_2 with lineage kept
-    (survives executor loss; the cluster default); "checkpoint" — reliable
-    storage, needs spark.sparkContext.setCheckpointDir. The blocks live
-    until the returned DataFrame is fully consumed — call
-    `spark.catalog.clearCache()` (or keep sessions short) if you invoke
-    this repeatedly in one long session."""
+    the pair join, and the drops are observed in
+    GUARD_DROPS["simhash_candidates"]. Set max_bucket=None for the exact
+    semantics the oracle verifies."""
     sig = simhash_signature(df.select(id_col, text_col), id_col, text_col, token_hash=token_hash)
     band_bits = simhash_bits(token_hash) // n_bands
     mask = (1 << band_bits) - 1
@@ -294,34 +341,10 @@ def simhash_candidates(
             )
         ).alias("bk"),
     )
-    if max_bucket is not None:
-        # the narrow (doc, simhash, band-key) relation is consumed three
-        # times below (bucket counts, keep-join, pair self-join);
-        # materialize it so the token-explode + 60-vote signature lineage
-        # runs ONCE
-        from macrobase_spark.operators.checks import _materialize
-
-        bands = _materialize(bands, cache)
-        counts = bands.groupBy("bk").agg(F.count(F.lit(1)).alias("_n"))
-        dropped = counts.filter(F.col("_n") > max_bucket)
-        n_dropped = dropped.count()  # group-grained, bounded by key space
-        if n_dropped:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "simhash_candidates: dropped %d bucket(s) larger than %d docs "
-                "(pairs within them are not emitted)", n_dropped, max_bucket
-            )
-        keep = counts.filter((F.col("_n") > 1) & (F.col("_n") <= max_bucket)).select("bk")
-        bands = bands.join(keep, "bk")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    pairs = a.join(
-        b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.doc") < F.col("b.doc"))
-    ).select(
-        F.col("a.doc").alias("doc_a"),
-        F.col("b.doc").alias("doc_b"),
-        F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
+    pairs = banded_pairs(bands, "doc", ["bk"], max_bucket, "simhash_candidates").select(
+        F.col("a_doc").alias("doc_a"),
+        F.col("b_doc").alias("doc_b"),
+        F.bit_count(F.col("a_simhash").bitwiseXOR(F.col("b_simhash"))).alias("hamming"),
     )
     if max_hamming is not None:
         pairs = pairs.filter(F.col("hamming") <= max_hamming)

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from macrobase_spark.artifacts import artifact
+from macrobase_spark.operators.dedup import bucket_guard
 from macrobase_spark.queries import register
 
 
@@ -198,7 +199,9 @@ def lsh_cosine_candidates(
     corpus averages ~150 docs/bucket; recall lost to the sharper split is
     bought back with `n_tables` independent tables (standard multi-probe
     trade). `max_bucket` guards degenerate corpora (everything identical):
-    oversized buckets are dropped and logged, like simhash_candidates."""
+    oversized buckets of the sketch relation are dropped by the same
+    `dedup.bucket_guard` as simhash_candidates' (no job of its own), with
+    the drops observed in dedup.GUARD_DROPS["lsh_cosine_candidates"]."""
     planes = np.vstack(
         [_hyperplanes(dim, n_planes, seed + 101 * t) for t in range(n_tables)]
     )
@@ -221,23 +224,13 @@ def lsh_cosine_candidates(
                 )
                 yield pd.DataFrame({"id": ids, "bucket": key})
 
-    buckets = df.select(id_col, vec_col).mapInPandas(sketch, sk_schema)
+    buckets = bucket_guard(
+        df.select(id_col, vec_col).mapInPandas(sketch, sk_schema),
+        ["bucket"], max_bucket, "lsh_cosine_candidates",
+    )
     tagged = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).join(
         buckets, "id"
     )
-    if max_bucket is not None:
-        counts = buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("_n"))
-        n_dropped = counts.filter(F.col("_n") > max_bucket).count()
-        if n_dropped:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "lsh_cosine_candidates: dropped %d bucket(s) larger than %d",
-                n_dropped, max_bucket,
-            )
-        tagged = tagged.join(
-            counts.filter(F.col("_n") <= max_bucket).select("bucket"), "bucket"
-        )
     blocks = tagged.groupBy("bucket").agg(
         F.collect_list("id").alias("ids"), F.collect_list("v").alias("vecs")
     )

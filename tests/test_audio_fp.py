@@ -71,12 +71,16 @@ def test_near_dup_recovers_planted_copies(spark):
 
 def test_hot_bucket_guard(spark):
     """max_bucket drops degenerate buckets (identical content everywhere)
-    instead of exploding quadratically."""
+    instead of exploding quadratically, and counts what it dropped: every
+    band of the 50 identical clips (8 buckets, 400 band rows)."""
+    from macrobase_spark.operators.dedup import GUARD_DROPS
+
     pcm = fp_clip_content(7, 16000)
     rows = [(f"c{i:03d}", bytearray(wav_bytes(pcm, 16000))) for i in range(50)]
     df = spark.createDataFrame(rows, "clip_id string, bytes binary")
     fp = audio_fingerprints(df)
     assert audio_near_dup_pairs(fp, max_bucket=10).count() == 0
+    assert GUARD_DROPS["audio_near_dup_pairs"].get == {"rows": 400, "buckets": 8}
     assert audio_near_dup_pairs(fp, max_bucket=None).count() == 50 * 49 // 2
 
 

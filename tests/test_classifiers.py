@@ -114,15 +114,14 @@ def test_candidate_counts_scale_linearly(spark):
         assert growth < growth_docs * 4, (k, counts)
 
 
-def test_minhash_hot_bucket_guard(spark, caplog):
+def test_minhash_hot_bucket_guard(spark):
     """Planted degenerate corpus (the r4 verdict's OOM scenario): 10^4
-    copies of the same boilerplate doc all land in ONE band bucket. The
-    max_bucket guard must complete the query by dropping (and logging)
-    the hot bucket instead of materializing ~5·10^7 pairs, while pairs
-    from healthy buckets are still emitted."""
-    import logging
-
-    from macrobase_spark.operators.dedup import minhash_lsh_candidates
+    copies of the same boilerplate doc all land in ONE bucket per band. The
+    max_bucket guard must complete the query by dropping the hot buckets
+    (and counting them: 2 buckets, 2·10^4 band rows) instead of
+    materializing ~5·10^7 pairs, while pairs from healthy buckets are still
+    emitted."""
+    from macrobase_spark.operators.dedup import GUARD_DROPS, minhash_lsh_candidates
 
     boiler = "the quick brown fox jumps over the lazy dog again and again"
     rows = [(f"hot-{i:05d}", boiler) for i in range(10_000)]
@@ -130,22 +129,104 @@ def test_minhash_hot_bucket_guard(spark, caplog):
     rows += [("ok-a", "alpha beta gamma delta epsilon zeta"),
              ("ok-b", "alpha beta gamma delta epsilon zeta")]
     d = spark.createDataFrame(rows, "doc_id string, text string").repartition(8)
-    with caplog.at_level(logging.WARNING, logger="macrobase_spark.operators.dedup"):
-        pairs = minhash_lsh_candidates(d, "doc_id", "text", max_bucket=100).collect()
+    pairs = minhash_lsh_candidates(d, "doc_id", "text", max_bucket=100).collect()
     got = {(r["doc_a"], r["doc_b"]) for r in pairs}
     assert got == {("ok-a", "ok-b")}  # hot bucket excluded, healthy pair kept
-    assert any("dropped" in r.message for r in caplog.records)
+    assert GUARD_DROPS["minhash_lsh_candidates"].get == {"buckets": 2, "rows": 20000}
 
 
-def test_minhash_guard_exact_when_under_cap(spark):
-    """With every bucket under the cap, the guarded join and the exact
-    (max_bucket=None) semantics — the ones the DuckDB oracle replays —
-    produce the identical pair set."""
-    from macrobase_spark.operators.dedup import minhash_lsh_candidates
+# ---- one guard, five operators: the planted corpora put K rows into one
+# bucket per band (table / shingle) and one healthy pair elsewhere
 
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    exact = {tuple(r) for r in minhash_lsh_candidates(
-        d, "doc_id", "text", max_bucket=None).collect()}
-    guarded = {tuple(r) for r in minhash_lsh_candidates(
-        d, "doc_id", "text", max_bucket=10000).collect()}
-    assert exact == guarded and exact
+_K = 300
+_DIM = 64  # the embeddings fixture's dimension
+
+
+def _hot_docs(spark):
+    boiler = " ".join(f"b{i}" for i in range(10))  # 10 distinct words: 8 shingles
+    ok = "alpha beta gamma delta epsilon zeta"
+    rows = [(i, boiler) for i in range(_K)] + [(_K, ok), (_K + 1, ok)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _hot_vecs(spark):
+    v = [float(np.cos(1.7 * i + 0.3)) for i in range(_DIM)]
+    rows = [(i, v) for i in range(_K)] + [(i, [-x for x in v]) for i in (_K, _K + 1)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _hot_fps(spark):
+    ones = (1 << 56) - 1  # every band key differs from the hot rows' zeros
+    rows = [(i, True, 0, 0) for i in range(_K)]
+    rows += [(i, True, ones, ones) for i in (_K, _K + 1)]
+    return spark.createDataFrame(rows, "clip_id long, decode_ok boolean, fp_hi long, fp_lo long")
+
+
+def _docs(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+def _vecs(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+def _fps(spark, sf_dir):
+    from macrobase_spark.operators.audio_fp import audio_fingerprints, generate_fp_clips
+
+    return audio_fingerprints(generate_fp_clips(spark, 60))
+
+
+def _guard_cases():
+    from macrobase_spark.operators.audio_fp import audio_near_dup_pairs
+    from macrobase_spark.operators.dedup import jaccard_pairs, minhash_lsh_candidates
+    from macrobase_spark.operators.similarity import lsh_cosine_candidates
+
+    # case: (GUARD_DROPS name, fixture data, planted data, op(data, cap), planted drops)
+    return {
+        "jaccard": ("jaccard_pairs", _docs, _hot_docs,
+                    lambda d, m: jaccard_pairs(d, "doc_id", "text", max_doc_freq=m),
+                    {"rows": 8 * _K, "buckets": 8}),
+        "minhash": ("minhash_lsh_candidates", _docs, _hot_docs,
+                    lambda d, m: minhash_lsh_candidates(d, "doc_id", "text", max_bucket=m),
+                    {"rows": 2 * _K, "buckets": 2}),
+        "simhash": ("simhash_candidates", _docs, _hot_docs,
+                    lambda d, m: simhash_candidates(d, "doc_id", "text", max_bucket=m),
+                    {"rows": 4 * _K, "buckets": 4}),
+        "lsh_cosine": ("lsh_cosine_candidates", _vecs, _hot_vecs,
+                       lambda e, m: lsh_cosine_candidates(
+                           e, "vec_id", "embedding", dim=_DIM, n_planes=10, n_tables=2,
+                           max_bucket=m),
+                       {"rows": 2 * _K, "buckets": 2}),
+        "audio_fp": ("audio_near_dup_pairs", _fps, _hot_fps,
+                     lambda f, m: audio_near_dup_pairs(f, max_bucket=m),
+                     {"rows": 8 * _K, "buckets": 8}),
+    }
+
+
+@pytest.mark.parametrize("case", ["jaccard", "minhash", "simhash", "lsh_cosine", "audio_fp"])
+def test_guard_exact_when_under_cap(spark, sf_dir, count_jobs, case):
+    """Every guarded operator shares one guard. With every bucket under the
+    cap, the guarded relation equals the exact (max_bucket=None) one — the
+    relation the DuckDB oracles replay — and building it launches no job
+    (the guard rides the pair join's exchange; the old guards ran 3-6). On
+    a planted hot bucket the healthy pair survives and the drops are
+    exactly the planted rows and buckets, also when nothing survives."""
+    from macrobase_spark.operators.dedup import GUARD_DROPS
+
+    name, data, hot, op, planted = _guard_cases()[case]
+    df = data(spark, sf_dir)
+    built = {}
+    assert count_jobs(lambda: built.setdefault("pairs", op(df, 10_000))) == 0
+    exact = {tuple(r) for r in op(df, None).collect()}
+    assert {tuple(r) for r in built["pairs"].collect()} == exact and exact
+    assert GUARD_DROPS[name].get == {"rows": 0, "buckets": 0}
+
+    planted_df = hot(spark)
+    got = {tuple(r)[:2] for r in op(planted_df, 100).collect()}
+    assert got == {(_K, _K + 1)}
+    assert GUARD_DROPS[name].get == planted
+    # hot rows only: the result is empty, which the adaptive planner may
+    # prune before the guard reports — the drops still come back exact
+    idc = planted_df.columns[0]
+    assert op(planted_df.filter(F.col(idc) < _K), 100).count() == 0
+    assert GUARD_DROPS[name].get == planted

@@ -258,6 +258,34 @@ def test_null_sr_hz_stays_null_in_explanation(hostile):
     assert rows == _rows(ref)
 
 
+def test_null_sr_hz_never_matches_the_header_rate(spark):
+    """The scan kernel maps a NULL sr_hz to a rate no header carries, so
+    sr_match is False by definition rather than by NaN casting to
+    INT64_MIN (which warned on every batch holding a NULL): the hostile
+    fixture scores without a warning, and every row scores as it does with
+    its NULLs replaced by a rate that matches nothing."""
+    import warnings
+
+    import pyarrow.compute as pc
+
+    from macrobase_spark.operators.audio import score_record_batch
+
+    clips, _ = hostile_clips(spark)
+    cols = ["clip_id", "sr_hz", "dur_ms", "codec", "transcript", "bytes"]
+    batches = clips.select(*cols).toArrow().to_batches(max_chunksize=500)
+    n_null = 0
+    for b in batches:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            out = score_record_batch(b)
+        null_sr = pc.is_null(b.column(1))
+        n_null += pc.sum(null_sr).as_py() or 0
+        assert not any(pc.filter(out.column("sr_match"), null_sr).to_pylist())
+        filled = score_record_batch(b.set_column(1, "sr_hz", pc.fill_null(b.column(1), 1)))
+        assert out.drop_columns(["sr_hz"]).equals(filled.drop_columns(["sr_hz"]))
+    assert n_null > 0
+
+
 def test_files_scan_matches_jvm_scan(spark, tmp_path):
     """run_suite_files (pyarrow-native columnar scan — the bench/scaling
     path) must produce the same violations and verdicts as run_suite over

@@ -38,6 +38,44 @@ def test_simhash_pair_join_is_equijoin(spark):
     assert re.search(r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", plan)
 
 
+def test_guard_rides_the_pair_join_exchange(spark):
+    """The hot-bucket guard is a window partitioned like the pair join, so
+    with AQE and broadcast joins off the guarded plan holds the unguarded
+    plan's joins and hash exchanges plus a Window on each join side (both
+    over the one reused exchange) — no exchange, join or cartesian product
+    of its own."""
+    from macrobase_spark.operators.dedup import (
+        jaccard_pairs,
+        minhash_lsh_candidates,
+        simhash_candidates,
+    )
+
+    ops = {
+        "jaccard": lambda m: jaccard_pairs(_docs(spark), "doc_id", "text", max_doc_freq=m),
+        "minhash": lambda m: minhash_lsh_candidates(_docs(spark), "doc_id", "text", max_bucket=m),
+        "simhash": lambda m: simhash_candidates(_docs(spark), "doc_id", "text", max_bucket=m),
+    }
+
+    def shape(plan):
+        joins = len(re.findall(r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", plan))
+        return joins, plan.count("Exchange hashpartitioning"), len(re.findall(r"\bWindow \[", plan))
+
+    conf = {"spark.sql.adaptive.enabled": "false", "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        for name, op in ops.items():
+            exact, guarded = _plan(op(None)), _plan(op(1000))
+            joins, exchanges, windows = shape(exact)
+            assert shape(guarded) == (joins, exchanges, windows + 2), name
+            assert joins == 1, name
+            assert "CartesianProduct" not in guarded, name
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 def test_sql_between_like_in_push_down_to_parquet(spark, tmp_path):
     """BETWEEN lowers to >= / <= range filters, IN to an In filter, LIKE
     'v%' to StringStartsWith — all must appear in the parquet scan's
