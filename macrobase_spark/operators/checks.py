@@ -12,7 +12,7 @@ PCM, scores SNR, and projects every scalar the checks need into a ~60-byte
 row. That narrow scored relation is persisted; every check below reads it:
 
 - row checks: null/empty transcript and SNR are decided by each scored row
-  alone (`row_local_checks`, one explode pass — also the streaming face).
+  alone (`_row_checks`, read by the keyed window below).
 - keyed checks: uniqueness and referential integrity both key on
   `clip_id`, so they share ONE window over scored ∪ manifest keys
   partitioned by `clip_id` (`_keyed`): one exchange and one sort give every
@@ -28,6 +28,15 @@ row. That narrow scored relation is persisted; every check below reads it:
 Results that are built on the driver (drift rows, column stats, verdicts,
 explanation) are local relations (`functions.rows.local_rows`): reading
 them back launches no Spark job.
+
+One suite, every face: a full run (`jobs/validate.py` over a table), an
+incremental run (`--iceberg-root --resume`, one snapshot delta) and the
+streaming face (`streaming/validate.py`, one `run_suite` per micro-batch)
+all run `run_suite` and record `SuiteResult.partition_rows()`. Uniqueness
+is scoped to the unit the face validates: the table, the delta, or the
+micro-batch. An id that recurs across deltas is not flagged by the
+incremental run; across micro-batches `streaming.stream_duplicate_clips`
+flags it.
 """
 
 from __future__ import annotations
@@ -103,6 +112,17 @@ class SuiteResult:
     scored: DataFrame  # the narrow one-scan relation (persisted)
     violation_counts: dict[str, int]  # violation rows per check, drift included
 
+    def partition_rows(self) -> list[dict]:
+        """One run-manifest row per partition, `{partition, n_rows,
+        n_violations, passed}`: the per-(partition, check) verdicts folded
+        to the partition. Every face that records a manifest (jobs/validate,
+        the stream's foreachBatch) records these."""
+        parts: dict = {}
+        for part, n_rows, _check, n_viol, _passed in self.verdicts.collect():
+            d = parts.setdefault(part, {"partition": part, "n_rows": n_rows, "n_violations": 0})
+            d["n_violations"] += n_viol
+        return [{**d, "passed": d["n_violations"] == 0} for d in parts.values()]
+
 
 def _row_checks() -> list[tuple[str, Column, Column]]:
     """(check, condition, detail) of every check a scored row decides
@@ -128,25 +148,6 @@ def _violation_rows(df: DataFrame, checks: list[tuple[str, Column, Column]]) -> 
     return df.select(
         "clip_id", F.explode(F.array_compact(F.array(*structs))).alias("_v")
     ).select("clip_id", F.col("_v.check").alias("check"), F.col("_v.detail").alias("detail"))
-
-
-def row_local_checks(scored: DataFrame) -> DataFrame:
-    """null/empty transcript + SNR violations in one explode pass. Stateless,
-    so it runs unchanged on a stream (streaming.validate)."""
-    return _violation_rows(scored, _row_checks())
-
-
-def ref_integrity_check(scored: DataFrame, manifest: DataFrame) -> DataFrame:
-    """LEFT ANTI join against the manifest keys: the stream-static face of
-    the referential check (a stream cannot take the batch suite's keyed
-    window). No broadcast hint and no distinct: AQE picks broadcast when
-    the manifest IS small, and an anti join needs no dedup."""
-    orphans = scored.join(manifest.select("clip_id"), "clip_id", "left_anti")
-    return orphans.select(
-        "clip_id",
-        F.lit("ref_integrity").alias("check"),
-        F.lit("missing from manifest").alias("detail"),
-    )
 
 
 def _keyed(scored: DataFrame, manifest: DataFrame) -> DataFrame:

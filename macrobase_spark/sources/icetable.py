@@ -126,6 +126,17 @@ def _footer_stats(path: str, stat_cols: list[str]) -> dict:
     return {"row_count": md.num_rows, "stats": stats}
 
 
+def key_range(paths: list[str], col: str) -> tuple | None:
+    """(min, max) of `col` over the given data files, from their parquet
+    footers — no Spark job. None when a non-empty file lacks the statistic:
+    nothing can then be pruned by it."""
+    footers = [_footer_stats(p, [col]) for p in paths]
+    bounds = [st["stats"][col] for st in footers if st["row_count"]]
+    if not bounds or any(lo is None for lo, _ in bounds):
+        return None
+    return min(lo for lo, _ in bounds), max(hi for _, hi in bounds)
+
+
 def _file_entries(files: list[str], stat_cols: list[str], base: str) -> list[dict]:
     """The manifest entries of newly written data files: path, partition
     values from the hive directory names, and the footer stats."""

@@ -1,7 +1,6 @@
 from macrobase_spark.streaming.validate import (  # noqa: F401
     batch_processor,
     stream_duplicate_clips,
-    stream_row_violations,
     validate_stream,
     windowed_violation_rates,
 )

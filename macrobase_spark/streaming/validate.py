@@ -3,32 +3,34 @@ engine runs (operators/checks.py), re-expressed over a Structured-Streaming
 source so a 10^12-row corpus can be validated AS IT LANDS instead of by
 nightly rescan.
 
-Design: reuse the batch kernel everywhere the streaming model allows.
+One suite, every face. The full run (`jobs/validate.py` over a table),
+the incremental run (`--iceberg-root --resume`, one snapshot delta) and
+this streaming face all run `checks.run_suite` and record its
+`SuiteResult.partition_rows()`, so the same rows get the same verdicts on
+every face. What a face validates is its unit: the table, the snapshot
+delta, or one micro-batch.
 
-- the fused decode/SNR/silence scan (`audio.score_clips`) is a stateless
-  mapInArrow, so it runs UNCHANGED on a streaming DataFrame — one kernel,
-  two planes, zero drift between them.
-- null/empty-transcript/SNR checks are stateless row filters → violation
-  rows per micro-batch with zero state (`stream_row_violations`).
-- referential integrity is a stream-static LEFT ANTI join (static clip
-  manifest on the right) — Structured Streaming re-plans the static side
-  per micro-batch, so a manifest refresh between batches is picked up.
-- uniqueness is the ONE check that needs cross-batch state:
-  `stream_duplicate_clips` keys a `keyed_fold` by clip_id and
-  emits a violation on every arrival after the first. State is O(distinct
+- `validate_stream` is the operational runner: foreachBatch runs
+  `run_suite` over each micro-batch against a static clip manifest,
+  appends its partition rows to the checkpointed RunManifest
+  (plans/manifest.py) keyed by the micro-batch id, and appends its
+  violation rows to the sink. Restart resume = Spark's own checkpoint
+  (source offsets) + the manifest append being IDEMPOTENT per batch id: a
+  replayed batch whose lineage is already recorded is skipped, so verdict
+  rows are exactly-once even though foreachBatch is at-least-once.
+- uniqueness is scoped to the unit, as on the other faces: the suite flags
+  an id held twice within one micro-batch (as the incremental run flags
+  one held twice within the delta). An id that recurs in a LATER batch is
+  `stream_duplicate_clips`'s: it keys a `keyed_fold` by clip_id and emits
+  a violation on every arrival after the first. State is O(distinct
   keys) — at corpus scale bound it with `ttl_minutes` (processing-time
   timeout), the standard dedup-state bound; an expired key that recurs
   later is re-admitted, exactly like any TTL'd streaming dedup.
-- `windowed_violation_rates` aggregates per-(event-time window, codec)
-  violation rates with a watermark — the drift monitors
+- the fused decode/SNR/silence scan (`audio.score_clips`) is a stateless
+  mapInArrow, so it also runs on a streaming DataFrame;
+  `windowed_violation_rates` aggregates per-(event-time window, codec)
+  violation rates over it with a watermark — the drift monitors
   (operators/drift.histogram_drift with `window=`) consume the same shape.
-- `validate_stream` is the operational runner: foreachBatch scores each
-  micro-batch, derives per-partition verdict rows, and appends them to the
-  checkpointed RunManifest (plans/manifest.py) keyed by the micro-batch id.
-  Restart resume = Spark's own checkpoint (source offsets) + the manifest
-  append being IDEMPOTENT per batch id: a replayed batch whose lineage is
-  already recorded is skipped, so verdict rows are exactly-once even though
-  foreachBatch is at-least-once.
 
 Reference parity: the reference's streaming runtime is the per-batch
 operator loop (alexp/.../pipeline/StreamingPipeline semantics — classify
@@ -45,11 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from macrobase_spark.operators.checks import (
-    SuiteConfig,
-    ref_integrity_check,
-    row_local_checks,
-)
+from macrobase_spark.operators.checks import SuiteConfig, run_suite
 from macrobase_spark.plans.manifest import RunManifest
 from macrobase_spark.streaming.stateful import keyed_fold
 
@@ -60,18 +58,6 @@ VIOLATION_SCHEMA = StructType(
         StructField("detail", StringType()),
     ]
 )
-
-
-def stream_row_violations(
-    scored: DataFrame, clip_manifest: DataFrame | None = None
-) -> DataFrame:
-    """Stateless violation rows over a (streaming or batch) scored relation:
-    null/empty transcript + SNR in one exploded pass, plus the stream-static
-    referential anti-join when a clip manifest is given."""
-    viol = row_local_checks(scored)
-    if clip_manifest is not None:
-        viol = viol.unionByName(ref_integrity_check(scored, clip_manifest))
-    return viol
 
 
 def stream_duplicate_clips(
@@ -150,84 +136,56 @@ def windowed_violation_rates(
 
 
 def batch_processor(
+    clip_manifest: DataFrame,
     run_manifest_path: str,
     cfg: SuiteConfig | None = None,
-    clip_manifest: DataFrame | None = None,
     violations_sink: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """The foreachBatch body of `validate_stream`, exposed for direct testing
-    and for callers that drive their own micro-batching. Idempotent per
-    batch_id: a replayed batch whose lineage is already in the manifest is a
-    no-op (foreachBatch is at-least-once; the manifest makes verdict rows
+    and for callers that drive their own micro-batching: `run_suite` over
+    the micro-batch, its `partition_rows` appended to the run manifest and
+    its violation rows to `violations_sink`. Idempotent per batch_id: a
+    replayed batch whose lineage is already in the manifest is a no-op
+    (foreachBatch is at-least-once; the manifest makes verdict rows
     exactly-once)."""
     cfg = cfg or SuiteConfig()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        from macrobase_spark.operators.audio import score_clips
-
         manifest = RunManifest(run_manifest_path)
         lineage = f"stream-batch:{batch_id}"
         if (lineage,) in manifest.read_rows("lineage"):
             return
-        scored = score_clips(batch_df, cfg.min_snr_db).persist()
-        try:
-            # per-partition verdict rows from the scored flags directly — no
-            # join back from the violation rows (one aggregate per batch)
-            pc = cfg.partition_col
-            rows = (
-                scored.groupBy(pc)
-                .agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum(
-                        (
-                            F.col("transcript_null").cast("long")
-                            + F.col("transcript_empty").cast("long")
-                            + (~F.col("snr_pass")).cast("long")
-                        )
-                    ).alias("n_violations"),
-                )
-                .collect()
-            )
-            manifest.record(
-                [
-                    {
-                        "partition": r[pc],
-                        "n_rows": r["n_rows"],
-                        "n_violations": r["n_violations"],
-                        "passed": r["n_violations"] == 0,
-                        "metrics": {"batch_id": batch_id},
-                    }
-                    for r in rows
-                ],
-                lineage=lineage,
-            )
-            if violations_sink:
-                stream_row_violations(scored, clip_manifest).withColumn(
-                    "lineage", F.lit(lineage)
-                ).write.mode("append").parquet(violations_sink)
-        finally:
-            scored.unpersist()
+        res = run_suite(batch_df, clip_manifest, cfg)
+        manifest.record(
+            [{**r, "metrics": {"batch_id": batch_id}} for r in res.partition_rows()],
+            lineage=lineage,
+        )
+        if violations_sink:
+            res.violations.withColumn("lineage", F.lit(lineage)).write.mode(
+                "append"
+            ).parquet(violations_sink)
 
     return process
 
 
 def validate_stream(
     stream_df: DataFrame,
+    clip_manifest: DataFrame,
     run_manifest_path: str,
     checkpoint_dir: str,
     cfg: SuiteConfig | None = None,
-    clip_manifest: DataFrame | None = None,
     violations_sink: str | None = None,
     query_name: str = "validate_clips",
 ):
-    """Run the validation suite over a clips stream. Returns the started
+    """Run the validation suite over a clips stream, one `run_suite` per
+    micro-batch against the static `clip_manifest`. Returns the started
     StreamingQuery; stop() it or await termination. Resume = restart with
     the SAME checkpoint_dir and run_manifest_path: Spark replays from its
     committed offsets and the manifest's per-batch idempotence skips
     already-recorded verdict rows."""
     return (
         stream_df.writeStream.foreachBatch(
-            batch_processor(run_manifest_path, cfg, clip_manifest, violations_sink)
+            batch_processor(clip_manifest, run_manifest_path, cfg, violations_sink)
         )
         .option("checkpointLocation", checkpoint_dir)
         .queryName(query_name)

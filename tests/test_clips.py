@@ -213,11 +213,7 @@ def test_keyed_pass_on_hostile_data(hostile):
     relations equal the component functions, and the per-check violation
     counts add up to the violation rows. The counts are those of the
     join-based suite this keyed pass replaced."""
-    from macrobase_spark.operators.checks import (
-        ref_integrity_check,
-        row_local_checks,
-        row_violations,
-    )
+    from macrobase_spark.operators.checks import row_violations
 
     res, manifest = hostile
     scored = res.scored
@@ -228,9 +224,25 @@ def test_keyed_pass_on_hostile_data(hostile):
             F.concat(F.lit("duplicate x"), F.col("count")).alias("detail"),
         )
     )
-    grouped = dups.unionByName(row_local_checks(scored)).unionByName(
-        ref_integrity_check(scored, manifest)
+    snr_detail = F.when(~F.col("decode_ok"), F.lit("decode failed")).otherwise(
+        F.concat(F.lit("snr_db="), F.round("snr_db", 1).cast("string"))
     )
+    row_local = [
+        scored.filter(cond).select("clip_id", F.lit(check).alias("check"), detail.alias("detail"))
+        for check, cond, detail in [
+            ("null_transcript", F.col("transcript_null"), F.lit("transcript is null")),
+            ("empty_transcript", F.col("transcript_empty"), F.lit("transcript is empty")),
+            ("snr", ~F.col("snr_pass"), snr_detail),
+        ]
+    ]
+    orphans = scored.join(manifest.select("clip_id"), "clip_id", "left_anti").select(
+        "clip_id",
+        F.lit("ref_integrity").alias("check"),
+        F.lit("missing from manifest").alias("detail"),
+    )
+    grouped = dups
+    for df in [*row_local, orphans]:
+        grouped = grouped.unionByName(df)
     assert _rows(row_violations(scored, manifest)) == _rows(grouped)
     _assert_suite_matches_components(res, manifest)
     n = res.violations.count()

@@ -225,11 +225,13 @@ def test_append_stats_equal_a_spark_scan(spark, table, tmp_path):
 
 def test_footer_stats_missing_and_all_null_row_groups(tmp_path):
     """A row group without statistics for a column makes the column's
-    entry [None, None]; a row group holding only nulls is skipped."""
+    entry [None, None]; a row group holding only nulls is skipped.
+    `key_range` spans the files that have rows, and gives None as soon as
+    one of them lacks the statistic."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from macrobase_spark.sources.icetable import _footer_stats
+    from macrobase_spark.sources.icetable import _footer_stats, key_range
 
     t = pa.table({"a": pa.array([None, None, 5, 9], pa.int32()), "b": pa.array([1, 2, 3, 4])})
     path = str(tmp_path / "f.parquet")
@@ -237,3 +239,9 @@ def test_footer_stats_missing_and_all_null_row_groups(tmp_path):
     assert _footer_stats(path, ["a", "b", "zz"]) == {
         "row_count": 4, "stats": {"a": [5, 9], "b": [None, None], "zz": [None, None]}
     }
+    other, empty = str(tmp_path / "g.parquet"), str(tmp_path / "e.parquet")
+    pq.write_table(pa.table({"a": pa.array([2, 7], pa.int32())}), other)
+    pq.write_table(pa.table({"a": pa.array([], pa.int32())}), empty)
+    assert key_range([path, other, empty], "a") == (2, 9)
+    assert key_range([path, other], "b") is None
+    assert key_range([empty], "a") is None

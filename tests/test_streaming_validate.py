@@ -1,6 +1,9 @@
 """Streaming face of the validation suite: stream==batch equivalence for the
 scored scan, cross-batch uniqueness, windowed violation rates, and the
-idempotent foreachBatch manifest runner."""
+idempotent foreachBatch manifest runner, whose rows are `run_suite`'s."""
+
+import glob
+import os
 
 import numpy as np
 import pandas as pd
@@ -8,13 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from macrobase_spark.operators.audio import score_clips
-from macrobase_spark.operators.checks import SuiteConfig
+from macrobase_spark.operators.checks import SuiteConfig, run_suite
 from macrobase_spark.plans.manifest import RunManifest
 from macrobase_spark.sources.clips import generate_clips, generate_manifest
 from macrobase_spark.streaming.validate import (
     batch_processor,
     stream_duplicate_clips,
-    stream_row_violations,
     validate_stream,
     windowed_violation_rates,
 )
@@ -82,20 +84,6 @@ def test_stream_duplicates_match_batch_set(spark, clips_src):
     assert got == want
 
 
-def test_stream_row_violations_match_batch(spark, clips_src):
-    """Stateless checks + stream-static referential anti-join emit the batch
-    violation multiset."""
-    manifest = generate_manifest(spark, N)
-    scored = score_clips(_read_stream(spark, clips_src))
-    _drain(stream_row_violations(scored, manifest), "vviol")
-    got = _sorted_pdf(spark.sql("select * from vviol"))
-    want = _sorted_pdf(
-        stream_row_violations(score_clips(spark.read.parquet(clips_src)), manifest)
-    )
-    assert len(want) > 0
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-
-
 def test_windowed_violation_rates_match_batch(spark, clips_src):
     """Event-time windowed rates over the stream equal the batch windowed
     aggregate (complete mode sidesteps watermark finalization timing)."""
@@ -118,11 +106,12 @@ def test_windowed_violation_rates_match_batch(spark, clips_src):
 
 
 def test_batch_processor_idempotent(spark, clips_src, tmp_path):
-    """The foreachBatch body records per-partition verdicts once per
+    """The foreachBatch body records `run_suite`'s partition rows once per
     batch_id — a replay (same id) is a no-op, the next id appends."""
     man_path = str(tmp_path / "run_manifest")
     clips = spark.read.parquet(clips_src)
-    process = batch_processor(man_path, SuiteConfig())
+    manifest = generate_manifest(spark, N)
+    process = batch_processor(manifest, man_path, SuiteConfig())
     process(clips, 0)
     man = RunManifest(man_path)
     n0 = man.read(spark).count()
@@ -134,15 +123,28 @@ def test_batch_processor_idempotent(spark, clips_src, tmp_path):
     assert n1 > n0
     rows = man.read(spark).collect()
     assert {r["lineage"] for r in rows} == {"stream-batch:0", "stream-batch:1"}
-    # verdict numbers match a direct batch aggregate
-    b0 = [r for r in rows if r["lineage"] == "stream-batch:0"]
-    total_rows = sum(r["n_rows"] for r in b0)
-    assert total_rows == N
+    b0 = sorted(
+        (r["partition"], r["n_rows"], r["n_violations"], r["passed"])
+        for r in rows
+        if r["lineage"] == "stream-batch:0"
+    )
+    want = sorted(
+        (str(d["partition"]), d["n_rows"], d["n_violations"], d["passed"])
+        for d in run_suite(clips, manifest, SuiteConfig()).partition_rows()
+    )
+    assert b0 == want
+    assert sum(r[1] for r in b0) == N
+
+
+def _violation_reprs(df) -> list[str]:
+    return sorted(repr(tuple(r)) for r in df.select("clip_id", "check", "detail").collect())
 
 
 def test_validate_stream_end_to_end_and_resume(spark, clips_src, tmp_path):
-    """Full runner: stream in, manifest + violations sink out; a restart from
-    the same checkpoint reprocesses nothing."""
+    """Full runner: stream in (one file per micro-batch), manifest +
+    violations sink out; the sink holds the union of `run_suite`'s
+    violations over each batch's file, and a restart from the same
+    checkpoint reprocesses nothing."""
     man_path = str(tmp_path / "run_manifest")
     ckpt = str(tmp_path / "ckpt")
     sink = str(tmp_path / "violations")
@@ -151,10 +153,10 @@ def test_validate_stream_end_to_end_and_resume(spark, clips_src, tmp_path):
     def run_once():
         q = validate_stream(
             _read_stream(spark, clips_src),
+            manifest,
             man_path,
             ckpt,
             cfg=SuiteConfig(),
-            clip_manifest=manifest,
             violations_sink=sink,
             query_name="vall",
         )
@@ -167,15 +169,22 @@ def test_validate_stream_end_to_end_and_resume(spark, clips_src, tmp_path):
     man = RunManifest(man_path)
     rows1 = man.read(spark).count()
     assert rows1 > 0
-    viol1 = spark.read.parquet(sink).count()
-    want_viol = stream_row_violations(
-        score_clips(spark.read.parquet(clips_src)), manifest
-    ).count()
-    assert viol1 == want_viol
+    files = sorted(glob.glob(os.path.join(clips_src, "*.parquet")))
+    assert len(files) > 1
+    assert len({r[0] for r in man.read_rows("lineage")}) == len(files)
+    want = sorted(
+        v
+        for f in files
+        for v in _violation_reprs(
+            run_suite(spark.read.parquet(f), manifest, SuiteConfig()).violations
+        )
+    )
+    viol1 = _violation_reprs(spark.read.parquet(sink))
+    assert viol1 == want
     # per-batch verdict coverage: every clip counted exactly once overall
     assert (
         man.read(spark).agg(F.sum("n_rows")).collect()[0][0] == N
     )
     run_once()  # restart from the same checkpoint: offsets committed → no-op
     assert man.read(spark).count() == rows1
-    assert spark.read.parquet(sink).count() == viol1
+    assert _violation_reprs(spark.read.parquet(sink)) == viol1

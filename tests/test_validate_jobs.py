@@ -1,7 +1,10 @@
-"""Job counts of the suite and of one `jobs/validate.py --resume` round
-over an icetable append, run in-process as the benchmark runs it, and the
-partition-grain resume of a `--table` run."""
+"""Job counts of the suite, of the stream's foreachBatch body and of one
+`jobs/validate.py --resume` round over an icetable append, run in-process
+as the benchmark runs it; the round's manifest pruning; the partition-grain
+resume of a `--table` run; and the full, incremental and streaming faces
+agreeing on hostile data."""
 
+import glob
 import importlib.util
 import json
 import os
@@ -11,8 +14,11 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from macrobase_spark.operators.checks import SuiteConfig, run_suite
+from macrobase_spark.plans.manifest import RunManifest
 from macrobase_spark.sources.clips import generate_clips, generate_manifest
 from macrobase_spark.sources.icetable import append, create_table
+from macrobase_spark.streaming.validate import batch_processor, validate_stream
+from tests.test_clips import hostile_clips
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -65,6 +71,99 @@ def test_run_suite_job_count(spark, count_jobs):
     clips = generate_clips(spark, 2000, max_payload_ms=50).localCheckpoint()
     manifest = generate_manifest(spark, 2000)
     assert count_jobs(lambda: run_suite(clips, manifest, SuiteConfig())) <= 1 + 3
+
+
+def test_batch_processor_job_count(spark, tmp_path, count_jobs):
+    """The stream's foreachBatch body is `run_suite` (the scan and the
+    rollup's three jobs) plus the violations sink, whose write needs the
+    keyed window's `clip_id` exchange again: 2 jobs. A replayed batch id
+    launches none."""
+    clips = generate_clips(spark, 2000, max_payload_ms=50).localCheckpoint()
+    manifest = generate_manifest(spark, 2000)
+    process = batch_processor(
+        manifest, str(tmp_path / "manifest"), violations_sink=str(tmp_path / "sink")
+    )
+    assert count_jobs(lambda: process(clips, 0)) <= 1 + 3 + 2
+    assert count_jobs(lambda: process(clips, 0)) == 0
+
+
+def _rows(df) -> list[str]:
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def test_resume_round_prunes_the_manifest_exactly(spark, tmp_path, monkeypatch, capsys):
+    """A `--resume` round hands the suite only the manifest keys inside the
+    delta files' clip_id range, and the suite over those keys gives the
+    violation rows of the whole manifest (the delta holds planted
+    duplicates and orphans)."""
+    validate = _validate_module()
+    root, mdir = str(tmp_path / "ice"), str(tmp_path / "manifest")
+    args = ["--iceberg-root", root, "--manifest-dir", mdir, "--resume"]
+    clips = generate_clips(spark, 3000, max_payload_ms=50)
+    in_delta = F.col("clip_id").between(f"clip_{1000:012d}", f"clip_{1999:012d}")
+    create_table(clips.filter(~in_delta), root, partition_by=["codec"])
+    _run(validate, monkeypatch, capsys, *args)
+    append(clips.filter(in_delta), root)
+    seen = {}
+
+    def spy(c, ref, cfg):
+        seen.update(clips=c, ref=ref)
+        return run_suite(c, ref, cfg)
+
+    monkeypatch.setattr(validate, "run_suite", spy)
+    out = _run(validate, monkeypatch, capsys, *args)
+    full = generate_manifest(spark, 3000)
+    assert seen["ref"].count() < 1000 < full.count()
+    pruned = run_suite(seen["clips"], seen["ref"], SuiteConfig()).violations
+    unpruned = run_suite(seen["clips"], full, SuiteConfig()).violations
+    assert _rows(pruned) == _rows(unpruned)
+    assert {"uniqueness", "ref_integrity"} <= {r["check"] for r in unpruned.collect()}
+    assert out["violations"] == unpruned.count()
+
+
+def test_three_faces_agree_on_hostile_data(spark, tmp_path, monkeypatch, capsys):
+    """The hostile fixture (NULL ids, codecs and sr_hz, duplicates, orphans)
+    through `run_suite`, a fresh `validate.py --iceberg-root` run over an
+    icetable of the same rows, and `validate_stream` over a parquet
+    directory of them drained in one micro-batch: all three record the same
+    manifest rows, and the stream's sink holds `run_suite`'s violations."""
+    clips, manifest = hostile_clips(spark)
+    src = str(tmp_path / "clips")
+    clips.write.parquet(src)
+    rows = spark.read.parquet(src)
+    cols = ("partition", "n_rows", "n_violations", "passed")
+
+    res = run_suite(rows, manifest, SuiteConfig())
+    suite_man = RunManifest(str(tmp_path / "m_suite"))
+    suite_man.record(res.partition_rows())
+
+    root, ice_dir = str(tmp_path / "ice"), str(tmp_path / "m_ice")
+    create_table(rows, root, partition_by=["codec"])
+    _run(_validate_module(), monkeypatch, capsys, "--iceberg-root", root, "--manifest-dir", ice_dir)
+
+    stream_dir, sink = str(tmp_path / "m_stream"), str(tmp_path / "sink")
+    q = validate_stream(
+        spark.readStream.schema(rows.schema).parquet(src),
+        manifest,
+        stream_dir,
+        str(tmp_path / "ckpt"),
+        violations_sink=sink,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    assert len(glob.glob(os.path.join(src, "*.parquet"))) > 1
+    assert {r[0] for r in RunManifest(stream_dir).read_rows("lineage")} == {"stream-batch:0"}
+    faces = [
+        sorted(RunManifest(d).read_rows(*cols), key=repr)
+        for d in (suite_man.path, ice_dir, stream_dir)
+    ]
+    assert faces[0] == faces[1] == faces[2]
+    assert any(r[0] == "None" for r in faces[0])  # the NULL-codec partition
+    got = _rows(spark.read.parquet(sink).select("clip_id", "check", "detail"))
+    assert got == _rows(res.violations)
 
 
 def test_partition_resume_includes_null_codec(spark, tmp_path, monkeypatch, capsys):
