@@ -6,18 +6,21 @@ audio_fp.py emits PAIRS (doc_a, doc_b); corpus construction needs
 CLUSTERS — "these 17 documents are all the same article; keep one".
 Pair→cluster is transitive closure, i.e. connected components.
 
-Algorithm: iterative min-label propagation. Every node starts labeled
-with its own id; each round it takes the min of its label and its
-neighbors' labels; at convergence every node carries the smallest id of
-its component (a deterministic representative). Rounds needed = graph
-diameter — duplicate clusters are near-cliques (diameter ~2-3 from
-banded LSH), so a handful of rounds closes real corpora. Each round is
-one join + one min-aggregate, both on (node) — at 10^12 edges they
-hash-partition by node and AQE handles the hot-cluster skew; labels are
-localCheckpoint'd per round so the lineage (and its replay cost) stays
-O(1) instead of O(rounds). For adversarial long-chain graphs swap in
-large-star/small-star (Kiveris et al., SoCC 2014) — same per-round
-plan shape, O(log n) rounds.
+Algorithm: min-label propagation with pointer jumping. Every node starts
+labeled with the least of its own id and its neighbors' ids; each round
+it takes the least of its label, its neighbors' labels and its label's
+label. The last term is pointer jumping: it doubles how far a label
+travels per round, so a path of n nodes closes in about log2(n) rounds
+instead of n. Each round is one plan — the neighbor and label lookups are
+one join on the looked-up id, then one min-aggregate on (node) — and it is
+localCheckpoint'd, so the lineage (and its replay cost) stays O(1)
+instead of O(rounds). The number of lowered labels is observed
+(`DataFrame.observe`) as that checkpoint runs, so convergence costs no job
+of its own. At the fixpoint labels agree across every edge and the
+component minimum keeps its own id, so every node carries exactly the
+smallest id of its component (a deterministic representative). A graph
+that has not converged in MAX_ROUNDS rounds raises: labels that split a
+real component are never returned.
 
 The DuckDB oracle replays the closure with a recursive CTE (symmetric
 edge closure → min reachable id per node), so cluster membership —
@@ -26,64 +29,52 @@ not just pair generation — is engine-certified end to end.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 import macrobase_spark.operators.dedup  # noqa: F401  (registers the pair oracle)
 from macrobase_spark.queries import ORACLES, register
 
+MAX_ROUNDS = 40
+"""Rounds after which connected_components gives up and raises. Pointer
+jumping closes a path of 2^k nodes in about k + 1 rounds."""
+
 
 def connected_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 25,
+    pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b"
 ) -> DataFrame:
     """(node, rep) for every node appearing in `pairs`; rep = min id of
-    the node's component. Driver-orchestrated min-label rounds with a
-    per-round convergence check (one tiny aggregate)."""
+    the node's component. Driver-orchestrated rounds, one checkpointed
+    plan each; raises RuntimeError past MAX_ROUNDS rounds."""
     sym = (
         pairs.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
         .unionByName(pairs.select(F.col(dst).alias("node"), F.col(src).alias("nbr")))
         .distinct()
+        .localCheckpoint()
     )
-    sym = sym.localCheckpoint()
-    labels = sym.select("node").distinct().withColumn("rep", F.col("node"))
-    changed = 0
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(
-                labels.select(F.col("node").alias("nbr"), F.col("rep").alias("nrep")),
-                "nbr",
-            )
-            .groupBy("node")
-            .agg(F.min("nrep").alias("cand"))
+    labels = sym.groupBy("node").agg(F.least(F.min("nbr"), F.col("node")).alias("rep"))
+    for _ in range(MAX_ROUNDS):
+        # each node reads the labels of its neighbors and of its own label
+        reads = sym.withColumn("own", F.lit(False)).unionByName(
+            labels.select("node", F.col("rep").alias("nbr"), F.lit(True).alias("own"))
         )
-        new_labels = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("rep"), F.coalesce(F.col("cand"), F.col("rep"))).alias(
-                    "rep"
-                ),
-                (F.col("cand") < F.col("rep")).alias("chg"),
-            )
-        ).localCheckpoint()
-        changed = new_labels.where(F.col("chg")).count()
-        labels = new_labels.select("node", "rep")
-        if changed == 0:
-            break
-    else:
-        import warnings
-
-        warnings.warn(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing): the graph diameter exceeds "
-            "max_iter and the returned labels split real components. Raise "
-            "max_iter or use connected_components_star (O(log n) rounds).",
-            stacklevel=2,
+        seen = reads.join(
+            labels.select(F.col("node").alias("nbr"), F.col("rep").alias("cand")), "nbr"
         )
-    return labels
+        step = seen.groupBy("node").agg(
+            F.min("cand").alias("rep"), F.max(F.when(F.col("own"), F.col("nbr"))).alias("old")
+        )
+        lowered = Observation()
+        labels = (
+            step.observe(lowered, F.count_if(F.col("rep") < F.col("old")).alias("n"))
+            .select("node", "rep")
+            .localCheckpoint()
+        )
+        if lowered.get["n"] == 0:
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in MAX_ROUNDS={MAX_ROUNDS} rounds"
+    )
 
 
 def cluster_sizes(components: DataFrame) -> DataFrame:
@@ -130,77 +121,3 @@ def _register() -> None:
 
 _register()
 
-
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 40,
-) -> DataFrame:
-    """Alternating large-star / small-star connected components (Kiveris,
-    Lattanzi, Mirrokni, Rastogi & Vassilvitskii, "Connected Components in
-    MapReduce and Beyond", SoCC 2014): O(log n) rounds on ANY graph,
-    where min-label propagation needs O(diameter). Use this for graphs
-    that are not banded-LSH near-cliques (chains of pairwise near-dups,
-    transitive audio fingerprint matches).
-
-    Both star operations are pure groupBy(min)+join plans — neighborhoods
-    are never collected, so hot nodes partial-aggregate map-side:
-
-      large-star: every neighbor v > u links to m(u) = min(N(u) ∪ {u})
-      small-star: every neighbor v < u (and u) links to m = min(N<(u) ∪ {u})
-
-    Converges when the edge relation reaches a fixpoint (checked with an
-    exceptAll on the shrinking edge set); at the fixpoint every non-root
-    node carries exactly one edge to its component minimum."""
-    edges = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(
-            F.greatest("a", "b").alias("node"), F.least("a", "b").alias("nbr")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    all_nodes = (
-        pairs.select(F.col(src).alias("node"))
-        .unionByName(pairs.select(F.col(dst).alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        # large-star over the symmetric view: v > u attaches to m(u)
-        sym = edges.select("node", "nbr").unionByName(
-            edges.select(F.col("nbr").alias("node"), F.col("node").alias("nbr"))
-        )
-        mins = sym.groupBy("node").agg(
-            F.least(F.min("nbr"), F.first("node")).alias("m")
-        )
-        large = (
-            sym.where(F.col("nbr") > F.col("node"))
-            .join(mins, "node")
-            .select(F.col("nbr").alias("node"), F.col("m").alias("nbr"))
-            .where(F.col("node") != F.col("nbr"))
-        )
-        # small-star over smaller-pointing edges: v < u (and u) attach to m
-        dirn = large.distinct().localCheckpoint()
-        mins2 = dirn.groupBy("node").agg(F.min("nbr").alias("m"))
-        small = (
-            dirn.join(mins2, "node")
-            .select(F.col("nbr").alias("node"), F.col("m").alias("nbr"))
-            .unionByName(mins2.select("node", F.col("m").alias("nbr")))
-            .where(F.col("node") != F.col("nbr"))
-            .distinct()
-            .localCheckpoint()
-        )
-        if (
-            small.exceptAll(edges).count() == 0
-            and edges.exceptAll(small).count() == 0
-        ):
-            edges = small
-            break
-        edges = small
-    roots = all_nodes.join(
-        edges.select("node"), "node", "left_anti"
-    ).select("node", F.col("node").alias("rep"))
-    return edges.select("node", F.col("nbr").alias("rep")).unionByName(roots)
